@@ -333,15 +333,22 @@ object Queries {
     out
   }
 
-  /** PORTABLE minhash-LSH near-dup pairs: the ENTIRE LSH pipeline —
-    * signatures, band buckets, candidate generation, Jaccard verify — in
-    * engine-portable arithmetic, replayed bit-for-bit by the DuckDB oracle.
-    * This is the q13b operator class put through the correctness gate, not
-    * just its exact-verify tail. Scores rounded to 6 dp.
+  /** The LSH config the portable-space oracles replay (q13f, q106, q133,
+    * q202): 16 permutations in 8 bands of 2, seed 7, Jaccard 0.5. The
+    * oracle SQL embeds the coefficients generated from these fields.
+    */
+  private[graft] val PortableLsh = MinHashDedup.Config(jaccardThreshold = 0.5,
+    numHashes = 16, bands = 8, seed = 7L, hashSpace = MinHashDedup.Portable)
+
+  /** PORTABLE minhash-LSH near-dup pairs: the q13b pipeline
+    * ([[MinHashDedup.verifiedPairs]]) in the portable hash space, so every
+    * stage — signatures, band buckets, candidate generation, Jaccard
+    * verify — is replayed bit-for-bit by the DuckDB oracle. This is the
+    * q13b operator class put through the correctness gate, not just its
+    * exact-verify tail. Scores rounded to 6 dp.
     */
   def q13fPortableMinhash(spark: SparkSession, dir: String): DataFrame =
-    MinHashDedup.portableVerifiedPairs(
-      t(spark, dir, "documents"), "doc_id", "text", threshold = 0.5)
+    MinHashDedup.verifiedPairs(t(spark, dir, "documents"), "doc_id", "text", PortableLsh)
       .withColumn("jaccard", round(col("jaccard"), 6))
 
   // ---------------------------------------------------------------- Q18
@@ -2409,11 +2416,11 @@ object Queries {
 
   // ---------------------------------------------------------------- Q106
   /** The INCREMENTAL near-dup loop under a bit-for-bit oracle: even
-    * doc_ids are "yesterday's corpus" — their [[MinHashDedup
-    * .portableSignatures]] persisted through a [[ManifestTable]] commit
-    * (the real signature store, not an in-memory stand-in) — and odd
-    * doc_ids arrive as today's batch. [[MinHashDedup
-    * .portableIncrementalVerifiedPairs]] reads the store, hashes only the
+    * doc_ids are "yesterday's corpus" — their portable-space
+    * [[MinHashDedup.signatures]] persisted through a [[ManifestTable]]
+    * commit (the real signature store, not an in-memory stand-in) — and
+    * odd doc_ids arrive as today's batch. [[MinHashDedup
+    * .incrementalVerifiedPairs]] reads the store, hashes only the
     * batch, and emits exactly the near-dup pairs TOUCHING the batch. The
     * oracle replays the full q13f pipeline in SQL with its candidate set
     * restricted the same way — so green proves the incremental pass finds
@@ -2432,8 +2439,8 @@ object Queries {
       val r = java.nio.file.Files.createTempDirectory("graft_q106")
         .resolve("s").toString
       ManifestTable.commit(spark, r,
-        MinHashDedup.portableSignatures(
-          docs.where(col("doc_id") % 2 === 0), "doc_id", "text"), Seq("id"))
+        MinHashDedup.signatures(
+          docs.where(col("doc_id") % 2 === 0), "doc_id", "text", PortableLsh), Seq("id"))
       q106StoreCache.put(dir, r) // lost race commits an identical store
       r
     }
@@ -2441,12 +2448,12 @@ object Queries {
     // (the storedSidecar discipline): each arriving batch pays only its
     // own band fold + the bucket join, never an O(store) re-band
     val bandIdx = storedSidecar(spark, dir, "q106bands") {
-      MinHashDedup.portableBandIndex(ManifestTable.read(spark, root))
+      MinHashDedup.bandIndex(ManifestTable.read(spark, root), PortableLsh)
     }
-    MinHashDedup.portableIncrementalVerifiedPairs(
+    MinHashDedup.incrementalVerifiedPairs(
         ManifestTable.read(spark, root),
-        docs.where(col("doc_id") % 2 === 1), "doc_id", "text", threshold = 0.5,
-        storeIndex = bandIdx)
+        docs.where(col("doc_id") % 2 === 1), "doc_id", "text", PortableLsh,
+        storeIndex = Some(bandIdx))
       .withColumn("jaccard", round(col("jaccard"), 6))
   }
   private val q106StoreCache =
@@ -3144,8 +3151,8 @@ object Queries {
 
   // ---------------------------------------------------------------- Q133
   /** LSH quality evaluation — "measure, don't guess" for probabilistic
-    * dedup: the portable minhash CANDIDATE set
-    * ([[graft.operators.MinHashDedup.portableCandidatePairs]], no verify)
+    * dedup: the portable-space minhash CANDIDATE set
+    * ([[graft.operators.MinHashDedup.candidatePairs]], no verify)
     * scored against EXACT n-gram-Jaccard ground truth
     * ([[graft.operators.MinHashDedup.jaccardPairs]], the prefix-filtered
     * exact self-join). One full-outer join of two pair sets → TP/FP/FN,
@@ -3159,8 +3166,18 @@ object Queries {
     */
   def q133LshEval(spark: SparkSession, dir: String): DataFrame = {
     val docs = t(spark, dir, "documents")
-    val cand = MinHashDedup.portableCandidatePairs(docs, "doc_id", "text")
-      .withColumn("is_cand", lit(true))
+    // the candidate stage reads the signatures twice (bucket cap + pair
+    // join): materialize them, then the pair-sized candidates, so the
+    // corpus-sized signature cache is dropped before returning
+    val sigs = MinHashDedup.signatures(docs, "doc_id", "text", PortableLsh)
+      .select("id", "sig")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    sigs.count()
+    val cands = MinHashDedup.candidatePairs(sigs, PortableLsh)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    cands.count()
+    sigs.unpersist()
+    val cand = cands.withColumn("is_cand", lit(true))
     val truth = MinHashDedup.jaccardPairs(docs, "doc_id", "text", 0.5)
       .select(col("idA"), col("idB")).withColumn("is_true", lit(true))
     cand.join(truth, Seq("idA", "idB"), "full_outer")
@@ -4472,16 +4489,17 @@ object Queries {
 
   // ---------------------------------------------------------------- Q202
   /** LSH bucket-mass telemetry ([[graft.operators.MinHashDedup
-    * .portableBucketMassReport]] — the q126b pricing discipline on the
-    * near-dup pipeline's own candidate generator): per band, bucket
-    * counts and planned / cap-dropped pair mass from the counts-only
-    * agg the bucket cap already runs. The q13f portable chain priced
+    * .bucketMassReport]] in the portable hash space — the q126b pricing
+    * discipline on the near-dup pipeline's own candidate generator): per
+    * band, bucket counts and planned / cap-dropped pair mass from the
+    * counts-only agg the bucket cap already runs. The q13f portable chain priced
     * instead of joined; the oracle replays signatures, band folds and
     * the Σ bs·(bs−1)/2 arithmetic.
     */
   def q202BucketMass(spark: SparkSession, dir: String): DataFrame =
-    MinHashDedup.portableBucketMassReport(tp(spark, dir, "documents"),
-      "doc_id", "text")
+    MinHashDedup.bucketMassReport(
+      MinHashDedup.signatures(tp(spark, dir, "documents"), "doc_id", "text", PortableLsh),
+      PortableLsh)
       .select(col("band"), col("buckets"), col("buckets_dropped"),
         col("pairs_planned").cast("long").as("pairs_planned"),
         col("pairs_dropped").cast("long").as("pairs_dropped"))

@@ -2806,7 +2806,8 @@ object SparkEntry {
     * truth).
     */
   private val portableMinhashCandCtes: String = {
-    val (as, bs) = graft.operators.MinHashDedup.portableCoefficients(16, 7L)
+    val (as, bs) = graft.operators.MinHashDedup.portableCoefficients(
+      Queries.PortableLsh.numHashes, Queries.PortableLsh.seed)
     val sigExprs = as.zip(bs).map { case (a, b) =>
       s"list_min(list_transform(m, h -> ($a * h + $b) % 2147483647))"
     }.mkString(",\n       |  ")

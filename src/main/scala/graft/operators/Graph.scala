@@ -28,7 +28,7 @@ final case class DurableCheckpoint(dir: String) extends IterCheckpoint {
 
 /** Distributed iterative graph analytics over edge lists — PageRank as the
   * canonical representative (the same join-agg-iterate shape serves label
-  * propagation, which [[MinHashDedup.connectedComponents]] already uses
+  * propagation, which [[MinHashDedup.duplicateGroupsDistributed]] already uses
   * for dup groups). No reference analog; belongs to the analytics mandate
   * (link-quality scoring of a crawled corpus is a standard LLM-pipeline
   * curation signal).

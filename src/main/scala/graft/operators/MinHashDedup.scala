@@ -10,10 +10,18 @@ import graft.functions.TextFunctions
   * corpus dedup (north-star operator; no analog in the reference, which
   * only does exact dedup at `etl.py:50`).
   *
+  * One pipeline, two hash spaces ([[Config.hashSpace]]): [[XxHash64]]
+  * (the default — one codegen'd call per shingle and per band) and
+  * [[Portable]] (48-bit polynomial folds another engine replays bit for
+  * bit, which is how the DuckDB oracle gates the LSH stages themselves).
+  * The space picks only the shingle hash and the band-bucket hash;
+  * permutations, banding, the bucket cap and verify are shared.
+  *
   * Scale design:
-  *  - signatures are computed in ONE codegen'd projection (nested
-  *    `transform` over literal coefficient arrays — no UDF, no explode of
-  *    the shingle set, no k passes);
+  *  - signatures are ONE map-only projection over the shingle table: the
+  *    native `minhash_signature` expression updates every permutation
+  *    minimum in a single pass per doc (no UDF, no explode of the
+  *    shingle set, no k passes, no shuffle);
   *  - candidate generation explodes only `bands` rows per doc (not
   *    shingles), then self-joins on the 8-byte bucket key;
   *  - oversized buckets (degenerate/boilerplate content) are capped by
@@ -26,10 +34,11 @@ import graft.functions.TextFunctions
   *    (idA, idB) candidate-pair keys travel to every task; the shingle
   *    table stays on the probe side of both verify joins and the final
   *    pair-up is a pinned shuffle join on the pair key;
-  *  - duplicate groups are closed transitively with alternating
-  *    small-star/large-star label propagation (bounded iterations, each a
-  *    partial-aggregatable min-reduce — the published CC-in-MapReduce
-  *    recipe), so chains A~B~C collapse to one survivor.
+  *  - duplicate groups are closed transitively, so chains A~B~C collapse
+  *    to one survivor: a driver union-find when the verified-pair set
+  *    fits, else distributed min-label propagation (each round a
+  *    partial-aggregatable groupBy-min) that fails loudly rather than
+  *    return labels that have not converged.
   *
   * Cache lifecycle: the shingle table (the only big intermediate) is
   * persisted for the duration of the verify step and unpersisted as soon as
@@ -38,11 +47,42 @@ import graft.functions.TextFunctions
   */
 object MinHashDedup {
 
+  /** The hash family behind shingle hashes and band-bucket keys. */
+  sealed trait HashSpace {
+    /** Distinct 64-bit shingle hashes of a text column. */
+    private[operators] def shingles(text: Column, n: Int): Column
+    /** Bucket key of one band's signature slice. */
+    private[operators] def bucket(band: Column, slice: Column): Column
+  }
+
+  /** xxhash64 of each word shingle and of (band, slice). */
+  case object XxHash64 extends HashSpace {
+    private[operators] def shingles(text: Column, n: Int): Column =
+      TextFunctions.hashedShingles(text, n)
+    private[operators] def bucket(band: Column, slice: Column): Column =
+      xxhash64(band, slice)
+  }
+
+  /** Engine-portable 48-bit folds: shingle hashes fold per-token char
+    * folds ([[TextFunctions.portableShingleHashes]]), buckets fold the
+    * band's slice with init = band index. Every stage is recomputable in
+    * plain SQL; slower than [[XxHash64]] (per-char loops, not one call).
+    */
+  case object Portable extends HashSpace {
+    private[operators] def shingles(text: Column, n: Int): Column =
+      TextFunctions.portableShingleHashes(TextFunctions.portableTokenHashes(text), n)
+    private[operators] def bucket(band: Column, slice: Column): Column =
+      aggregate(slice, band.cast("bigint"),
+        (acc, v) => pmod(acc * lit(31L) + v, lit(1L << 48)))
+  }
+
   /** @param jaccardThreshold  true-Jaccard threshold for a verified dup pair
     * @param numHashes         minhash permutations (bands * rowsPerBand)
     * @param bands             LSH bands; P(candidate) = 1-(1-s^r)^b
     * @param shingleN          word-shingle width
     * @param maxBucketSize     drop buckets larger than this (boilerplate guard)
+    * @param seed              permutation-coefficient seed
+    * @param hashSpace         shingle and band-bucket hash family
     */
   final case class Config(
       jaccardThreshold: Double = 0.8,
@@ -50,7 +90,8 @@ object MinHashDedup {
       bands: Int = 16,
       shingleN: Int = 3,
       maxBucketSize: Int = 1000,
-      seed: Long = 42L) {
+      seed: Long = 42L,
+      hashSpace: HashSpace = XxHash64) {
     require(numHashes % bands == 0, "bands must divide numHashes")
     def rowsPerBand: Int = numHashes / bands
   }
@@ -62,112 +103,77 @@ object MinHashDedup {
     */
   private val MersennePrime = (1L << 31) - 1
 
-  /** Deterministic (a, b) permutation coefficients from the seed. */
-  private def coefficients(cfg: Config): (Seq[Long], Seq[Long]) =
-    portableCoefficients(cfg.numHashes, cfg.seed)
-
-  /** (id, shingles) with shingles pre-hashed to 64-bit longs (see
-    * [[TextFunctions.hashedShingles]]) — computed once per pipeline; the
-    * parallelism guard spreads the shingle construction even off a
-    * single-row-group scan. Everything downstream (signature permutations,
-    * Jaccard verification) consumes the hashes: set cardinalities are
-    * preserved w.h.p., and the verify joins carry compact long arrays
-    * instead of n-word strings.
+  /** (id, shingles) with shingles pre-hashed to 64-bit longs in the
+    * config's hash space — computed once per pipeline; the parallelism
+    * guard spreads the shingle construction even off a single-row-group
+    * scan. Everything downstream (signature permutations, Jaccard
+    * verification) consumes the hashes: set cardinalities are preserved
+    * w.h.p., and the verify joins carry compact long arrays instead of
+    * n-word strings.
     */
   private[graft] def shingleTable(df: DataFrame, idCol: String, textCol: String, cfg: Config): DataFrame =
     Parallelism.ensureCompute(df).select(col(idCol).as("id"),
-      TextFunctions.hashedShingles(col(textCol), cfg.shingleN).as("shingles"))
+      cfg.hashSpace.shingles(col(textCol), cfg.shingleN).as("shingles"))
 
-  /** (id, sig) for every doc with >= 1 shingle; empty-shingle docs get an
-    * empty sig.
-    *
-    * Shape matters here. The shingles arrive pre-hashed (xxhash64 longs), so
-    * the per-permutation work is pure long arithmetic — a row-local
-    * `array_min(transform(...))` per permutation, no explode, no shuffle of
-    * exploded rows, no 64-column hash agg, no join-back (measured 2.5-5x
-    * faster than the explode+agg shape it replaces). Two guardrails:
-    *  - the Mersenne reduction `pmod(h, p)` is projected to `__hm` BELOW a
-    *    `repartition(id)` Exchange — the barrier stops CollapseProject from
-    *    re-inlining the shingle construction (and the reduction) into all
-    *    `numHashes` lambdas, the measured-70s blowup;
-    *  - the repartition also spreads per-doc sig compute across the cluster
-    *    even off a single-row-group scan, and downstream joins on `id`
-    *    reuse the partitioning.
-    * Values are identical to pmod(xxhash64(shingle_string) * a + b, p) of
-    * the explode+agg shape — permutation math unchanged.
+  /** The one signature projection: `numHashes` permutation minima of the
+    * Mersenne-reduced `shingles` column, in one native pass per doc (an
+    * empty shingle set gives an empty sig). It is row-local, so it runs
+    * map-side wherever the shingles are, and the shingle construction
+    * runs once either way: over a cached shingle table the cache scan is
+    * the barrier; over a lazy one CollapseProject fuses the two when
+    * `sig` is the only reference, and keeps the shingle Project below it
+    * when `shingles` is also output (Spark does not inline a non-cheap
+    * expression referenced twice).
     */
-  private def sigTable(base: DataFrame, cfg: Config): DataFrame = {
-    val (as, bs) = coefficients(cfg)
-    base
-      .select(col("id"),
-        transform(col("shingles"), h => pmod(h, lit(MersennePrime))).as("__hm"))
-      .repartition(col("id"))
-      .select(col("id"),
-        graft.plans.PolyHashExpressions
-          .minhashSignature(col("__hm"), as, bs, MersennePrime).as("sig"))
+  private def sig(cfg: Config): Column = {
+    val (as, bs) = portableCoefficients(cfg.numHashes, cfg.seed)
+    graft.plans.PolyHashExpressions.minhashSignature(
+      transform(col("shingles"), h => pmod(h, lit(MersennePrime))),
+      as, bs, MersennePrime)
   }
 
-  /** Map-only signature projection over an ALREADY-persisted shingle
-    * table. Scanning the InMemoryRelation is itself the CollapseProject
-    * barrier that [[sigTable]]'s `repartition(id)` provides on the lazy
-    * path (a cache scan cannot be inlined into the permutation lambdas),
-    * so on the eager pipelines the repartition Exchange and the id
-    * join-back of [[signatures]] are pure overhead: this computes every
-    * permutation minimum in one pass over the cache — zero shuffles of
-    * the corpus where the lazy shape pays two.
+  /** id, shingles, sig (array<long> of numHashes minima) — the signature
+    * store schema. Docs with no shingle (shorter than shingleN tokens, or
+    * NULL text) get an empty sig and are never candidates.
     */
-  private def sigsFromCached(base: DataFrame, as: Seq[Long], bs: Seq[Long]): DataFrame =
-    base.select(col("id"),
-      graft.plans.PolyHashExpressions.minhashSignature(
-        transform(col("shingles"), h => pmod(h, lit(MersennePrime))),
-        as, bs, MersennePrime).as("sig"))
+  def signatures(df: DataFrame, idCol: String, textCol: String, cfg: Config): DataFrame =
+    shingleTable(df, idCol, textCol, cfg).select(col("id"), col("shingles"),
+      coalesce(sig(cfg), array().cast("array<bigint>")).as("sig"))
 
-  /** id, shingles, sig (array<long> of numHashes minima). Docs with no
-    * shingle (shorter than shingleN tokens) get an empty sig and are never
-    * candidates.
-    *
-    * The shingle-carrying side is NEVER broadcast (its array payloads are
-    * both huge and badly size-estimated); the join is pinned shuffle-hash,
-    * which at any scale is one id-shuffle of each side.
-    */
-  def signatures(df: DataFrame, idCol: String, textCol: String, cfg: Config): DataFrame = {
-    val base = shingleTable(df, idCol, textCol, cfg)
-    base.join(sigTable(base, cfg).hint("shuffle_hash"), Seq("id"), "left")
-      .select(col("id"), col("shingles"),
-        coalesce(col("sig"), array().cast("array<bigint>")).as("sig"))
-  }
-
-  /** (band, bucket, id) rows — `bands` per doc. Bucket key hashes the
-    * band's signature slice.
+  /** (band, bucket, id) rows — `bands` per doc. The bucket key hashes the
+    * band's signature slice in the config's hash space.
     */
   def bandBuckets(sigs: DataFrame, cfg: Config): DataFrame = {
-    val bandIdx = sequence(lit(0), lit(cfg.bands - 1))
+    val r = cfg.rowsPerBand
     sigs.where(size(col("sig")) > 0)
       .select(col("id"),
-        explode(transform(bandIdx, b =>
+        explode(transform(sequence(lit(0), lit(cfg.bands - 1)), b =>
           struct(b.as("band"),
-            xxhash64(b, slice(col("sig"), b * cfg.rowsPerBand + 1, lit(cfg.rowsPerBand)))
+            cfg.hashSpace.bucket(b, slice(col("sig"), b * r + 1, lit(r)))
               .as("bucket")))).as("bb"))
       .select(col("id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
   }
 
-  /** Shared tail of LSH candidate generation: cap oversized buckets
-    * (boilerplate guard), self-join on (band, bucket), orient and dedup
-    * pairs. Both the xxhash64 and portable pipelines route through here so
-    * cap/join discipline can never drift between them.
+  /** Oversized (band, bucket) keys: the boilerplate guard's drop set. */
+  private def oversized(buckets: DataFrame, maxBucketSize: Int): DataFrame =
+    buckets.groupBy(col("band"), col("bucket"))
+      .agg(count(lit(1)).as("bs"))
+      .where(col("bs") > maxBucketSize)
+      .select("band", "bucket")
+
+  /** Distinct candidate pairs (idA < idB) sharing any band bucket, with
+    * oversized buckets dropped.
     */
-  private def capAndPair(buckets: DataFrame, maxBucketSize: Int): DataFrame = {
+  def candidatePairs(sigs: DataFrame, cfg: Config): DataFrame = {
     // Oversized buckets are, by the boilerplate guard's own premise, RARE —
     // so compute them with a partial-aggregatable count and anti-join them
     // away instead of window-counting every bucket row (which shuffles AND
     // sorts the full bucket table). The anti-join and the pair self-join
     // key on the same (band, bucket), so the one shuffle is reused; AQE
     // broadcasts the (near-empty) oversized set when it fits.
-    val oversized = buckets.groupBy(col("band"), col("bucket"))
-      .agg(count(lit(1)).as("bs"))
-      .where(col("bs") > maxBucketSize)
-      .select("band", "bucket")
-    val sized = buckets.join(oversized, Seq("band", "bucket"), "left_anti")
+    val buckets = bandBuckets(sigs, cfg)
+    val sized = buckets.join(oversized(buckets, cfg.maxBucketSize),
+      Seq("band", "bucket"), "left_anti")
     val l = sized.select(col("band"), col("bucket"), col("id").as("idA"))
     val r = sized.select(col("band"), col("bucket"), col("id").as("idB"))
     l.join(r, Seq("band", "bucket"))
@@ -175,12 +181,6 @@ object MinHashDedup {
       .select("idA", "idB")
       .distinct()
   }
-
-  /** Distinct candidate pairs (idA < idB) sharing any band bucket, with
-    * oversized buckets dropped.
-    */
-  def candidatePairs(sigs: DataFrame, cfg: Config): DataFrame =
-    capAndPair(bandBuckets(sigs, cfg), cfg.maxBucketSize)
 
   /** PAIR-MASS TELEMETRY for the LSH bucket join — the
     * [[EntityResolution.pairMassReport]] discipline on this operator's
@@ -192,38 +192,19 @@ object MinHashDedup {
     * `(band, buckets, buckets_dropped, pairs_planned, pairs_dropped)`,
     * mass in DECIMAL(38,0).
     */
-  def bucketMassReport(sigs: DataFrame, cfg: Config): DataFrame =
-    bucketMassOf(bandBuckets(sigs, cfg), cfg.maxBucketSize)
-
-  /** [[bucketMassReport]] on the PORTABLE hash space, so an oracle
-    * replays the priced mass itself (signatures, band folds, bucket
-    * sizes and the Σ bs·(bs−1)/2 arithmetic are all 48-bit integer
-    * folds — the q13f chain priced instead of joined).
-    */
-  def portableBucketMassReport(docs: DataFrame, idCol: String,
-      textCol: String, numHashes: Int = 16, bands: Int = 8,
-      shingleN: Int = 3, maxBucketSize: Int = 1000,
-      seed: Long = 7L): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    bucketMassOf(
-      portableBandBuckets(
-        portableSignatures(docs, idCol, textCol, numHashes, shingleN, seed),
-        bands, numHashes / bands),
-      maxBucketSize)
-  }
-
-  private def bucketMassOf(buckets: DataFrame, maxBucketSize: Int): DataFrame = {
+  def bucketMassReport(sigs: DataFrame, cfg: Config): DataFrame = {
+    val cap = cfg.maxBucketSize
     val mass = (col("bs").cast("decimal(38,0)") * (col("bs") - 1L) /
       lit(2)).cast("decimal(38,0)")
-    buckets
+    bandBuckets(sigs, cfg)
       .groupBy(col("band"), col("bucket")).agg(count(lit(1)).as("bs"))
       .groupBy(col("band"))
       .agg(count(lit(1)).as("buckets"),
-        sum(when(col("bs") > maxBucketSize, 1L).otherwise(0L))
+        sum(when(col("bs") > cap, 1L).otherwise(0L))
           .as("buckets_dropped"),
-        coalesce(sum(when(col("bs") <= maxBucketSize, mass)),
+        coalesce(sum(when(col("bs") <= cap, mass)),
           lit(0).cast("decimal(38,0)")).cast("decimal(38,0)").as("pairs_planned"),
-        coalesce(sum(when(col("bs") > maxBucketSize, mass)),
+        coalesce(sum(when(col("bs") > cap, mass)),
           lit(0).cast("decimal(38,0)")).cast("decimal(38,0)").as("pairs_dropped"))
       .select(col("band").cast("long").as("band"), col("buckets"),
         col("buckets_dropped"), col("pairs_planned"), col("pairs_dropped"))
@@ -277,14 +258,16 @@ object MinHashDedup {
       .select("idA", "idB", "jaccard")
   }
 
-  /** Lazy plan for [[verifiedPairs]] — exposed for plan-inspection tests. */
+  /** Lazy plan for [[verifiedPairs]] — exposed for plan-inspection tests,
+    * which pick the verify regime through `candCount` (no candidate count
+    * exists in a lazy plan).
+    */
   private[graft] def verifiedPairsPlan(
-      df: DataFrame, idCol: String, textCol: String, cfg: Config): DataFrame = {
+      df: DataFrame, idCol: String, textCol: String, cfg: Config,
+      candCount: Long = 0L): DataFrame = {
     val base = shingleTable(df, idCol, textCol, cfg)
-    // lazy plan: no candidate count exists yet — assume the broadcast
-    // regime (what the plan-inspection tests pin for clean corpora)
-    verifyJaccard(base, candidatePairs(sigTable(base, cfg), cfg),
-      cfg.jaccardThreshold, candCount = 0L)
+    verifyJaccard(base, candidatePairs(base.select(col("id"), sig(cfg).as("sig")), cfg),
+      cfg.jaccardThreshold, candCount)
   }
 
   /** Candidate pairs verified by true shingle Jaccard >= threshold.
@@ -306,8 +289,7 @@ object MinHashDedup {
     val base = shingleTable(df, idCol, textCol, cfg)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     base.count()
-    val (as, bs) = coefficients(cfg)
-    val sigs = sigsFromCached(base, as, bs)
+    val sigs = base.select(col("id"), sig(cfg).as("sig"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     sigs.count()
     val cands = candidatePairs(sigs, cfg)
@@ -322,6 +304,41 @@ object MinHashDedup {
     out
   }
 
+  /** The signature store's band-bucket index `(id, band, bucket)` —
+    * MATERIALIZE this at store-ingest time (one row per (doc, band)) so
+    * each arriving batch pays only ITS OWN band fold plus the bucket
+    * equi-join; re-deriving the store's bands per batch is O(store) work
+    * that defeats the incremental contract at 100 TB. Feed back via
+    * `storeIndex` on [[incrementalVerifiedPairs]]. The banding and hash
+    * space are stamped into the `band` column's metadata (schema-level,
+    * so it survives checkpoint and parquet round-trips) and checked there.
+    */
+  def bandIndex(storeSigs: DataFrame, cfg: Config): DataFrame = {
+    val bandMd = new org.apache.spark.sql.types.MetadataBuilder()
+      .putLong("numHashes", cfg.numHashes.toLong)
+      .putLong("bands", cfg.bands.toLong)
+      .putString("hashSpace", cfg.hashSpace.toString)
+      .build()
+    bandBuckets(storeSigs, cfg).withColumn("band", col("band").as("band", bandMd))
+  }
+
+  /** A stale or mismatched materialized index (other banding or other
+    * hash space) would silently drop candidate buckets — false-negative
+    * dedup with no error — so reject it from its schema, at zero scan cost.
+    */
+  private def requireIndexMatches(storeIndex: DataFrame, cfg: Config): Unit = {
+    val md = storeIndex.schema("band").metadata
+    require(Seq("numHashes", "bands", "hashSpace").forall(md.contains),
+      "storeIndex must be built by bandIndex (banding metadata missing " +
+        "from the `band` column) — an index with unknown banding cannot " +
+        "be verified against this call's config")
+    val built = (md.getLong("numHashes"), md.getLong("bands"), md.getString("hashSpace"))
+    val wanted = (cfg.numHashes.toLong, cfg.bands.toLong, cfg.hashSpace.toString)
+    require(built == wanted,
+      s"storeIndex (numHashes, bands, hashSpace) = $built does not match " +
+        s"this call's $wanted — candidates would be dropped")
+  }
+
   /** INCREMENTAL near-dup against a persisted signature store — the loop
     * a 100 TB corpus actually runs daily: the store holds (id, shingles,
     * sig) for everything already ingested (the [[signatures]] output,
@@ -334,49 +351,31 @@ object MinHashDedup {
     * O(batch × collision rate), never O(corpus²) and never a corpus
     * rescan; the bucket join keys on (band, bucket) exactly like the
     * batch path, so the store side shuffles its BUCKET rows only (8-byte
-    * hashes), not shingles.
+    * hashes), not shingles. A deployed store also keeps its band index
+    * materialized ([[bandIndex]], passed as `storeIndex`), so the store's
+    * bands are not re-folded per batch either.
     *
     * Returns (idA, idB, jaccard) pairs with at least one batch endpoint,
     * oriented idA < idB. The caller then appends [[signatures]] of the
-    * batch to the store (deterministic — same seed, same rows) to close
+    * batch to the store (deterministic — same config, same rows) to close
     * the loop. Batch and store ids must be disjoint (same contract as any
-    * append).
+    * append), and the store must be built with the same config.
     */
   def incrementalVerifiedPairs(
       store: DataFrame, batch: DataFrame,
-      idCol: String, textCol: String, cfg: Config): DataFrame = {
+      idCol: String, textCol: String, cfg: Config,
+      storeIndex: Option[DataFrame] = None): DataFrame = {
+    storeIndex.foreach(requireIndexMatches(_, cfg))
     val newSigs = signatures(batch, idCol, textCol, cfg)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     newSigs.count()
-    val out = incrementalCore(store, newSigs, bandBuckets(_, cfg),
-      cfg.jaccardThreshold, cfg.maxBucketSize)
-    newSigs.unpersist() // out is materialized pair-sized by the core
-    out
-  }
-
-  /** Shared incremental tail: bucket both sides, apply the boilerplate
-    * guard over the FULL bucket table (an oversized bucket is oversized
-    * regardless of which side filled it), pair only where the left
-    * endpoint is NEW, orient, dedup, verify. The xxhash64 and portable
-    * pipelines both route through here — candidate discipline cannot
-    * drift between them (same contract as [[capAndPair]] for the batch
-    * paths).
-    */
-  private def incrementalCore(storeSigs: DataFrame, newSigs: DataFrame,
-      toBuckets: DataFrame => DataFrame,
-      threshold: Double, maxBucketSize: Int,
-      storeBuckets: DataFrame = null): DataFrame = {
-    // a deployed store keeps its band index MATERIALIZED at ingest (the
-    // stored-sidecar discipline) — re-folding the whole store's bands on
-    // every arriving batch is O(store) work the incremental pass exists
-    // to avoid; callers without a stored index still get the fold
-    val sb = if (storeBuckets != null) storeBuckets else toBuckets(storeSigs)
-    val allBuckets = sb.unionByName(toBuckets(newSigs))
-    val oversized = allBuckets.groupBy(col("band"), col("bucket"))
-      .agg(count(lit(1)).as("bs"))
-      .where(col("bs") > maxBucketSize)
-      .select("band", "bucket")
-    val sized = allBuckets.join(oversized, Seq("band", "bucket"), "left_anti")
+    // the boilerplate guard runs over the FULL bucket table (an oversized
+    // bucket is oversized regardless of which side filled it); pairs are
+    // formed only where the left endpoint is NEW
+    val allBuckets = storeIndex.getOrElse(bandBuckets(store, cfg))
+      .unionByName(bandBuckets(newSigs, cfg))
+    val sized = allBuckets.join(oversized(allBuckets, cfg.maxBucketSize),
+      Seq("band", "bucket"), "left_anti")
     val newSide = sized.join(newSigs.select(col("id")), Seq("id"), "left_semi")
     val cands = newSide.select(col("band"), col("bucket"), col("id").as("l"))
       .join(sized.select(col("band"), col("bucket"), col("id").as("r")),
@@ -387,108 +386,17 @@ object MinHashDedup {
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nCands = cands.count()
-    val base = storeSigs.select(col("id"), col("shingles"))
+    val base = store.select(col("id"), col("shingles"))
       .unionByName(newSigs.select(col("id"), col("shingles")))
     // same discipline as verifiedPairs: the verify reads cands from BOTH
     // probes, so it stays cached until the pair-sized result is
     // materialized; only that result stays pinned for the caller
-    val out = verifyJaccard(base, cands, threshold, nCands)
+    val out = verifyJaccard(base, cands, cfg.jaccardThreshold, nCands)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     out.count()
     cands.unpersist()
+    newSigs.unpersist()
     out
-  }
-
-  /** [[signatures]] in the PORTABLE hash space (48-bit polynomial token/
-    * shingle hashes, Mersenne-projected minima — the q13f pipeline): the
-    * signature-store schema for corpora whose dedup state must be
-    * replayable outside this engine. Returns (id, shingles, sig).
-    */
-  def portableSignatures(df: DataFrame, idCol: String, textCol: String,
-      numHashes: Int = 16, shingleN: Int = 3, seed: Long = 7L): DataFrame = {
-    val (as, bs) = portableCoefficients(numHashes, seed)
-    Parallelism.ensureCompute(df)
-      .select(col(idCol).as("id"),
-        TextFunctions.portableShingleHashes(
-          TextFunctions.portableTokenHashes(col(textCol)), shingleN).as("shingles"))
-      .select(col("id"), col("shingles"),
-        graft.plans.PolyHashExpressions.minhashSignature(
-          transform(col("shingles"), h => pmod(h, lit(MersennePrime))),
-          as, bs, MersennePrime).as("sig"))
-  }
-
-  /** Portable-space band buckets (48-bit polynomial fold over each band's
-    * signature slice — the replayable analog of [[bandBuckets]]).
-    */
-  private def portableBandBuckets(sigs: DataFrame, bands: Int, r: Int): DataFrame = {
-    val m48 = 1L << 48
-    val bandIdx = sequence(lit(0), lit(bands - 1))
-    sigs.where(size(col("sig")) > 0)
-      .select(col("id"),
-        explode(transform(bandIdx, b =>
-          struct(b.as("band"),
-            aggregate(slice(col("sig"), b * r + 1, lit(r)), b.cast("bigint"),
-              (acc, v) => pmod(acc * lit(31L) + v, lit(m48))).as("bucket")))).as("bb"))
-      .select(col("id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-  }
-
-  /** [[incrementalVerifiedPairs]] in the portable hash space: the store
-    * holds [[portableSignatures]] rows, the batch hashes itself the same
-    * way, and every stage (signatures, band folds, bucket cap, verify) is
-    * replayable bit-for-bit in SQL — which is exactly what q106's oracle
-    * does, restricted like this pipeline to pairs touching the batch.
-    */
-  def portableIncrementalVerifiedPairs(
-      storeSigs: DataFrame, batch: DataFrame, idCol: String, textCol: String,
-      threshold: Double, numHashes: Int = 16, bands: Int = 8, shingleN: Int = 3,
-      maxBucketSize: Int = 1000, seed: Long = 7L,
-      storeIndex: DataFrame = null): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    // a stale or mismatched materialized index (built with a different
-    // banding) would silently drop candidate buckets — false-negative
-    // dedup with no error. [[portableBandIndex]] stamps its banding into
-    // the `band` column metadata; validate it here at zero scan cost.
-    if (storeIndex != null) {
-      val md = storeIndex.schema("band").metadata
-      require(md.contains("numHashes") && md.contains("bands"),
-        "storeIndex must be built by portableBandIndex (banding metadata " +
-          "missing from the `band` column) — an index with unknown banding " +
-          "cannot be verified against this call's (numHashes, bands)")
-      require(md.getLong("numHashes") == numHashes && md.getLong("bands") == bands,
-        s"storeIndex banding (numHashes=${md.getLong("numHashes")}, " +
-          s"bands=${md.getLong("bands")}) does not match this call's " +
-          s"(numHashes=$numHashes, bands=$bands) — candidates would be dropped")
-    }
-    val newSigs = portableSignatures(batch, idCol, textCol, numHashes, shingleN, seed)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    newSigs.count()
-    val out = incrementalCore(storeSigs, newSigs,
-      portableBandBuckets(_, bands, numHashes / bands), threshold, maxBucketSize,
-      storeBuckets = storeIndex)
-    newSigs.unpersist() // out is materialized pair-sized by the core
-    out
-  }
-
-  /** The signature store's band-bucket index `(id, band, bucket)` in the
-    * portable hash space — MATERIALIZE this at store-ingest time (one
-    * row per (doc, band)) so each arriving batch pays only ITS OWN band
-    * fold plus the bucket equi-join; re-deriving the store's bands per
-    * batch is O(store) work that defeats the incremental contract at
-    * 100 TB. Feed back via `storeIndex` on
-    * [[portableIncrementalVerifiedPairs]].
-    */
-  def portableBandIndex(storeSigs: DataFrame,
-      numHashes: Int = 16, bands: Int = 8): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    // stamp the banding into column metadata so the consumer can reject
-    // a mismatched index without scanning it (schema-level, survives
-    // checkpoint/parquet round-trips)
-    val bandMd = new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong("numHashes", numHashes.toLong)
-      .putLong("bands", bands.toLong)
-      .build()
-    portableBandBuckets(storeSigs, bands, numHashes / bands)
-      .withColumn("band", col("band").as("band", bandMd))
   }
 
   /** EXACT n-gram-Jaccard near-dup pairs via prefix-filtered inverted-index
@@ -663,7 +571,7 @@ object MinHashDedup {
     * the rarest shingles, keeping the candidate join near-linear; the
     * boilerplate tail of hot shingles never enters a probe prefix.
     *
-    * Same portable shingle hashing and cache/broadcast discipline as
+    * Same shingle hashing and cache/broadcast discipline as
     * [[jaccardPairs]]; the verify step ships only bare id pairs.
     */
   def containmentPairs(
@@ -710,89 +618,15 @@ object MinHashDedup {
     out
   }
 
-  /** Coefficients for the PORTABLE minhash variant — exposed so the oracle
-    * SQL generator embeds the exact same literals (same scheme as
-    * [[coefficients]], parameterized count).
+  /** Deterministic (a, b) permutation coefficients for `k` hashes from
+    * `seed` — the one generator behind every signature, exposed so the
+    * oracle SQL generator embeds the exact same literals.
     */
   private[graft] def portableCoefficients(k: Int, seed: Long): (Seq[Long], Seq[Long]) = {
     val rnd = new scala.util.Random(seed)
     val as = Seq.fill(k)((math.abs(rnd.nextLong()) % (MersennePrime - 1)) + 1)
     val bs = Seq.fill(k)(math.abs(rnd.nextLong()) % MersennePrime)
     (as, bs)
-  }
-
-  /** PORTABLE minhash-LSH near-dup pairs — the [[verifiedPairs]] pipeline
-    * re-expressed in engine-portable arithmetic, so EVERY stage (shingle
-    * hashes -> permutation minima -> band buckets -> candidate pairs ->
-    * Jaccard verify) is recomputed bit-for-bit by another engine: shingle
-    * hashes are 48-bit polynomial folds of per-token char folds (see
-    * [[TextFunctions.portableShingleHashes]]) instead of xxhash64, and band
-    * buckets are 48-bit folds of the band's signature slice (init = band
-    * index) instead of xxhash64. The DuckDB oracle replays the whole thing,
-    * which puts the LSH candidate step itself — not just the exact verify —
-    * through the correctness gate. Same plan shape and cache discipline as
-    * [[verifiedPairs]]; use that one in production (xxhash64 is one
-    * codegen'd call where the portable fold is a per-char loop).
-    */
-  def portableVerifiedPairs(
-      df: DataFrame, idCol: String, textCol: String, threshold: Double,
-      numHashes: Int = 16, bands: Int = 8, shingleN: Int = 3,
-      maxBucketSize: Int = 1000, seed: Long = 7L): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val r = numHashes / bands
-    val (as, bs) = portableCoefficients(numHashes, seed)
-    val base = Parallelism.ensureCompute(df)
-      .select(col(idCol).as("id"),
-        TextFunctions.portableShingleHashes(
-          TextFunctions.portableTokenHashes(col(textCol)), shingleN).as("shingles"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    base.count()
-    val sigs = sigsFromCached(base, as, bs) // cache scan = the barrier
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sigs.count()
-    val cands = capAndPair(portableBandBuckets(sigs, bands, r), maxBucketSize)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nCands = cands.count()
-    val out = verifyJaccard(base, cands, threshold, nCands)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    cands.unpersist()
-    sigs.unpersist()
-    base.unpersist()
-    out
-  }
-
-  /** The portable pipeline's CANDIDATE stage alone — exactly what
-    * [[portableVerifiedPairs]] hands to its Jaccard verify, without the
-    * verify. Exposed so the LSH layer itself can be SCORED against the
-    * exact [[jaccardPairs]] ground truth (q133): candidate recall is the
-    * quantity band/row settings are chosen by, and at 100 TB you pick
-    * them from this readout on a sample, not from folklore. Same persist
-    * discipline as the verified pipeline (result is pair-sized; the
-    * corpus-sized shingle/signature caches are dropped before return).
-    */
-  def portableCandidatePairs(
-      df: DataFrame, idCol: String, textCol: String,
-      numHashes: Int = 16, bands: Int = 8, shingleN: Int = 3,
-      maxBucketSize: Int = 1000, seed: Long = 7L): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val (as, bs) = portableCoefficients(numHashes, seed)
-    val base = Parallelism.ensureCompute(df)
-      .select(col(idCol).as("id"),
-        TextFunctions.portableShingleHashes(
-          TextFunctions.portableTokenHashes(col(textCol)), shingleN).as("shingles"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    base.count()
-    val sigs = sigsFromCached(base, as, bs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sigs.count()
-    val out = capAndPair(portableBandBuckets(sigs, bands, numHashes / bands),
-        maxBucketSize)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    sigs.unpersist()
-    base.unpersist()
-    out
   }
 
   /** Transitive closure of dup pairs -> (id, rep) where rep = min id of the
@@ -872,7 +706,10 @@ object MinHashDedup {
   /** Distributed min-label propagation (bounded iterations, early stop).
     * The returned label table is result-sized (one row per doc appearing in
     * a dup pair) and stays cached — callers may `unpersist()` it when done;
-    * the input-sized edge cache is dropped before returning.
+    * the input-sized edge cache is dropped before returning. A component
+    * whose diameter needs more than `maxIterations` rounds fails the call:
+    * labels cut off mid-propagation are not a fixpoint, and callers that
+    * group by `rep` would silently split the component.
     */
   def duplicateGroupsDistributed(pairs: DataFrame, maxIterations: Int = 15): DataFrame = {
     // undirected edge list, both directions
@@ -901,6 +738,12 @@ object MinHashDedup {
       iter += 1
     }
     edges.unpersist()
+    if (!converged) {
+      labels.unpersist()
+      throw new IllegalStateException(
+        s"duplicate-group label propagation did not converge within " +
+          s"maxIterations=$maxIterations rounds; raise maxIterations")
+    }
     labels
   }
 

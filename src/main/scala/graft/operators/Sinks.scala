@@ -6,13 +6,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Table sinks mirroring the reference's two load paths plus the XCom
   * stage-handoff (§2.1 S3/S4/S7, §3.3).
   *
-  * Concurrency contract: [[swapInto]]/[[appendInto]] assume a SINGLE
-  * WRITER per destination (the reference's Airflow DAG serializes loads
-  * the same way). Readers concurrent with a rename-based [[swapInto]] can
-  * glimpse a missing directory during the two-rename window; readers that
-  * must never see that use the commit-marker layout
-  * ([[swapIntoVersioned]]/[[readCurrent]]), whose commit point is a single
-  * atomic file create. A table format with a transactional log
+  * Concurrency contract: [[swapInto]]/[[appendInto]]/[[upsertInto]]
+  * assume a SINGLE WRITER per destination (the reference's Airflow DAG
+  * serializes loads the same way). Readers concurrent with a rename-based
+  * [[swapInto]] can glimpse a missing directory during the two-rename
+  * window; readers that must never see that use the commit-marker layout
+  * ([[swapIntoVersioned]]/[[readCurrent]]), whose commit point is a
+  * single atomic file create. A table format with a transactional log
   * (Delta/Iceberg) is the production replacement for this whole seam.
   */
 object Sinks {
@@ -64,6 +64,24 @@ object Sinks {
         batchAligned.write.mode("append").parquet(destPath)
       }
     }
+  }
+
+  /** The upsert path (MERGE, `etl.py:88-183`) for a parquet destination:
+    * heal a crashed swap first, so the backed-up rows are merged rather
+    * than lost; then [[Merge.upsertBatch]] the batch (deduped on pk, the
+    * latest by `orderCols` winning) into the table — or create the table
+    * from the deduped batch — and publish the result through [[swapInto]].
+    * Plain parquet has no transactional MERGE, so the whole table is
+    * rewritten; a Delta/Iceberg sink replaces this with a real commit.
+    */
+  def upsertInto(spark: SparkSession, destPath: String, batch: DataFrame,
+      pk: Seq[String], orderCols: Seq[String]): Unit = {
+    healCrashWindow(fs(spark), new Path(destPath), new Path(destPath + ".old"))
+    val merged =
+      if (tableExists(spark, destPath))
+        Merge.upsertBatch(spark.read.parquet(destPath), batch, pk, orderCols)
+      else Dedup.byKeyLatest(batch, pk, orderCols)
+    swapInto(spark, destPath, merged)
   }
 
   /** Atomic-ish write-new-then-swap for full-table rewrites. Plain parquet

@@ -240,9 +240,10 @@ object PolyHashOpsMinhash {
   * nonnegative operands == pmod), so signatures — and every LSH bucket
   * and oracle value derived from them — are bit-equal.
   *
-  * Input MUST already be reduced mod p (the sigTable projection does
-  * this below the repartition barrier); coefficients and p ride along as
-  * expression parameters, reaching generated code via reference objects.
+  * Input MUST already be reduced mod p (MinHashDedup's signature
+  * projection wraps it in a `pmod` transform); coefficients and p ride
+  * along as expression parameters, reaching generated code via
+  * reference objects.
   */
 case class MinHashSignature(
     child: Expression, as: Seq[Long], bs: Seq[Long], p: Long)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.operators.{Dedup, Merge, Parallelism}
+import graft.operators.{Parallelism, Sinks}
 
 /** Streaming surface (§2.7).
   *
@@ -12,9 +12,9 @@ import graft.operators.{Dedup, Merge, Parallelism}
   * (`themovies.py:130` @daily, retries `:117-122`, MERGE `queries.py:35-48`)
   * — i.e. an at-least-once, upsert-deduplicated micro-batch pipeline. That
   * maps 1:1 onto Structured Streaming with `foreachBatch{ merge }`:
-  * the same [[Merge]] operator serves batch and stream, and within-batch
-  * dedup + MERGE idempotence upgrade at-least-once delivery to
-  * effectively-once results.
+  * the same [[graft.operators.Merge]] operator serves batch and stream,
+  * and within-batch dedup + MERGE idempotence upgrade at-least-once
+  * delivery to effectively-once results.
   *
   * All aggregations here are written on plain DataFrames so the identical
   * code runs in batch (for the DuckDB oracle) and under a streaming plan
@@ -176,7 +176,7 @@ object Streams {
 
   /** The reference pipeline as a stream: each micro-batch is deduped on pk
     * (deterministic winner) and MERGEd into the parquet destination table
-    * via full-snapshot swap (see [[ParquetUpsertSink]]).
+    * via full-snapshot swap (see [[Sinks.upsertInto]]).
     */
   def upsertStream(
       spark: SparkSession,
@@ -191,7 +191,7 @@ object Streams {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        ParquetUpsertSink.mergeInto(spark, destPath, batch, pk, orderCols)
+        Sinks.upsertInto(spark, destPath, batch, pk, orderCols)
       }
       .start()
 
@@ -633,32 +633,4 @@ object Streams {
       graft.operators.QuantileSketch.merge(
         graft.operators.ManifestTable.read(spark, tableRoot), groupCols),
       referenceSketch, groupCols, alpha)
-}
-
-/** Merge-into-parquet sink with write-new-then-swap atomicity (SURVEY §7
-  * "hard parts": plain parquet has no transactional MERGE; a Delta/Iceberg
-  * sink would replace the swap with a real commit).
-  */
-object ParquetUpsertSink {
-  def mergeInto(
-      spark: SparkSession,
-      destPath: String,
-      batch: DataFrame,
-      pk: Seq[String],
-      orderCols: Seq[String]): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val dest = new org.apache.hadoop.fs.Path(destPath)
-    val deduped = Dedup.byKeyLatest(batch, pk, orderCols)
-    val merged =
-      if (fs.exists(dest)) Merge.merge(spark.read.parquet(destPath), deduped, pk)
-      else deduped
-    val tmp = new org.apache.hadoop.fs.Path(destPath + ".staging")
-    merged.write.mode("overwrite").parquet(tmp.toString)
-    val bak = new org.apache.hadoop.fs.Path(destPath + ".old")
-    if (fs.exists(bak)) fs.delete(bak, true)
-    if (fs.exists(dest)) fs.rename(dest, bak)
-    fs.rename(tmp, dest)
-    fs.delete(bak, true)
-  }
 }

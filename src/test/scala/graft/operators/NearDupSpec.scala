@@ -25,6 +25,10 @@ class NearDupSpec extends SparkSuite {
     (1L, base), (2L, nearDup), (3L, mid), (4L, unrelated1), (5L, unrelated2)
   ).toDF("doc_id", "text")
 
+  /** The portable-space config the oracle-gated queries run. */
+  private val portable = MinHashDedup.Config(jaccardThreshold = 0.5,
+    numHashes = 16, bands = 8, seed = 7L, hashSpace = MinHashDedup.Portable)
+
   test("minhash finds planted near-dups, keeps unrelated docs") {
     val cfg = MinHashDedup.Config(jaccardThreshold = 0.5, shingleN = 3)
     val pairs = MinHashDedup.verifiedPairs(corpus, "doc_id", "text", cfg)
@@ -73,42 +77,52 @@ class NearDupSpec extends SparkSuite {
     // the pairs — same folds, same rows, just not re-derived per batch
     val day1 = corpus.where($"doc_id".isin(1L, 4L))
     val day2 = corpus.where(!$"doc_id".isin(1L, 4L))
-    val store = MinHashDedup.portableSignatures(day1, "doc_id", "text")
+    val store = MinHashDedup.signatures(day1, "doc_id", "text", portable)
       .localCheckpoint()
-    val idx = MinHashDedup.portableBandIndex(store).localCheckpoint()
-    def pairs(si: org.apache.spark.sql.DataFrame) =
-      MinHashDedup.portableIncrementalVerifiedPairs(
-          store, day2, "doc_id", "text", threshold = 0.5, storeIndex = si)
+    val idx = MinHashDedup.bandIndex(store, portable).localCheckpoint()
+    def pairs(si: Option[org.apache.spark.sql.DataFrame]) =
+      MinHashDedup.incrementalVerifiedPairs(
+          store, day2, "doc_id", "text", portable, storeIndex = si)
         .select("idA", "idB").as[(Long, Long)].collect().toSet
-    val withIdx = pairs(idx)
-    val without = pairs(null)
+    val withIdx = pairs(Some(idx))
+    val without = pairs(None)
     assert(withIdx == without,
       s"stored-index pass $withIdx must equal refolding pass $without")
     assert(withIdx.nonEmpty, "fixture must surface at least one pair")
     // banding-mismatch guard: an index built under a DIFFERENT banding
     // (or one lacking the metadata stamp entirely) must be rejected —
     // silently dropping candidate buckets is a false-negative dedup
-    val wrongBanding = MinHashDedup.portableBandIndex(store, bands = 4)
+    val wrongBanding = MinHashDedup.bandIndex(store, portable.copy(bands = 4))
     val eBand = intercept[IllegalArgumentException] {
-      MinHashDedup.portableIncrementalVerifiedPairs(
-        store, day2, "doc_id", "text", threshold = 0.5,
-        storeIndex = wrongBanding)
+      MinHashDedup.incrementalVerifiedPairs(
+        store, day2, "doc_id", "text", portable, storeIndex = Some(wrongBanding))
     }
     assert(eBand.getMessage.contains("does not match"), eBand.getMessage)
+    // same banding, other hash space: the index's buckets are folds the
+    // call's xxhash64 buckets can never meet
+    val eSpace = intercept[IllegalArgumentException] {
+      MinHashDedup.incrementalVerifiedPairs(
+        store, day2, "doc_id", "text",
+        portable.copy(hashSpace = MinHashDedup.XxHash64), storeIndex = Some(idx))
+    }
+    assert(eSpace.getMessage.contains("does not match") &&
+      eSpace.getMessage.contains("Portable"), eSpace.getMessage)
     val unstamped = idx.select(col("id"), col("band").cast("int").as("band"),
       col("bucket"))
     val eMeta = intercept[IllegalArgumentException] {
-      MinHashDedup.portableIncrementalVerifiedPairs(
-        store, day2, "doc_id", "text", threshold = 0.5,
-        storeIndex = unstamped)
+      MinHashDedup.incrementalVerifiedPairs(
+        store, day2, "doc_id", "text", portable, storeIndex = Some(unstamped))
     }
     assert(eMeta.getMessage.contains("metadata"), eMeta.getMessage)
+    // and a config whose bands do not divide numHashes never exists
+    val eDiv = intercept[IllegalArgumentException](portable.copy(bands = 5))
+    assert(eDiv.getMessage.contains("bands must divide numHashes"), eDiv.getMessage)
     // and the stamp survives the artifact's disk round-trip (the store
     // keeps its index as a parquet sidecar)
     val pq = java.nio.file.Files.createTempDirectory("graft_bandidx")
       .resolve("i").toString
     idx.write.parquet(pq)
-    assert(pairs(spark.read.parquet(pq)) == without,
+    assert(pairs(Some(spark.read.parquet(pq))) == without,
       "parquet round-tripped index must still validate and match")
   }
 
@@ -176,19 +190,38 @@ class NearDupSpec extends SparkSuite {
     // size-estimated — only bare id pairs may be broadcast. Plan-inspect
     // with AQE off so the compile-time joins are what's asserted.
     spark.conf.set("spark.sql.adaptive.enabled", "false")
+    // earlier tests leave verifiedPairs results cached, and this lazy plan
+    // is the same logical plan: cache substitution would hide its joins
+    spark.catalog.clearCache()
     try {
-      val df = MinHashDedup.verifiedPairsPlan(corpus, "doc_id", "text",
-        MinHashDedup.Config(jaccardThreshold = 0.5, shingleN = 3))
-      val bcasts = df.queryExecution.executedPlan.collect {
-        case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec => b
-      }
-      assert(bcasts.nonEmpty, "expected pinned broadcasts of the pair keys")
-      bcasts.foreach { b =>
-        val arrayCols = b.output.filter(
-          _.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType])
-        assert(arrayCols.isEmpty,
-          s"broadcast side carries array columns ${arrayCols.map(_.name)}:\n$b")
-      }
+      Seq(MinHashDedup.Config(jaccardThreshold = 0.5, shingleN = 3), portable)
+        .foreach { cfg =>
+          def plan(candCount: Long) = MinHashDedup.verifiedPairsPlan(
+            corpus, "doc_id", "text", cfg, candCount).queryExecution.executedPlan
+          def bcastsOf(p: org.apache.spark.sql.execution.SparkPlan) = p.collect {
+            case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec => b
+          }
+          // the broadcast regime reaches up to VerifyBroadcastMaxPairs inclusive
+          val bcasts = bcastsOf(plan(MinHashDedup.VerifyBroadcastMaxPairs))
+          assert(bcasts.exists(_.output.map(_.name).toSet == Set("idA", "idB")),
+            s"${cfg.hashSpace}: expected pinned broadcasts of the pair keys, " +
+              s"got ${bcasts.map(_.output.map(_.name))}")
+          bcasts.foreach { b =>
+            val arrayCols = b.output.filter(
+              _.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType])
+            assert(arrayCols.isEmpty, s"${cfg.hashSpace}: broadcast side " +
+              s"carries array columns ${arrayCols.map(_.name)}:\n$b")
+          }
+          // one pair past it, the keys stop broadcasting and both probes
+          // plus the pair-up run sort-merge (the spillable strategy)
+          val big = plan(MinHashDedup.VerifyBroadcastMaxPairs + 1)
+          assert(!bcastsOf(big).exists(_.output.map(_.name).toSet == Set("idA", "idB")),
+            s"${cfg.hashSpace}: pair keys broadcast past the bound:\n$big")
+          val smj = big.collect {
+            case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j
+          }
+          assert(smj.size >= 3, s"${cfg.hashSpace}: expected sort-merge probes:\n$big")
+        }
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
@@ -199,6 +232,30 @@ class NearDupSpec extends SparkSuite {
       .as[(String, String)].collect().toMap
     assert(groups("a") == "a" && groups("b") == "a" && groups("c") == "a")
     assert(groups("x") == "x" && groups("y") == "x")
+  }
+
+  test("distributed duplicateGroups equals the local union-find") {
+    // driverThreshold = 0 forces label propagation even for tiny pair sets
+    val longs = Seq((1L, 2L, 0.9), (2L, 3L, 0.9), (3L, 4L, 0.9), (7L, 8L, 0.9))
+      .toDF("idA", "idB", "jaccard")
+    assert(MinHashDedup.duplicateGroups(longs, driverThreshold = 0)
+      .as[(Long, Long)].collect().toSet ==
+      MinHashDedup.duplicateGroups(longs).as[(Long, Long)].collect().toSet)
+    val strings = Seq(("b", "c", 0.9), ("a", "b", 0.9), ("x", "y", 0.8))
+      .toDF("idA", "idB", "jaccard")
+    assert(MinHashDedup.duplicateGroups(strings, driverThreshold = 0)
+      .as[(String, String)].collect().toSet ==
+      MinHashDedup.duplicateGroups(strings).as[(String, String)].collect().toSet)
+  }
+
+  test("distributed duplicateGroups fails when a chain outlasts maxIterations") {
+    // a 10-node path needs 8 propagation rounds plus one to see no change;
+    // cutting it at 3 would hand back labels that split the component
+    val chain = (1L until 10L).map(i => (i, i + 1, 0.9)).toDF("idA", "idB", "jaccard")
+    val e = intercept[IllegalStateException] {
+      MinHashDedup.duplicateGroups(chain, maxIterations = 3, driverThreshold = 0)
+    }
+    assert(e.getMessage.contains("maxIterations=3"), e.getMessage)
   }
 
   test("simhash maxHamming=0 pairs exact duplicates (64-bit chunk mask)") {
@@ -313,17 +370,16 @@ class NearDupSpec extends SparkSuite {
   }
 
   test("portable minhash finds planted pairs, subset of exact Jaccard pairs") {
-    val portable = MinHashDedup.portableVerifiedPairs(
-      corpus, "doc_id", "text", threshold = 0.5)
+    val pairs = MinHashDedup.verifiedPairs(corpus, "doc_id", "text", portable)
       .select("idA", "idB").as[(Long, Long)].collect().toSet
-    assert(portable.contains((1L, 2L)), s"expected (1,2) in $portable")
-    assert(!portable.exists(p => p._1 >= 4L || p._2 >= 4L),
-      s"unrelated docs must not pair: $portable")
+    assert(pairs.contains((1L, 2L)), s"expected (1,2) in $pairs")
+    assert(!pairs.exists(p => p._1 >= 4L || p._2 >= 4L),
+      s"unrelated docs must not pair: $pairs")
     // LSH is a filter over the exact pair set: candidates it keeps must all
     // verify, so portable ⊆ exact (recall may be < 1, never precision)
     val exact = MinHashDedup.jaccardPairs(corpus, "doc_id", "text",
       threshold = 0.5, shingleN = 3)
       .select("idA", "idB").as[(Long, Long)].collect().toSet
-    assert(portable.subsetOf(exact), s"portable=$portable exact=$exact")
+    assert(pairs.subsetOf(exact), s"portable=$pairs exact=$exact")
   }
 }

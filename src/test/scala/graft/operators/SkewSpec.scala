@@ -64,20 +64,23 @@ class SkewSpec extends SparkSuite {
       (i.toLong, text)
     }
     val df = docs.toDF("doc_id", "text")
-    val cfg = MinHashDedup.Config(jaccardThreshold = 0.8, maxBucketSize = 50)
-    val sigs = MinHashDedup.signatures(df, "doc_id", "text", cfg)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sigs.count()
-    val capped = MinHashDedup.candidatePairs(sigs, cfg).count()
-    assert(capped <= N,
-      s"capped candidate count must stay near-linear, got $capped")
-    // the quadratic mass is real — prove the cap is what removed it
-    val uncapped = MinHashDedup.candidatePairs(
-      sigs, cfg.copy(maxBucketSize = 1000000)).count()
-    val dupMass = (N * 9 / 10).toLong
-    assert(uncapped >= dupMass * (dupMass - 1) / 2,
-      s"uncapped skew bucket should be quadratic, got $uncapped")
-    sigs.unpersist()
+    Seq(MinHashDedup.XxHash64, MinHashDedup.Portable).foreach { space =>
+      val cfg = MinHashDedup.Config(jaccardThreshold = 0.8, maxBucketSize = 50,
+        hashSpace = space)
+      val sigs = MinHashDedup.signatures(df, "doc_id", "text", cfg)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      sigs.count()
+      val capped = MinHashDedup.candidatePairs(sigs, cfg).count()
+      assert(capped <= N,
+        s"$space: capped candidate count must stay near-linear, got $capped")
+      // the quadratic mass is real — prove the cap is what removed it
+      val uncapped = MinHashDedup.candidatePairs(
+        sigs, cfg.copy(maxBucketSize = 1000000)).count()
+      val dupMass = (N * 9 / 10).toLong
+      assert(uncapped >= dupMass * (dupMass - 1) / 2,
+        s"$space: uncapped skew bucket should be quadratic, got $uncapped")
+      sigs.unpersist()
+    }
   }
 
   test("embedding LSH: 90% of vectors in one bucket stays |q|-bounded, output exactly k") {

@@ -64,6 +64,35 @@ class StreamsSpec extends SparkSuite {
     assert(afterSecond == Map(1L -> "a", 2L -> "b3", 3L -> "c"))
   }
 
+  test("upsertStream heals a crashed swap before merging — prior rows survive") {
+    val destPath = tmpDir("upsert-crash") + "/t"
+    val in = tmpDir("upsert-crash-in")
+    Seq((1L, 1L, "a"), (2L, 1L, "b")).toDF("id", "seq", "v")
+      .write.mode("overwrite").parquet(in)
+    val q1 = Streams.upsertStream(spark,
+      spark.readStream.schema(spark.read.parquet(in).schema).parquet(in),
+      destPath, pk = Seq("id"), orderCols = Seq("seq"), checkpoint = tmpDir("crash-ck1"))
+    q1.processAllAvailable(); q1.stop()
+    // the swap's crash window: dest renamed to .old, the staged table
+    // never published — only the backup holds the table's rows
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val dest = new org.apache.hadoop.fs.Path(destPath)
+    val bak = new org.apache.hadoop.fs.Path(destPath + ".old")
+    assert(fs.rename(dest, bak) && !fs.exists(dest), "precondition: crashed swap")
+    val in2 = tmpDir("upsert-crash-in2")
+    Seq((2L, 2L, "b2"), (3L, 1L, "c")).toDF("id", "seq", "v")
+      .write.mode("overwrite").parquet(in2)
+    val q2 = Streams.upsertStream(spark,
+      spark.readStream.schema(spark.read.parquet(in2).schema).parquet(in2),
+      destPath, pk = Seq("id"), orderCols = Seq("seq"), checkpoint = tmpDir("crash-ck2"))
+    q2.processAllAvailable(); q2.stop()
+    val after = spark.read.parquet(destPath)
+      .select($"id", $"v").as[(Long, String)].collect().toMap
+    assert(after == Map(1L -> "a", 2L -> "b2", 3L -> "c"),
+      s"the backed-up rows must be restored, then merged: $after")
+    assert(!fs.exists(bak), ".old must be consumed by the restore")
+  }
+
   test("SCD2 composes with foreachBatch: per-micro-batch history maintenance") {
     import graft.operators.Scd2
     val in = tmpDir("scd2-stream")

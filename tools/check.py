@@ -1,13 +1,19 @@
 #!/usr/bin/env python3
 """Local mimic of the driver's correctness gate.
 
-Usage: python3 tools/check.py <sfDir> <verifyOutDir>
+Usage: python3 tools/check.py <sfDir> <verifyOutDir> [baselineOutDir]
 
 Reads each <verifyOutDir>/<query>/ parquet (written by graft.Verify), runs the
 matching oracle SQL from oracle_sql.json in DuckDB over the sfDir tables,
 canonicalizes both (columns sorted by name, rows sorted by all columns,
 timestamps normalized to microseconds), and compares exactly. Reports
 per-query PASS/FAIL with a diff sample on mismatch.
+
+Rows-only queries (no oracle SQL) are SKIPped, unless a baseline dump is
+given: a graft.Verify output directory from another tree (e.g. the parent
+commit). Then each rows-only query is compared, canonicalized and exactly,
+against the baseline's rows for it, so a refactor can be checked to leave
+those answers unchanged.
 """
 import duckdb
 import glob
@@ -38,8 +44,46 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df.reset_index(drop=True)
 
 
+def read_dump(d: str):
+    files = glob.glob(f"{d}/*.parquet")
+    if not files:
+        return None
+    return pd.concat([pd.read_parquet(f) for f in files], ignore_index=True)
+
+
+def compare(got: pd.DataFrame, want: pd.DataFrame):
+    """None when equal after canonicalization, else a one-line reason."""
+    g, w = canon(got), canon(want)
+    if sorted(g.columns) != sorted(w.columns):
+        return f"columns spark={sorted(g.columns)} expected={sorted(w.columns)}"
+    if len(g) != len(w):
+        return f"rows spark={len(g)} expected={len(w)}"
+    if g.equals(w):
+        return None
+    # find differing cells
+    diffs = []
+    for c in g.columns:
+        a, b = g[c], w[c]
+        neq = ~((a == b) | (a.isna() & b.isna()))
+        if neq.any():
+            i = int(neq.idxmax())
+            extra = ""
+            if pd.api.types.is_float_dtype(a):
+                try:
+                    extra = f" maxAbsDiff={np.nanmax(np.abs(a-b)):.3e}"
+                except Exception:
+                    pass
+            diffs.append(f"col {c}: {int(neq.sum())} cells, e.g. row {i}: "
+                         f"spark={a.iloc[i]!r} expected={b.iloc[i]!r}{extra}")
+    return "; ".join(diffs[:4])
+
+
 def main() -> int:
+    if len(sys.argv) not in (3, 4):
+        print(__doc__, file=sys.stderr)
+        return 2
     sfdir, outdir = sys.argv[1], sys.argv[2]
+    basedir = sys.argv[3] if len(sys.argv) == 4 else None
     con = duckdb.connect()
     for p in sorted(glob.glob(f"{sfdir}/*.parquet")):
         name = os.path.basename(p)[: -len(".parquet")]
@@ -51,46 +95,29 @@ def main() -> int:
     result_dirs = [d for d in sorted(os.listdir(outdir))
                    if os.path.isdir(os.path.join(outdir, d))]
     for name in result_dirs:
-        files = glob.glob(f"{outdir}/{name}/*.parquet")
-        if not files:
+        got = read_dump(f"{outdir}/{name}")
+        if got is None:
             print(f"FAIL {name}: no spark output")
             n_fail += 1
             continue
-        got = pd.concat([pd.read_parquet(f) for f in files], ignore_index=True)
-        if name not in oracle:
+        if name in oracle:
+            want, against = con.sql(oracle[name]).df(), "oracle"
+        elif basedir is not None:
+            want, against = read_dump(f"{basedir}/{name}"), "baseline"
+            if want is None:
+                print(f"FAIL {name}: rows-only and no baseline output")
+                n_fail += 1
+                continue
+        else:
             print(f"SKIP {name}: rows-only ({len(got)} rows)")
             continue
-        want = con.sql(oracle[name]).df()
-        g, w = canon(got), canon(want)
-        if sorted(g.columns) != sorted(w.columns):
-            print(f"FAIL {name}: columns spark={sorted(g.columns)} oracle={sorted(w.columns)}")
-            n_fail += 1
-            continue
-        if len(g) != len(w):
-            print(f"FAIL {name}: rows spark={len(g)} oracle={len(w)}")
-            n_fail += 1
-            continue
-        if g.equals(w):
-            print(f"PASS {name} ({len(g)} rows)")
+        reason = compare(got, want)
+        if reason is None:
+            print(f"PASS {name} ({len(got)} rows, vs {against})")
             n_pass += 1
-            continue
-        # find differing cells
-        diffs = []
-        for c in g.columns:
-            a, b = g[c], w[c]
-            neq = ~((a == b) | (a.isna() & b.isna()))
-            if neq.any():
-                i = int(neq.idxmax())
-                extra = ""
-                if pd.api.types.is_float_dtype(a):
-                    try:
-                        extra = f" maxAbsDiff={np.nanmax(np.abs(a-b)):.3e}"
-                    except Exception:
-                        pass
-                diffs.append(f"col {c}: {int(neq.sum())} cells, e.g. row {i}: "
-                             f"spark={a.iloc[i]!r} oracle={b.iloc[i]!r}{extra}")
-        print(f"FAIL {name}: " + "; ".join(diffs[:4]))
-        n_fail += 1
+        else:
+            print(f"FAIL {name} (vs {against}): {reason}")
+            n_fail += 1
     print(f"\n{n_pass} pass, {n_fail} fail, {len(result_dirs) - n_pass - n_fail} rows-only")
     return 1 if n_fail else 0
 
