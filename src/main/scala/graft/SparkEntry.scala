@@ -17,7 +17,7 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Queries.q3Merge(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q1_dedup_full" -> (Queries.q1DedupFull _),
     "q2_latest_by_key" -> (Queries.q2LatestByKey _),
     "q3_merge" -> (Queries.q3Merge _),

@@ -33,8 +33,7 @@ object Diff {
     val b = before.withColumn("__b", lit(true)).as("b")
     val a = after.withColumn("__a", lit(true)).as("a")
     val anyChanged =
-      if (attrs.isEmpty) lit(false)
-      else attrs.map(c => !(col(s"b.$c") <=> col(s"a.$c"))).reduce(_ || _)
+      Merge.changePredicate(attrs, c => col(s"b.$c"), c => col(s"a.$c"))
     b.join(a, pk, "full_outer")
       .select(pk.map(col) :+
         when(col("b.__b").isNull, lit("added"))

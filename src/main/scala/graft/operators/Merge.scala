@@ -41,10 +41,12 @@ object Merge {
   val AuditCols: Set[String] = Set("record_loaded_at")
 
   /** The null-safe change-detection predicate (P5, `etl.py:160-162`):
-    * true iff any compared column differs, treating NULL as a value.
-    * `cols` are compared; audit columns must already be excluded.
+    * true iff any of `cols` differs between its `left` and `right`
+    * resolution, treating NULL as a value (false for no columns).
+    * Callers exclude key and audit columns from `cols`.
     */
-  def changePredicate(left: DataFrame, right: DataFrame, cols: Seq[String]): Column =
+  def changePredicate(cols: Seq[String], left: String => Column,
+      right: String => Column): Column =
     cols.map(c => !(left(c) <=> right(c))).reduceOption(_ || _).getOrElse(lit(false))
 
   /** Compute the post-MERGE state of `dest` given `source`, as a DataFrame.
@@ -79,8 +81,7 @@ object Merge {
     val d = dest.select(cols.map(c => col(c).as(dc(c))): _*)
     val s = source.select(cols.map(c => col(c).as(sc(c))): _*)
     val joinCond = pk.map(k => col(dc(k)) === col(sc(k))).reduce(_ && _)
-    val changed = compareCols.map(c => !(col(dc(c)) <=> col(sc(c))))
-      .reduceOption(_ || _).getOrElse(lit(false))
+    val changed = changePredicate(compareCols, c => col(dc(c)), c => col(sc(c)))
     val srcMatched = pk.map(k => col(sc(k)).isNotNull).reduce(_ && _)
 
     strategy match {

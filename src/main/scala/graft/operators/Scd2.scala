@@ -85,10 +85,8 @@ object Scd2 {
       .join(b.withColumn("__new", lit(true)).as("b"), Seq(key), "full_outer")
     val curPresent = col("c.__cur").isNotNull
     val batchPresent = col("b.__new").isNotNull
-    // the null-safe any-column-differs predicate (Merge.changePredicate's
-    // shape, built over the join's two column namespaces)
-    val anyChanged = attrs.map(a => !(col(s"c.$a") <=> col(s"b.$a")))
-      .reduce(_ || _)
+    val anyChanged =
+      Merge.changePredicate(attrs, a => col(s"c.$a"), a => col(s"b.$a"))
 
     // surviving/closed versions of the current rows
     val fromCurrent = j.where(curPresent).select(

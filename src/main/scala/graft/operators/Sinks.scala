@@ -68,9 +68,11 @@ object Sinks {
 
   /** The upsert path (MERGE, `etl.py:88-183`) for a parquet destination:
     * heal a crashed swap first, so the backed-up rows are merged rather
-    * than lost; then [[Merge.upsertBatch]] the batch (deduped on pk, the
-    * latest by `orderCols` winning) into the table — or create the table
-    * from the deduped batch — and publish the result through [[swapInto]].
+    * than lost; resolve schema drift ([[SchemaDrift.align]], as
+    * `etl.py:128-141` does before its MERGE); then [[Merge.upsertBatch]]
+    * the batch (deduped on pk, the latest by `orderCols` winning) into
+    * the table — or create the table from the deduped batch — and
+    * publish the result through [[swapInto]].
     * Plain parquet has no transactional MERGE, so the whole table is
     * rewritten; a Delta/Iceberg sink replaces this with a real commit.
     */
@@ -78,9 +80,10 @@ object Sinks {
       pk: Seq[String], orderCols: Seq[String]): Unit = {
     healCrashWindow(fs(spark), new Path(destPath), new Path(destPath + ".old"))
     val merged =
-      if (tableExists(spark, destPath))
-        Merge.upsertBatch(spark.read.parquet(destPath), batch, pk, orderCols)
-      else Dedup.byKeyLatest(batch, pk, orderCols)
+      if (tableExists(spark, destPath)) {
+        val (dest, aligned) = SchemaDrift.align(spark.read.parquet(destPath), batch)
+        Merge.upsertBatch(dest, aligned, pk, orderCols)
+      } else Dedup.byKeyLatest(batch, pk, orderCols)
     swapInto(spark, destPath, merged)
   }
 

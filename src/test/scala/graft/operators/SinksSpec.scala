@@ -161,4 +161,18 @@ class SinksSpec extends SparkSuite {
     assert(!fs.exists(new org.apache.hadoop.fs.Path(root + "/_commit_00000002")))
     assert(Sinks.readCurrent(spark, root).select($"v").as[String].collect().toSeq == Seq("v4"))
   }
+
+  test("upsertInto aligns a drifted batch before merging (added column)") {
+    val path = tmp("upsertdrift")
+    Sinks.upsertInto(spark, path, Seq((1L, 1L, "a"), (2L, 1L, "b"))
+      .toDF("id", "seq", "v"), pk = Seq("id"), orderCols = Seq("seq"))
+    // the batch carries a new column: key 2 changes, key 3 is new
+    Sinks.upsertInto(spark, path, Seq((2L, 2L, "b2", 7.5), (3L, 1L, "c", 1.0))
+      .toDF("id", "seq", "v", "score"), pk = Seq("id"), orderCols = Seq("seq"))
+    val t = spark.read.parquet(path)
+    assert(t.columns.toSeq == Seq("id", "seq", "v", "score"))
+    val rows = t.select($"id", $"v", $"score").as[(Long, String, Option[Double])]
+      .collect().toSet
+    assert(rows == Set((1L, "a", None), (2L, "b2", Some(7.5)), (3L, "c", Some(1.0))))
+  }
 }
