@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Table sinks mirroring the reference's two load paths plus the XCom
   * stage-handoff (§2.1 S3/S4/S7, §3.3).
@@ -123,16 +124,41 @@ object Sinks {
   private def versionDir(root: Path, v: Long): Path =
     new Path(root, f"v$v%08d")
 
+  /** The schema a version was written with, stored beside its data. The
+    * leading `_` hides it from the parquet reader.
+    */
+  private val SchemaFile = "_graft_schema.json"
+
+  /** Read one version directory. With its stored schema the read plans
+    * without a job; parquet schema inference merges footers in a job on
+    * every read. A version without the file (written before the schema was
+    * stored) is inferred. The stored schema is the written DataFrame's, and
+    * the file source makes every field nullable either way, so both reads
+    * give the same schema.
+    */
+  private def readVersionDir(spark: SparkSession, dir: Path): DataFrame = {
+    val stored =
+      try {
+        val in = fs(spark).open(new Path(dir, SchemaFile))
+        try Some(DataType.fromJson(new String(in.readAllBytes(), "UTF-8")).asInstanceOf[StructType])
+        finally in.close()
+      } catch { case _: java.io.FileNotFoundException => None }
+    stored.fold(spark.read)(spark.read.schema).parquet(dir.toString)
+  }
+
   /** Reader-safe full-table swap: the commit-marker layout.
     *
     * {{{
     * tableRoot/
     *   v00000001/  ...parquet        (data, written first)
+    *               _graft_schema.json (its schema, written after the data)
     *   _commit_00000001               (empty marker; the COMMIT POINT)
     *   v00000002/  _commit_00000002
     * }}}
     *
-    * Data is written to a fresh version directory, then published by
+    * Data is written to a fresh version directory, its schema (`data.schema`
+    * as JSON) beside it, so [[readCurrent]]/[[readVersion]] read without
+    * parquet schema inference; the version is then published by
     * creating the commit marker — a single atomic file create
     * (`FileSystem.create(overwrite = false)`), so there is no instant at
     * which a reader resolving [[readCurrent]] sees a missing or
@@ -153,7 +179,10 @@ object Sinks {
     val f = fs(spark)
     val root = new Path(tableRoot)
     val next = committedVersions(f, root).maxOption.getOrElse(0L) + 1L
-    data.write.mode("overwrite").parquet(versionDir(root, next).toString)
+    val dir = versionDir(root, next)
+    data.write.mode("overwrite").parquet(dir.toString)
+    val out = f.create(new Path(dir, SchemaFile), true)
+    try out.write(data.schema.json.getBytes("UTF-8")) finally out.close()
     val marker = new Path(root, f"$CommitPrefix$next%08d")
     f.create(marker, false).close() // atomic publish; fails if it exists
     // GC: drop committed versions older than the keepVersions newest, plus
@@ -173,13 +202,13 @@ object Sinks {
 
   /** Resolve the current committed version of a [[swapIntoVersioned]]
     * table: max over commit markers (a single atomic listing — no rename
-    * window to race).
+    * window to race). Submits no job (the version's stored schema is read).
     */
   def readCurrent(spark: SparkSession, tableRoot: String): DataFrame = {
     val root = new Path(tableRoot)
     val vs = committedVersions(fs(spark), root)
     require(vs.nonEmpty, s"no committed version under $tableRoot")
-    spark.read.parquet(versionDir(root, vs.max).toString)
+    readVersionDir(spark, versionDir(root, vs.max))
   }
 
   /** All committed versions of a [[swapIntoVersioned]] table, ascending —
@@ -198,7 +227,7 @@ object Sinks {
     val vs = committedVersions(fs(spark), root)
     require(vs.contains(version),
       s"version $version not committed under $tableRoot (retained: ${vs.sorted.mkString(", ")})")
-    spark.read.parquet(versionDir(root, version).toString)
+    readVersionDir(spark, versionDir(root, version))
   }
 
   /** Inter-stage handoff (S3): the reference shuttles rows between Airflow

@@ -58,9 +58,14 @@ object Paginated {
     * element, with a `page` provenance column.
     *
     * Page 1 is probed on the driver (to learn `total_pages` and fail fast
-    * on auth errors); pages are then fetched IN EXECUTORS over a range
-    * DataFrame. Status semantics per reference: 400 => treat page as past
-    * the end (empty), other non-200 => throw (task retry / job fail).
+    * on auth errors); that probe is the only work done before an action.
+    * Pages 2..n are fetched IN EXECUTORS when the result is first run:
+    * `spark.range` cuts them into `min(n-1, fetchPartitions)` contiguous
+    * slices, one fetch task each, with no shuffle in front (a round-robin
+    * repartition would only spread page ids, at the price of a map stage
+    * in every execution). Status semantics per reference: 400 => treat
+    * page as past the end (empty), other non-200 => throw (task retry /
+    * job fail).
     */
   def ingest(
       spark: SparkSession,
@@ -69,6 +74,7 @@ object Paginated {
       resultSchema: StructType = movieSchema,
       fetchPartitions: Int = 8): DataFrame = {
     import spark.implicits._
+    require(fetchPartitions >= 1, s"fetchPartitions must be >= 1, got $fetchPartitions")
     val first = fetcher.fetch(endpoint, 1)
     if (first.status != 200)
       throw new IllegalStateException(
@@ -83,8 +89,7 @@ object Paginated {
     val bodies: Dataset[String] =
       if (totalPages <= 1) spark.createDataset(Seq(first.body))
       else {
-        val rest = spark.range(2, totalPages + 1L)
-          .repartition(fetchPartitions)
+        val rest = spark.range(2, totalPages + 1L, 1, math.min(totalPages - 1, fetchPartitions))
           .mapPartitions { pages =>
             pages.map { p =>
               val r = fetcher.fetch(endpoint, p.toInt)

@@ -162,6 +162,45 @@ class SinksSpec extends SparkSuite {
     assert(Sinks.readCurrent(spark, root).select($"v").as[String].collect().toSeq == Seq("v4"))
   }
 
+  /** Two versions whose schemas carry a non-nullable column, a nested
+    * struct, an array, a timestamp and field metadata.
+    */
+  private def storedSchemaTable(): String = {
+    val root = tmp("vschema")
+    val md = new org.apache.spark.sql.types.MetadataBuilder().putString("comment", "title").build()
+    (1 to 2).foreach { i =>
+      Sinks.swapIntoVersioned(spark, root, Seq((i.toLong, s"v$i", Seq(i, i + 1), i * 0.5)).toDF("id", "v", "xs", "d")
+        .select($"id", $"v".as("v", md), $"xs", org.apache.spark.sql.functions.struct($"v", $"d").as("s"),
+          org.apache.spark.sql.functions.timestamp_seconds($"id").as("ts")))
+    }
+    root
+  }
+
+  test("versioned reads use the stored schema: identical to inference, no job") {
+    val root = storedSchemaTable()
+    val dirs = Seq(1L, 2L).map(v => f"$root/v$v%08d")
+    dirs.foreach(d => assert(new java.io.File(d, "_graft_schema.json").isFile))
+    val inferred = dirs.map(d => spark.read.parquet(d).schema)
+    val ((current, v1), jobs) = graft.Jobs.counted(spark) {
+      (Sinks.readCurrent(spark, root), Sinks.readVersion(spark, root, 1L))
+    }
+    assert(jobs == 0, s"versioned reads submitted $jobs job(s) before an action")
+    assert(current.schema == inferred(1) && current.schema.json == inferred(1).json)
+    assert(v1.schema == inferred(0) && v1.schema.json == inferred(0).json)
+    assert(current.schema("v").metadata.getString("comment") == "title")
+    assert(current.select($"v").as[String].collect().toSeq == Seq("v2"))
+    assert(v1.select($"s.d").as[Double].collect().toSeq == Seq(0.5))
+  }
+
+  test("a version written without a stored schema still reads (inferred)") {
+    val root = storedSchemaTable()
+    (1 to 2).foreach(v => assert(new java.io.File(f"$root/v$v%08d", "_graft_schema.json").delete()))
+    val inferred = spark.read.parquet(f"$root/v00000002").schema
+    assert(Sinks.readCurrent(spark, root).schema == inferred)
+    assert(Sinks.readCurrent(spark, root).select($"v").as[String].collect().toSeq == Seq("v2"))
+    assert(Sinks.readVersion(spark, root, 1L).select($"id").as[Long].collect().toSeq == Seq(1L))
+  }
+
   test("upsertInto aligns a drifted batch before merging (added column)") {
     val path = tmp("upsertdrift")
     Sinks.upsertInto(spark, path, Seq((1L, 1L, "a"), (2L, 1L, "b"))

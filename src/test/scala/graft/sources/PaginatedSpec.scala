@@ -1,9 +1,69 @@
 package graft.sources
 
-import graft.SparkSuite
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+
+import graft.{Jobs, SparkSuite}
+import graft.operators.Dedup
+
+object PaginatedSpec {
+  /** (page, task attempt id; -1 on the driver) of every fetch, per fetcher key. */
+  val fetches = new ConcurrentHashMap[String, ConcurrentLinkedQueue[(Int, Long)]]()
+
+  /** A synthetic feed that records each fetch (local mode: tasks share this JVM). */
+  final case class CountingFetcher(key: String, pages: Int, perPage: Int) extends Paginated.PageFetcher {
+    override def fetch(endpoint: String, page: Int): Paginated.FetchResult = {
+      val task = Option(TaskContext.get()).map(_.taskAttemptId()).getOrElse(-1L)
+      fetches.computeIfAbsent(key, _ => new ConcurrentLinkedQueue()).add((page, task))
+      Paginated.SyntheticMovieFetcher(pages, perPage).fetch(endpoint, page)
+    }
+  }
+
+  def fetched(key: String): Seq[(Int, Long)] =
+    Option(fetches.get(key)).map(_.asScala.toSeq).getOrElse(Seq.empty)
+}
 
 class PaginatedSpec extends SparkSuite {
   import spark.implicits._
+  import PaginatedSpec._
+
+  test("building dedup over an ingest fetches only page 1; one action fetches every other page once") {
+    val f = CountingFetcher("dedup-once", pages = 9, perPage = 5)
+    val (latest, jobs) = Jobs.counted(spark) {
+      Dedup.byKeyLatest(Dedup.fullRow(Paginated.ingest(spark, f, "popular")), Seq("id"), Seq("page"))
+    }
+    assert(jobs == 0, s"building the plan submitted $jobs job(s)")
+    assert(fetched(f.key).map(_._1) == Seq(1), "only the driver's page-1 probe runs before an action")
+    assert(latest.select($"id").as[Long].collect().sorted.toSeq == (0L until 45L))
+    assert(fetched(f.key).map(_._1).sorted == (1 to 9), "pages 2..9 fetched exactly once each")
+  }
+
+  test("pages are fetched in min(n-1, fetchPartitions) range slices, with no shuffle") {
+    for ((pages, parts) <- Seq((9, 4), (3, 8), (2, 1))) {
+      val f = CountingFetcher(s"slices-$pages-$parts", pages, perPage = 2)
+      val df = Paginated.ingest(spark, f, "popular", fetchPartitions = parts)
+      val plan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case p => p
+      }
+      assert(plan.collectFirst { case e: ShuffleExchangeLike => e }.isEmpty)
+      assert(df.count() == pages * 2L)
+      val tasks = fetched(f.key).filter(_._1 > 1).map(_._2).distinct
+      assert(tasks.size == math.min(pages - 1, parts) && !tasks.contains(-1L),
+        s"$pages pages, fetchPartitions $parts: ${tasks.size} fetch tasks")
+    }
+  }
+
+  test("fetchPartitions must be positive") {
+    intercept[IllegalArgumentException] {
+      Paginated.ingest(spark, Paginated.SyntheticMovieFetcher(3, 1), "popular", fetchPartitions = 0)
+    }
+  }
 
   test("ingest fetches all pages and normalizes results") {
     val out = Paginated.ingest(spark,
