@@ -15,6 +15,8 @@ object Verify {
       if (only.isEmpty) SparkEntry.queries
       else SparkEntry.queries.filter { case (n, _) => only(n) }
     selected.foreach { case (name, fn) =>
+      // marks where each query's Spark warnings start in stderr
+      System.err.println(s"[verify] $name")
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

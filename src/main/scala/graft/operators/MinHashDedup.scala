@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.TextFunctions
 
@@ -40,10 +42,20 @@ import graft.functions.TextFunctions
   *    partial-aggregatable groupBy-min) that fails loudly rather than
   *    return labels that have not converged.
   *
-  * Cache lifecycle: the shingle table (the only big intermediate) is
-  * persisted for the duration of the verify step and unpersisted as soon as
-  * the (tiny, result-sized) verified-pair set is materialized — nothing
-  * input-sized stays pinned in executor memory after a call returns.
+  * One candidate→verify path: every pair producer generates candidate
+  * keys its own way (LSH buckets, or the AllPairs prefix filter of
+  * [[prefixes]]) and ends in the same exact tail ([[verify]], Jaccard or
+  * containment); one bucket cap ([[dropOversized]]) serves this operator
+  * and [[SimHashDedup]].
+  *
+  * Cache lifecycle: each stage read by more than one consumer is pinned
+  * (persisted and counted) by the one helper [[pin]]; a producer
+  * unpersists its stages as soon as its (tiny, result-sized) pair set is
+  * pinned, so nothing input-sized stays in executor memory after a call
+  * returns and only the pair set stays cached for the caller.
+  * [[duplicateGroups]] adopts an input that is already cached (every
+  * producer's result) instead of persisting it again, and unpersists it
+  * once the groups are built.
   */
 object MinHashDedup {
 
@@ -154,26 +166,30 @@ object MinHashDedup {
       .select(col("id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
   }
 
-  /** Oversized (band, bucket) keys: the boilerplate guard's drop set. */
-  private def oversized(buckets: DataFrame, maxBucketSize: Int): DataFrame =
-    buckets.groupBy(col("band"), col("bucket"))
-      .agg(count(lit(1)).as("bs"))
-      .where(col("bs") > maxBucketSize)
-      .select("band", "bucket")
+  /** The near-dup family's bucket cap (the boilerplate guard): `rows`
+    * without every row whose `keys` bucket holds more than
+    * `maxBucketSize` rows. Oversized buckets are, by the guard's own
+    * premise, RARE — so their keys come from a counts-only,
+    * partial-aggregatable count and are anti-joined away, instead of
+    * window-counting every row (which shuffles AND sorts the full rows
+    * just to read a size). The anti-join and the caller's pair self-join
+    * key on the same columns, so the one shuffle is reused; AQE
+    * broadcasts the (near-empty) oversized key set when it fits.
+    */
+  private[operators] def dropOversized(rows: DataFrame, keys: Seq[String],
+      maxBucketSize: Int): DataFrame = {
+    val ks = keys.map(col)
+    rows.join(rows.groupBy(ks: _*).agg(count(lit(1)).as("bs"))
+        .where(col("bs") > maxBucketSize).select(ks: _*),
+      keys, "left_anti")
+  }
 
   /** Distinct candidate pairs (idA < idB) sharing any band bucket, with
     * oversized buckets dropped.
     */
   def candidatePairs(sigs: DataFrame, cfg: Config): DataFrame = {
-    // Oversized buckets are, by the boilerplate guard's own premise, RARE —
-    // so compute them with a partial-aggregatable count and anti-join them
-    // away instead of window-counting every bucket row (which shuffles AND
-    // sorts the full bucket table). The anti-join and the pair self-join
-    // key on the same (band, bucket), so the one shuffle is reused; AQE
-    // broadcasts the (near-empty) oversized set when it fits.
-    val buckets = bandBuckets(sigs, cfg)
-    val sized = buckets.join(oversized(buckets, cfg.maxBucketSize),
-      Seq("band", "bucket"), "left_anti")
+    val sized = dropOversized(bandBuckets(sigs, cfg), Seq("band", "bucket"),
+      cfg.maxBucketSize)
     val l = sized.select(col("band"), col("bucket"), col("id").as("idA"))
     val r = sized.select(col("band"), col("bucket"), col("id").as("idB"))
     l.join(r, Seq("band", "bucket"))
@@ -220,7 +236,31 @@ object MinHashDedup {
     */
   private[graft] val VerifyBroadcastMaxPairs: Long = 1L << 21
 
-  /** True-Jaccard verification of candidate pairs against the shingle table.
+  /** Persist and materialize one pipeline stage; returns its row count.
+    * A stage read from more than one place (both sides of a self-join,
+    * both verify probes) must be pinned BEFORE its consumers run: an
+    * unmaterialized cache is recomputed by each concurrent consumer
+    * rather than computed once (measured 101s -> ~10s at sf0.1).
+    */
+  private def pin(df: DataFrame): Long =
+    df.persist(StorageLevel.MEMORY_AND_DISK).count()
+
+  /** A verified pair's score over its two shingle sets `(shA, shB)`, and
+    * the output column it lands in.
+    */
+  private final case class Measure(column: String, score: (Column, Column) => Column)
+
+  /** Symmetric similarity |A∩B| / |A∪B|. */
+  private val Jaccard = Measure("jaccard", (a, b) =>
+    size(array_intersect(a, b)).cast("double") / size(array_union(a, b)).cast("double"))
+
+  /** Asymmetric |A∩B| / |A|, A = idA's shingle set. */
+  private val Containment = Measure("containment", (a, b) =>
+    size(array_intersect(a, b)).cast("double") / size(a).cast("double"))
+
+  /** The one verify tail of every pair producer: exact `measure` of each
+    * candidate pair — idA's shingles from `baseA`, idB's from `baseB` —
+    * keeping pairs scoring >= threshold as (idA, idB, measure.column).
     *
     * Broadcast discipline: `cands` is the bare (idA, idB) key set — far
     * smaller than anything carrying shingles, but MATCH-COUNT-SIZED and
@@ -228,14 +268,14 @@ object MinHashDedup {
     * quadratically in the duplication factor). It broadcasts into both
     * probe joins only under [[VerifyBroadcastMaxPairs]] (callers pass
     * the count they already materialized); beyond the bound the probes
-    * run as shuffle-hash joins on the id key — the shingle side shuffles
+    * run as sort-merge joins on the id key — the shingle side shuffles
     * once per probe, linear and never driver-bound. No array column ever
     * sits on a broadcast side in either regime (left to AQE, the array
     * side's bad size estimates caused multi-hundred-MB broadcasts and
     * 4-10x run variance).
     */
-  private def verifyJaccard(base: DataFrame, cands: DataFrame, threshold: Double,
-      candCount: Long): DataFrame = {
+  private def verify(baseA: DataFrame, baseB: DataFrame, cands: DataFrame,
+      candCount: Long, threshold: Double, measure: Measure): DataFrame = {
     // Two regimes. Small candidate set: broadcast the bare keys, pin the
     // final pair-up shuffle-hash (build side = cands-sized, fits). Large
     // candidate set (dup-heavy corpus): every join goes SORT-MERGE — the
@@ -245,17 +285,15 @@ object MinHashDedup {
     val small = candCount <= VerifyBroadcastMaxPairs
     val probe: DataFrame => DataFrame =
       if (small) c => broadcast(c) else c => c.hint("merge")
-    val aSide = base.select(col("id").as("idA"), col("shingles").as("shA"))
+    val aSide = baseA.select(col("id").as("idA"), col("shingles").as("shA"))
       .join(probe(cands), Seq("idA"))
-    val bSide = base.select(col("id").as("idB"), col("shingles").as("shB"))
+    val bSide = baseB.select(col("id").as("idB"), col("shingles").as("shB"))
       .join(probe(cands), Seq("idB"))
     aSide.join(bSide.hint(if (small) "shuffle_hash" else "merge"),
         Seq("idA", "idB"))
-      .withColumn("jaccard",
-        size(array_intersect(col("shA"), col("shB"))).cast("double") /
-          size(array_union(col("shA"), col("shB"))).cast("double"))
-      .where(col("jaccard") >= threshold)
-      .select("idA", "idB", "jaccard")
+      .withColumn(measure.column, measure.score(col("shA"), col("shB")))
+      .where(col(measure.column) >= threshold)
+      .select("idA", "idB", measure.column)
   }
 
   /** Lazy plan for [[verifiedPairs]] — exposed for plan-inspection tests,
@@ -266,8 +304,8 @@ object MinHashDedup {
       df: DataFrame, idCol: String, textCol: String, cfg: Config,
       candCount: Long = 0L): DataFrame = {
     val base = shingleTable(df, idCol, textCol, cfg)
-    verifyJaccard(base, candidatePairs(base.select(col("id"), sig(cfg).as("sig")), cfg),
-      cfg.jaccardThreshold, candCount)
+    verify(base, base, candidatePairs(base.select(col("id"), sig(cfg).as("sig")), cfg),
+      candCount, cfg.jaccardThreshold, Jaccard)
   }
 
   /** Candidate pairs verified by true shingle Jaccard >= threshold.
@@ -278,26 +316,17 @@ object MinHashDedup {
     * a small cached DataFrame; nothing corpus-sized stays pinned.
     */
   def verifiedPairs(df: DataFrame, idCol: String, textCol: String, cfg: Config): DataFrame = {
-    // Each expensive stage is persisted AND materialized before its
-    // consumers run. This matters twice over: the downstream plan reads
-    // every stage from more than one place (the bucket self-join reads the
-    // sig pipeline twice, the two verify broadcasts read the candidate
-    // subtree twice, both probe sides read the shingle table), and an
-    // UNmaterialized cache is recomputed by each concurrent consumer rather
-    // than computed once — measured 101s -> ~10s at sf0.1. The caches are
-    // dropped on exit; only the result-sized pair set stays.
+    // Every stage is pinned: the bucket self-join reads the sig pipeline
+    // twice, the two verify broadcasts read the candidate subtree twice,
+    // both probe sides read the shingle table. The caches are dropped on
+    // exit; only the result-sized pair set stays.
     val base = shingleTable(df, idCol, textCol, cfg)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    base.count()
+    pin(base)
     val sigs = base.select(col("id"), sig(cfg).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sigs.count()
+    pin(sigs)
     val cands = candidatePairs(sigs, cfg)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nCands = cands.count()
-    val out = verifyJaccard(base, cands, cfg.jaccardThreshold, nCands)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count() // materialize the tiny pair set so the upstream caches can go
+    val out = verify(base, base, cands, pin(cands), cfg.jaccardThreshold, Jaccard)
+    pin(out) // materialize the tiny pair set so the upstream caches can go
     cands.unpersist()
     sigs.unpersist()
     base.unpersist()
@@ -367,15 +396,12 @@ object MinHashDedup {
       storeIndex: Option[DataFrame] = None): DataFrame = {
     storeIndex.foreach(requireIndexMatches(_, cfg))
     val newSigs = signatures(batch, idCol, textCol, cfg)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    newSigs.count()
+    pin(newSigs)
     // the boilerplate guard runs over the FULL bucket table (an oversized
     // bucket is oversized regardless of which side filled it); pairs are
     // formed only where the left endpoint is NEW
-    val allBuckets = storeIndex.getOrElse(bandBuckets(store, cfg))
-      .unionByName(bandBuckets(newSigs, cfg))
-    val sized = allBuckets.join(oversized(allBuckets, cfg.maxBucketSize),
-      Seq("band", "bucket"), "left_anti")
+    val sized = dropOversized(storeIndex.getOrElse(bandBuckets(store, cfg))
+      .unionByName(bandBuckets(newSigs, cfg)), Seq("band", "bucket"), cfg.maxBucketSize)
     val newSide = sized.join(newSigs.select(col("id")), Seq("id"), "left_semi")
     val cands = newSide.select(col("band"), col("bucket"), col("id").as("l"))
       .join(sized.select(col("band"), col("bucket"), col("id").as("r")),
@@ -384,16 +410,13 @@ object MinHashDedup {
       .select(least(col("l"), col("r")).as("idA"),
         greatest(col("l"), col("r")).as("idB"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nCands = cands.count()
     val base = store.select(col("id"), col("shingles"))
       .unionByName(newSigs.select(col("id"), col("shingles")))
     // same discipline as verifiedPairs: the verify reads cands from BOTH
     // probes, so it stays cached until the pair-sized result is
     // materialized; only that result stays pinned for the caller
-    val out = verifyJaccard(base, cands, cfg.jaccardThreshold, nCands)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
+    val out = verify(base, base, cands, pin(cands), cfg.jaccardThreshold, Jaccard)
+    pin(out)
     cands.unpersist()
     newSigs.unpersist()
     out
@@ -434,17 +457,36 @@ object MinHashDedup {
       threshold: Double, shingleN: Int = 3): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
     val base = shingleTable(df, idCol, textCol, Config(shingleN = shingleN))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    base.count() // materialize before fan-out (see verifiedPairs)
+    pin(base) // materialize before fan-out (see verifiedPairs)
     val cands = prefixCandidates(base, threshold)
-    val nCands = cands.count() // cached by prefixCandidates — O(partitions)
-    val out = verifyJaccard(base, cands, threshold, nCands)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
+    // cands is pinned by prefixCandidates: this count is O(partitions)
+    val out = verify(base, base, cands, cands.count(), threshold, Jaccard)
+    pin(out)
     cands.unpersist()
     base.unpersist()
     out
   }
+
+  /** The prefix stage of every exact producer (AllPairs/PPJoin): each
+    * base's exploded `(id, len, s)` shingle table, paired with its prefix
+    * for `threshold` — per doc, the first `len - ceil(t·len) + 1` shingles
+    * under the global ascending-(df, s) order, as `(s, id, len, df, rk)`
+    * rows. Document frequencies are counted over ALL `bases`: one shared
+    * order, so prefixes land on the rarest shingles of the union.
+    */
+  private def prefixes(threshold: Double, bases: DataFrame*): Seq[(DataFrame, DataFrame)] = {
+    val exploded = bases.map(_.select(col("id"), size(col("shingles")).as("len"),
+      explode(col("shingles")).as("s")))
+    val freq = exploded.reduce(_ union _).groupBy(col("s")).agg(count(lit(1)).as("df"))
+    val w = Window.partitionBy(col("id")).orderBy(col("df").asc, col("s").asc)
+    exploded.map(ex => ex -> ex.join(freq, Seq("s"))
+      .withColumn("rk", row_number().over(w))
+      .where(col("rk") <= prefixLength(threshold)))
+  }
+
+  /** A doc's prefix length for overlap fraction `t`: `len - ceil(t·len) + 1`. */
+  private def prefixLength(t: Double): Column =
+    col("len") - ceil(lit(t) * col("len")).cast("int") + 1
 
   /** [[jaccardPairs]]'s candidate stage, over an already-persisted shingle
     * table: the AllPairs/PPJoin prefix-filtered inverted-index self-join.
@@ -454,22 +496,13 @@ object MinHashDedup {
     * the near-linearity claim is the whole 100 TB argument for this path.
     */
   private[graft] def prefixCandidates(base: DataFrame, threshold: Double): DataFrame = {
-    val exploded = base.select(col("id"), size(col("shingles")).as("len"),
-      explode(col("shingles")).as("s"))
-    val freq = exploded.groupBy(col("s")).agg(count(lit(1)).as("df"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("id")).orderBy(col("df").asc, col("s").asc)
     // probe prefix (the longer of the two cutoffs) is computed once and
-    // persisted — it is prefix-sized, far smaller than the shingle table —
+    // pinned — it is prefix-sized, far smaller than the shingle table —
     // and the index prefix is a filter over it (alpha >= t, so shorter).
     val alpha = 2 * threshold / (1 + threshold)
-    val ranked = exploded.join(freq, Seq("s"))
-      .withColumn("rk", row_number().over(w))
-      .where(col("rk") <= col("len") - ceil(lit(threshold) * col("len")).cast("int") + 1)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ranked.count() // both prefix sides read this — materialize once
-    val index = ranked
-      .where(col("rk") <= col("len") - ceil(lit(alpha) * col("len")).cast("int") + 1)
+    val Seq((_, ranked)) = prefixes(threshold, base)
+    pin(ranked) // both prefix sides read this — materialize once
+    val index = ranked.where(col("rk") <= prefixLength(alpha))
       .select(col("s"), col("id").as("idI"), col("len").as("lenI"))
     val probe = ranked.select(col("s"), col("id").as("idP"), col("len").as("lenP"))
     val cands = index.join(probe, Seq("s"))
@@ -479,8 +512,7 @@ object MinHashDedup {
       .select(least(col("idI"), col("idP")).as("idA"),
         greatest(col("idI"), col("idP")).as("idB"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    cands.count() // both verify broadcasts read this — materialize once
+    pin(cands) // both verify broadcasts read this — materialize once
     ranked.unpersist()
     cands
   }
@@ -505,49 +537,19 @@ object MinHashDedup {
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
     val cfg = Config(shingleN = shingleN)
     val baseA = shingleTable(dfA, idCol, textCol, cfg)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    pin(baseA)
     val baseB = shingleTable(dfB, idCol, textCol, cfg)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    baseA.count(); baseB.count()
-    def explodedOf(base: DataFrame) =
-      base.select(col("id"), size(col("shingles")).as("len"),
-        explode(col("shingles")).as("s"))
-    val exA = explodedOf(baseA)
-    val exB = explodedOf(baseB)
+    pin(baseB)
     // shared global order: document frequency over BOTH corpora
-    val freq = exA.union(exB).groupBy(col("s")).agg(count(lit(1)).as("df"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("id")).orderBy(col("df").asc, col("s").asc)
-    def prefixOf(ex: DataFrame, side: String) =
-      ex.join(freq, Seq("s"))
-        .withColumn("rk", row_number().over(w))
-        .where(col("rk") <= col("len") - ceil(lit(threshold) * col("len")).cast("int") + 1)
-        .select(col("s"), col("id").as(s"id$side"), col("len").as(s"len$side"))
-    val cands = prefixOf(exA, "A").join(prefixOf(exB, "B"), Seq("s"))
+    val Seq((_, prefixA), (_, prefixB)) = prefixes(threshold, baseA, baseB)
+    val cands = prefixA.select(col("s"), col("id").as("idA"), col("len").as("lenA"))
+      .join(prefixB.select(col("s"), col("id").as("idB"), col("len").as("lenB")), Seq("s"))
       .where(col("lenA").cast("double") >= lit(threshold) * col("lenB") &&
         col("lenB").cast("double") >= lit(threshold) * col("lenA"))
       .select("idA", "idB")
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nCands = cands.count()
-    // same conditional probe as verifyJaccard: broadcast only under the
-    // pair bound, shuffle-hash beyond it (cands is match-count-sized)
-    val smallC = nCands <= VerifyBroadcastMaxPairs
-    val probeC: DataFrame => DataFrame =
-      if (smallC) c => broadcast(c) else c => c.hint("merge")
-    val aSide = baseA.select(col("id").as("idA"), col("shingles").as("shA"))
-      .join(probeC(cands), Seq("idA"))
-    val bSide = baseB.select(col("id").as("idB"), col("shingles").as("shB"))
-      .join(probeC(cands), Seq("idB"))
-    val out = aSide.join(bSide.hint(if (smallC) "shuffle_hash" else "merge"),
-        Seq("idA", "idB"))
-      .withColumn("jaccard",
-        size(array_intersect(col("shA"), col("shB"))).cast("double") /
-          size(array_union(col("shA"), col("shB"))).cast("double"))
-      .where(col("jaccard") >= threshold)
-      .select("idA", "idB", "jaccard")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
+    val out = verify(baseA, baseB, cands, pin(cands), threshold, Jaccard)
+    pin(out)
     cands.unpersist()
     baseA.unpersist()
     baseB.unpersist()
@@ -579,40 +581,17 @@ object MinHashDedup {
       threshold: Double, shingleN: Int = 3): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
     val base = shingleTable(df, idCol, textCol, Config(shingleN = shingleN))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    base.count() // materialize before fan-out (see verifiedPairs)
-    val exploded = base.select(col("id"), size(col("shingles")).as("len"),
-      explode(col("shingles")).as("s"))
-    val freq = exploded.groupBy(col("s")).agg(count(lit(1)).as("df"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("id")).orderBy(col("df").asc, col("s").asc)
-    val probe = exploded.join(freq, Seq("s"))
-      .withColumn("rk", row_number().over(w))
-      .where(col("rk") <= col("len") - ceil(lit(threshold) * col("len")).cast("int") + 1)
-      .select(col("s"), col("id").as("idA"))
-    val index = exploded.select(col("s"), col("id").as("idB"))
-    val cands = probe.join(index, Seq("s"))
+    pin(base) // materialize before fan-out (see verifiedPairs)
+    // A probes with its prefix; B is indexed in full
+    val Seq((exploded, prefix)) = prefixes(threshold, base)
+    val cands = prefix.select(col("s"), col("id").as("idA"))
+      .join(exploded.select(col("s"), col("id").as("idB")), Seq("s"))
       .where(col("idA") =!= col("idB"))
       .select("idA", "idB")
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nCands = cands.count() // both verify probes read this — materialize once
-    val smallC = nCands <= VerifyBroadcastMaxPairs
-    val probeC: DataFrame => DataFrame =
-      if (smallC) c => broadcast(c) else c => c.hint("merge")
-    val aSide = base.select(col("id").as("idA"), col("shingles").as("shA"))
-      .join(probeC(cands), Seq("idA"))
-    val bSide = base.select(col("id").as("idB"), col("shingles").as("shB"))
-      .join(probeC(cands), Seq("idB"))
-    val out = aSide.join(bSide.hint(if (smallC) "shuffle_hash" else "merge"),
-        Seq("idA", "idB"))
-      .withColumn("containment",
-        size(array_intersect(col("shA"), col("shB"))).cast("double") /
-          size(col("shA")).cast("double"))
-      .where(col("containment") >= threshold)
-      .select("idA", "idB", "containment")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
+    // both verify probes read cands — pinned once
+    val out = verify(base, base, cands, pin(cands), threshold, Containment)
+    pin(out)
     cands.unpersist()
     base.unpersist()
     out
@@ -645,7 +624,10 @@ object MinHashDedup {
     // full count (not limit+count): one clean materialization of the
     // persisted pair set — incremental-limit execution would re-run the
     // expensive upstream pipeline per scale-up attempt.
-    val p = pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // a producer's result is already cached: adopt it, persist only a
+    // lazy input (caching the same plan twice gives one entry two owners)
+    val p = if (pairs.storageLevel == StorageLevel.NONE) pairs.persist(StorageLevel.MEMORY_AND_DISK)
+      else pairs
     val n = p.count()
     if (n <= driverThreshold) {
       val out = duplicateGroupsLocal(p)
@@ -715,10 +697,10 @@ object MinHashDedup {
     // undirected edge list, both directions
     val fwd = pairs.select(col("idA").as("src"), col("idB").as("dst"))
     val edges = fwd.union(pairs.select(col("idB").as("src"), col("idA").as("dst")))
-      .distinct().persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct().persist(StorageLevel.MEMORY_AND_DISK)
     var labels = edges.groupBy(col("src").as("id"))
       .agg(least(min(col("dst")), first(col("src"))).as("rep"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     var iter = 0
     var converged = false
     while (iter < maxIterations && !converged) {
@@ -729,7 +711,7 @@ object MinHashDedup {
         .agg(min(col("rep")).as("nrep"))
       val next = labels.join(viaNeighbor, Seq("id"), "left")
         .select(col("id"), least(col("rep"), coalesce(col("nrep"), col("rep"))).as("rep"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist(StorageLevel.MEMORY_AND_DISK)
       val changed = next.join(labels.withColumnRenamed("rep", "prev"), "id")
         .where(col("rep") =!= col("prev")).limit(1).count()
       labels.unpersist()

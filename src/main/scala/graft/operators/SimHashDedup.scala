@@ -121,7 +121,8 @@ object SimHashDedup {
   }
 
   /** Shared banding stage: (chunk, key, id, __fp) rows for `maxHamming+1`
-    * disjoint bit-bands, oversized (chunk, key) buckets dropped whole.
+    * disjoint bit-bands, oversized (chunk, key) buckets dropped whole by
+    * the near-dup family's one cap, [[MinHashDedup.dropOversized]].
     */
   private def bandedChunks(hashes: DataFrame, idCol: String, hashCol: String,
       maxHamming: Int, maxBucketSize: Int): DataFrame = {
@@ -142,11 +143,7 @@ object SimHashDedup {
     val chunked = fps.select(
       col("id"), col("__fp"), explode(array(chunkCols: _*)).as("ck"))
       .select(col("id"), col("__fp"), col("ck.chunk").as("chunk"), col("ck.key").as("key"))
-    chunked
-      .withColumn("bs", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("chunk"), col("key"))))
-      .where(col("bs") <= maxBucketSize)
-      .drop("bs")
+    MinHashDedup.dropOversized(chunked, Seq("chunk", "key"), maxBucketSize)
   }
 
   /** INCREMENTAL Hamming pairs against a persisted fingerprint store —

@@ -69,22 +69,26 @@ object Sinks {
 
   /** The upsert path (MERGE, `etl.py:88-183`) for a parquet destination:
     * heal a crashed swap first, so the backed-up rows are merged rather
-    * than lost; resolve schema drift ([[SchemaDrift.align]], as
-    * `etl.py:128-141` does before its MERGE); then [[Merge.upsertBatch]]
-    * the batch (deduped on pk, the latest by `orderCols` winning) into
-    * the table — or create the table from the deduped batch — and
-    * publish the result through [[swapInto]].
+    * than lost; audit-stamp the batch (`etl.py:95`, as
+    * [[JdbcSink.mergeInto]] does); resolve schema drift
+    * ([[SchemaDrift.align]], as `etl.py:128-141` does before its MERGE);
+    * then [[Merge.upsertBatch]] the batch (deduped on pk, the latest by
+    * `orderCols` winning) into the table — or create the table from the
+    * deduped batch — and publish the result through [[swapInto]]. A
+    * re-sent unchanged row keeps its first stamp (the change predicate
+    * skips audit columns); a changed or new row carries this load's.
     * Plain parquet has no transactional MERGE, so the whole table is
     * rewritten; a Delta/Iceberg sink replaces this with a real commit.
     */
   def upsertInto(spark: SparkSession, destPath: String, batch: DataFrame,
       pk: Seq[String], orderCols: Seq[String]): Unit = {
     healCrashWindow(fs(spark), new Path(destPath), new Path(destPath + ".old"))
+    val stamped = Audit.stamp(batch)
     val merged =
       if (tableExists(spark, destPath)) {
-        val (dest, aligned) = SchemaDrift.align(spark.read.parquet(destPath), batch)
+        val (dest, aligned) = SchemaDrift.align(spark.read.parquet(destPath), stamped)
         Merge.upsertBatch(dest, aligned, pk, orderCols)
-      } else Dedup.byKeyLatest(batch, pk, orderCols)
+      } else Dedup.byKeyLatest(stamped, pk, orderCols)
     swapInto(spark, destPath, merged)
   }
 

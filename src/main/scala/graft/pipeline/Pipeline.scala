@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import java.util.concurrent.{Executors, Semaphore}
+import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 import scala.util.{Failure, Success, Try}
@@ -38,6 +38,7 @@ object Pipeline {
 
   /** Dynamic fan-out (O1) with a concurrency cap (O3,
     * `max_active_tis_per_dagrun` analog) and per-branch retry (O4).
+    * The cap is the size of the fixed thread pool the branches run on.
     * Returns results in input order; fails fast if any branch exhausts its
     * retries.
     */
@@ -45,17 +46,11 @@ object Pipeline {
       inputs: Seq[A],
       maxConcurrent: Int = 2,
       retry: RetryPolicy = RetryPolicy())(job: A => B): Seq[B] = {
-    val pool = Executors.newFixedThreadPool(math.max(1, maxConcurrent))
+    require(maxConcurrent >= 1, s"maxConcurrent must be >= 1, got $maxConcurrent")
+    val pool = Executors.newFixedThreadPool(maxConcurrent)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val gate = new Semaphore(maxConcurrent)
     try {
-      val futures = inputs.map { in =>
-        Future {
-          gate.acquire()
-          try withRetry(retry)(() => job(in))
-          finally gate.release()
-        }
-      }
+      val futures = inputs.map(in => Future(withRetry(retry)(() => job(in))))
       Await.result(Future.sequence(futures), Duration.Inf)
     } finally pool.shutdown()
   }

@@ -1,11 +1,12 @@
 package graft.operators
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
 
-class EntityResolutionSpec extends SparkSuite {
+class EntityResolutionSpec extends SparkSuite with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private val prefix4: Seq[Column => Column] = Seq(s => substring(s, 1, 4))
@@ -53,7 +54,9 @@ class EntityResolutionSpec extends SparkSuite {
     val recs = (1L to 50L).map(i => (i, s"name_$i")).toDF("id", "name")
     val plan = EntityResolution.fuzzyPairs(recs, "id", "name",
       prefix4, maxDist = 1).queryExecution.executedPlan
-    val windows = plan.collect {
+    // walk into the adaptive plan: a bare `plan.collect` stops at the
+    // AdaptiveSparkPlanExec leaf and finds nothing either way
+    val windows = collect(plan) {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
     }
     assert(windows.isEmpty, s"cap regressed to a window:\n$plan")

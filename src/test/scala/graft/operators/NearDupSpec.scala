@@ -1,13 +1,19 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 
 import graft.SparkSuite
 
 /** Planted near-duplicate corpus: MinHash and SimHash must find the planted
   * pairs and must not merge unrelated docs.
   */
-class NearDupSpec extends SparkSuite {
+class NearDupSpec extends SparkSuite with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private val base =
@@ -185,6 +191,15 @@ class NearDupSpec extends SparkSuite {
     assert(sigs.where(size($"sig") > 0).count() == 0) // all below shingleN
   }
 
+  /** Every broadcast in `p`, through AQE stages and into the plans of
+    * the cached relations it scans.
+    */
+  private def broadcastsIn(p: SparkPlan): Seq[BroadcastExchangeExec] = flatMap(p) {
+    case b: BroadcastExchangeExec => Seq(b)
+    case s: InMemoryTableScanExec => broadcastsIn(s.relation.cachedPlan)
+    case _ => Nil
+  }
+
   test("no broadcast side in the verify pipeline carries an array column") {
     // the 100 TB contract: shingle/signature arrays are huge and badly
     // size-estimated — only bare id pairs may be broadcast. Plan-inspect
@@ -194,6 +209,35 @@ class NearDupSpec extends SparkSuite {
     // is the same logical plan: cache substitution would hide its joins
     spark.catalog.clearCache()
     try {
+      // the eager producers: their results are cached, so the verify
+      // joins sit inside the cached relation's plan
+      val cfg = MinHashDedup.Config(jaccardThreshold = 0.5, shingleN = 3)
+      val a = Seq((10L, base), (11L, unrelated1)).toDF("doc_id", "text")
+      val store = MinHashDedup.signatures(corpus.where($"doc_id".isin(1L, 4L)),
+        "doc_id", "text", cfg).localCheckpoint()
+      Seq[(String, () => DataFrame)](
+        "jaccardPairs" -> (() => MinHashDedup.jaccardPairs(corpus, "doc_id", "text", 0.5)),
+        "crossJaccardPairs" -> (() => MinHashDedup.crossJaccardPairs(a, corpus, "doc_id", "text", 0.5)),
+        "containmentPairs" -> (() => MinHashDedup.containmentPairs(corpus, "doc_id", "text", 0.5)),
+        "incrementalVerifiedPairs" -> (() => MinHashDedup.incrementalVerifiedPairs(
+          store, corpus.where(!$"doc_id".isin(1L, 4L)), "doc_id", "text", cfg))
+      ).foreach { case (name, produce) =>
+        val out = produce()
+        val bcasts = broadcastsIn(out.queryExecution.executedPlan)
+        val names = bcasts.map(_.output.map(_.name).toSet)
+        assert(names.contains(Set("idA", "idB")),
+          s"$name: expected broadcasts of the bare pair keys, got $names")
+        // candidate stages may broadcast scalar rows (a prefix table's
+        // (s, idA, lenA)); a broadcast of pairs is the bare keys only
+        assert(!names.exists(n => n("idA") && n("idB") && n != Set("idA", "idB")),
+          s"$name: a pair broadcast carries more than (idA, idB): $names")
+        bcasts.foreach { b =>
+          val arrayCols = b.output.filter(_.dataType.isInstanceOf[ArrayType])
+          assert(arrayCols.isEmpty,
+            s"$name: broadcast side carries array columns ${arrayCols.map(_.name)}:\n$b")
+        }
+        out.unpersist()
+      }
       Seq(MinHashDedup.Config(jaccardThreshold = 0.5, shingleN = 3), portable)
         .foreach { cfg =>
           def plan(candCount: Long) = MinHashDedup.verifiedPairsPlan(
@@ -223,6 +267,44 @@ class NearDupSpec extends SparkSuite {
           assert(smj.size >= 3, s"${cfg.hashSpace}: expected sort-merge probes:\n$big")
         }
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
+  test("dedup and duplicateGroups over a producer's result leave nothing cached") {
+    // every producer hands back a cached pair set; duplicateGroups adopts
+    // it and drops it once the groups are built
+    spark.catalog.clearCache()
+    val cacheManager = spark.sharedState.cacheManager
+    MinHashDedup.dedup(corpus, "doc_id", "text",
+      MinHashDedup.Config(jaccardThreshold = 0.5, shingleN = 3)).collect()
+    assert(cacheManager.isEmpty, "dedup left a cache entry behind")
+    val groups = MinHashDedup.duplicateGroups(MinHashDedup.jaccardPairs(
+      corpus, "doc_id", "text", threshold = 0.5)).collect()
+    assert(groups.nonEmpty, "fixture must group at least one pair")
+    assert(cacheManager.isEmpty, "duplicateGroups(jaccardPairs) left a cache entry behind")
+  }
+
+  test("simhash bucket cap is a counts-only gate, never a window") {
+    // a count-per-key window shuffles AND sorts the full banded rows just
+    // to read a bucket size; the shared cap reads sizes from a partial agg
+    val fps = SimHashDedup.fingerprints(corpus, "doc_id", "text")
+    val store = fps.where($"id" <= 2L)
+    val batch = fps.where($"id" > 2L)
+    Seq(
+      "hammingPairs" -> SimHashDedup.hammingPairs(fps, "id", "simhash", 3, 1000),
+      "incrementalHammingPairs" ->
+        SimHashDedup.incrementalHammingPairs(store, batch, "id", "simhash", 3)
+    ).foreach { case (name, pairs) =>
+      val plan = pairs.queryExecution.executedPlan
+      val windows = collect(plan) {
+        case w: org.apache.spark.sql.execution.window.WindowExec => w
+      }
+      assert(windows.isEmpty, s"$name: cap regressed to a window:\n$plan")
+      val gates = collect(plan) {
+        case j: org.apache.spark.sql.execution.joins.BaseJoinExec
+            if j.joinType == org.apache.spark.sql.catalyst.plans.LeftAnti => j
+      }
+      assert(gates.nonEmpty, s"$name: expected the anti-join bucket gate:\n$plan")
+    }
   }
 
   test("duplicateGroups handles string ids in the local union-find path") {

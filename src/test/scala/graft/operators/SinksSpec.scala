@@ -209,9 +209,27 @@ class SinksSpec extends SparkSuite {
     Sinks.upsertInto(spark, path, Seq((2L, 2L, "b2", 7.5), (3L, 1L, "c", 1.0))
       .toDF("id", "seq", "v", "score"), pk = Seq("id"), orderCols = Seq("seq"))
     val t = spark.read.parquet(path)
-    assert(t.columns.toSeq == Seq("id", "seq", "v", "score"))
+    assert(t.columns.toSeq == Seq("id", "seq", "v", "record_loaded_at", "score"))
     val rows = t.select($"id", $"v", $"score").as[(Long, String, Option[Double])]
       .collect().toSet
     assert(rows == Set((1L, "a", None), (2L, "b2", Some(7.5)), (3L, "c", Some(1.0))))
+  }
+
+  test("upsertInto audit-stamps each load; an unchanged row keeps its first stamp") {
+    val path = tmp("upsertstamp")
+    def stamps = spark.read.parquet(path)
+      .select($"id", $"record_loaded_at").as[(Long, java.sql.Timestamp)].collect().toMap
+    Sinks.upsertInto(spark, path, Seq((1L, 1L, "a"), (2L, 1L, "b"))
+      .toDF("id", "seq", "v"), pk = Seq("id"), orderCols = Seq("seq"))
+    val first = stamps
+    assert(first.keySet == Set(1L, 2L) && first.values.forall(_ != null), s"first load: $first")
+    Thread.sleep(10) // the second load's clock reads strictly later
+    // key 1 re-sent unchanged, key 2 changed, key 3 new
+    Sinks.upsertInto(spark, path, Seq((1L, 1L, "a"), (2L, 2L, "b2"), (3L, 1L, "c"))
+      .toDF("id", "seq", "v"), pk = Seq("id"), orderCols = Seq("seq"))
+    val second = stamps
+    assert(second(1L) == first(1L), s"unchanged row must keep its first stamp: $first -> $second")
+    assert(second(2L).after(first(2L)), s"changed row must take the new stamp: $first -> $second")
+    assert(second(3L) == second(2L), s"one load, one stamp: $second")
   }
 }

@@ -40,6 +40,16 @@ class PipelineSpec extends SparkSuite {
     assert(maxSeen.get() <= 2, s"saw ${maxSeen.get()} concurrent")
   }
 
+  test("fanOut rejects a concurrency cap below 1") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    // bounded wait: a cap that blocks instead of failing must fail this
+    // test, not hang the suite
+    val call = Future(Pipeline.fanOut(Seq(1), maxConcurrent = 0)(identity))(ExecutionContext.global)
+    val e = intercept[IllegalArgumentException](Await.result(call, 30.seconds))
+    assert(e.getMessage.contains("maxConcurrent"), e.getMessage)
+  }
+
   test("concurrent per-partition merges equal the sequential global merge (O1)") {
     val orders = Tables.load(spark, sf, "orders")
     val delta = Queries.ordersDelta(orders)
