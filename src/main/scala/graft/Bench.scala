@@ -50,6 +50,10 @@ object Bench {
     // timing) is surfaced in the artifact, not just stderr: a 50%-flaky
     // query must not look healthy in BENCH_local.json.
     val partialErrors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    // Janino compiles of each query's last attempt: a steady-state run that
+    // still compiles is missing the generated-class cache
+    val compiles = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    val compileTime = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
     // The heaviest queries take min-of-3 (everything else min-of-2): a
     // single host-contention spike on one of them dominates the round
     // total (round-4's q61 recorded 38.7 s official vs 2.9-4.1 s in every
@@ -92,7 +96,12 @@ object Bench {
         }
       }
       val attempts =
-        Seq.fill(forcedAttempts.getOrElse(if (heavy(name)) 3 else 2))(once())
+        Seq.fill(forcedAttempts.getOrElse(if (heavy(name)) 3 else 2)) {
+          val c0 = compileTime.getCount
+          val r = once()
+          compiles(name) = compileTime.getCount - c0
+          r
+        }
       val ok = attempts.collect { case Right(t) => t }
       val bad = attempts.collect { case Left(m) => m }
       if (ok.nonEmpty) {
@@ -114,6 +123,8 @@ object Bench {
       .mkString("{", ",", "}")
     val partialJson = partialErrors.map { case (k, v) => jstr(k) + ":" + jstr(v) }
       .mkString("{", ",", "}")
+    val compilesJson = compiles.map { case (k, v) => jstr(k) + ":" + v }
+      .mkString("{", ",", "}")
     val total = if (timings.nonEmpty) timings.values.sum else 0.0
     // warmup policy is part of the methodology and recorded with the
     // numbers: timings are steady-state (codegen/JIT pre-compiled, table
@@ -134,9 +145,11 @@ object Bench {
     //   3. the LAST line printed is a compact total-first summary with no
     //      per-query map — short enough to survive any plausible tail cut —
     //      pointing at the file twin.
+    //   4. the per-query compile counts go to the file only.
     val outFile = java.nio.file.Paths.get("BENCH_local.json")
+    val record = full.stripSuffix("}") + s""","codegen_compiles":$compilesJson}"""
     java.nio.file.Files.write(outFile,
-      (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      (record + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     println(full)
     println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${timings.size},"n_errors":${errors.size},"n_partial_errors":${partialErrors.size},"errors":$errJson,"sf":"$sfDir","queries_file":"${outFile.toAbsolutePath}"}""")
     spark.stop()

@@ -3174,9 +3174,11 @@ object Queries {
     cands.count()
     sigs.unpersist()
     val cand = cands.withColumn("is_cand", lit(true))
-    val truth = MinHashDedup.jaccardPairs(docs, "doc_id", "text", 0.5)
-      .select(col("idA"), col("idB")).withColumn("is_true", lit(true))
-    cand.join(truth, Seq("idA", "idB"), "full_outer")
+    val exact = MinHashDedup.jaccardPairs(docs, "doc_id", "text", 0.5)
+    val truth = exact.select(col("idA"), col("idB")).withColumn("is_true", lit(true))
+    // both pair sets are cached and owned here: materialize the one-row
+    // scorecard, then drop them so nothing outlives the call
+    val card = cand.join(truth, Seq("idA", "idB"), "full_outer")
       .select(coalesce(col("is_cand"), lit(false)).as("is_cand"),
         coalesce(col("is_true"), lit(false)).as("is_true"))
       .agg(
@@ -3190,6 +3192,10 @@ object Queries {
           .as("precision"),
         round(col("tp").cast("double") / col("n_true").cast("double"), 6)
           .as("recall"))
+      .localCheckpoint()
+    cands.unpersist()
+    exact.unpersist()
+    card
   }
 
   // ---------------------------------------------------------------- Q134

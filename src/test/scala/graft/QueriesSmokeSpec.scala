@@ -21,6 +21,14 @@ class QueriesSmokeSpec extends SparkSuite {
     }
   }
 
+  test("q133 leaves no cached data behind") {
+    // its candidate and exact pair sets are cached inside the call; a later
+    // identical jaccardPairs call would otherwise find its plan cached
+    spark.catalog.clearCache()
+    assert(Queries.q133LshEval(spark, sf).collect().length == 1)
+    assert(spark.sharedState.cacheManager.isEmpty, "q133 left a cache entry")
+  }
+
   test("q28: the numeric HLL estimate itself lands within the 4×rsd bound") {
     // the oracle row only certifies the reduced boolean; this pins the raw
     // estimate the boolean was derived from (rsd 0.05 → |err| ≤ 20%)

@@ -89,10 +89,10 @@ class Scd2Spec extends SparkSuite {
     val unchecked = Scd2.applyBatch(h1, batch2, "k", t2, skipDupCheck = true)
     assert(checked.exceptAll(unchecked).isEmpty && unchecked.exceptAll(checked).isEmpty)
     // the lazy path must not run the dup-check aggregation job at build time
-    val before = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
-    Scd2.applyBatch(h1, batch2, "k", t3, skipDupCheck = true)
-    val after = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
-    assert(after == before, "skipDupCheck = true must stay fully lazy (no Spark job)")
+    val (_, jobs) = graft.Jobs.counted(spark) {
+      Scd2.applyBatch(h1, batch2, "k", t3, skipDupCheck = true)
+    }
+    assert(jobs == 0, s"skipDupCheck = true must stay fully lazy, ran $jobs Spark job(s)")
   }
 
   test("null attributes compare null-safely") {
