@@ -4027,10 +4027,10 @@ object Queries {
     val purchases = ev.where(col("event_type") === "purchase")
       .select(col("event_id").as("pid"), col("user_id"), col("ts").as("pts"))
     val clicks = ev.where(col("event_type") === "click")
-      .select(col("user_id"), col("ts").as("cts"),
+      .select(col("user_id").as("c_user_id"), col("ts").as("cts"),
         (get_json_object(col("props"), "$.k").cast("long") % 4).as("channel"))
     val joined = purchases.join(clicks,
-      purchases("user_id") === clicks("user_id") &&
+      col("user_id") === col("c_user_id") &&
         col("cts") <= col("pts") &&
         col("cts") >= col("pts") - expr("INTERVAL 7 DAYS"),
       "left_outer")

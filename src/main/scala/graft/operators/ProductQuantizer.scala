@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, StructField, StructType}
 
@@ -1197,10 +1196,7 @@ object ProductQuantizer {
       .join(broadcast(q), cond)
       .select(col("q_id"), col("vec_id"),
         round(total.cast("double"), 6).as("dist"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("dist").asc, col("vec_id").asc)
-    scored.withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
-      .select(col("q_id"), col("vec_id"), col("dist"))
+    Similarity.rankTopK(scored, "q_id", col("dist").asc, "vec_id", k)(
+      col("q_id"), col("vec_id"), col("dist"))
   }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** 8-bit SCALAR quantization for embedding columns — the missing middle
@@ -246,8 +245,6 @@ object ScalarQuantizer {
       sizeGuarded(col("q_vec").cast("array<double>"), stats.dim,
         col("q_vec").cast("array<double>")), col("dec"),
       (a, b) => round((a - b) * (a - b), 6).cast("decimal(18,6)"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("d").asc, col("vec_id").asc)
     // dequantize BELOW the join: the projection runs once per corpus
     // row on the stream side, not once per (query, corpus) pair — the
     // q205 hoist-per-small-row-table lesson applied to the big side
@@ -265,14 +262,13 @@ object ScalarQuantizer {
           s"$budget; front the scan with an IVF router (withinCol) or " +
           "raise the budget")
     }
-    withinCol.fold(corpus.crossJoin(probe))(w => corpus.join(probe, Seq(w)))
+    val scored = withinCol.fold(corpus.crossJoin(probe))(w => corpus.join(probe, Seq(w)))
       .where(col("vec_id") =!= col("q_id"))
       .withColumn("d",
         aggregate(terms,
           lit(java.math.BigDecimal.ZERO).cast("decimal(28,6)"),
           (acc, t) => (acc + t).cast("decimal(28,6)")).cast("double"))
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
-      .select(col("q_id"), col("vec_id"), col("d"))
+    Similarity.rankTopK(scored, "q_id", col("d").asc, "vec_id", k)(
+      col("q_id"), col("vec_id"), col("d"))
   }
 }

@@ -7,23 +7,28 @@ import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions
 import graft.plans.VectorExpressions
 
-/** Approximate-nearest-neighbor search over an embedding column
-  * (north-star operator).
+/** Nearest-neighbor search and embedding-space dedup over a vector
+  * column (north-star operators).
   *
-  * Two tiers:
-  *  - [[topKJoin]]: exact brute-force cosine top-k of a (small, broadcast)
-  *    query batch against the corpus — one corpus scan, no corpus shuffle
-  *    except the final per-query top-k aggregation. The correctness
-  *    baseline.
-  *  - [[lshTopKJoin]]: random-hyperplane LSH bucketing — corpus and queries
-  *    are signed into `bits`-bit buckets; only same-bucket (plus
-  *    multi-probe neighbor buckets) pairs are scored. The 100 TB path:
-  *    candidate count drops by ~2^bits while recall stays tunable via
-  *    bits/probes.
-  *
-  * Per-query top-k ranking windows on q_id after the candidate cut; the
-  * window input is |queries| * |candidates-per-query| rows, never the raw
-  * corpus.
+  * Every top-k producer is one candidate → score → rank pipeline; only
+  * the candidate generator differs:
+  *  - [[topKJoin]]: every corpus row against a (small, broadcast) query
+  *    batch — exact, the correctness baseline;
+  *  - [[lshTopKJoin]]: same random-hyperplane bucket (plus single-bit-flip
+  *    multi-probes) — candidates drop by ~2^bits, recall tunable;
+  *  - [[ivfTopKJoin]] / [[probeIvfIndex]]: the query's `nProbe` nearest
+  *    k-means lists ([[trainCentroids]]), in memory or read from the
+  *    list-partitioned index [[writeIvfIndex]] writes;
+  *  - [[hammingTopK]]: every packed [[srpSignatures]] signature, scored by
+  *    XOR + popcount;
+  *  - [[hardNegatives]] / [[labelAgreement]]: cluster-mates or all pairs
+  *    of one table.
+  * All of them (and both quantizers' `adcTopK`) end in the one rank tail
+  * [[rankTopK]]: a per-key `row_number` cut at k, which Spark plans as
+  * per-task WindowGroupLimit heaps, so the window input is the candidate
+  * set, never the raw corpus. [[semanticDedup]] and
+  * [[incrementalSemanticDedup]] share one within-cluster pair stage over
+  * [[shardedAssignment]]'s capped (cluster, shard) cells.
   */
 object Similarity {
 
@@ -37,15 +42,34 @@ object Similarity {
       k: Int): DataFrame = {
     val q = queries.select(col(qId).as("q_id"), col(qVec).as("q_vec"))
     val c = Parallelism.ensureCompute(corpus).select(col(cId).as("c_id"), col(cVec).as("c_vec"))
-    val scored = c.crossJoin(broadcast(q))
-      .where(col("c_id") =!= col("q_id"))
-      .withColumn("sim", round(VectorExpressions.cosine(col("q_vec"), col("c_vec")), 6))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id").asc)
-    scored
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
-      .select(col("q_id"), col("c_id").as("vec_id"), col("sim"))
+    cosineTopK(c.crossJoin(broadcast(q)), k)
   }
+
+  /** The shared rank tail of every top-k producer: number each `part`
+    * key's rows by `score` (ties by ascending `tie`) into column `rn`,
+    * keep the first `k`, and project `out` (every column when `out` is
+    * empty). The `rn <= k` cut plans as per-task WindowGroupLimit heaps
+    * ahead of the window, never a full per-key sort.
+    */
+  private[operators] def rankTopK(scored: DataFrame, part: String,
+      score: Column, tie: String, k: Int, rn: String = "rn")(out: Column*): DataFrame = {
+    val ranked = scored
+      .withColumn(rn, row_number().over(
+        Window.partitionBy(col(part)).orderBy(score, col(tie).asc)))
+      .where(col(rn) <= k)
+    if (out.isEmpty) ranked else ranked.select(out: _*)
+  }
+
+  /** Score step of the cosine producers: drop self-pairs from a
+    * `(q_id, q_vec) × (c_id, c_vec)` candidate frame, score by cosine
+    * rounded to 6 dp BEFORE ranking (rank boundaries stable across FP
+    * summation orders) and keep each query's top k as
+    * `(q_id, vec_id, sim)`.
+    */
+  private def cosineTopK(candidates: DataFrame, k: Int): DataFrame =
+    rankTopK(candidates.where(col("c_id") =!= col("q_id"))
+        .withColumn("sim", round(VectorExpressions.cosine(col("q_vec"), col("c_vec")), 6)),
+      "q_id", col("sim").desc, "c_id", k)(col("q_id"), col("c_id").as("vec_id"), col("sim"))
 
   /** Plan-time selectivity probe for FILTERED vector search ("nearest
     * neighbors WHERE <predicate>"): one counts-only aggregation decides
@@ -91,12 +115,7 @@ object Similarity {
       : Seq[(String, Long, Long, Boolean, Boolean)] = {
     require(plans.nonEmpty, "choosePlans: no candidate plans")
     require(minPool >= 1, s"choosePlans: minPool must be >= 1, got $minPool")
-    val withElig = plans.map { case (n, pairs, minC) =>
-      (n, pairs, minC, minC >= minPool)
-    }
-    val eligPairs = withElig.collect { case (_, p, _, true) => p }
-    val minElig = if (eligPairs.isEmpty) Long.MinValue else eligPairs.min
-    withElig.map { case (n, p, m, e) => (n, p, m, e, e && p == minElig) }
+    chooseCheapest(plans)(_ >= minPool)
   }
 
   /** Recall-targeted BIT-BUDGET chooser — the [[choosePlans]]
@@ -121,12 +140,21 @@ object Similarity {
     require(tiers.nonEmpty, "chooseTiers: no candidate tiers")
     require(recallFloor > 0.0 && recallFloor <= 1.0,
       s"chooseTiers: recallFloor must be in (0, 1], got $recallFloor")
-    val withElig = tiers.map { case (n, cost, r) =>
-      (n, cost, r, r >= recallFloor)
+    chooseCheapest(tiers)(_ >= recallFloor)
+  }
+
+  /** The eligible-and-cheapest rule of [[choosePlans]] and
+    * [[chooseTiers]]: a candidate `(name, cost, measure)` is ELIGIBLE iff
+    * `eligible(measure)`; CHOSEN = eligible at the minimal eligible cost
+    * (ties all flagged, nothing chosen when nothing is eligible).
+    */
+  private def chooseCheapest[A](cands: Seq[(String, Long, A)])(eligible: A => Boolean)
+      : Seq[(String, Long, A, Boolean, Boolean)] = {
+    val minElig = cands.collect { case (_, c, a) if eligible(a) => c }.minOption
+    cands.map { case (n, c, a) =>
+      val e = eligible(a)
+      (n, c, a, e, e && minElig.contains(c))
     }
-    val eligCosts = withElig.collect { case (_, c, _, true) => c }
-    val minElig = if (eligCosts.isEmpty) Long.MinValue else eligCosts.min
-    withElig.map { case (n, c, r, e) => (n, c, r, e, e && c == minElig) }
   }
 
   /** Sparse Johnson–Lindenstrauss random projection (Achlioptas 2003,
@@ -206,11 +234,8 @@ object Similarity {
       .join(broadcast(q), col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
         bit_count(col("sig").bitwiseXOR(col("q_sig"))).as("hd"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("hd").asc, col("vec_id").asc)
-    scored.withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
-      .select(col("q_id"), col("vec_id"), col("hd"))
+    rankTopK(scored, "q_id", col("hd").asc, "vec_id", k)(
+      col("q_id"), col("vec_id"), col("hd"))
   }
 
   /** LSH-bucketed approximate top-k: hyperplane signatures on both sides,
@@ -235,14 +260,7 @@ object Similarity {
           when(p === 0, col("sig"))
             .otherwise(col("sig").bitwiseXOR(
               call_function("shiftleft", lit(1L), p - 1)))))).as("bucket"))
-    val scored = c.join(broadcast(q), Seq("bucket"))
-      .where(col("c_id") =!= col("q_id"))
-      .withColumn("sim", round(VectorExpressions.cosine(col("q_vec"), col("c_vec")), 6))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id").asc)
-    scored
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
-      .select(col("q_id"), col("c_id").as("vec_id"), col("sim"))
+    cosineTopK(c.join(broadcast(q), Seq("bucket")), k)
   }
 
   /** Top-`n` centroid lists by cosine, as one expression over a literal
@@ -257,6 +275,30 @@ object Similarity {
     }
     slice(reverse(array_sort(array(scored: _*))), 1, n)
   }
+
+  /** Nearest-centroid list id of `vec` (the IVF / cluster assignment). */
+  private def assign(vec: Column, cents: Array[Array[Float]]): Column =
+    nearestLists(vec, cents, 1).getItem(0).getField("list")
+
+  /** The query-side router: one row per list id among the `nProbe`
+    * nearest lists of `vec`.
+    */
+  private def probeLists(vec: Column, cents: Array[Array[Float]], nProbe: Int): Column =
+    explode(transform(nearestLists(vec, cents, nProbe), s => s.getField("list")))
+
+  /** `dim` when positive, else the modal vector length of `vecs(vec)` —
+    * one tiny aggregation, no assumption that row one is
+    * representative; an explicit wrong dim fails fast in
+    * [[trainCentroids]] instead of silently training on a skewed
+    * subset. `who` names the caller in the empty-corpus error. Call it
+    * only where centroids are trained, so frozen centroids run no job.
+    */
+  private def dimOrModal(dim: Int, vecs: DataFrame, vec: String, who: String): Int =
+    if (dim > 0) dim
+    else vecs.groupBy(size(col(vec)).as("d")).count()
+      .orderBy(col("count").desc, col("d").asc)
+      .limit(1).collect().headOption.map(_.getInt(0)).getOrElse(
+        throw new IllegalArgumentException(s"$who: empty corpus"))
 
   /** Distributed Lloyd's k-means over an embedding column (the IVF centroid
     * trainer). Every step is cluster-parallel and bounded on the driver:
@@ -289,7 +331,7 @@ object Similarity {
     }
     for (_ <- 0 until maxIter) {
       val means = c
-        .withColumn("list", nearestLists(col("vec"), cents, 1).getItem(0).getField("list"))
+        .withColumn("list", assign(col("vec"), cents))
         .select(col("list"), posexplode(col("vec")).as(Seq("pos", "v")))
         .groupBy(col("list"), col("pos")).agg(avg(col("v")).as("m"))
         .collect()
@@ -325,30 +367,14 @@ object Similarity {
     require(centroids == null || centroids.length == nLists,
       s"centroids (${Option(centroids).map(_.length).orNull}) must match nLists=$nLists")
     val c0 = Parallelism.ensureCompute(corpus).select(col(cId).as("c_id"), col(cVec).as("c_vec"))
-    // dim <= 0 = infer from the data (the modal vector length — one tiny
-    // aggregation, no assumption that row one is representative); an
-    // explicit wrong dim fails fast in trainCentroids instead of silently
-    // training on a skewed subset.
-    lazy val useDim =
-      if (dim > 0) dim
-      else c0.groupBy(size(col("c_vec")).as("d")).count()
-        .orderBy(col("count").desc, col("d").asc)
-        .limit(1).collect().headOption.map(_.getInt(0)).getOrElse(
-          throw new IllegalArgumentException("ivfTopKJoin: empty corpus"))
     val cents =
       if (centroids != null) centroids
-      else trainCentroids(corpus, cId, cVec, nLists, useDim, trainIters)
-    def best(vec: Column, n: Int): Column = nearestLists(vec, cents, n)
-    val cAssigned = c0.withColumn("list", best(col("c_vec"), 1).getItem(0).getField("list"))
+      else trainCentroids(corpus, cId, cVec, nLists,
+        dimOrModal(dim, c0, "c_vec", "ivfTopKJoin"), trainIters)
     val q = queries.select(col(qId).as("q_id"), col(qVec).as("q_vec"))
-      .withColumn("list", explode(transform(best(col("q_vec"), nProbe), s => s.getField("list"))))
-    val scored = cAssigned.join(broadcast(q), Seq("list"))
-      .where(col("c_id") =!= col("q_id"))
-      .withColumn("sim", round(VectorExpressions.cosine(col("q_vec"), col("c_vec")), 6))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id").asc)
-    scored.withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
-      .select(col("q_id"), col("c_id").as("vec_id"), col("sim"))
+      .withColumn("list", probeLists(col("q_vec"), cents, nProbe))
+    cosineTopK(c0.withColumn("list", assign(col("c_vec"), cents))
+      .join(broadcast(q), Seq("list")), k)
   }
 
   /** Materialize the IVF DEPLOYMENT layout the scaladoc above promises:
@@ -360,11 +386,7 @@ object Similarity {
   def writeIvfIndex(
       corpus: DataFrame, cId: String, cVec: String,
       path: String, centroids: Array[Array[Float]]): Unit =
-    Parallelism.ensureCompute(corpus)
-      .select(col(cId).as("c_id"), col(cVec).as("c_vec"))
-      .withColumn("list",
-        nearestLists(col("c_vec"), centroids, 1).getItem(0).getField("list"))
-      .write.mode("overwrite").partitionBy("list").parquet(path)
+    writeIvf(corpus, cId, cVec, path, centroids, "overwrite")
 
   /** Incremental ingest into a materialized IVF index: assign the new
     * batch to its nearest FROZEN centroids and append into the same
@@ -380,11 +402,17 @@ object Similarity {
   def appendToIvfIndex(
       batch: DataFrame, cId: String, cVec: String,
       path: String, centroids: Array[Array[Float]]): Unit =
-    Parallelism.ensureCompute(batch)
+    writeIvf(batch, cId, cVec, path, centroids, "append")
+
+  /** The IVF layout writer: `(c_id, c_vec)` rows hive-partitioned by
+    * their nearest list under the frozen `centroids`, in save `mode`.
+    */
+  private def writeIvf(rows: DataFrame, cId: String, cVec: String,
+      path: String, centroids: Array[Array[Float]], mode: String): Unit =
+    Parallelism.ensureCompute(rows)
       .select(col(cId).as("c_id"), col(cVec).as("c_vec"))
-      .withColumn("list",
-        nearestLists(col("c_vec"), centroids, 1).getItem(0).getField("list"))
-      .write.mode("append").partitionBy("list").parquet(path)
+      .withColumn("list", assign(col("c_vec"), centroids))
+      .write.mode(mode).partitionBy("list").parquet(path)
 
   /** Probe a materialized IVF index: each query computes its `nProbe`
     * nearest lists against the same frozen centroids and the scan reads
@@ -400,19 +428,12 @@ object Similarity {
       queries: DataFrame, qId: String, qVec: String,
       k: Int, centroids: Array[Array[Float]], nProbe: Int): DataFrame = {
     val q = queries.select(col(qId).as("q_id"), col(qVec).as("q_vec"))
-      .withColumn("list", explode(transform(
-        nearestLists(col("q_vec"), centroids, nProbe), s => s.getField("list"))))
+      .withColumn("list", probeLists(col("q_vec"), centroids, nProbe))
     val probedLists = q.select(col("list")).distinct()
       .collect().map(_.getLong(0)) // bounded: <= |queries| * nProbe ids
-    val scored = spark.read.parquet(path)
+    cosineTopK(spark.read.parquet(path)
       .where(col("list").isin(probedLists: _*))
-      .join(broadcast(q), Seq("list"))
-      .where(col("c_id") =!= col("q_id"))
-      .withColumn("sim", round(VectorExpressions.cosine(col("q_vec"), col("c_vec")), 6))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id").asc)
-    scored.withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
-      .select(col("q_id"), col("c_id").as("vec_id"), col("sim"))
+      .join(broadcast(q), Seq("list")), k)
   }
 
   /** EXACT all-pairs near-duplicate detection by embedding cosine >=
@@ -479,19 +500,43 @@ object Similarity {
       maxClusterSize: Int, shardSeed: Long = 7L): DataFrame = {
     require(maxClusterSize >= 1,
       s"maxClusterSize must be >= 1, got $maxClusterSize")
-    val assigned = base.withColumn("cluster",
-      nearestLists(col("vec"), centroids, 1).getItem(0).getField("list"))
+    val assigned = base.withColumn("cluster", assign(col("vec"), centroids))
     if (maxClusterSize == Int.MaxValue) assigned.withColumn("shard", lit(0L))
     else {
       val sizes = assigned.groupBy(col("cluster")).agg(count(lit(1)).as("__csz"))
-      val nShards = greatest(
-        floor((col("__csz") + lit(maxClusterSize.toLong - 1)) /
-          lit(maxClusterSize.toDouble)).cast("long"), lit(1L))
       assigned.join(broadcast(sizes), Seq("cluster"))
-        .withColumn("shard", pmod(xxhash64(col("id"), lit(shardSeed)), nShards))
+        .withColumn("shard", pmod(xxhash64(col("id"), lit(shardSeed)),
+          shardCount(col("__csz"), maxClusterSize)))
         .drop("__csz")
     }
   }
+
+  /** Sub-shards of a cluster of `size` rows: `max(1, ceil(size / cap))`. */
+  private def shardCount(size: Column, maxClusterSize: Int): Column =
+    greatest(floor((size + lit(maxClusterSize.toLong - 1)) /
+      lit(maxClusterSize.toDouble)).cast("long"), lit(1L))
+
+  /** The within-cluster pair stage of the SemDeDup rule: ids of rows
+    * that a smaller-id row of the same (cluster, shard) cell is at least
+    * `tau` similar to (6-dp-rounded cosine).
+    */
+  private def selfPairDups(sharded: DataFrame, tau: Double): DataFrame = {
+    val l = sharded.select(col("cluster"), col("shard"),
+      col("id").as("ia"), col("vec").as("va"))
+    val r = sharded.select(col("cluster"), col("shard"),
+      col("id").as("ib"), col("vec").as("vb"))
+    l.join(r, Seq("cluster", "shard"))
+      .where(col("ia") < col("ib"))
+      .where(round(VectorExpressions.cosine(col("va"), col("vb")), 6) >= tau)
+      .select(col("ib").as("id")).distinct()
+  }
+
+  /** `(id, cluster, keep)` for every `assigned` row: keep = not in `dups`. */
+  private def keepFlags(assigned: DataFrame, dups: DataFrame): DataFrame =
+    assigned
+      .join(dups.withColumn("__dup", lit(true)), Seq("id"), "left_outer")
+      .select(col("id"), col("cluster"),
+        not(coalesce(col("__dup"), lit(false))).as("keep"))
 
   /** SemDeDup-style SEMANTIC deduplication (cluster-then-compare, the
     * shape of Abbas et al. 2023): every vector is assigned to its
@@ -533,28 +578,12 @@ object Similarity {
     require(centroids == null || centroids.nonEmpty, "centroids must be non-empty")
     val c0 = Parallelism.ensureCompute(df)
       .select(col(idCol).as("id"), col(vecCol).as("vec"))
-    lazy val useDim =
-      if (dim > 0) dim
-      else c0.groupBy(size(col("vec")).as("d")).count()
-        .orderBy(col("count").desc, col("d").asc)
-        .limit(1).collect().headOption.map(_.getInt(0)).getOrElse(
-          throw new IllegalArgumentException("semanticDedup: empty corpus"))
     val cents =
       if (centroids != null) centroids
-      else trainCentroids(df, idCol, vecCol, nClusters, useDim, trainIters)
+      else trainCentroids(df, idCol, vecCol, nClusters,
+        dimOrModal(dim, c0, "vec", "semanticDedup"), trainIters)
     val sharded = shardedAssignment(c0, cents, maxClusterSize)
-    val l = sharded.select(col("cluster"), col("shard"),
-      col("id").as("ia"), col("vec").as("va"))
-    val r = sharded.select(col("cluster"), col("shard"),
-      col("id").as("ib"), col("vec").as("vb"))
-    val dups = l.join(r, Seq("cluster", "shard"))
-      .where(col("ia") < col("ib"))
-      .where(round(VectorExpressions.cosine(col("va"), col("vb")), 6) >= tau)
-      .select(col("ib").as("id")).distinct()
-    sharded
-      .join(dups.withColumn("__dup", lit(true)), Seq("id"), "left_outer")
-      .select(col("id"), col("cluster"),
-        not(coalesce(col("__dup"), lit(false))).as("keep"))
+    keepFlags(sharded, selfPairDups(sharded, tau))
   }
 
   /** HARD-NEGATIVE mining for contrastive training: for every anchor
@@ -594,16 +623,12 @@ object Similarity {
       col("vec").as("va"), col("lbl").as("la"))
     val c = base.select(col("cluster"), col("shard"), col("id").as("neg_id"),
       col("vec").as("vc"), col("lbl").as("lc"))
-    val w = Window.partitionBy(col("anchor_id"))
-      .orderBy(col("sim").desc, col("neg_id").asc)
-    a.join(c, Seq("cluster", "shard"))
+    val scored = a.join(c, Seq("cluster", "shard"))
       .where(col("la") =!= col("lc"))
       .withColumn("sim",
         round(VectorExpressions.cosine(col("va"), col("vc")), 6))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("anchor_id"), col("neg_id"), col("sim"),
-        col("rank").cast("long").as("rank"))
+    rankTopK(scored, "anchor_id", col("sim").desc, "neg_id", k, rn = "rank")(
+      col("anchor_id"), col("neg_id"), col("sim"), col("rank").cast("long").as("rank"))
   }
 
   /** Margin-based bitext mining (Artetxe & Schwenk 2019's ratio margin —
@@ -623,7 +648,7 @@ object Similarity {
     * Scale: this is the exact formulation — one side must be broadcastable
     * (mine language pairs in src-language chunks, the way [[topKJoin]]
     * batches queries). For corpus x corpus at 100 TB, generate candidates
-    * with [[lshTopKJoin]]/[[ivfTopK]] first and feed the SAME margin test;
+    * with [[lshTopKJoin]]/[[ivfTopKJoin]] first and feed the SAME margin test;
     * recall loss is then the LSH layer's, measurable via the q133 pattern.
     *
     * Returns mutual-best pairs passing the margin: (src_id, tgt_id, sim).
@@ -697,17 +722,13 @@ object Similarity {
       if (store.columns.contains("cluster"))
         store.select(col(sIdCol).as("sid"), col(sVecCol).as("svec"),
           col("cluster"))
-      else s0raw.withColumn("cluster",
-        nearestLists(col("svec"), centroids, 1).getItem(0).getField("list"))
-    val bAssigned = b0.withColumn("cluster",
-      nearestLists(col("vec"), centroids, 1).getItem(0).getField("list"))
+      else s0raw.withColumn("cluster", assign(col("svec"), centroids))
+    val bAssigned = b0.withColumn("cluster", assign(col("vec"), centroids))
     // store-side shard ceiling: nShards from STORE cluster sizes; the
     // batch row probes the shard its own id hashes to (1-of-nShards
     // recall in an oversized cluster — the documented cap tradeoff)
     val sSizes = s0.groupBy(col("cluster")).agg(count(lit(1)).as("__ssz"))
-    val nShards = greatest(
-      floor((col("__ssz") + lit(maxClusterSize.toLong - 1)) /
-        lit(maxClusterSize.toDouble)).cast("long"), lit(1L))
+    val nShards = shardCount(col("__ssz"), maxClusterSize)
     val sSharded = s0.join(broadcast(sSizes), Seq("cluster"))
       .withColumn("shard", pmod(xxhash64(col("sid"), lit(shardSeed)), nShards))
       .select(col("cluster"), col("shard"), col("svec"))
@@ -719,46 +740,11 @@ object Similarity {
     val dupVsStore = bProbe.join(sSharded, Seq("cluster", "shard"))
       .where(round(VectorExpressions.cosine(col("vec"), col("svec")), 6) >= tau)
       .select(col("id")).distinct()
-    val bSharded = shardedAssignment(b0, centroids, maxClusterSize, shardSeed)
-    val l = bSharded.select(col("cluster"), col("shard"),
-      col("id").as("ia"), col("vec").as("va"))
-    val r = bSharded.select(col("cluster"), col("shard"),
-      col("id").as("ib"), col("vec").as("vb"))
-    val dupInBatch = l.join(r, Seq("cluster", "shard"))
-      .where(col("ia") < col("ib"))
-      .where(round(VectorExpressions.cosine(col("va"), col("vb")), 6) >= tau)
-      .select(col("ib").as("id")).distinct()
-    val dups = dupVsStore.union(dupInBatch).distinct()
-    bAssigned
-      .join(dups.withColumn("__dup", lit(true)), Seq("id"), "left_outer")
-      .select(col("id"), col("cluster"),
-        not(coalesce(col("__dup"), lit(false))).as("keep"))
+    val dupInBatch = selfPairDups(
+      shardedAssignment(b0, centroids, maxClusterSize, shardSeed), tau)
+    keepFlags(bAssigned, dupVsStore.union(dupInBatch).distinct())
   }
 
-  /** k-CENTER coreset selection by farthest-first traversal (Gonzalez
-    * 1985; a 2-approximation of the k-center optimum): the first center
-    * is the smallest id; each next center is the vector whose MAXIMUM
-    * cosine similarity to the chosen set is smallest — i.e. the most
-    * novel remaining vector. The diversity-sampling picker (annotation
-    * batches, eval-set seeding, cluster initialization) that
-    * quota/temperature sampling cannot express: it optimizes COVERAGE
-    * of embedding space, not proportionality.
-    *
-    * Determinism/portability: similarities are the native
-    * `cosine_similarity` rounded to 6 dp BEFORE the min/argmin (the
-    * q14 agreement with `list_cosine_similarity`); ties break by
-    * ascending id — the full selection trajectory replays on any
-    * engine.
-    *
-    * Scale shape: each of the k rounds is ONE map over the corpus
-    * (chosen centers ride the plan as `k × dim` float literals — the
-    * q71 frozen-centroid discipline) + one TakeOrdered(1) argmin. No
-    * shuffle of the vector table, ever; driver state = the chosen
-    * centers. k rounds = k corpus scans off a persisted projection.
-    *
-    * Returns `(rank, vec_id, max_sim)` — `max_sim` NULL for the seed
-    * row, else the similarity that made the pick (descending novelty).
-    */
   /** kNN LABEL-AGREEMENT audit (the confident-learning-style mislabel
     * signal, Northcutt et al. shape): for every vector, the fraction of
     * its k nearest neighbors (cosine, 6-dp pre-rank rounding, id
@@ -786,13 +772,10 @@ object Similarity {
     val a = v.select(col("id"), col("v"), col("label"))
     val b = v.select(col("id").as("nid"), col("v").as("nv"),
       col("label").as("nlabel"))
-    val scored = a.crossJoin(b).where(col("id") =!= col("nid"))
+    val scored = rankTopK(a.crossJoin(b).where(col("id") =!= col("nid"))
       .withColumn("sim",
-        round(VectorExpressions.cosine(col("v"), col("nv")), 6))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("id"))
-          .orderBy(col("sim").desc, col("nid").asc)))
-      .where(col("rn") <= k)
+        round(VectorExpressions.cosine(col("v"), col("nv")), 6)),
+      "id", col("sim").desc, "nid", k)()
     scored.groupBy(col("id"), col("label"))
       .agg(sum(when(col("nlabel") === col("label"), 1L).otherwise(0L))
           .as("n_same"),
@@ -802,6 +785,30 @@ object Similarity {
           .as("agreement"))
   }
 
+  /** k-CENTER coreset selection by farthest-first traversal (Gonzalez
+    * 1985; a 2-approximation of the k-center optimum): the first center
+    * is the smallest id; each next center is the vector whose MAXIMUM
+    * cosine similarity to the chosen set is smallest — i.e. the most
+    * novel remaining vector. The diversity-sampling picker (annotation
+    * batches, eval-set seeding, cluster initialization) that
+    * quota/temperature sampling cannot express: it optimizes COVERAGE
+    * of embedding space, not proportionality.
+    *
+    * Determinism/portability: similarities are the native
+    * `cosine_similarity` rounded to 6 dp BEFORE the min/argmin (the
+    * q14 agreement with `list_cosine_similarity`); ties break by
+    * ascending id — the full selection trajectory replays on any
+    * engine.
+    *
+    * Scale shape: each of the k rounds is ONE map over the corpus
+    * (chosen centers ride the plan as `k × dim` float literals — the
+    * q71 frozen-centroid discipline) + one TakeOrdered(1) argmin. No
+    * shuffle of the vector table, ever; driver state = the chosen
+    * centers. k rounds = k corpus scans off a persisted projection.
+    *
+    * Returns `(rank, vec_id, max_sim)` — `max_sim` NULL for the seed
+    * row, else the similarity that made the pick (descending novelty).
+    */
   def kCenters(vectors: DataFrame, idCol: String, vecCol: String,
       k: Int): DataFrame = {
     require(k >= 1 && k <= 64, s"k must be in [1, 64], got $k")

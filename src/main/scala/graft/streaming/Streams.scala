@@ -111,58 +111,31 @@ object Streams {
         col(rightTs) <= col(leftTs) + expr(s"INTERVAL $maxDelay"),
       joinType)
 
-  /** Stream-stream inner join with state cleanup: both sides watermarked,
-    * and the time-range condition bounds how long either side's rows are
-    * retained in the join state — without it a stream-stream join buffers
-    * forever, the canonical 100 TB streaming failure mode.
+  /** Stream-stream interval join with state cleanup: both sides
+    * watermarked, and the time-range condition bounds how long either
+    * side's rows are retained in the join state — without it a
+    * stream-stream join buffers forever, the canonical 100 TB streaming
+    * failure mode. `joinType` is any [[intervalJoin]] type:
+    *  - `inner`: matches emit as they pair up;
+    *  - `left_outer`: an UNMATCHED left row also emits, with a NULL right
+    *    side, once the watermark has passed its join window (the earliest
+    *    moment the engine can prove no match is still coming) — the
+    *    attribution shape where unclicked impressions must still land;
+    *  - `full_outer`: an unmatched row on EITHER side emits with a NULL
+    *    other side once its window has passed — the reconciliation shape
+    *    (orders vs payments). The null-side flush is a state-expiry read,
+    *    not extra state.
     */
   def streamingIntervalJoin(
       left: DataFrame, right: DataFrame,
       leftKey: String, rightKey: String,
       leftTs: String, rightTs: String,
-      maxDelay: String, watermark: String): DataFrame =
+      maxDelay: String, watermark: String,
+      joinType: String = "inner"): DataFrame =
     intervalJoin(
       left.withWatermark(leftTs, watermark),
       right.withWatermark(rightTs, watermark),
-      leftKey, rightKey, leftTs, rightTs, maxDelay)
-
-  /** Stream-stream LEFT OUTER interval join: matches emit as they pair up;
-    * an UNMATCHED left row emits with a NULL right side only once the
-    * watermark has passed its join window (the earliest moment the engine
-    * can prove no match is still coming). The attribution shape where
-    * unclicked impressions must still land downstream — and the state
-    * contract is the same as the inner variant: both sides' retention is
-    * bounded by watermark + interval, never the stream history.
-    */
-  def streamingIntervalJoinLeftOuter(
-      left: DataFrame, right: DataFrame,
-      leftKey: String, rightKey: String,
-      leftTs: String, rightTs: String,
-      maxDelay: String, watermark: String): DataFrame =
-    intervalJoin(
-      left.withWatermark(leftTs, watermark),
-      right.withWatermark(rightTs, watermark),
-      leftKey, rightKey, leftTs, rightTs, maxDelay, joinType = "left_outer")
-
-  /** Stream-stream FULL OUTER interval join: matches emit as they pair
-    * up; an unmatched row on EITHER side emits with a NULL other side
-    * once the watermark has passed its join window — the symmetric
-    * completion of [[streamingIntervalJoinLeftOuter]]. The
-    * reconciliation shape (orders vs payments, impressions vs clicks
-    * where both orphan kinds matter downstream); state retention on both
-    * sides stays bounded by watermark + interval exactly as in the inner
-    * variant — the null-side flush is a state-expiry read, not extra
-    * state.
-    */
-  def streamingIntervalJoinFullOuter(
-      left: DataFrame, right: DataFrame,
-      leftKey: String, rightKey: String,
-      leftTs: String, rightTs: String,
-      maxDelay: String, watermark: String): DataFrame =
-    intervalJoin(
-      left.withWatermark(leftTs, watermark),
-      right.withWatermark(rightTs, watermark),
-      leftKey, rightKey, leftTs, rightTs, maxDelay, joinType = "full_outer")
+      leftKey, rightKey, leftTs, rightTs, maxDelay, joinType)
 
   /** Stream-static enrichment: join each micro-batch against a (slowly
     * changing) dimension table with an explicit broadcast. The static side

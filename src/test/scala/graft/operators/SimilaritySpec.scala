@@ -431,13 +431,51 @@ class SimilaritySpec extends SparkSuite {
     assert(got.size == 6, "one row per vector")
   }
 
-  test("labelAgreement plan: per-anchor top-k runs as WindowGroupLimit heaps") {
-    val vecs = (1L to 8L).map(i => (i, Array(i.toFloat, 1f), (i % 2).toInt))
+  test("top-k plans: every producer's per-key top-k runs as WindowGroupLimit heaps") {
+    val vecs = (1L to 8L).map(i =>
+      (i, Array(i.toFloat, 1f, (i % 3).toFloat, 0.5f), (i % 2).toInt))
       .toDF("vec_id", "embedding", "label")
-    val plan = Similarity.labelAgreement(vecs, "vec_id", "embedding", "label", 3)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("WindowGroupLimit"),
-      s"rn <= k must push per-task top-k heaps, not full per-anchor sorts:\n$plan")
+    val queries = vecs.where($"vec_id" <= 2)
+    val cents = Array(Array(1f, 0f, 0f, 0f), Array(0f, 1f, 0f, 0f))
+    val dir = java.nio.file.Files.createTempDirectory("graft_wgl").toString
+    Similarity.writeIvfIndex(vecs, "vec_id", "embedding", dir, cents)
+    val sigs = Similarity.srpSignatures(vecs, "vec_id", "embedding", dim = 4, bits = 8)
+    val books = ProductQuantizer.train(vecs, "vec_id", "embedding",
+      m = 2, ksub = 2, dim = 4, iters = 1)
+    val pqCodes = ProductQuantizer.encode(vecs, "vec_id", "embedding", books, dim = 4)
+      .withColumn("list", ($"vec_id" % 2).cast("int"))
+    val stats = ScalarQuantizer.train(vecs, "embedding", 4)
+    val sqCodes = ScalarQuantizer.encode(vecs, "vec_id", "embedding", stats,
+      carryCols = Seq("label"))
+    val routed = queries.withColumn("list", ($"vec_id" % 2).cast("int"))
+    val producers = Seq(
+      "topKJoin" -> Similarity.topKJoin(queries, "vec_id", "embedding",
+        vecs, "vec_id", "embedding", k = 3),
+      "lshTopKJoin" -> Similarity.lshTopKJoin(queries, "vec_id", "embedding",
+        vecs, "vec_id", "embedding", k = 3, dim = 4, bits = 2, probes = 1),
+      "hammingTopK" -> Similarity.hammingTopK(sigs.where($"vec_id" <= 2), "vec_id",
+        sigs, "vec_id", k = 3),
+      "ivfTopKJoin" -> Similarity.ivfTopKJoin(queries, "vec_id", "embedding",
+        vecs, "vec_id", "embedding", k = 3, nLists = 2, nProbe = 1, centroids = cents),
+      "probeIvfIndex" -> Similarity.probeIvfIndex(spark, dir, queries, "vec_id",
+        "embedding", k = 3, centroids = cents, nProbe = 1),
+      "hardNegatives" -> Similarity.hardNegatives(vecs, "vec_id", "embedding", "label",
+        k = 3, centroids = cents),
+      "labelAgreement" -> Similarity.labelAgreement(vecs, "vec_id", "embedding",
+        "label", 3),
+      "ProductQuantizer.adcTopK" -> ProductQuantizer.adcTopK(queries, "vec_id",
+        "embedding", pqCodes, "vec_id", books, dim = 4, k = 3),
+      "ProductQuantizer.adcTopK within" -> ProductQuantizer.adcTopK(routed, "vec_id",
+        "embedding", pqCodes, "vec_id", books, dim = 4, k = 3, withinCol = "list"),
+      "ScalarQuantizer.adcTopK" -> ScalarQuantizer.adcTopK(queries, "vec_id",
+        "embedding", sqCodes, "vec_id", stats, k = 3),
+      "ScalarQuantizer.adcTopK within" -> ScalarQuantizer.adcTopK(queries, "vec_id",
+        "embedding", sqCodes, "vec_id", stats, k = 3, withinCol = Some("label")))
+    producers.foreach { case (name, df) =>
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("WindowGroupLimit"),
+        s"$name: rn <= k must push per-task top-k heaps, not full per-key sorts:\n$plan")
+    }
   }
 
   test("labelAgreement: k beyond n-1 divides by neighbors actually found") {

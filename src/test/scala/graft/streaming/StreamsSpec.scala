@@ -345,9 +345,9 @@ class StreamsSpec extends SparkSuite {
     clicks.write.mode("overwrite").parquet(cDir)
     val vStream = spark.readStream.schema(views.schema).parquet(vDir)
     val cStream = spark.readStream.schema(clicks.schema).parquet(cDir)
-    val joined = Streams.streamingIntervalJoinLeftOuter(
+    val joined = Streams.streamingIntervalJoin(
       vStream, cStream, "v_user", "c_user", "v_ts", "c_ts",
-      maxDelay = "10 minutes", watermark = "5 minutes")
+      maxDelay = "10 minutes", watermark = "5 minutes", joinType = "left_outer")
     val q = joined.writeStream
       .outputMode("append").format("memory").queryName("lojoin_out").start()
     try {
@@ -388,9 +388,9 @@ class StreamsSpec extends SparkSuite {
     clicks.write.mode("overwrite").parquet(cDir)
     val vStream = spark.readStream.schema(views.schema).parquet(vDir)
     val cStream = spark.readStream.schema(clicks.schema).parquet(cDir)
-    val joined = Streams.streamingIntervalJoinFullOuter(
+    val joined = Streams.streamingIntervalJoin(
       vStream, cStream, "v_user", "c_user", "v_ts", "c_ts",
-      maxDelay = "10 minutes", watermark = "5 minutes")
+      maxDelay = "10 minutes", watermark = "5 minutes", joinType = "full_outer")
     val q = joined.writeStream
       .outputMode("append").format("memory").queryName("fojoin_out").start()
     try {
