@@ -431,6 +431,15 @@ class SimilaritySpec extends SparkSuite {
     assert(got.size == 6, "one row per vector")
   }
 
+  test("labelAgreement plan: per-anchor top-k runs as WindowGroupLimit heaps") {
+    val vecs = (1L to 8L).map(i => (i, Array(i.toFloat, 1f), (i % 2).toInt))
+      .toDF("vec_id", "embedding", "label")
+    val plan = Similarity.labelAgreement(vecs, "vec_id", "embedding", "label", 3)
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("WindowGroupLimit"),
+      s"rn <= k must push per-task top-k heaps, not full per-anchor sorts:\n$plan")
+  }
+
   test("top-k plans: every producer's per-key top-k runs as WindowGroupLimit heaps") {
     val vecs = (1L to 8L).map(i =>
       (i, Array(i.toFloat, 1f, (i % 3).toFloat, 0.5f), (i % 2).toInt))
