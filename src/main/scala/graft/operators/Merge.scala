@@ -18,10 +18,23 @@ import org.apache.spark.sql.functions._
   *   1. `matchedKeys` = dest SEMI JOIN broadcast(source) on pk — a scan of
   *      dest that reads ONLY the pk columns (column-pruned at the parquet
   *      reader), producing at most |source| keys.
-  *   2. inserts = source ANTI JOIN broadcast(matchedKeys) — tiny.
+  *   2. inserts = source LEFT JOIN broadcast(matchedKeys), keeping the rows
+  *      with no match — tiny. This is `left_anti` by another plan shape:
+  *      the optimizer pushes an anti-join into a union-shaped source
+  *      (`PushDownLeftSemiAntiJoin`), which would clone the dest pk-scan
+  *      once per union branch; it pushes no outer join.
   *   3. upserts = dest LEFT JOIN broadcast(source) — the one full scan of
-  *      dest; per row pick the source image iff matched AND changed.
-  * Total: two scans of dest (one pk-only), zero shuffles of dest, no sort.
+  *      dest; per row pick the source image iff matched AND changed. That
+  *      test is one `__take` column, evaluated once per row and read by
+  *      every output column's `when`.
+  * Total: two scans of dest (one pk-only), zero shuffles of dest, no sort,
+  * and nothing cached: the result is one lazy plan. Source has three
+  * consumers; each of its shuffle stages (a page fetch, a dedup) runs
+  * once, through adaptive execution's exchange reuse. A shuffle-free
+  * source is read once per consumer — at most three reads of a
+  * broadcast-sized input, which must give the same rows each time;
+  * [[upsertBatch]] and the ETL callers put [[Dedup.byKeyLatest]]'s
+  * shuffle in front.
   * For a source too large to broadcast, `MergeStrategy.ShuffleFullOuter`
   * computes the same result with a single full-outer sort-merge join
   * (both sides shuffled on pk — correct, but moves dest over the network).
@@ -30,8 +43,9 @@ object Merge {
 
   sealed trait MergeStrategy
   object MergeStrategy {
-    /** Broadcast source twice; never shuffle dest. Use when source fits in
-      * the driver/executor broadcast budget (the daily-batch case).
+    /** Broadcast source to both dest scans, then the matched keys back
+      * to source; never shuffle dest. Use when source fits in the
+      * broadcast budget (the daily-batch case).
       */
     case object BroadcastSource extends MergeStrategy
     /** Single full-outer shuffle join on pk. Use when source ~ dest size. */
@@ -84,39 +98,35 @@ object Merge {
     val changed = changePredicate(compareCols, c => col(dc(c)), c => col(sc(c)))
     val srcMatched = pk.map(k => col(sc(k)).isNotNull).reduce(_ && _)
 
+    // Matched AND changed, computed once per row as its own column: the
+    // optimizer does not inline a non-cheap alias that the output
+    // projection reads many times.
+    val take = "__take"
+    def pick(joined: DataFrame)(image: String => Column): DataFrame =
+      joined.select(col("*"), (srcMatched && changed).as(take))
+        .select(cols.map(c => image(c).as(c)): _*)
+
     strategy match {
       case MergeStrategy.BroadcastSource =>
-        // The strategy precondition is a broadcast-sized source, so persist
-        // it (and the even-smaller matched-key set). Besides skipping
-        // recomputation, the InMemoryRelation is an optimizer barrier: it
-        // stops the left-anti below from being pushed through a source
-        // union, which would otherwise clone the dest pk-scan + broadcast
-        // subtree once per union branch — fatal when dest is the 100 TB
-        // side.
-        val sMat = s.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         // (1) pk-only scan of dest: which source keys already exist?
         val matchedKeys = d.select(pk.map(k => col(dc(k))): _*)
-          .join(broadcast(sMat), joinCond, "left_semi")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // (2) inserts: source rows whose key is NOT in dest.
-        val inserts = sMat
-          .join(broadcast(matchedKeys), joinCond, "left_anti")
+          .join(broadcast(s), joinCond, "left_semi")
+        // (2) inserts: source rows whose key is NOT in dest. A matched
+        // key is never NULL, so a NULL on the right marks a miss.
+        val inserts = s.join(broadcast(matchedKeys), joinCond, "left_outer")
+          .where(col(dc(pk.head)).isNull)
           .select(cols.map(c => col(sc(c)).as(c)): _*)
         // (3) one full scan of dest; matched+changed rows take the source image.
-        val takeSource = srcMatched && changed
-        val upserts = d.join(broadcast(sMat), joinCond, "left_outer")
-          .select(cols.map(c => when(takeSource, col(sc(c))).otherwise(col(dc(c))).as(c)): _*)
+        val upserts = pick(d.join(broadcast(s), joinCond, "left_outer"))(c =>
+          when(col(take), col(sc(c))).otherwise(col(dc(c))))
         upserts.unionByName(inserts)
 
       case MergeStrategy.ShuffleFullOuter =>
         val destMatched = pk.map(k => col(dc(k)).isNotNull).reduce(_ && _)
-        d.join(s, joinCond, "full_outer")
-          .select(cols.map { c =>
-            when(!destMatched, col(sc(c)))                // insert
-              .when(srcMatched && changed, col(sc(c)))    // update
-              .otherwise(col(dc(c)))                      // keep
-              .as(c)
-          }: _*)
+        pick(d.join(s, joinCond, "full_outer"))(c =>
+          when(!destMatched, col(sc(c)))       // insert
+            .when(col(take), col(sc(c)))       // update
+            .otherwise(col(dc(c))))            // keep
     }
   }
 

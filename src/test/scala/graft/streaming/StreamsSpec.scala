@@ -64,6 +64,25 @@ class StreamsSpec extends SparkSuite {
     assert(afterSecond == Map(1L -> "a", 2L -> "b3", 3L -> "c"))
   }
 
+  test("upsertStream leaves no cache entry behind over many micro-batches") {
+    spark.catalog.clearCache()
+    val destPath = tmpDir("upsert-nocache") + "/t"
+    val in = tmpDir("upsert-nocache-in")
+    // one file per micro-batch: initial load, then a change + an insert each
+    Seq(Seq((1L, 1L, "a"), (2L, 1L, "b")), Seq((2L, 2L, "b2"), (3L, 1L, "c")),
+        Seq((1L, 2L, "a2"), (4L, 1L, "d")))
+      .foreach(_.toDF("id", "seq", "v").coalesce(1).write.mode("append").parquet(in))
+    val q = Streams.upsertStream(spark,
+      spark.readStream.schema(spark.read.parquet(in).schema)
+        .option("maxFilesPerTrigger", 1).parquet(in),
+      destPath, pk = Seq("id"), orderCols = Seq("seq"), checkpoint = tmpDir("nocache-ck"))
+    try q.processAllAvailable() finally q.stop()
+    assert(q.recentProgress.count(_.numInputRows > 0) == 3, "expected three micro-batches")
+    assert(spark.read.parquet(destPath).select($"id", $"v").as[(Long, String)].collect().toMap ==
+      Map(1L -> "a2", 2L -> "b2", 3L -> "c", 4L -> "d"))
+    assert(spark.sharedState.cacheManager.isEmpty, "a micro-batch's merge left a cache entry behind")
+  }
+
   test("upsertStream heals a crashed swap before merging — prior rows survive") {
     val destPath = tmpDir("upsert-crash") + "/t"
     val in = tmpDir("upsert-crash-in")
