@@ -298,7 +298,7 @@ object Queries {
     * every stage replayed by the DuckDB oracle (codes, band values,
     * candidate pairs, bit_count(xor) distances).
     */
-  def q13hPortableSimhashPairs(spark: SparkSession, dir: String): DataFrame = {
+  def q13hPortableSimhashPairs(spark: SparkSession, dir: String): DataFrame = Pins.scoped { s =>
     val maxHamming = 3
     // Remix token hashes before voting: a short token's polynomial fold
     // rarely reaches the high 48-bit range, so un-remixed votes make the
@@ -306,11 +306,10 @@ object Queries {
     // force. (h*32749 + 12345) % 2^48 spreads entropy into the high bits
     // and keeps products < 2^63 (ANSI-safe); the oracle replays it.
     val remixed = transform(col("hs"), h => (h * lit(32749L) + lit(12345L)) % lit(1L << 48))
-    val codes = Parallelism.ensureCompute(t(spark, dir, "documents"))
+    val codes = s.pin(Parallelism.ensureCompute(t(spark, dir, "documents"))
       .select(col("doc_id"), TextFunctions.portableTokenHashes(col("text")).as("hs"))
       .repartition(col("doc_id"))
-      .select(col("doc_id"), TextFunctions.portableSimhash48(remixed).as("code"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("doc_id"), TextFunctions.portableSimhash48(remixed).as("code")))
     codes.count() // read by the band self-join twice + the verify join twice
     val bands = codes.select(col("doc_id"), explode(array((0 until 4).map { b =>
       struct(lit(b).as("band"),
@@ -321,16 +320,13 @@ object Queries {
       .join(bands.select(col("band"), col("v"), col("doc_id").as("idB")), Seq("band", "v"))
       .where(col("idA") < col("idB"))
       .select("idA", "idB").distinct()
-    val out = cand
+    // pair-sized; detached so the corpus-sized code pin can go
+    Pins.detach(cand
       .join(codes.select(col("doc_id").as("idA"), col("code").as("cA")), Seq("idA"))
       .join(codes.select(col("doc_id").as("idB"), col("code").as("cB")), Seq("idB"))
       .withColumn("hamming", bit_count(col("cA").bitwiseXOR(col("cB"))).cast("int"))
       .where(col("hamming") <= maxHamming)
-      .select(col("idA"), col("idB"), col("hamming"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count() // pair-sized; lets the corpus-sized code cache go
-    codes.unpersist()
-    out
+      .select(col("idA"), col("idB"), col("hamming")))
   }
 
   /** The LSH config the portable-space oracles replay (q13f, q106, q133,
@@ -1064,14 +1060,10 @@ object Queries {
     * global window would single-task). Aggregated per bin for the oracle.
     */
   def q58PackBins(spark: SparkSession, dir: String): DataFrame = {
-    val bins = TrainingPrep.packBins(t(spark, dir, "documents"), "doc_id", "text",
-      budget = 4096)
-    val out = bins.groupBy(col("bin"))
+    TrainingPrep.packBins(t(spark, dir, "documents"), "doc_id", "text",
+        budget = 4096)
+      .groupBy(col("bin"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("sum_tokens"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count() // bin-count-sized; lets the input-sized bins cache go
-    bins.unpersist()
-    out
   }
 
   // ---------------------------------------------------------------- Q59
@@ -1122,18 +1114,17 @@ object Queries {
     * out of the funnel so the oracle stays non-recursive SQL). One row of
     * per-stage survivor counts — what a 100 TB curation run reports.
     */
-  def q61CurationFunnel(spark: SparkSession, dir: String): DataFrame = {
+  def q61CurationFunnel(spark: SparkSession, dir: String): DataFrame = Pins.scoped { s =>
     // `flags` (langId + quality over the whole corpus) feeds BOTH the
-    // counts aggregate and the winners filter — persist it for the call so
-    // the lexicon/regex work runs once, and drop it after the (1-row)
-    // funnel result is materialized.
-    val flags = tp(spark, dir, "documents")
+    // counts aggregate and the winners filter — pin it for the call so
+    // the lexicon/regex work runs once; the (1-row) funnel result is
+    // detached.
+    val flags = s.pin(tp(spark, dir, "documents")
       .select(col("doc_id"), col("text"),
         TextFunctions.langId(col("text")).as("lp"),
         TextFunctions.qualityScore(col("text")).as("q"))
       .withColumn("pass_lang", col("lp") === "en")
-      .withColumn("pass_q", col("pass_lang") && col("q") >= 0.5)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("pass_q", col("pass_lang") && col("q") >= 0.5))
     val counts = flags.agg(
       count(lit(1)).as("n_total"),
       count(when(col("pass_lang"), 1)).as("n_lang"),
@@ -1148,13 +1139,9 @@ object Queries {
     val dropped = MinHashDedup.jaccardPairs(winners, "doc_id", "text",
         threshold = 0.5, shingleN = 3)
       .agg(countDistinct(col("idB")).as("n_dropped"))
-    val out = counts.crossJoin(dropped)
+    Pins.detach(counts.crossJoin(dropped)
       .select(col("n_total"), col("n_lang"), col("n_quality"), col("n_exact"),
-        (col("n_exact") - col("n_dropped")).as("n_near"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count() // one row; lets the corpus-sized flags cache go
-    flags.unpersist()
-    out
+        (col("n_exact") - col("n_dropped")).as("n_near")))
   }
 
   // ---------------------------------------------------------------- Q64
@@ -1472,22 +1459,15 @@ object Queries {
         lpad((lit(1000000000000000000L) - col("n")).cast("string"), 19, "0"),
         col("token")))
       .withColumn("__one", lit(1L))
-    // globalPrefixSum returns caller-owned caches; the grand total is the
-    // max inclusive cumsum — read it off the cache instead of re-running
-    // the token aggregation, and drop both caches once the (≤ 200-row)
-    // result is materialized.
+    // the grand total is the max inclusive cumsum — read it off the
+    // detached prefix sum instead of re-running the token aggregation
     val cum = TrainingPrep.globalPrefixSum(withOrd, "__ord", "n", "cum_n")
     val ranked = TrainingPrep.globalPrefixSum(cum, "__ord", "__one", "rank")
     val totalDf = cum.agg(max(col("cum_n")).as("__total"))
-    val out = ranked.where(col("rank") <= 200)
+    ranked.where(col("rank") <= 200)
       .crossJoin(broadcast(totalDf))
       .select(col("rank"), col("token"), col("n"),
         round(col("cum_n").cast("double") / col("__total"), 6).as("coverage"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    ranked.unpersist()
-    cum.unpersist()
-    out
   }
 
   // ---------------------------------------------------------------- Q75
@@ -1924,20 +1904,12 @@ object Queries {
     val base = tp(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_totalprice"))
       .withColumn("__ord", struct(col("o_totalprice"), col("o_orderkey")))
-    val tiled = TrainingPrep.distributedNtile(base, "__ord", k = 10)
-    // q74's cache pattern: materialize the bucket summary off the live
-    // rank cache, then drop it — the returned 10-row frame is the only
-    // retained cache
-    val out = tiled
+    TrainingPrep.distributedNtile(base, "__ord", k = 10)
       .groupBy(col("ntile").as("bucket"))
       .agg(count(lit(1)).as("n"),
         min(col("o_totalprice")).as("lo"),
         max(col("o_totalprice")).as("hi"))
       .select("bucket", "n", "lo", "hi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    tiled.unpersist()
-    out
   }
 
   // ---------------------------------------------------------------- Q95
@@ -2165,26 +2137,25 @@ object Queries {
     * operator (broadcast bench set, partial-agg dedup, range-partitioned
     * cumsum), not a test-only composition.
     */
-  def q100PretrainingPipeline(spark: SparkSession, dir: String): DataFrame = {
+  def q100PretrainingPipeline(spark: SparkSession, dir: String): DataFrame = Pins.scoped { s =>
     val docs = tp(spark, dir, "documents")
     val bench = docs.where(col("doc_id") % 97 === 0).select(col("doc_id"), col("text"))
-    val flags = docs.where(col("doc_id") % 97 =!= 0)
+    val flags = s.pin(docs.where(col("doc_id") % 97 =!= 0)
       .select(col("doc_id"), col("text"),
         TextFunctions.langId(col("text")).as("lp"),
         TextFunctions.qualityScore(col("text")).as("q"))
-      .withColumn("pass", col("lp") === "en" && col("q") >= 0.5)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("pass", col("lp") === "en" && col("q") >= 0.5))
     val survivors = flags.where(col("pass"))
       .withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window
           .partitionBy(md5(col("text"))).orderBy(col("doc_id"))))
       .where(col("rn") === 1)
       .select(col("doc_id"), col("text"))
-    val clean = Decontaminate.clean(survivors, bench, "doc_id", "text", n = 5)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val clean = s.pin(Decontaminate.clean(survivors, bench, "doc_id", "text", n = 5))
     clean.count() // materialize: three consumers below
     val bins = TrainingPrep.packBins(clean, "doc_id", "text", budget = 2048)
-    val out = flags.agg(
+    // one row; detached so the corpus-sized pins can go
+    Pins.detach(flags.agg(
         count(lit(1)).as("n_corpus"),
         count(when(col("lp") === "en", 1)).as("n_lang"),
         count(when(col("pass"), 1)).as("n_quality"),
@@ -2193,13 +2164,7 @@ object Queries {
       .crossJoin(TrainingPrep.chunk(clean, "doc_id", "text", window = 128, stride = 128)
         .agg(count(lit(1)).as("n_chunks")))
       .crossJoin(bins.agg(countDistinct(col("bin")).as("n_bins"),
-        sum(col("n_tokens")).as("n_tokens")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count() // one row; lets the corpus-sized caches go
-    bins.unpersist()
-    clean.unpersist()
-    flags.unpersist()
-    out
+        sum(col("n_tokens")).as("n_tokens"))))
   }
 
   // ---------------------------------------------------------------- Q116
@@ -3163,22 +3128,17 @@ object Queries {
   def q133LshEval(spark: SparkSession, dir: String): DataFrame = {
     val docs = t(spark, dir, "documents")
     // the candidate stage reads the signatures twice (bucket cap + pair
-    // join): materialize them, then the pair-sized candidates, so the
-    // corpus-sized signature cache is dropped before returning
-    val sigs = MinHashDedup.signatures(docs, "doc_id", "text", PortableLsh)
-      .select("id", "sig")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sigs.count()
-    val cands = MinHashDedup.candidatePairs(sigs, PortableLsh)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    cands.count()
-    sigs.unpersist()
-    val cand = cands.withColumn("is_cand", lit(true))
-    val exact = MinHashDedup.jaccardPairs(docs, "doc_id", "text", 0.5)
-    val truth = exact.select(col("idA"), col("idB")).withColumn("is_true", lit(true))
-    // both pair sets are cached and owned here: materialize the one-row
-    // scorecard, then drop them so nothing outlives the call
-    val card = cand.join(truth, Seq("idA", "idB"), "full_outer")
+    // join): pin them, and detach the pair-sized candidates so the
+    // corpus-sized signature pin is dropped at once
+    val cand = Pins.scoped { s =>
+      val sigs = s.pin(MinHashDedup.signatures(docs, "doc_id", "text", PortableLsh)
+        .select("id", "sig"))
+      sigs.count()
+      Pins.detach(MinHashDedup.candidatePairs(sigs, PortableLsh))
+    }.withColumn("is_cand", lit(true))
+    val truth = MinHashDedup.jaccardPairs(docs, "doc_id", "text", 0.5)
+      .select(col("idA"), col("idB")).withColumn("is_true", lit(true))
+    cand.join(truth, Seq("idA", "idB"), "full_outer")
       .select(coalesce(col("is_cand"), lit(false)).as("is_cand"),
         coalesce(col("is_true"), lit(false)).as("is_true"))
       .agg(
@@ -3192,10 +3152,6 @@ object Queries {
           .as("precision"),
         round(col("tp").cast("double") / col("n_true").cast("double"), 6)
           .as("recall"))
-      .localCheckpoint()
-    cands.unpersist()
-    exact.unpersist()
-    card
   }
 
   // ---------------------------------------------------------------- Q134

@@ -73,12 +73,11 @@ object Bpe {
                'skip', false))),
         acc -> acc.out)"""
 
-  def trainMerges(docs: DataFrame, textCol: String, iters: Int): DataFrame = {
+  def trainMerges(docs: DataFrame, textCol: String, iters: Int): DataFrame = Pins.scoped { s =>
     require(iters >= 1 && iters <= 64, s"iters must be in [1, 64], got $iters")
     val spark = docs.sparkSession
     import spark.implicits._
-    var cur = initVocab(docs, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    var cur = s.pin(initVocab(docs, textCol))
     val merges = Seq.newBuilder[(Int, String, String, Long, String)]
     var exhausted = false
     for (it <- 1 to iters if !exhausted) {
@@ -97,15 +96,12 @@ object Bpe {
       else {
         val (l, r, n) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         merges += ((it, l, r, n, l + r))
-        val next = cur
-          .select(col("w"), col("c"), expr(fuseExpr(l, r)).as("syms"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        next.count() // materialize before releasing the parent iteration
-        cur.unpersist()
-        cur = next
+        // each fused vocabulary is detached: the previous one is garbage
+        // at once, and the plan never stacks
+        cur = Pins.detach(cur
+          .select(col("w"), col("c"), expr(fuseExpr(l, r)).as("syms")))
       }
     }
-    cur.unpersist()
     merges.result().toDF("iter", "lhs", "rhs", "pair_count", "token")
   }
 

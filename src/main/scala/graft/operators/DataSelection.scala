@@ -130,13 +130,12 @@ object DataSelection {
     * Scale shape: the corpus is TOKENIZED ONCE — the token stream
     * collapses immediately into the per-(doc, bucket) count table
     * (≤ nBuckets rows per doc, orders of magnitude smaller than the
-    * text), which persists (MEMORY_AND_DISK) and feeds BOTH the global
-    * bucket distribution (one tiny second agg over it, `nBuckets` longs
-    * to the driver, re-emitted as a BROADCAST literal table) and the
-    * scoring join. The corpus is never shuffled by anything wider than
-    * its own doc key; the cached doc-bucket table is released to the
-    * session's LRU once the caller's action completes (its lineage can
-    * rebuild it, at one extra tokenize, if evicted).
+    * text), which is pinned and feeds BOTH the global bucket
+    * distribution (one tiny second agg over it, `nBuckets` longs to the
+    * driver, re-emitted as a BROADCAST literal table) and the scoring
+    * join. The corpus is never shuffled by anything wider than its own
+    * doc key; the per-doc weights are detached, so the doc-bucket pin is
+    * released before returning.
     *
     * Portability: bucket ids are integer math; each `(c+1)/(N+B)` is
     * one exact double division, ln is pinned, the per-doc sum runs
@@ -145,7 +144,7 @@ object DataSelection {
     */
   def dsirLogWeights(docs: DataFrame, idCol: String, textCol: String,
       targetFilter: org.apache.spark.sql.Column,
-      nBuckets: Int = 64): DataFrame = {
+      nBuckets: Int = 64): DataFrame = Pins.scoped { s =>
     require(nBuckets > 0, s"nBuckets must be positive, got $nBuckets")
     val spark = docs.sparkSession
     import spark.implicits._
@@ -158,9 +157,8 @@ object DataSelection {
         (col("h") % nBuckets).cast("int").as("b"))
     // ONE tokenize pass: (doc, bucket) counts; __is_target rides the key
     // (per-doc constant, so cardinality is unchanged)
-    val docBucket = base.groupBy(col("doc_id"), col("__is_target"), col("b"))
-      .agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val docBucket = s.pin(base.groupBy(col("doc_id"), col("__is_target"), col("b"))
+      .agg(count(lit(1)).as("c")))
     val counts = docBucket.groupBy(col("b"))
       .agg(sum(col("c")).as("n_src"),
         sum(when(col("__is_target"), col("c")).otherwise(0L)).as("n_tgt"))
@@ -175,14 +173,14 @@ object DataSelection {
       val lnS = math.log((cs + 1.0) / (nSrc + nBuckets))
       (b, lnT - lnS)
     }.toDF("b", "ln_ratio")
-    docBucket
+    Pins.detach(docBucket
       .join(broadcast(ratios), Seq("b"))
       .groupBy(col("doc_id"))
       .agg(sum(col("c")).as("n_tokens"),
         sum((col("c").cast("double") * col("ln_ratio"))
           .cast("decimal(25,10)")).as("w_sum"))
       .select(col("doc_id"), col("n_tokens"),
-        round(col("w_sum").cast("double"), 6).as("log_weight"))
+        round(col("w_sum").cast("double"), 6).as("log_weight")))
   }
 
   /** Deterministic weighted sampling WITHOUT replacement via the
@@ -372,7 +370,7 @@ object DataSelection {
     * trajectory bit-for-bit.
     *
     * Scale shape: the feature table `(doc, bucket, count)` is built
-    * once (one explode + one partial-agg shuffle) and persisted; each
+    * once (one explode + one partial-agg shuffle) and pinned; each
     * epoch is one doc-keyed agg (pred+label), one doc-keyed join, one
     * bucket-keyed partial agg whose map-side combine caps output at
     * `buckets` rows per partition. Driver state = `buckets` scalars —
@@ -384,19 +382,18 @@ object DataSelection {
     */
   def trainHashedLinearProbe(docs: DataFrame, idCol: String,
       textCol: String, buckets: Int = 64, iters: Int = 3,
-      lr: Double = 0.5): DataFrame = {
+      lr: Double = 0.5): DataFrame = Pins.scoped { s =>
     require(buckets >= 2 && buckets <= (1 << 20),
       s"buckets must be in [2, 2^20], got $buckets")
     require(iters >= 1 && iters <= 32, s"iters must be in [1, 32], got $iters")
     require(lr > 0.0 && lr.isFinite, s"lr must be positive, got $lr")
     val spark = docs.sparkSession
     import spark.implicits._
-    val feats = Parallelism.ensureCompute(docs)
+    val feats = s.pin(Parallelism.ensureCompute(docs)
       .select(col(idCol).as("id"),
         explode(TextFunctions.portableTokenHashes(col(textCol))).as("h"))
       .select(col("id"), (col("h") % buckets).cast("long").as("bucket"))
-      .groupBy(col("id"), col("bucket")).agg(count(lit(1)).as("x"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy(col("id"), col("bucket")).agg(count(lit(1)).as("x")))
     // teacher label: the q142 function-weight score is a pure function
     // of the SAME bucket counts (weights depend only on bucket id)
     val teacherW = col("bucket") * 2654435761L % 1997L - 998L
@@ -431,7 +428,6 @@ object DataSelection {
       }
       w.zipWithIndex.foreach { case (wv, b) => trajectory += ((it, b.toLong, wv)) }
     }
-    feats.unpersist()
     trajectory.result().toIndexedSeq.toDF("iter", "bucket", "w")
   }
 

@@ -36,9 +36,8 @@ object Drift {
     * `ca·2³² + cb`: both cumulatives ride one cumsum because the b-count
     * can never carry into the a-lane while each sample holds < 2³¹ rows
     * (documented bound; beyond that, run two passes). The final sup is a
-    * plain max-agg; the prefix-sum cache is released before returning
-    * (the result is collected to one driver row first — recomputing the
-    * lazy plan after unpersist would re-sample range boundaries).
+    * plain max-agg over the detached prefix sum, collected to one driver
+    * row.
     */
   def ksStatistic(a: DataFrame, b: DataFrame, valueCol: String): DataFrame = {
     val spark = a.sparkSession
@@ -64,7 +63,6 @@ object Drift {
         pmod(col("cumpack"), lit(Pack)).as("cumb"))
       .agg(max(abs(col("cuma") * nb - col("cumb") * na)).as("ks_num"))
       .head().getLong(0)
-    cum.unpersist()
     // final division through Spark's round() so the rounding rule matches
     // every other oracle-compared double in the repo
     spark.createDataFrame(
@@ -100,7 +98,7 @@ object Drift {
     * values beyond still compute, the last bits of the double product
     * may differ cross-engine).
     */
-  def wasserstein1(a: DataFrame, b: DataFrame, valueCol: String): DataFrame = {
+  def wasserstein1(a: DataFrame, b: DataFrame, valueCol: String): DataFrame = Pins.scoped { s =>
     val spark = a.sparkSession
     val tagged = a.where(col(valueCol).isNotNull)
       .select(col(valueCol).cast("double").as("v"),
@@ -113,9 +111,8 @@ object Drift {
       .agg(sum(col("ia")).as("ca"), sum(col("ib")).as("cb"))
       .withColumn("packed", col("ca") * Pack + col("cb"))
     val parts = TrainingPrep.derivePrefixSumParts(perV)
-    val ranged = perV.repartitionByRange(parts, col("v"))
-      .withColumn("__pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ranged = s.pin(perV.repartitionByRange(parts, col("v"))
+      .withColumn("__pid", spark_partition_id()))
     // driver state: per-partition packed totals and minimum value —
     // 2·parts scalars, turned into (offset, next-partition-first-value)
     val stats = ranged.groupBy(col("__pid"))
@@ -164,7 +161,6 @@ object Drift {
           .cast(org.apache.spark.sql.types.DecimalType(38, 6))),
         lit(0).cast(org.apache.spark.sql.types.DecimalType(38, 6))).as("s"))
       .head().getDecimal(0)
-    ranged.unpersist()
     spark.createDataFrame(
       java.util.List.of(Row(na, nb, termSum.toString)),
       StructType(Seq(

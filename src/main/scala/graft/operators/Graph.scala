@@ -243,10 +243,9 @@ object Graph {
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
       rounds: Int = 5,
-      checkpointer: IterCheckpoint = LocalCheckpoint): DataFrame = {
+      checkpointer: IterCheckpoint = LocalCheckpoint): DataFrame = Pins.scoped { s =>
     require(rounds >= 1 && rounds <= 30, "rounds must be in [1, 30]")
-    val e = canonicalEdges(edges, srcCol, dstCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val e = s.pin(canonicalEdges(edges, srcCol, dstCol))
     val both = e.select(col("a").as("v"), col("b").as("u"))
       .unionByName(e.select(col("b").as("v"), col("a").as("u")))
     var labels = checkpointer(
@@ -265,7 +264,6 @@ object Graph {
         .agg(min_by(col("label"),
           struct((-col("n")).as("negn"), col("label").as("l"))).as("label")), i)
     }
-    e.unpersist()
     labels
   }
 

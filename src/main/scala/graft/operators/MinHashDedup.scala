@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.functions.TextFunctions
 
@@ -48,14 +47,12 @@ import graft.functions.TextFunctions
   * containment); one bucket cap ([[dropOversized]]) serves this operator
   * and [[SimHashDedup]].
   *
-  * Cache lifecycle: each stage read by more than one consumer is pinned
-  * (persisted and counted) by the one helper [[pin]]; a producer
-  * unpersists its stages as soon as its (tiny, result-sized) pair set is
-  * pinned, so nothing input-sized stays in executor memory after a call
-  * returns and only the pair set stays cached for the caller.
-  * [[duplicateGroups]] adopts an input that is already cached (every
-  * producer's result) instead of persisting it again, and unpersists it
-  * once the groups are built.
+  * Cache lifecycle: one rule, [[Pins]]. Each stage read by more than one
+  * consumer is pinned in the producer's scope and counted ([[pin]]); the
+  * (tiny, result-sized) pair set leaves the scope detached, and the scope
+  * drops every stage on exit. So a call leaves no cache entry behind and
+  * the caller owns none. [[duplicateGroups]] adopts a detached or cached
+  * input instead of caching it again.
   */
 object MinHashDedup {
 
@@ -236,14 +233,14 @@ object MinHashDedup {
     */
   private[graft] val VerifyBroadcastMaxPairs: Long = 1L << 21
 
-  /** Persist and materialize one pipeline stage; returns its row count.
-    * A stage read from more than one place (both sides of a self-join,
-    * both verify probes) must be pinned BEFORE its consumers run: an
-    * unmaterialized cache is recomputed by each concurrent consumer
-    * rather than computed once (measured 101s -> ~10s at sf0.1).
+  /** Pin one pipeline stage in `s` and materialize it; returns its row
+    * count. A stage read from more than one place (both sides of a
+    * self-join, both verify probes) must be materialized BEFORE its
+    * consumers run: an unmaterialized cache is recomputed by each
+    * concurrent consumer rather than computed once (measured 101s ->
+    * ~10s at sf0.1).
     */
-  private def pin(df: DataFrame): Long =
-    df.persist(StorageLevel.MEMORY_AND_DISK).count()
+  private def pin(s: Pins.Scope, df: DataFrame): Long = s.pin(df).count()
 
   /** A verified pair's score over its two shingle sets `(shA, shB)`, and
     * the output column it lands in.
@@ -311,26 +308,21 @@ object MinHashDedup {
   /** Candidate pairs verified by true shingle Jaccard >= threshold.
     *
     * Eagerly materialized: the result (actual near-dup suspects — orders of
-    * magnitude smaller than the corpus) is persisted and counted so the
-    * input-sized shingle cache can be dropped before returning. Callers get
-    * a small cached DataFrame; nothing corpus-sized stays pinned.
+    * magnitude smaller than the corpus) is detached ([[Pins.detach]]) so the
+    * input-sized stage caches are dropped before returning; nothing
+    * corpus-sized stays pinned, and the caller owns no cache entry.
     */
-  def verifiedPairs(df: DataFrame, idCol: String, textCol: String, cfg: Config): DataFrame = {
+  def verifiedPairs(df: DataFrame, idCol: String, textCol: String,
+      cfg: Config): DataFrame = Pins.scoped { s =>
     // Every stage is pinned: the bucket self-join reads the sig pipeline
     // twice, the two verify broadcasts read the candidate subtree twice,
-    // both probe sides read the shingle table. The caches are dropped on
-    // exit; only the result-sized pair set stays.
+    // both probe sides read the shingle table.
     val base = shingleTable(df, idCol, textCol, cfg)
-    pin(base)
+    pin(s, base)
     val sigs = base.select(col("id"), sig(cfg).as("sig"))
-    pin(sigs)
+    pin(s, sigs)
     val cands = candidatePairs(sigs, cfg)
-    val out = verify(base, base, cands, pin(cands), cfg.jaccardThreshold, Jaccard)
-    pin(out) // materialize the tiny pair set so the upstream caches can go
-    cands.unpersist()
-    sigs.unpersist()
-    base.unpersist()
-    out
+    Pins.detach(verify(base, base, cands, pin(s, cands), cfg.jaccardThreshold, Jaccard))
   }
 
   /** The signature store's band-bucket index `(id, band, bucket)` —
@@ -393,10 +385,10 @@ object MinHashDedup {
   def incrementalVerifiedPairs(
       store: DataFrame, batch: DataFrame,
       idCol: String, textCol: String, cfg: Config,
-      storeIndex: Option[DataFrame] = None): DataFrame = {
+      storeIndex: Option[DataFrame] = None): DataFrame = Pins.scoped { s =>
     storeIndex.foreach(requireIndexMatches(_, cfg))
     val newSigs = signatures(batch, idCol, textCol, cfg)
-    pin(newSigs)
+    pin(s, newSigs)
     // the boilerplate guard runs over the FULL bucket table (an oversized
     // bucket is oversized regardless of which side filled it); pairs are
     // formed only where the left endpoint is NEW
@@ -413,13 +405,8 @@ object MinHashDedup {
     val base = store.select(col("id"), col("shingles"))
       .unionByName(newSigs.select(col("id"), col("shingles")))
     // same discipline as verifiedPairs: the verify reads cands from BOTH
-    // probes, so it stays cached until the pair-sized result is
-    // materialized; only that result stays pinned for the caller
-    val out = verify(base, base, cands, pin(cands), cfg.jaccardThreshold, Jaccard)
-    pin(out)
-    cands.unpersist()
-    newSigs.unpersist()
-    out
+    // probes, so it stays cached until the pair-sized result is detached
+    Pins.detach(verify(base, base, cands, pin(s, cands), cfg.jaccardThreshold, Jaccard))
   }
 
   /** EXACT n-gram-Jaccard near-dup pairs via prefix-filtered inverted-index
@@ -454,17 +441,13 @@ object MinHashDedup {
     */
   def jaccardPairs(
       df: DataFrame, idCol: String, textCol: String,
-      threshold: Double, shingleN: Int = 3): DataFrame = {
+      threshold: Double, shingleN: Int = 3): DataFrame = Pins.scoped { s =>
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
     val base = shingleTable(df, idCol, textCol, Config(shingleN = shingleN))
-    pin(base) // materialize before fan-out (see verifiedPairs)
+    pin(s, base) // materialize before fan-out (see verifiedPairs)
     val cands = prefixCandidates(base, threshold)
-    // cands is pinned by prefixCandidates: this count is O(partitions)
-    val out = verify(base, base, cands, cands.count(), threshold, Jaccard)
-    pin(out)
-    cands.unpersist()
-    base.unpersist()
-    out
+    // cands is detached by prefixCandidates: this count is O(partitions)
+    Pins.detach(verify(base, base, cands, cands.count(), threshold, Jaccard))
   }
 
   /** The prefix stage of every exact producer (AllPairs/PPJoin): each
@@ -488,20 +471,22 @@ object MinHashDedup {
   private def prefixLength(t: Double): Column =
     col("len") - ceil(lit(t) * col("len")).cast("int") + 1
 
-  /** [[jaccardPairs]]'s candidate stage, over an already-persisted shingle
+  /** [[jaccardPairs]]'s candidate stage, over an already-pinned shingle
     * table: the AllPairs/PPJoin prefix-filtered inverted-index self-join.
-    * Returned candidate set is persisted+materialized (result-sized);
-    * callers unpersist it when done. Exposed `private[graft]` so the skew
-    * suite can assert candidate-count ceilings on adversarial corpora —
-    * the near-linearity claim is the whole 100 TB argument for this path.
+    * The candidate set (result-sized) is returned detached — both verify
+    * broadcasts read it, and it never recomputes. Exposed `private[graft]`
+    * so the skew suite can assert candidate-count ceilings on adversarial
+    * corpora — the near-linearity claim is the whole 100 TB argument for
+    * this path.
     */
-  private[graft] def prefixCandidates(base: DataFrame, threshold: Double): DataFrame = {
+  private[graft] def prefixCandidates(base: DataFrame,
+      threshold: Double): DataFrame = Pins.scoped { s =>
     // probe prefix (the longer of the two cutoffs) is computed once and
     // pinned — it is prefix-sized, far smaller than the shingle table —
     // and the index prefix is a filter over it (alpha >= t, so shorter).
     val alpha = 2 * threshold / (1 + threshold)
     val Seq((_, ranked)) = prefixes(threshold, base)
-    pin(ranked) // both prefix sides read this — materialize once
+    pin(s, ranked) // both prefix sides read this — materialize once
     val index = ranked.where(col("rk") <= prefixLength(alpha))
       .select(col("s"), col("id").as("idI"), col("len").as("lenI"))
     val probe = ranked.select(col("s"), col("id").as("idP"), col("len").as("lenP"))
@@ -512,9 +497,7 @@ object MinHashDedup {
       .select(least(col("idI"), col("idP")).as("idA"),
         greatest(col("idI"), col("idP")).as("idB"))
       .distinct()
-    pin(cands) // both verify broadcasts read this — materialize once
-    ranked.unpersist()
-    cands
+    Pins.detach(cands)
   }
 
   /** EXACT cross-corpus n-gram-Jaccard pairs: every (a in A, b in B) with
@@ -533,13 +516,13 @@ object MinHashDedup {
     */
   def crossJaccardPairs(
       dfA: DataFrame, dfB: DataFrame, idCol: String, textCol: String,
-      threshold: Double, shingleN: Int = 3): DataFrame = {
+      threshold: Double, shingleN: Int = 3): DataFrame = Pins.scoped { s =>
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
     val cfg = Config(shingleN = shingleN)
     val baseA = shingleTable(dfA, idCol, textCol, cfg)
-    pin(baseA)
+    pin(s, baseA)
     val baseB = shingleTable(dfB, idCol, textCol, cfg)
-    pin(baseB)
+    pin(s, baseB)
     // shared global order: document frequency over BOTH corpora
     val Seq((_, prefixA), (_, prefixB)) = prefixes(threshold, baseA, baseB)
     val cands = prefixA.select(col("s"), col("id").as("idA"), col("len").as("lenA"))
@@ -548,12 +531,7 @@ object MinHashDedup {
         col("lenB").cast("double") >= lit(threshold) * col("lenA"))
       .select("idA", "idB")
       .distinct()
-    val out = verify(baseA, baseB, cands, pin(cands), threshold, Jaccard)
-    pin(out)
-    cands.unpersist()
-    baseA.unpersist()
-    baseB.unpersist()
-    out
+    Pins.detach(verify(baseA, baseB, cands, pin(s, cands), threshold, Jaccard))
   }
 
   /** EXACT n-gram CONTAINMENT pairs: (idA, idB, containment) where
@@ -578,10 +556,10 @@ object MinHashDedup {
     */
   def containmentPairs(
       df: DataFrame, idCol: String, textCol: String,
-      threshold: Double, shingleN: Int = 3): DataFrame = {
+      threshold: Double, shingleN: Int = 3): DataFrame = Pins.scoped { s =>
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
     val base = shingleTable(df, idCol, textCol, Config(shingleN = shingleN))
-    pin(base) // materialize before fan-out (see verifiedPairs)
+    pin(s, base) // materialize before fan-out (see verifiedPairs)
     // A probes with its prefix; B is indexed in full
     val Seq((exploded, prefix)) = prefixes(threshold, base)
     val cands = prefix.select(col("s"), col("id").as("idA"))
@@ -590,11 +568,7 @@ object MinHashDedup {
       .select("idA", "idB")
       .distinct()
     // both verify probes read cands — pinned once
-    val out = verify(base, base, cands, pin(cands), threshold, Containment)
-    pin(out)
-    cands.unpersist()
-    base.unpersist()
-    out
+    Pins.detach(verify(base, base, cands, pin(s, cands), threshold, Containment))
   }
 
   /** Deterministic (a, b) permutation coefficients for `k` hashes from
@@ -620,27 +594,14 @@ object MinHashDedup {
     * edge sets at the cost of one join round per component diameter.
     */
   def duplicateGroups(pairs: DataFrame, maxIterations: Int = 15,
-      driverThreshold: Long = 5000000L): DataFrame = {
+      driverThreshold: Long = 5000000L): DataFrame = Pins.scoped { s =>
     // full count (not limit+count): one clean materialization of the
-    // persisted pair set — incremental-limit execution would re-run the
-    // expensive upstream pipeline per scale-up attempt.
-    // a producer's result is already cached: adopt it, persist only a
-    // lazy input (caching the same plan twice gives one entry two owners)
-    val p = if (pairs.storageLevel == StorageLevel.NONE) pairs.persist(StorageLevel.MEMORY_AND_DISK)
-      else pairs
-    val n = p.count()
-    if (n <= driverThreshold) {
-      val out = duplicateGroupsLocal(p)
-      p.unpersist() // edges live on the driver now; drop the cluster copy
-      out
-    } else {
-      // duplicateGroupsDistributed re-persists its own (deduped, undirected)
-      // edge table up front, so the raw pair cache can be dropped as soon as
-      // that first materialization exists — not leaked for the session.
-      val out = duplicateGroupsDistributed(p, maxIterations)
-      p.unpersist()
-      out
-    }
+    // pair set — incremental-limit execution would re-run the expensive
+    // upstream pipeline per scale-up attempt. A producer's detached
+    // result is adopted, not cached again.
+    val p = s.pin(pairs)
+    if (p.count() <= driverThreshold) duplicateGroupsLocal(p)
+    else duplicateGroupsDistributed(p, maxIterations)
   }
 
   /** Driver union-find over a collected edge list (small verified-pair
@@ -686,21 +647,22 @@ object MinHashDedup {
   }
 
   /** Distributed min-label propagation (bounded iterations, early stop).
-    * The returned label table is result-sized (one row per doc appearing in
-    * a dup pair) and stays cached — callers may `unpersist()` it when done;
-    * the input-sized edge cache is dropped before returning. A component
-    * whose diameter needs more than `maxIterations` rounds fails the call:
-    * labels cut off mid-propagation are not a fixpoint, and callers that
-    * group by `rep` would silently split the component.
+    * Each round's label table is result-sized (one row per doc appearing
+    * in a dup pair) and detached, so the plan never stacks and the
+    * returned table holds no cache entry; the input-sized edge cache is
+    * dropped before returning. A component whose diameter needs more than
+    * `maxIterations` rounds fails the call: labels cut off
+    * mid-propagation are not a fixpoint, and callers that group by `rep`
+    * would silently split the component.
     */
-  def duplicateGroupsDistributed(pairs: DataFrame, maxIterations: Int = 15): DataFrame = {
+  def duplicateGroupsDistributed(pairs: DataFrame,
+      maxIterations: Int = 15): DataFrame = Pins.scoped { s =>
     // undirected edge list, both directions
     val fwd = pairs.select(col("idA").as("src"), col("idB").as("dst"))
-    val edges = fwd.union(pairs.select(col("idB").as("src"), col("idA").as("dst")))
-      .distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = edges.groupBy(col("src").as("id"))
-      .agg(least(min(col("dst")), first(col("src"))).as("rep"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val edges = s.pin(fwd.union(pairs.select(col("idB").as("src"), col("idA").as("dst")))
+      .distinct())
+    var labels = Pins.detach(edges.groupBy(col("src").as("id"))
+      .agg(least(min(col("dst")), first(col("src"))).as("rep")))
     var iter = 0
     var converged = false
     while (iter < maxIterations && !converged) {
@@ -709,23 +671,17 @@ object MinHashDedup {
         .join(labels.withColumnRenamed("id", "dst"), "dst")
         .groupBy(col("src").as("id"))
         .agg(min(col("rep")).as("nrep"))
-      val next = labels.join(viaNeighbor, Seq("id"), "left")
-        .select(col("id"), least(col("rep"), coalesce(col("nrep"), col("rep"))).as("rep"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val next = Pins.detach(labels.join(viaNeighbor, Seq("id"), "left")
+        .select(col("id"), least(col("rep"), coalesce(col("nrep"), col("rep"))).as("rep")))
       val changed = next.join(labels.withColumnRenamed("rep", "prev"), "id")
         .where(col("rep") =!= col("prev")).limit(1).count()
-      labels.unpersist()
       labels = next
       converged = changed == 0
       iter += 1
     }
-    edges.unpersist()
-    if (!converged) {
-      labels.unpersist()
-      throw new IllegalStateException(
-        s"duplicate-group label propagation did not converge within " +
-          s"maxIterations=$maxIterations rounds; raise maxIterations")
-    }
+    if (!converged) throw new IllegalStateException(
+      s"duplicate-group label propagation did not converge within " +
+        s"maxIterations=$maxIterations rounds; raise maxIterations")
     labels
   }
 

@@ -276,12 +276,10 @@ object Preference {
     val comps = Parallelism.ensureCompute(comparisons).localCheckpoint()
     val um = comps.groupBy(col("user"), col("winner"), col("loser"))
       .agg(count(lit(1)).as("n")).localCheckpoint()
-    val ps = TrainingPrep.globalPrefixSum(
+    val ranked = TrainingPrep.globalPrefixSum(
       um.select(col("user")).distinct().withColumn("__one", lit(1L)),
       "user", "__one", "__cum")
-    val ranked = ps.select(col("user"), (col("__cum") - 1L).as("rn"))
-      .localCheckpoint()
-    ps.unpersist()
+      .select(col("user"), (col("__cum") - 1L).as("rn"))
     val nU = ranked.count()
     require(nU > 0, "empty comparison log")
     val draws = spark.range(nBoot).select(col("id").as("b"))

@@ -140,13 +140,12 @@ object ProductQuantizer {
     */
   def train(corpus: DataFrame, idCol: String, vecCol: String,
       m: Int, ksub: Int, dim: Int, iters: Int = 2,
-      saltPrefix: String = "pq"): Codebooks = {
+      saltPrefix: String = "pq"): Codebooks = Pins.scoped { scope =>
     require(m > 0 && dim % m == 0,
       s"dim=$dim must split evenly into m=$m subspaces")
     require(ksub > 0 && iters >= 0, s"ksub=$ksub, iters=$iters")
     val dsub = dim / m
-    val v = prepared(corpus, idCol, vecCol, dim)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val v = scope.pin(prepared(corpus, idCol, vecCol, dim))
     // init: per subspace, the ksub portably-smallest sub-vectors —
     // m TakeOrderedAndProject jobs of ksub rows each, never a full sort
     val books: Codebooks = Array.tabulate(m) { s =>
@@ -200,7 +199,6 @@ object ProductQuantizer {
       }
       cur = next
     }
-    v.unpersist()
     cur
   }
 
@@ -687,10 +685,9 @@ object ProductQuantizer {
   def trainRotation(corpus: DataFrame, idCol: String, vecCol: String,
       m: Int, ksub: Int, dim: Int, alternations: Int = 1,
       lloydIters: Int = 2, saltPrefix: String = "pqo")
-      : (Array[Array[Double]], Codebooks) = {
+      : (Array[Array[Double]], Codebooks) = Pins.scoped { scope =>
     require(alternations >= 1, s"alternations=$alternations must be >= 1")
-    val v = prepared(corpus, idCol, vecCol, dim)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val v = scope.pin(prepared(corpus, idCol, vecCol, dim))
     var r = permutationMatrix(
       balancedSubspaces(dimVariances(v, "__id", "__vec", dim), m))
     for (t <- 0 until alternations) {
@@ -703,7 +700,6 @@ object ProductQuantizer {
     val rotF = v.select(col("__id"), rotated(col("__vec"), r).as("__rvec"))
     val books = train(rotF, "__id", "__rvec", m, ksub, dim, lloydIters,
       saltPrefix)
-    v.unpersist()
     (r, books)
   }
 
@@ -807,13 +803,12 @@ object ProductQuantizer {
   def trainBlockRotation(corpus: DataFrame, idCol: String, vecCol: String,
       m: Int, ksub: Int, dim: Int, nBlocks: Int, alternations: Int = 1,
       lloydIters: Int = 2, saltPrefix: String = "pqk")
-      : (Array[Array[Array[Double]]], Codebooks) = {
+      : (Array[Array[Array[Double]]], Codebooks) = Pins.scoped { scope =>
     require(alternations >= 1, s"alternations=$alternations must be >= 1")
     require(nBlocks >= 1 && dim % nBlocks == 0,
       s"nBlocks=$nBlocks must divide dim=$dim")
     val bs = dim / nBlocks
-    val v = prepared(corpus, idCol, vecCol, dim)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val v = scope.pin(prepared(corpus, idCol, vecCol, dim))
     var blocks = Array.fill(nBlocks)(
       Array.tabulate(bs, bs)((i, j) => if (i == j) 1.0 else 0.0))
     for (t <- 0 until alternations) {
@@ -839,7 +834,6 @@ object ProductQuantizer {
       .localCheckpoint()
     val books = train(rotF, "__id", "__rvec", m, ksub, dim, lloydIters,
       saltPrefix)
-    v.unpersist()
     (blocks, books)
   }
 

@@ -146,36 +146,34 @@ object Retrieval {
     * map-side combine, never corpus-sized); the corpus TOTALS derive
     * from those grouped tables (`N_u = Σ c`, `N_b = Σ c_xy` over the
     * un-banded bigram counts), not from extra corpus passes — the
-    * grouped tables persist (vocab-sized, MEMORY_AND_DISK) and one
-    * driver action reads both sums. The `minCount` band prunes the
+    * grouped tables are pinned (vocab-sized) and one driver action reads
+    * both sums; the scored result is detached, so the pins are released
+    * before returning. The `minCount` band prunes the
     * bigram tail AFTER the total but BEFORE the unigram joins, so the
     * join probes carry only the survivors. Overflow contract: exact while
     * `c_xy · N_u² < 2⁶³` — beyond ~10¹⁸ total tokens, shift the products
     * into log space (`ln c_xy + 2 ln N_u − …`) at a last-ulp cost.
     */
   def pmiCollocations(docs: DataFrame, textCol: String,
-      minCount: Long): DataFrame = {
+      minCount: Long): DataFrame = Pins.scoped { s =>
     require(minCount >= 1, s"minCount must be >= 1, got $minCount")
     val base = Parallelism.ensureCompute(docs)
     val uni = base.select(explode(split(col(textCol), " ")).as("t"))
-    val uniCounts = uni.groupBy(col("t")).agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val uniCounts = s.pin(uni.groupBy(col("t")).agg(count(lit(1)).as("c")))
     val bi = base.select(explode(
       graft.functions.TextFunctions.wordNGrams(col(textCol), 2)).as("bg"))
-    val biAll = bi.groupBy(col("bg")).agg(count(lit(1)).as("c_xy"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val biAll = s.pin(bi.groupBy(col("bg")).agg(count(lit(1)).as("c_xy")))
     val Array(totals) = uniCounts.agg(coalesce(sum(col("c")), lit(0L)))
       .crossJoin(biAll.agg(coalesce(sum(col("c_xy")), lit(0L)))).collect()
     val (nU, nB) = (totals.getLong(0), totals.getLong(1))
-    val biCounts = biAll.where(col("c_xy") >= minCount)
-    biCounts
+    Pins.detach(biAll.where(col("c_xy") >= minCount)
       .withColumn("term_a", split(col("bg"), " ").getItem(0))
       .withColumn("term_b", split(col("bg"), " ").getItem(1))
       .join(uniCounts.select(col("t").as("term_a"), col("c").as("c_a")), Seq("term_a"))
       .join(uniCounts.select(col("t").as("term_b"), col("c").as("c_b")), Seq("term_b"))
       .select(col("term_a"), col("term_b"), col("c_xy"),
         round(log((col("c_xy") * lit(nU) * lit(nU)).cast("double") /
-          (lit(nB) * col("c_a") * col("c_b")).cast("double")), 6).as("pmi"))
+          (lit(nB) * col("c_a") * col("c_b")).cast("double")), 6).as("pmi")))
   }
 
   /** Dense RERANK of a lexical candidate list — the standard two-stage

@@ -58,17 +58,10 @@ object Significance {
     * replay it as a plain `row_number` — same values by uniqueness of
     * the order key.
     */
-  private def rankByKey(df: DataFrame): DataFrame = {
-    val ps = TrainingPrep.globalPrefixSum(
+  private def rankByKey(df: DataFrame): DataFrame =
+    TrainingPrep.globalPrefixSum(
       df.withColumn("__one", lit(1L)), "id", "__one", "__cum")
-    // pin the projection, then release the prefix-sum cache —
-    // globalPrefixSum persists its output and has no unpersist path,
-    // and a bench session runs hundreds of queries in one context
-    val out = ps.select(col("id"), col("d"), (col("__cum") - 1L).as("rn"))
-      .localCheckpoint()
-    ps.unpersist()
-    out
-  }
+      .select(col("id"), col("d"), (col("__cum") - 1L).as("rn"))
 
   /** Percentile-bootstrap report for the mean per-item delta. `items`
     * must carry a UNIQUE `idCol` (the resample rank order) and an

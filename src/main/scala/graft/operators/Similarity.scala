@@ -315,20 +315,17 @@ object Similarity {
     */
   def trainCentroids(
       corpus: DataFrame, idCol: String, vecCol: String,
-      k: Int, dim: Int, maxIter: Int = 3, seed: Long = 42L): Array[Array[Float]] = {
-    val c = Parallelism.ensureCompute(corpus)
+      k: Int, dim: Int, maxIter: Int = 3,
+      seed: Long = 42L): Array[Array[Float]] = Pins.scoped { s =>
+    val c = s.pin(Parallelism.ensureCompute(corpus)
       .select(col(vecCol).as("vec"), xxhash64(col(idCol), lit(seed)).as("__h"))
-      .where(size(col("vec")) === dim)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .where(size(col("vec")) === dim))
     var cents = c.orderBy(col("__h")).limit(k).collect()
       .map(_.getSeq[Float](0).toArray)
-    if (cents.isEmpty) {
-      c.unpersist()
-      throw new IllegalArgumentException(
-        s"trainCentroids: no vectors of dim=$dim in column '$vecCol' — " +
-          "the corpus embeddings have a different length (pass the right dim, " +
-          "or let ivfTopKJoin infer it)")
-    }
+    if (cents.isEmpty) throw new IllegalArgumentException(
+      s"trainCentroids: no vectors of dim=$dim in column '$vecCol' — " +
+        "the corpus embeddings have a different length (pass the right dim, " +
+        "or let ivfTopKJoin infer it)")
     for (_ <- 0 until maxIter) {
       val means = c
         .withColumn("list", assign(col("vec"), cents))
@@ -341,7 +338,6 @@ object Similarity {
       }
       cents = next
     }
-    c.unpersist()
     cents
   }
 
@@ -804,7 +800,7 @@ object Similarity {
     * (chosen centers ride the plan as `k × dim` float literals — the
     * q71 frozen-centroid discipline) + one TakeOrdered(1) argmin. No
     * shuffle of the vector table, ever; driver state = the chosen
-    * centers. k rounds = k corpus scans off a persisted projection.
+    * centers. k rounds = k corpus scans off a pinned projection.
     *
     * Returns `(rank, vec_id, max_sim)` — `max_sim` NULL for the seed
     * row, else the similarity that made the pick (descending novelty).
@@ -814,10 +810,9 @@ object Similarity {
     require(k >= 1 && k <= 64, s"k must be in [1, 64], got $k")
     val spark = vectors.sparkSession
     import spark.implicits._
-    val vecs = Parallelism.ensureCompute(vectors)
-      .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Pins.scoped { s =>
+      val vecs = s.pin(Parallelism.ensureCompute(vectors)
+        .select(col(idCol).cast("long").as("id"), col(vecCol).as("v")))
       val seed = vecs.orderBy(col("id").asc).limit(1).collect()
       require(seed.nonEmpty, "kCenters needs a non-empty vector table")
       var chosen = Vector((seed(0).getLong(0), seed(0).getSeq[Float](1).toArray))
@@ -839,6 +834,6 @@ object Similarity {
         }
       }
       out.result().toDF("rank", "vec_id", "max_sim")
-    } finally vecs.unpersist()
+    }
   }
 }

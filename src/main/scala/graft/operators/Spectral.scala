@@ -38,11 +38,10 @@ object Spectral {
     require(iters >= 1 && iters <= 32, s"iters must be in [1, 32], got $iters")
     val spark = vectors.sparkSession
     import spark.implicits._
-    val vecs = Parallelism.ensureCompute(vectors)
-      .select(col(vecCol).as("vec"))
-      .where(size(col("vec")) === dim)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Pins.scoped { s =>
+      val vecs = s.pin(Parallelism.ensureCompute(vectors)
+        .select(col(vecCol).as("vec"))
+        .where(size(col("vec")) === dim))
       var v = Array.tabulate(dim)(j => if (j == 0) 1.0 else 0.0)
       var lambda = 0.0
       val round6 = (x: Double) =>
@@ -69,6 +68,6 @@ object Spectral {
       v.toIndexedSeq.zipWithIndex
         .map { case (x, j) => (j + 1L, x, lambda) }
         .toDF("j", "v", "lambda")
-    } finally vecs.unpersist()
+    }
   }
 }

@@ -84,13 +84,13 @@ object TrainingPrep {
     * composites) or fold over the distinct-value table with the
     * midrank block identity (q181/q183).
     *
-    * Cache contract: the returned DataFrame is persisted and MATERIALIZED,
-    * and the caller owns it — unpersist when done. The persist is
-    * load-bearing, not an optimization: the offsets were computed against
-    * THIS execution's range-partition boundaries, and a recompute would
-    * re-sample them (new RDD ids seed the range sampler), silently
-    * misaligning offset and partition. The input-sized `ranged` cache is
-    * dropped before returning.
+    * The result is DETACHED ([[Pins.detach]]): materialized once, holding
+    * no cache entry, and never recomputed. That is load-bearing, not an
+    * optimization: the offsets were computed against THIS execution's
+    * range-partition boundaries, and a recompute would re-sample them
+    * (new RDD ids seed the range sampler), silently misaligning offset
+    * and partition. The input-sized `ranged` pin is dropped before
+    * returning.
     *
     * `numParts <= 0` (the default) derives the range-partition count from
     * the input's PLAN ([[derivePrefixSumParts]]: declared repartition or
@@ -101,12 +101,11 @@ object TrainingPrep {
     */
   def globalPrefixSum(
       df: DataFrame, orderCol: String, valueCol: String, outCol: String,
-      numParts: Int = -1): DataFrame = {
+      numParts: Int = -1): DataFrame = Pins.scoped { s =>
     val spark = df.sparkSession
     val parts = derivePrefixSumParts(df, numParts)
-    val ranged = df.repartitionByRange(parts, col(orderCol))
-      .withColumn("__pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ranged = s.pin(df.repartitionByRange(parts, col(orderCol))
+      .withColumn("__pid", spark_partition_id()))
     val w = Window.partitionBy(col("__pid")).orderBy(col(orderCol))
     val local = ranged.withColumn("__lc", sum(col(valueCol)).over(w))
     val totals = ranged.groupBy(col("__pid"))
@@ -125,20 +124,11 @@ object TrainingPrep {
           org.apache.spark.sql.types.IntegerType),
         org.apache.spark.sql.types.StructField("__off",
           org.apache.spark.sql.types.LongType))))
-    val out = local.join(broadcast(offDf), Seq("__pid"))
+    Pins.detach(local.join(broadcast(offDf), Seq("__pid"))
       .withColumn(outCol, col("__lc") + col("__off"))
-      .drop("__pid", "__lc", "__off")
-    out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).count()
-    ranged.unpersist()
-    out
+      .drop("__pid", "__lc", "__off"))
   }
 
-  /** Concat-and-cut sequence packing: documents in `idCol` order are laid
-    * end-to-end on a token tape and the tape is cut every `budget` tokens;
-    * a document belongs to the bin where it STARTS (floor(start/budget)).
-    * This is exactly how pretraining packs sequences — deterministic, no
-    * bin search, one distributed prefix sum. Returns (id, n_tokens, bin).
-    */
   /** Range-partition count [[globalPrefixSum]] will use for `df` when the
     * caller leaves `numParts` unset — derived at PLANNING time only
     * (`df.rdd.getNumPartitions` would finalize an adaptive plan and
@@ -172,22 +162,24 @@ object TrainingPrep {
       math.max(32, derived)
     }
 
+  /** Concat-and-cut sequence packing: documents in `idCol` order are laid
+    * end-to-end on a token tape and the tape is cut every `budget` tokens;
+    * a document belongs to the bin where it STARTS (floor(start/budget)).
+    * This is exactly how pretraining packs sequences — deterministic, no
+    * bin search, one distributed prefix sum. Returns (id, n_tokens, bin), a
+    * projection over the detached prefix sum.
+    */
   def packBins(
       df: DataFrame, idCol: String, textCol: String, budget: Int,
       numParts: Int = -1): DataFrame = {
     require(budget > 0, "budget must be positive")
     val counted = Parallelism.ensureCompute(df)
       .select(col(idCol).as("id"), TextFunctions.tokenCount(col(textCol)).cast("long").as("n_tokens"))
-    val cum = globalPrefixSum(counted, "id", "n_tokens", "__cum", numParts)
     // start offset = cum - n_tokens; values ≪ 2^53, double floor is exact
-    val out = cum
+    globalPrefixSum(counted, "id", "n_tokens", "__cum", numParts)
       .withColumn("bin",
         floor((col("__cum") - col("n_tokens")) / lit(budget.toDouble)).cast("bigint"))
       .select(col("id"), col("n_tokens"), col("bin"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count() // materialize while the prefix-sum cache is still alive
-    cum.unpersist()
-    out // caller-owned (single retained cache; unpersist when done)
   }
 
   /** Deterministic shuffle + shard: order key = md5 of the id (a fixed
@@ -213,8 +205,8 @@ object TrainingPrep {
     * The row count is the one driver-side scalar.
     *
     * `orderCol` must be globally unique (build a struct of (value, unique
-    * key) for tie-broken value buckets). Output adds `ntile`; cache
-    * contract as [[globalPrefixSum]]: caller owns the returned frame.
+    * key) for tie-broken value buckets). Output adds `ntile`, a
+    * projection over [[globalPrefixSum]]'s detached rank.
     */
   def distributedNtile(df: DataFrame, orderCol: String, k: Int): DataFrame = {
     require(k > 0, "k must be positive")
@@ -230,11 +222,7 @@ object TrainingPrep {
       else when(col("__rank") <= m * (q + 1),
           expr(s"(__rank + ${q}L) div ${q + 1}L"))
         .otherwise(expr(s"${m}L + (__rank - ${m * (q + 1)}L + ${q - 1}L) div ${q}L"))
-    val out = ranked.withColumn("ntile", bucket).drop("__one", "__rank")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count() // materialize while the rank cache is alive (same as packBins)
-    ranked.unpersist()
-    out // caller-owned (single retained cache; unpersist when done)
+    ranked.withColumn("ntile", bucket).drop("__one", "__rank")
   }
 
   /** Stratified sampling with EXACT per-group quotas: each group keeps its

@@ -214,19 +214,19 @@ object UnigramLm {
     */
   def emRound(docs: DataFrame, textCol: String,
       maxPieceLen: Int = 4, topMulti: Int = 100,
-      maxWordLen: Int = 20): DataFrame = {
-    val (vocab, seg) = trainAndSegment(docs, textCol, maxPieceLen,
+      maxWordLen: Int = 20): DataFrame = Pins.scoped { s =>
+    val (vocab, seg) = trainAndSegment(s, docs, textCol, maxPieceLen,
       topMulti, maxWordLen)
     val cnt = seg.groupBy(col("piece"))
       .agg(sum(col("freq")).as("viterbi_cnt"))
     val tot1 = cnt.agg(sum(col("viterbi_cnt")).as("tot1"))
-    vocab.join(cnt, Seq("piece"), "left_outer")
+    Pins.detach(vocab.join(cnt, Seq("piece"), "left_outer")
       .crossJoin(broadcast(tot1))
       .select(col("piece"), col("seed_freq"), col("icost").as("cost0"),
         coalesce(col("viterbi_cnt"), lit(0L)).as("viterbi_cnt"),
         when(col("viterbi_cnt").isNotNull,
           round(log(col("viterbi_cnt").cast("double"))
-            - log(col("tot1").cast("double")), 6)).as("logp1"))
+            - log(col("tot1").cast("double")), 6)).as("logp1")))
   }
 
   // ------------------------------------------------------------ soft EM
@@ -321,34 +321,24 @@ object UnigramLm {
     */
   def softEmRound(docs: DataFrame, textCol: String,
       maxPieceLen: Int = 4, topMulti: Int = 100,
-      maxWordLen: Int = 20): DataFrame = {
-    val (vocab, cnt) = trainSoftCounts(docs, textCol, maxPieceLen,
-      topMulti, maxWordLen)
+      maxWordLen: Int = 20): DataFrame = Pins.scoped { s =>
+    require(maxPieceLen >= 1 && maxPieceLen <= 63,
+      s"maxPieceLen must be in [1, 63], got $maxPieceLen")
+    require(maxWordLen >= 1 && maxWordLen <= 63,
+      s"maxWordLen must be in [1, 63], got $maxWordLen")
+    // the seed vocab and the lattice both read the candidate table
+    val cand = s.pin(candidates(words(docs, textCol, maxWordLen), maxPieceLen))
+    val vocab = seedVocabFrom(cand, topMulti)
+    val cnt = softCountsFrom(softLattice(edgeArrays(cand, vocab)))
     val tot = cnt.agg(sum(col("scnt")).as("stot"))
-    vocab.join(cnt, Seq("piece"), "left_outer")
+    Pins.detach(vocab.join(cnt, Seq("piece"), "left_outer")
       .crossJoin(broadcast(tot))
       .select(col("piece"), col("seed_freq"), col("icost").as("cost0"),
         round(coalesce(col("scnt"), lit(0).cast("decimal(28,6)"))
           .cast("double"), 6).as("soft_cnt"),
         when(col("scnt").isNotNull && col("scnt") > 0,
           round(log(col("scnt").cast("double"))
-            - log(col("stot").cast("double")), 6)).as("logp1"))
-  }
-
-  private def trainSoftCounts(docs: DataFrame, textCol: String,
-      maxPieceLen: Int, topMulti: Int, maxWordLen: Int)
-      : (DataFrame, DataFrame) = {
-    require(maxPieceLen >= 1 && maxPieceLen <= 63,
-      s"maxPieceLen must be in [1, 63], got $maxPieceLen")
-    require(maxWordLen >= 1 && maxWordLen <= 63,
-      s"maxWordLen must be in [1, 63], got $maxWordLen")
-    val cand = candidates(words(docs, textCol, maxWordLen), maxPieceLen)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // cand stays persisted: the returned vocab still reads it lazily
-    // (the trainAndSegment discipline — session-scoped cache, bounded)
-    val vocab = seedVocabFrom(cand, topMulti)
-    val lat = softLattice(edgeArrays(cand, vocab))
-    (vocab, softCountsFrom(lat))
+            - log(col("stot").cast("double")), 6)).as("logp1")))
   }
 
   /** CHAINED soft-EM rounds — the forward-backward analog of
@@ -375,61 +365,52 @@ object UnigramLm {
 
   /** The shared chained-soft-E-step loop behind [[softEmTrajectory]]
     * and [[trainVocabulary]] — ONE candidate scan, per round: lattice,
-    * frequency-weighted corpus log-likelihood, expected counts (cached
+    * frequency-weighted corpus log-likelihood, expected counts (pinned
     * for the round — the M-step callback and the size readout both
     * read them), the caller's `keep` M-step producing the kept
-    * `(piece, cnt)` table, cost re-estimation
-    * `round((ln Σcnt − ln cnt)·1e6)` from the kept counts. The
-    * persist/unpersist rotation and the exactness chain live HERE so
-    * the two oracle-matched trajectories cannot drift. Returns one
-    * `(round, n_kept, corpus_ll)` tuple per round; all caches are
+    * `(piece, cnt)` table (pinned for the call, model-sized), cost
+    * re-estimation `round((ln Σcnt − ln cnt)·1e6)` from the kept
+    * counts. The pin scopes and the exactness chain live HERE so the
+    * two oracle-matched trajectories cannot drift. Returns one
+    * `(round, n_kept, corpus_ll)` tuple per round; all pins are
     * released on ANY exit, including a mid-loop refusal.
     */
   private def softRounds(docs: DataFrame, textCol: String, rounds: Int,
       maxPieceLen: Int, topMulti: Int, maxWordLen: Int)
       (keep: (DataFrame, DataFrame) => DataFrame)
-      : Seq[(Long, Long, Double)] = {
+      : Seq[(Long, Long, Double)] = Pins.scoped { s =>
     require(rounds >= 1 && rounds <= 8, s"rounds must be in [1, 8], got $rounds")
     require(maxPieceLen >= 1 && maxPieceLen <= 63,
       s"maxPieceLen must be in [1, 63], got $maxPieceLen")
     require(maxWordLen >= 1 && maxWordLen <= 63,
       s"maxWordLen must be in [1, 63], got $maxWordLen")
-    val cand = candidates(words(docs, textCol, maxWordLen), maxPieceLen)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var prevKept: DataFrame = null
-    try {
-      var vocab = seedVocabFrom(cand, topMulti)
-        .select(col("piece"), col("icost"))
-      val out = Seq.newBuilder[(Long, Long, Double)]
-      for (t <- 1 to rounds) {
-        val lat = softLattice(edgeArrays(cand, vocab))
-        // per-word ln Z rounded to 6 dp, frequency-weighted, decimal-summed
-        val llRow = lat.agg(round(sum(
-          round(log(col("z")), 6).cast("decimal(18,6)") * col("freq"))
-            .cast("double"), 6)).collect()(0)
-        require(!llRow.isNullAt(0),
-          "soft EM: no segmentable words — the corpus has no " +
-            s"whitespace tokens within maxWordLen=$maxWordLen")
-        val sc = softCountsFrom(lat)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val kept = keep(vocab, sc)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        out += ((t.toLong, kept.count(), llRow.getDouble(0)))
-        sc.unpersist() // kept is materialized — the posterior agg is done
-        if (prevKept != null) prevKept.unpersist()
-        prevKept = kept
-        val tot = kept.agg(sum(col("cnt").cast("decimal(28,6)")).as("tot"))
-        vocab = kept.crossJoin(broadcast(tot))
-          .select(col("piece"),
-            round((log(col("tot").cast("double"))
-              - log(col("cnt").cast("double"))) * lit(1000000.0), 0)
-              .cast("long").as("icost"))
+    val cand = s.pin(candidates(words(docs, textCol, maxWordLen), maxPieceLen))
+    var vocab = seedVocabFrom(cand, topMulti)
+      .select(col("piece"), col("icost"))
+    val out = Seq.newBuilder[(Long, Long, Double)]
+    for (t <- 1 to rounds) {
+      val lat = softLattice(edgeArrays(cand, vocab))
+      // per-word ln Z rounded to 6 dp, frequency-weighted, decimal-summed
+      val llRow = lat.agg(round(sum(
+        round(log(col("z")), 6).cast("decimal(18,6)") * col("freq"))
+          .cast("double"), 6)).collect()(0)
+      require(!llRow.isNullAt(0),
+        "soft EM: no segmentable words — the corpus has no " +
+          s"whitespace tokens within maxWordLen=$maxWordLen")
+      // the round's expected counts go once kept is materialized
+      val kept = Pins.scoped { r =>
+        val k = s.pin(keep(vocab, r.pin(softCountsFrom(lat))))
+        out += ((t.toLong, k.count(), llRow.getDouble(0)))
+        k
       }
-      out.result()
-    } finally {
-      if (prevKept != null) prevKept.unpersist()
-      cand.unpersist()
+      val tot = kept.agg(sum(col("cnt").cast("decimal(28,6)")).as("tot"))
+      vocab = kept.crossJoin(broadcast(tot))
+        .select(col("piece"),
+          round((log(col("tot").cast("double"))
+            - log(col("cnt").cast("double"))) * lit(1000000.0), 0)
+            .cast("long").as("icost"))
     }
+    out.result()
   }
 
   /** The PRUNE half of Kudo 2018's training loop (§3.2 step 3): each
@@ -550,7 +531,7 @@ object UnigramLm {
   }
 
   /** Hard-vs-soft EM on EQUAL footing and ONE candidate scan: both
-    * E-steps run from the same seed over the same persisted candidate
+    * E-steps run from the same seed over the same pinned candidate
     * table (a naive composition of [[emRound]] + [[softEmRound]] + two
     * [[segment]] calls re-derives the corpus's most expensive explode
     * four times), both re-estimated models then Viterbi-segment the
@@ -562,13 +543,12 @@ object UnigramLm {
     */
   def hardVsSoftReport(docs: DataFrame, textCol: String,
       maxPieceLen: Int = 4, topMulti: Int = 100,
-      maxWordLen: Int = 20): DataFrame = {
+      maxWordLen: Int = 20): DataFrame = Pins.scoped { s =>
     require(maxPieceLen >= 1 && maxPieceLen <= 63,
       s"maxPieceLen must be in [1, 63], got $maxPieceLen")
     require(maxWordLen >= 1 && maxWordLen <= 63,
       s"maxWordLen must be in [1, 63], got $maxWordLen")
-    val cand = candidates(words(docs, textCol, maxWordLen), maxPieceLen)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cand = s.pin(candidates(words(docs, textCol, maxWordLen), maxPieceLen))
     val vocab = seedVocabFrom(cand, topMulti)
     def reEstimated(cnt: DataFrame): DataFrame = {
       val tot = cnt.agg(sum(col("cnt")).as("tot"))
@@ -597,18 +577,19 @@ object UnigramLm {
           round(col("char_mass").cast("double")
             / col("piece_mass").cast("double"), 6).as("chars_per_piece"))
     }
-    metrics(hv, "hard").unionByName(metrics(sv, "soft"))
+    Pins.detach(metrics(hv, "hard").unionByName(metrics(sv, "soft")))
   }
 
   /** Train-and-apply in ONE candidate scan: the words table and the
-    * substring explosion are built once and persisted, the seed vocab
-    * and the Viterbi edge build both read them. Returns the segment
-    * rows (the serving surface q233 rolls up).
+    * substring explosion are built once and pinned, the seed vocab and
+    * the Viterbi edge build both read them. Returns the segment rows
+    * (the serving surface q233 rolls up), detached.
     */
   def tokenize(docs: DataFrame, textCol: String,
       maxPieceLen: Int = 4, topMulti: Int = 100,
-      maxWordLen: Int = 20): DataFrame =
-    trainAndSegment(docs, textCol, maxPieceLen, topMulti, maxWordLen)._2
+      maxWordLen: Int = 20): DataFrame = Pins.scoped { s =>
+    Pins.detach(trainAndSegment(s, docs, textCol, maxPieceLen, topMulti, maxWordLen)._2)
+  }
 
   /** CHAINED hard-EM rounds — the convergence story [[emRound]] opens:
     * each round Viterbi-segments under the current model and
@@ -631,19 +612,17 @@ object UnigramLm {
     */
   def emTrajectory(docs: DataFrame, textCol: String, rounds: Int = 2,
       maxPieceLen: Int = 4, topMulti: Int = 100,
-      maxWordLen: Int = 20): DataFrame = {
+      maxWordLen: Int = 20): DataFrame = Pins.scoped { s =>
     require(rounds >= 1 && rounds <= 8, s"rounds must be in [1, 8], got $rounds")
     require(maxPieceLen >= 1 && maxPieceLen <= 63,
       s"maxPieceLen must be in [1, 63], got $maxPieceLen")
     require(maxWordLen >= 1 && maxWordLen <= 63,
       s"maxWordLen must be in [1, 63], got $maxWordLen")
     val spark = docs.sparkSession
-    val cand = candidates(words(docs, textCol, maxWordLen), maxPieceLen)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cand = s.pin(candidates(words(docs, textCol, maxWordLen), maxPieceLen))
     var vocab = seedVocabFrom(cand, topMulti)
       .select(col("piece"), col("icost"))
     val out = Seq.newBuilder[(Long, Long, Long)]
-    var prevCounts: DataFrame = null
     for (t <- 1 to rounds) {
       val seg = segmentFrom(cand, vocab, maxWordLen)
       val costRow = seg.select(col("w"), col("freq"), col("cost")).distinct()
@@ -651,11 +630,9 @@ object UnigramLm {
       require(!costRow.isNullAt(0),
         "emTrajectory: no segmentable words — the corpus has no " +
           s"whitespace tokens within maxWordLen=$maxWordLen")
-      val counts = seg.groupBy(col("piece")).agg(sum(col("freq")).as("cnt"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // model-sized: each round's counts stay pinned for the call
+      val counts = s.pin(seg.groupBy(col("piece")).agg(sum(col("freq")).as("cnt")))
       out += ((t.toLong, counts.count(), costRow.getLong(0)))
-      if (prevCounts != null) prevCounts.unpersist()
-      prevCounts = counts
       val tot = counts.agg(sum(col("cnt")).as("tot"))
       vocab = counts.crossJoin(broadcast(tot))
         .select(col("piece"),
@@ -663,23 +640,21 @@ object UnigramLm {
             - log(col("cnt").cast("double"))) * lit(1000000.0), 0)
             .cast("long").as("icost"))
     }
-    // the LAST counts table backs the returned rows only through the
-    // already-collected scalars; the candidate explosion is done too
-    if (prevCounts != null) prevCounts.unpersist()
-    cand.unpersist()
     import spark.implicits._
     out.result().toDF("round", "n_pieces_used", "corpus_cost")
   }
 
-  private def trainAndSegment(docs: DataFrame, textCol: String,
+  /** The seed vocab and its Viterbi segmentation, both reading the
+    * candidate table pinned in the caller's scope `s`.
+    */
+  private def trainAndSegment(s: Pins.Scope, docs: DataFrame, textCol: String,
       maxPieceLen: Int, topMulti: Int, maxWordLen: Int)
       : (DataFrame, DataFrame) = {
     require(maxPieceLen >= 1 && maxPieceLen <= 63,
       s"maxPieceLen must be in [1, 63] (the 6-bit l field), got $maxPieceLen")
     require(maxWordLen >= 1 && maxWordLen <= 63,
       s"maxWordLen must be in [1, 63] (the packed s field), got $maxWordLen")
-    val cand = candidates(words(docs, textCol, maxWordLen), maxPieceLen)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cand = s.pin(candidates(words(docs, textCol, maxWordLen), maxPieceLen))
     val vocab = seedVocabFrom(cand, topMulti)
     (vocab, segmentFrom(cand, vocab, maxWordLen))
   }

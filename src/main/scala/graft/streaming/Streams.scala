@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.operators.{Parallelism, Sinks}
+import graft.operators.{Parallelism, Pins, Sinks}
 
 /** Streaming surface (§2.7).
   *
@@ -207,22 +207,22 @@ object Streams {
         val spark = batch.sparkSession
         val fs = org.apache.hadoop.fs.FileSystem.get(
           spark.sparkContext.hadoopConfiguration)
-        val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        b.count()
-        val store =
-          if (fs.exists(new org.apache.hadoop.fs.Path(storeDir)))
-            spark.read.parquet(storeDir)
-          else b.select(col(idCol), col(hashCol)).limit(0)
-        val dropped = graft.operators.SimHashDedup
-          .incrementalHammingPairs(store, b, idCol, hashCol,
-            maxHamming, maxBucketSize)
-          .select(col("idB").as("__dropped")).distinct()
-        b.join(dropped, col(idCol) === col("__dropped"), "left_anti")
-          .write.mode("append").parquet(outDir)
-        b.select(col(idCol), col(hashCol))
-          .write.mode("append").parquet(storeDir)
-        b.unpersist()
-        ()
+        Pins.scoped { s =>
+          val b = s.pin(batch)
+          b.count()
+          val store =
+            if (fs.exists(new org.apache.hadoop.fs.Path(storeDir)))
+              spark.read.parquet(storeDir)
+            else b.select(col(idCol), col(hashCol)).limit(0)
+          val dropped = graft.operators.SimHashDedup
+            .incrementalHammingPairs(store, b, idCol, hashCol,
+              maxHamming, maxBucketSize)
+            .select(col("idB").as("__dropped")).distinct()
+          b.join(dropped, col(idCol) === col("__dropped"), "left_anti")
+            .write.mode("append").parquet(outDir)
+          b.select(col(idCol), col(hashCol))
+            .write.mode("append").parquet(storeDir)
+        }
       }
       .start()
 

@@ -1,12 +1,13 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.ArrayType
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSuite
 
@@ -200,17 +201,39 @@ class NearDupSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     case _ => Nil
   }
 
+  /** The executed plan of the `localCheckpoint` that detached `produce`'s
+    * result: the result itself is a checkpoint scan, so its verify joins
+    * are read from the action that materialized it (the last detach whose
+    * output has the result's columns).
+    */
+  private def detachedPlan(produce: () => DataFrame): SparkPlan = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") seen.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val cols = produce().columns.toSeq
+      def found = seen.toArray(Array.empty[QueryExecution]).reverse
+        .find(_.analyzed.output.map(_.name) == cols)
+      val deadline = System.nanoTime() + 10_000_000_000L
+      while (found.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(found.nonEmpty, s"no detach with columns $cols was reported")
+      found.get.executedPlan
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("no broadcast side in the verify pipeline carries an array column") {
     // the 100 TB contract: shingle/signature arrays are huge and badly
     // size-estimated — only bare id pairs may be broadcast. Plan-inspect
     // with AQE off so the compile-time joins are what's asserted.
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    // earlier tests leave verifiedPairs results cached, and this lazy plan
-    // is the same logical plan: cache substitution would hide its joins
     spark.catalog.clearCache()
     try {
-      // the eager producers: their results are cached, so the verify
-      // joins sit inside the cached relation's plan
+      // the eager producers: their results are detached, so the verify
+      // joins sit in the plan of the detaching action
       val cfg = MinHashDedup.Config(jaccardThreshold = 0.5, shingleN = 3)
       val a = Seq((10L, base), (11L, unrelated1)).toDF("doc_id", "text")
       val store = MinHashDedup.signatures(corpus.where($"doc_id".isin(1L, 4L)),
@@ -222,8 +245,7 @@ class NearDupSpec extends SparkSuite with AdaptiveSparkPlanHelper {
         "incrementalVerifiedPairs" -> (() => MinHashDedup.incrementalVerifiedPairs(
           store, corpus.where(!$"doc_id".isin(1L, 4L)), "doc_id", "text", cfg))
       ).foreach { case (name, produce) =>
-        val out = produce()
-        val bcasts = broadcastsIn(out.queryExecution.executedPlan)
+        val bcasts = broadcastsIn(detachedPlan(produce))
         val names = bcasts.map(_.output.map(_.name).toSet)
         assert(names.contains(Set("idA", "idB")),
           s"$name: expected broadcasts of the bare pair keys, got $names")
@@ -236,7 +258,6 @@ class NearDupSpec extends SparkSuite with AdaptiveSparkPlanHelper {
           assert(arrayCols.isEmpty,
             s"$name: broadcast side carries array columns ${arrayCols.map(_.name)}:\n$b")
         }
-        out.unpersist()
       }
       Seq(MinHashDedup.Config(jaccardThreshold = 0.5, shingleN = 3), portable)
         .foreach { cfg =>

@@ -43,7 +43,7 @@ class SkewSpec extends SparkSuite {
     // nowhere near the 4950 the hot postings would contribute alone
     assert(nCands <= N, s"candidate blowup under boilerplate skew: $nCands")
     assert(nCands >= 3, "the three clone pairs must survive the filter")
-    cands.unpersist(); base.unpersist()
+    base.unpersist()
     // exactness is not traded away: the full operator still finds every
     // true pair at the threshold
     val pairs = MinHashDedup.jaccardPairs(df, "doc_id", "text", threshold = 0.6)

@@ -47,7 +47,6 @@ class TrainingPrepSpec extends SparkSuite {
     for (parts <- Seq(1, 3, 8, 64)) {
       val got = TrainingPrep.globalPrefixSum(docs, "id", "v", "cum", numParts = parts)
       val dist = got.select($"id", $"cum").as[(Long, Long)].collect().toMap
-      got.unpersist()
       assert(dist == naive, s"numParts=$parts diverged from the global window")
     }
   }
@@ -65,7 +64,6 @@ class TrainingPrepSpec extends SparkSuite {
     val wide = docs.repartition(48)
     val got = TrainingPrep.globalPrefixSum(wide, "id", "v", "cum")
     val last = got.agg(max($"cum")).as[Long].head()
-    got.unpersist()
     assert(last == docs.count(), "derived-count prefix sum must total the input")
   }
 
@@ -143,7 +141,6 @@ class TrainingPrepSpec extends SparkSuite {
         .select($"doc_id", $"t").as[(Long, Long)].collect().toMap
       val dist = TrainingPrep.distributedNtile(docs, "__ord", k)
       val got = dist.select($"doc_id", $"ntile").as[(Long, Long)].collect().toMap
-      dist.unpersist()
       assert(got == naive, s"k=$k diverged from SQL-standard ntile")
     }
   }
