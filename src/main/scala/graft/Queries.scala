@@ -57,10 +57,18 @@ object Queries {
     upd.unionByName(resend).unionByName(ins)
   }
 
+  /** `delta` sits behind one exchange, [[Dedup.fullRow]]'s (the
+    * reference dedups every batch before its load, `etl.py:118`; these
+    * rows are distinct, so it keeps every row): [[Merge.merge]] reads its
+    * source three times, and adaptive execution runs the shared exchange
+    * once, where a shuffle-free union of three `orders` scans is scanned
+    * once per consumer. A plain `repartition` would not do: column
+    * pruning narrows the pk-only consumer's copy, so it is not reused.
+    */
   private def stampedOrders(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val orders = t(spark, dir, "orders")
     val dest = Audit.stampAt(orders, lit(DestStamp))
-    val delta = Audit.stampAt(ordersDelta(orders), lit(DeltaStamp))
+    val delta = Dedup.fullRow(Audit.stampAt(ordersDelta(orders), lit(DeltaStamp)))
     (dest, delta)
   }
 
@@ -2548,7 +2556,7 @@ object Queries {
       .withColumn("o_totalprice", col("o_totalprice") + 100000.0)
     val ins = o.where(col("o_orderkey") % 101 === 0)
       .withColumn("o_orderkey", -col("o_orderkey"))
-    ManifestTable.merge(spark, root, upd.unionByName(ins), "o_orderkey")
+    ManifestTable.merge(spark, root, upd.unionByName(ins), Seq("o_orderkey"))
     ManifestTable.read(spark, root)
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n_orders"),
@@ -4340,7 +4348,7 @@ object Queries {
       .unionByName(o.where(col("o_orderkey") % 5 === 1 &&
         col("o_orderkey") % 3 =!= 0))
       .withColumn("score", col("o_orderkey") % 7)
-    ManifestTable.merge(spark, root, updates, "o_orderkey", mergeSchema = true)
+    ManifestTable.merge(spark, root, updates, Seq("o_orderkey"), mergeSchema = true)
     ManifestTable.read(spark, root).agg(
       count(lit(1)).as("n_rows"),
       sum(col("o_orderkey")).as("key_sum"),

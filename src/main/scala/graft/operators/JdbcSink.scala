@@ -8,8 +8,9 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 /** RDBMS sink over Spark's JDBC source — the reference's actual load target
   * (every load path lands in PostgreSQL: `to_sql` appends at
   * `/root/reference/utilities/etl.py:51-56,77-83`, SQL MERGE at
-  * `etl.py:179`). Mirrors [[Sinks]]' parquet API one-for-one so pipelines
-  * swap destinations by swapping the sink object.
+  * `etl.py:179`). Mirrors [[Sinks]]' load API one-for-one (append, MERGE,
+  * full-table swap) so pipelines swap destinations by swapping the sink
+  * object.
   *
   * Tested against embedded Derby (the JDBC driver available offline); the
   * read/write paths are the generic `spark.read/write.format("jdbc")` ones.
@@ -27,8 +28,10 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *    100 TB fact side.
   *  - MERGE follows the reference's staging shape (`etl.py:153-179`): the
   *    post-merge image is computed by the engine's own [[Merge]] (dest never
-  *    shuffled) and landed with write-staging-then-swap, the same
-  *    atomicity story as [[Sinks.swapInto]].
+  *    shuffled) and landed with write-staging-then-swap inside one
+  *    transaction ([[swapInto]]). The manifest-table sink
+  *    ([[Sinks.upsertInto]]) runs the same [[Merge]] on the touched files
+  *    only.
   */
 object JdbcSink {
 
@@ -156,9 +159,9 @@ object JdbcSink {
     else s"ALTER TABLE ${checkTableName(from)} RENAME TO ${checkTableName(to)}"
   }
 
-  /** Write-staging-then-swap full-table rewrite ([[Sinks.swapInto]] for an
-    * RDBMS): land `data` in `<table>__staging` FIRST — materializing any
-    * plan that still reads the live table — then drop + rename inside one
+  /** Write-staging-then-swap full-table rewrite: land `data` in
+    * `<table>__staging` FIRST — materializing any plan that still reads
+    * the live table — then drop + rename inside one
     * transaction on one connection. On databases with transactional DDL
     * (PostgreSQL, Derby) the swap is atomic: a reader never observes the
     * missing-table window and a crash between the statements rolls back.

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions.col
 
 /** Data-layout management — the scan-side half of 100 TB performance.
   *
-  * Three layouts, three pruning levers:
+  * Layouts and their pruning levers:
   *  - [[writePartitioned]]: hive-style directory partitioning. A filter on
   *    the partition column prunes whole directories at PLANNING time
   *    (`PartitionFilters` / `PartitionCount` in the scan node) — zero IO
@@ -17,11 +17,9 @@ import org.apache.spark.sql.functions.col
   *    covering files at READ time (row-group pruning) — the lever for
   *    high-cardinality keys where directory-per-value would melt the
   *    metastore.
-  *  - [[compact]]: bin-pack many small files into ~`targetBytes` files via
-  *    the staging swap. Streaming/append sinks accrete small files; at
-  *    scale, scan task count (and scheduler pressure) tracks file count,
-  *    so periodic compaction is part of the sink contract, not an
-  *    afterthought.
+  *
+  * Compaction of small files is the table format's job
+  * ([[ManifestTable.compact]]).
   */
 object Layout {
 
@@ -195,16 +193,5 @@ object Layout {
         buf += ((s.getPath.toString, s.getLen))
     }
     buf.toSeq
-  }
-
-  /** Rewrite a table into ceil(totalBytes / targetBytes) files (>= 1) via
-    * the write-new-then-swap path. Returns (filesBefore, filesAfter).
-    */
-  def compact(spark: SparkSession, path: String, targetBytes: Long): (Int, Int) = {
-    val before = dataFiles(spark, path)
-    val totalBytes = before.map(_._2).sum
-    val n = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    Sinks.swapInto(spark, path, spark.read.parquet(path).coalesce(n))
-    (before.size, dataFiles(spark, path).size)
   }
 }

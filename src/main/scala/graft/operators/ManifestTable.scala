@@ -221,10 +221,10 @@ object ManifestTable {
   /** Commit a batch as the next snapshot. `append = false` replaces the
     * table's file list with the batch's files (logical truncate — prior
     * files stay on disk for time travel until [[vacuum]]); `append = true`
-    * extends the parent snapshot's list, with a strict schema check (the
-    * drift-tolerant path is [[Sinks.appendInto]]; a transactional table's
-    * schema evolves by explicit DDL, not silently per batch) unless
-    * `mergeSchema = true`, which allows ADDITIVE evolution: the batch may
+    * extends the parent snapshot's list, with a strict schema check (a
+    * transactional table's schema evolves by explicit DDL, not silently
+    * per batch) unless `mergeSchema = true` (the drift-tolerant path
+    * [[Sinks.appendInto]] takes), which allows ADDITIVE evolution: the batch may
     * add new columns (and may omit existing ones). The snapshot's schema
     * becomes the union, and the read path projects every file through
     * it — files written before a column existed yield NULL for it,
@@ -584,32 +584,35 @@ object ManifestTable {
 
   // ------------------------------------------------------ copy-on-write
 
-  /** Copy-on-write upsert: `updates` rows REPLACE same-key table rows,
-    * new-key rows are inserted — rewriting ONLY the files that actually
-    * hold a matching key. Three phases, each strictly narrowing:
+  /** Copy-on-write MERGE with the reference's row semantics
+    * ([[Merge.merge]]: a matched row takes the `updates` image only when
+    * a non-key, non-audit column changed, so a re-sent unchanged row
+    * keeps its old `record_loaded_at`; unseen keys insert), rewriting
+    * ONLY the files that hold a matching key. Three phases, each
+    * strictly narrowing:
     *
-    *  1. STATS PRUNE (driver-only, zero IO): files whose `[min,max]` on
-    *     `keyCol` cannot contain any update key (or are all-NULL — no
-    *     NULL equals a key) are carried into the new snapshot by
-    *     reference.
-    *  2. PROBE (one semi-join): among the candidates, the files that
-    *     really contain a matching key, via `input_file_name()` semi-join
-    *     against the update keys — the collect is distinct FILE names,
-    *     bounded by the manifest's own cardinality.
-    *  3. REWRITE: the touched files' non-matching rows + all updates are
-    *     written as one new batch; untouched candidates join group 1.
+    *  1. STATS PRUNE (driver-only, zero IO; [[keyPrune]]): files whose
+    *     `[min,max]` on a `pk` column cannot contain any update key (or
+    *     are all-NULL there — no NULL equals a key) are carried into the
+    *     new snapshot by reference.
+    *  2. PROBE (one semi-join; [[touchedFiles]]): among the candidates,
+    *     the files that really contain a matching key.
+    *  3. REWRITE: [[Merge.merge]] of the touched files with `updates`
+    *     is written as one new batch; untouched candidates join group 1.
     *
     * On a 100 TB key-clustered table an update of one key range rewrites
     * a handful of files and never scans the rest — the manifest makes
     * "which files could match" a metadata question. Requires `updates`
-    * to match the table schema; duplicate keys WITHIN `updates` are the
-    * caller's bug (both rows would land). Commits mode "merge", which
-    * [[changes]] refuses to cross (history is rewritten). Fails loudly
-    * if the snapshot moves between planning and publish (the rewrite set
-    * would be stale) — re-run on a fresh snapshot.
+    * to match the table schema (or `mergeSchema = true`, additive);
+    * duplicate keys WITHIN `updates` are the caller's bug (dedup first,
+    * as [[Sinks.upsertInto]] does). An empty `updates` commits nothing.
+    * Commits mode "merge", which [[changes]] refuses to cross (history
+    * is rewritten). Fails loudly if the snapshot moves between planning
+    * and publish (the rewrite set would be stale) — re-run on a fresh
+    * snapshot.
     */
   def merge(spark: SparkSession, tableRoot: String, updates: DataFrame,
-      keyCol: String, maxRetries: Int = 5,
+      pk: Seq[String], maxRetries: Int = 5,
       mergeSchema: Boolean = false,
       txn: Option[(String, Long)] = None): CowStats = {
     val f = fs(spark)
@@ -626,10 +629,10 @@ object ManifestTable {
         "in rewritten files; run rewriteDeletes or compact first")
     val updDdl = StructType(updates.schema.fields.map(_.copy(nullable = true))).toDDL
     // mergeSchema follows the append-evolution contract (additive union,
-    // retypes rejected by unionDdl): survivors of rewritten files and the
-    // updates both project to the union schema (absent columns NULL);
-    // untouched files carry physically narrow and read NULL through the
-    // snapshot schema, exactly like pre-evolution appends
+    // retypes rejected by unionDdl): rewritten files and the updates both
+    // project to the union schema (absent columns NULL); untouched files
+    // carry physically narrow and read NULL through the snapshot schema,
+    // exactly like pre-evolution appends
     val targetDdl =
       if (mergeSchema)
         unionDdl(m.schemaDdl,
@@ -640,55 +643,85 @@ object ManifestTable {
             "(pass mergeSchema = true for additive evolution)")
         m.schemaDdl
       }
-    require(updates.columns.contains(keyCol),
-      s"updates must carry the merge key '$keyCol'")
+    pk.foreach(k => require(updates.columns.contains(k),
+      s"updates must carry the merge key '$k'"))
     val target = StructType.fromDDL(targetDdl)
     def align(df: DataFrame): DataFrame =
       df.select(target.fields.toIndexedSeq.map { fld =>
         if (df.columns.contains(fld.name)) col(fld.name)
         else lit(null).cast(fld.dataType).as(fld.name)
       }: _*)
-    val dt = StructType.fromDDL(m.schemaDdl)(keyCol).dataType
 
-    val bounds = updates.agg(
-      min(col(keyCol)).cast("string").as("lo"),
-      max(col(keyCol)).cast("string").as("hi")).head()
-    if (bounds.isNullAt(0)) // no non-null update keys: nothing can match
-      CowStats(m.version, m.files.size, 0, 0)
-    else {
-      val (lo, hi) = (bounds.getString(0), bounds.getString(1))
-      val (candidates, pruned) = m.files.partition { fe =>
-        fe.stats.get(keyCol) match {
-          case Some(ColStats(Some(mn), Some(mx), _)) =>
-            cmp(dt, mx, lo) >= 0 && cmp(dt, mn, hi) <= 0
-          case Some(ColStats(None, None, _)) => false // all-NULL file
-          case _ => true // key stats not tracked: must probe
+    // one evaluation of the batch feeds the bounds, the probe and the
+    // rewrite: a source evaluated once per action (a stream's micro-batch,
+    // a wall-clock stamp) could probe other keys than it writes
+    Pins.scoped { s =>
+      val upd = s.pin(updates)
+      val (n, bounds) = keyBounds(upd, pk)
+      if (n == 0) CowStats(m.version, m.files.size, 0, 0)
+      else {
+        val (candidates, pruned) = keyPrune(m, bounds)
+        val (rewrite, untouchedCand) = touchedFiles(spark, root, m, candidates,
+          upd.select(pk.map(col): _*).distinct(), pk)
+        val (newEntries, _) = writeBatch(spark, f, root,
+          Merge.merge(align(dfFor(spark, root, m, rewrite)), align(upd), pk),
+          m.statsCols)
+        val v = publish(f, root, "merge", m.statsCols, txn,
+          maxRetries, expectParent = Some(m.version)) { _ =>
+          (targetDdl, pruned ++ untouchedCand ++ newEntries, Seq.empty)
         }
+        CowStats(v, pruned.size + untouchedCand.size, 0, rewrite.size)
       }
-      val keys = updates.select(col(keyCol)).distinct()
-      val touched: Set[String] =
-        if (candidates.isEmpty) Set.empty
-        else dfFor(spark, root, m, candidates)
-          .withColumn("__file", input_file_name())
-          .join(keys, Seq(keyCol), "left_semi")
-          .select(col("__file")).distinct().collect()
-          // basename is the join key: part-file names are UUID-unique,
-          // and a shallow clone's entries carry ABSOLUTE paths that a
-          // relative "data/<dir>/<name>" reconstruction would never match
-          .map(r => new Path(r.getString(0)).getName).toSet
-      val (rewrite, untouchedCand) =
-        candidates.partition(fe => touched(new Path(fe.path).getName))
-      val survivors =
-        if (rewrite.isEmpty) updates.limit(0)
-        else dfFor(spark, root, m, rewrite).join(keys, Seq(keyCol), "left_anti")
-      val (newEntries, _) = writeBatch(spark, f, root,
-        align(survivors).unionByName(align(updates)), m.statsCols)
-      val v = publish(f, root, "merge", m.statsCols, txn,
-        maxRetries, expectParent = Some(m.version)) { _ =>
-        (targetDdl, pruned ++ untouchedCand ++ newEntries, Seq.empty)
-      }
-      CowStats(v, pruned.size + untouchedCand.size, 0, rewrite.size)
     }
+  }
+
+  /** `df`'s row count and, per key column, its `[min, max]` in the
+    * stats' portable string form (`None`: no non-NULL value) — one job.
+    */
+  private def keyBounds(df: DataFrame, keys: Seq[String])
+      : (Long, Map[String, Option[(String, String)]]) = {
+    val r = df.agg(count(lit(1)), keys.flatMap(k =>
+      Seq(min(col(k)).cast("string"), max(col(k)).cast("string"))): _*).head()
+    (r.getLong(0), keys.zipWithIndex.map { case (k, i) =>
+      k -> Option(r.getString(1 + 2 * i)).map(lo => (lo, r.getString(2 + 2 * i)))
+    }.toMap)
+  }
+
+  /** The one key-stats prune (driver-only, zero IO): `m`'s files split
+    * into the candidates that may hold a key inside `bounds` on EVERY
+    * key column, and the rest. A key column with no non-NULL bound, or
+    * an all-NULL file on it, cannot match (no NULL equals a key); a file
+    * without stats on a key column stays a candidate.
+    */
+  private def keyPrune(m: Manifest, bounds: Map[String, Option[(String, String)]])
+      : (Seq[FileEntry], Seq[FileEntry]) = {
+    val schema = StructType.fromDDL(m.schemaDdl)
+    m.files.partition(fe => bounds.forall { case (k, b) =>
+      (fe.stats.get(k), b) match {
+        case (_, None) => false
+        case (Some(ColStats(Some(mn), Some(mx), _)), Some((lo, hi))) =>
+          val dt = schema(k).dataType
+          cmp(dt, mx, lo) >= 0 && cmp(dt, mn, hi) <= 0
+        case (Some(ColStats(None, None, _)), _) => false // all-NULL file
+        case _ => true // key stats not tracked: must probe
+      }
+    })
+  }
+
+  /** The one touched-file probe: `candidates` split into the files with
+    * a row that semi-joins `probe` on `on` (which may name [[RelCol]],
+    * the row's file) and the rest. One job; its collect is distinct file
+    * names, bounded by the manifest's own cardinality.
+    */
+  private def touchedFiles(spark: SparkSession, root: Path, m: Manifest,
+      candidates: Seq[FileEntry], probe: DataFrame, on: Seq[String])
+      : (Seq[FileEntry], Seq[FileEntry]) = {
+    val touched: Set[String] =
+      if (candidates.isEmpty) Set.empty
+      else withRelPath(dfFor(spark, root, m, candidates))
+        .join(probe, on, "left_semi")
+        .select(col(RelCol)).distinct().collect().map(_.getString(0)).toSet
+    candidates.partition(fe => touched(new Path(fe.path).getName))
   }
 
   /** Copy-on-write range delete: removes rows whose `colName` lies in
@@ -791,19 +824,10 @@ object ManifestTable {
     val dt = StructType.fromDDL(m.schemaDdl)(keyCol).dataType
     val k = keys.select(col(keyCol).cast(dt).as(keyCol))
       .where(col(keyCol).isNotNull).distinct()
-    val bounds = k.agg(min(col(keyCol)).cast("string").as("lo"),
-      max(col(keyCol)).cast("string").as("hi"), count(lit(1)).as("n")).head()
-    if (bounds.isNullAt(0)) CowStats(m.version, m.files.size, 0, 0)
+    val (n, bounds) = keyBounds(k, Seq(keyCol))
+    if (n == 0) CowStats(m.version, m.files.size, 0, 0)
     else {
-      val (lo, hi) = (bounds.getString(0), bounds.getString(1))
-      val applies = m.files.filter { fe =>
-        fe.stats.get(keyCol) match {
-          case Some(ColStats(Some(mn), Some(mx), _)) =>
-            cmp(dt, mx, lo) >= 0 && cmp(dt, mn, hi) <= 0
-          case Some(ColStats(None, None, _)) => false // all-NULL file
-          case _ => true // key stats not tracked: scope conservatively
-        }
-      }.map(_.path)
+      val applies = keyPrune(m, bounds)._1.map(_.path)
       if (applies.isEmpty) CowStats(m.version, m.files.size, 0, 0)
       else {
         val batchRel = s"data/b-${java.util.UUID.randomUUID.toString.take(12)}"
@@ -811,7 +835,7 @@ object ManifestTable {
         k.write.mode("overwrite").parquet(batchDir.toString)
         val bytes = f.listStatus(batchDir).toSeq
           .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
-        val tomb = Tombstone(batchRel, bounds.getAs[Long]("n"), bytes, keyCol, applies)
+        val tomb = Tombstone(batchRel, n, bytes, keyCol, applies)
         val v = publish(f, root, "mor-delete", m.statsCols, None,
           maxRetries, expectParent = Some(m.version)) { _ =>
           (m.schemaDdl, m.files, m.tombstones :+ tomb)
@@ -896,18 +920,7 @@ object ManifestTable {
       s"$keyCol keys — no defined winner; dedup latest-wins upstream")
     if (n == 0) CowStats(m.version, m.files.size, 0, 0)
     else {
-      val bounds = aligned.agg(min(col(keyCol)).cast("string").as("lo"),
-        max(col(keyCol)).cast("string").as("hi")).head()
-      val (lo, hi) = (bounds.getString(0), bounds.getString(1))
-      val dt = schema(keyCol).dataType
-      val applies = m.files.filter { fe =>
-        fe.stats.get(keyCol) match {
-          case Some(ColStats(Some(mn), Some(mx), _)) =>
-            cmp(dt, mx, lo) >= 0 && cmp(dt, mn, hi) <= 0
-          case Some(ColStats(None, None, _)) => false // all-NULL file
-          case _ => true // key stats not tracked: scope conservatively
-        }
-      }.map(_.path)
+      val applies = keyPrune(m, keyBounds(aligned, Seq(keyCol))._2)._1.map(_.path)
       // the replacement rows: an ordinary data file with full stats
       val (newEntries, _) = writeBatch(spark, f, root, aligned, m.statsCols)
       // the displacement keys: a tombstone scoped to the PRE-update
@@ -952,13 +965,8 @@ object ManifestTable {
       val (candidates, outside) =
         m.files.partition(fe => inScope(new Path(fe.path).getName))
       val pairs = tombstonePairs(spark, root, m)
-      val touched: Set[String] =
-        if (candidates.isEmpty) Set.empty
-        else withRelPath(dfFor(spark, root, m, candidates))
-          .join(pairs, Seq(keyCol, RelCol), "left_semi")
-          .select(col(RelCol)).distinct().collect().map(_.getString(0)).toSet
       val (rewrite, untouchedCand) =
-        candidates.partition(fe => touched(new Path(fe.path).getName))
+        touchedFiles(spark, root, m, candidates, pairs, Seq(keyCol, RelCol))
       val newEntries = if (rewrite.isEmpty) Seq.empty else {
         val survivors = withRelPath(dfFor(spark, root, m, rewrite))
           .join(pairs, Seq(keyCol, RelCol), "left_anti").drop(RelCol)

@@ -48,9 +48,9 @@ import graft.functions.TextFunctions
   * and [[SimHashDedup]].
   *
   * Cache lifecycle: one rule, [[Pins]]. Each stage read by more than one
-  * consumer is pinned in the producer's scope and counted ([[pin]]); the
-  * (tiny, result-sized) pair set leaves the scope detached, and the scope
-  * drops every stage on exit. So a call leaves no cache entry behind and
+  * consumer is pinned in the producer's scope and counted
+  * ([[Pins.Scope.pinCount]]); the (tiny, result-sized) pair set leaves
+  * the scope detached, and the scope drops every stage on exit. So a call leaves no cache entry behind and
   * the caller owns none. [[duplicateGroups]] adopts a detached or cached
   * input instead of caching it again.
   */
@@ -233,15 +233,6 @@ object MinHashDedup {
     */
   private[graft] val VerifyBroadcastMaxPairs: Long = 1L << 21
 
-  /** Pin one pipeline stage in `s` and materialize it; returns its row
-    * count. A stage read from more than one place (both sides of a
-    * self-join, both verify probes) must be materialized BEFORE its
-    * consumers run: an unmaterialized cache is recomputed by each
-    * concurrent consumer rather than computed once (measured 101s ->
-    * ~10s at sf0.1).
-    */
-  private def pin(s: Pins.Scope, df: DataFrame): Long = s.pin(df).count()
-
   /** A verified pair's score over its two shingle sets `(shA, shB)`, and
     * the output column it lands in.
     */
@@ -318,11 +309,11 @@ object MinHashDedup {
     // twice, the two verify broadcasts read the candidate subtree twice,
     // both probe sides read the shingle table.
     val base = shingleTable(df, idCol, textCol, cfg)
-    pin(s, base)
+    s.pinCount(base)
     val sigs = base.select(col("id"), sig(cfg).as("sig"))
-    pin(s, sigs)
+    s.pinCount(sigs)
     val cands = candidatePairs(sigs, cfg)
-    Pins.detach(verify(base, base, cands, pin(s, cands), cfg.jaccardThreshold, Jaccard))
+    Pins.detach(verify(base, base, cands, s.pinCount(cands), cfg.jaccardThreshold, Jaccard))
   }
 
   /** The signature store's band-bucket index `(id, band, bucket)` —
@@ -388,7 +379,7 @@ object MinHashDedup {
       storeIndex: Option[DataFrame] = None): DataFrame = Pins.scoped { s =>
     storeIndex.foreach(requireIndexMatches(_, cfg))
     val newSigs = signatures(batch, idCol, textCol, cfg)
-    pin(s, newSigs)
+    s.pinCount(newSigs)
     // the boilerplate guard runs over the FULL bucket table (an oversized
     // bucket is oversized regardless of which side filled it); pairs are
     // formed only where the left endpoint is NEW
@@ -406,7 +397,7 @@ object MinHashDedup {
       .unionByName(newSigs.select(col("id"), col("shingles")))
     // same discipline as verifiedPairs: the verify reads cands from BOTH
     // probes, so it stays cached until the pair-sized result is detached
-    Pins.detach(verify(base, base, cands, pin(s, cands), cfg.jaccardThreshold, Jaccard))
+    Pins.detach(verify(base, base, cands, s.pinCount(cands), cfg.jaccardThreshold, Jaccard))
   }
 
   /** EXACT n-gram-Jaccard near-dup pairs via prefix-filtered inverted-index
@@ -444,7 +435,7 @@ object MinHashDedup {
       threshold: Double, shingleN: Int = 3): DataFrame = Pins.scoped { s =>
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
     val base = shingleTable(df, idCol, textCol, Config(shingleN = shingleN))
-    pin(s, base) // materialize before fan-out (see verifiedPairs)
+    s.pinCount(base) // materialize before fan-out (see verifiedPairs)
     val cands = prefixCandidates(base, threshold)
     // cands is detached by prefixCandidates: this count is O(partitions)
     Pins.detach(verify(base, base, cands, cands.count(), threshold, Jaccard))
@@ -486,7 +477,7 @@ object MinHashDedup {
     // and the index prefix is a filter over it (alpha >= t, so shorter).
     val alpha = 2 * threshold / (1 + threshold)
     val Seq((_, ranked)) = prefixes(threshold, base)
-    pin(s, ranked) // both prefix sides read this — materialize once
+    s.pinCount(ranked) // both prefix sides read this — materialize once
     val index = ranked.where(col("rk") <= prefixLength(alpha))
       .select(col("s"), col("id").as("idI"), col("len").as("lenI"))
     val probe = ranked.select(col("s"), col("id").as("idP"), col("len").as("lenP"))
@@ -520,9 +511,9 @@ object MinHashDedup {
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
     val cfg = Config(shingleN = shingleN)
     val baseA = shingleTable(dfA, idCol, textCol, cfg)
-    pin(s, baseA)
+    s.pinCount(baseA)
     val baseB = shingleTable(dfB, idCol, textCol, cfg)
-    pin(s, baseB)
+    s.pinCount(baseB)
     // shared global order: document frequency over BOTH corpora
     val Seq((_, prefixA), (_, prefixB)) = prefixes(threshold, baseA, baseB)
     val cands = prefixA.select(col("s"), col("id").as("idA"), col("len").as("lenA"))
@@ -531,7 +522,7 @@ object MinHashDedup {
         col("lenB").cast("double") >= lit(threshold) * col("lenA"))
       .select("idA", "idB")
       .distinct()
-    Pins.detach(verify(baseA, baseB, cands, pin(s, cands), threshold, Jaccard))
+    Pins.detach(verify(baseA, baseB, cands, s.pinCount(cands), threshold, Jaccard))
   }
 
   /** EXACT n-gram CONTAINMENT pairs: (idA, idB, containment) where
@@ -559,7 +550,7 @@ object MinHashDedup {
       threshold: Double, shingleN: Int = 3): DataFrame = Pins.scoped { s =>
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
     val base = shingleTable(df, idCol, textCol, Config(shingleN = shingleN))
-    pin(s, base) // materialize before fan-out (see verifiedPairs)
+    s.pinCount(base) // materialize before fan-out (see verifiedPairs)
     // A probes with its prefix; B is indexed in full
     val Seq((exploded, prefix)) = prefixes(threshold, base)
     val cands = prefix.select(col("s"), col("id").as("idA"))
@@ -568,7 +559,7 @@ object MinHashDedup {
       .select("idA", "idB")
       .distinct()
     // both verify probes read cands — pinned once
-    Pins.detach(verify(base, base, cands, pin(s, cands), threshold, Containment))
+    Pins.detach(verify(base, base, cands, s.pinCount(cands), threshold, Containment))
   }
 
   /** Deterministic (a, b) permutation coefficients for `k` hashes from

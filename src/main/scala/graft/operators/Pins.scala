@@ -10,42 +10,73 @@ import org.apache.spark.storage.StorageLevel
   * the `CacheManager` as it found it.
   *
   *  - [[scoped]] runs a body with a [[Scope]]; `s.pin(df)` caches a
-  *    stage read from more than one place, and the scope unpersists
-  *    every entry it owns when the body returns or throws.
+  *    stage read from more than one place, and the scope releases
+  *    every entry it pinned when the body returns or throws.
   *  - [[detach]] is the one way a result that reads pinned stages
   *    leaves its scope: an eager `localCheckpoint`. Spark's
   *    `ContextCleaner` frees its blocks once the frame is unreachable,
   *    so the caller owns nothing.
   *
-  * A stage that is already stored — cached by a caller or an enclosing
-  * scope, or a checkpoint — is adopted, not cached again: one entry has
-  * one owner, and pinning the same plan twice makes one entry. `pin`
-  * runs no job; the caller's own action materializes the entry.
+  * An entry a scope made is reference-counted: a scope that pins an
+  * equal plan — the same scope again, a nested one, or one on another
+  * thread — shares the entry, and the last scope to release it
+  * unpersists it. A stage stored by someone else — cached by a caller,
+  * or a checkpoint — is adopted, not cached again, and never released.
+  * `pin` runs no job; the caller's own action materializes the entry.
   */
 private[graft] object Pins {
 
-  /** The cache entries one [[scoped]] body owns, released in reverse
-    * pin order (dependents before the stages they read).
+  /** A cache entry made by [[Scope.pin]], and how many scope pins hold it. */
+  private final class Entry(val df: DataFrame) { var refs = 1 }
+
+  /** The live entries the scopes made. Guarded by `Pins`. */
+  private val live = mutable.ArrayBuffer.empty[Entry]
+
+  /** The entries one [[scoped]] body holds, released in reverse pin
+    * order (dependents before the stages they read).
     */
   final class Scope private[Pins] () {
-    private val owned = mutable.ArrayBuffer.empty[DataFrame]
+    private val held = mutable.ArrayBuffer.empty[Entry]
 
-    /** `df`, cached `MEMORY_AND_DISK` until the scope exits — or
-      * adopted unowned when it is already stored. Serialized across
-      * threads, so concurrent pins of one plan make one owner.
+    /** `df`, cached `MEMORY_AND_DISK` until the last scope holding it
+      * exits — or adopted unowned when someone else stored it.
+      * Serialized across threads, so concurrent pins of one plan make
+      * one entry.
       */
     def pin(df: DataFrame): DataFrame = {
       Pins.synchronized {
-        if (!stored(df)) {
-          df.persist(StorageLevel.MEMORY_AND_DISK)
-          owned += df
+        live.find(_.df.sameSemantics(df)) match {
+          case Some(e) =>
+            e.refs += 1
+            held += e
+          case None if !stored(df) =>
+            df.persist(StorageLevel.MEMORY_AND_DISK)
+            val e = new Entry(df)
+            live += e
+            held += e
+          case None => ()
         }
       }
       df
     }
 
+    /** [[pin]] `df` and materialize it; returns its row count. A stage
+      * read from more than one place (both sides of a self-join, both
+      * branches of one plan) must be materialized BEFORE its consumers
+      * run: an unmaterialized cache is recomputed by each concurrent
+      * consumer rather than computed once (measured 101s -> ~10s at
+      * sf0.1 on the MinHash verify stage).
+      */
+    def pinCount(df: DataFrame): Long = pin(df).count()
+
     private[Pins] def release(): Unit =
-      Pins.synchronized(owned.reverseIterator.foreach(_.unpersist()))
+      Pins.synchronized(held.reverseIterator.foreach { e =>
+        e.refs -= 1
+        if (e.refs == 0) {
+          e.df.unpersist()
+          live -= e
+        }
+      })
   }
 
   /** Run `body` with a fresh [[Scope]]; its entries go on any exit. */

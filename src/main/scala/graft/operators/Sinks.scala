@@ -7,113 +7,49 @@ import org.apache.spark.sql.types.{DataType, StructType}
 /** Table sinks mirroring the reference's two load paths plus the XCom
   * stage-handoff (§2.1 S3/S4/S7, §3.3).
   *
-  * Concurrency contract: [[swapInto]]/[[appendInto]]/[[upsertInto]]
-  * assume a SINGLE WRITER per destination (the reference's Airflow DAG
-  * serializes loads the same way). Readers concurrent with a rename-based
-  * [[swapInto]] can glimpse a missing directory during the two-rename
-  * window; readers that must never see that use the commit-marker layout
-  * ([[swapIntoVersioned]]/[[readCurrent]]), whose commit point is a
-  * single atomic file create. A table format with a transactional log
-  * (Delta/Iceberg) is the production replacement for this whole seam.
+  * The two load paths ([[appendInto]], [[upsertInto]]) write a
+  * [[ManifestTable]]: each load is one atomic manifest commit, a MERGE
+  * rewrites only the files that hold a matching key, and every earlier
+  * snapshot stays readable until [[ManifestTable.vacuum]]. Read a loaded
+  * table back with [[ManifestTable.read]]. [[swapIntoVersioned]]/
+  * [[readCurrent]] are the full-table commit-marker layout, whose commit
+  * point is a single atomic file create.
   */
 object Sinks {
 
   private def fs(spark: SparkSession): FileSystem =
     FileSystem.get(spark.sparkContext.hadoopConfiguration)
 
-  /** Pure existence probe — no filesystem mutation. (Self-healing of a
-    * crashed [[swapInto]] lives in the writers, which own the
-    * single-writer lock by contract; a read-sounding probe doing renames
-    * could race a concurrent swap and corrupt the table.)
+  /** The append path (`write_dataframe`, etl.py:27-86): dedup, audit-stamp
+    * and append the batch as one commit — the first load creates the
+    * table. Schema drift evolves the table in the same commit (the analog
+    * of `ALTER TABLE ADD COLUMN`): an added column reads NULL in earlier
+    * files, and a type-drifted column lands in its `{name}_{type}`
+    * sidecar ([[ManifestTable.commit]] `mergeSchema`).
     */
-  def tableExists(spark: SparkSession, path: String): Boolean =
-    fs(spark).exists(new Path(path))
+  def appendInto(spark: SparkSession, destPath: String, batch: DataFrame): Unit =
+    ManifestTable.commit(spark, destPath, Audit.stamp(Dedup.fullRow(batch)),
+      append = true, mergeSchema = true)
 
-  /** The self-healing half of [[swapInto]]'s crash contract: a crash
-    * between its two renames leaves no live table but a complete `.old`
-    * backup (dest absent + `.old` present). Each writer repairs that state
-    * on entry, before probing or writing, so the backed-up rows are never
-    * silently dropped. Rename results are checked — Hadoop reports
-    * rename-onto-existing and other failures as `false`, not exceptions.
-    */
-  private def healCrashWindow(f: FileSystem, dest: Path, bak: Path): Unit =
-    if (!f.exists(dest) && f.exists(bak)) {
-      require(f.rename(bak, dest),
-        s"failed to restore crashed-swap backup $bak -> $dest")
-    }
-
-  /** The append path (`write_dataframe`, etl.py:27-86): dedup; if the table
-    * does not exist, create it from the batch schema; else resolve schema
-    * drift (added columns / type sidecars) against the existing table and
-    * append. Drift against a parquet destination rewrites the table once
-    * with the evolved schema (the analog of ALTER TABLE ADD COLUMN; a
-    * metadata-only DDL on a warehouse-format sink).
-    */
-  def appendInto(spark: SparkSession, destPath: String, batch: DataFrame): Unit = {
-    healCrashWindow(fs(spark), new Path(destPath), new Path(destPath + ".old"))
-    val stamped = Audit.stamp(Dedup.fullRow(batch))
-    if (!tableExists(spark, destPath)) {
-      stamped.write.mode("overwrite").parquet(destPath)
-    } else {
-      val dest = spark.read.parquet(destPath)
-      val (destAligned, batchAligned) = SchemaDrift.align(dest, stamped)
-      if (SchemaDrift.diff(dest.schema, stamped.schema).isDrifted) {
-        // evolved schema: rewrite once via staging swap, then the appended
-        // batch lands in the new layout
-        swapInto(spark, destPath, destAligned.unionByName(batchAligned))
-      } else {
-        batchAligned.write.mode("append").parquet(destPath)
-      }
-    }
-  }
-
-  /** The upsert path (MERGE, `etl.py:88-183`) for a parquet destination:
-    * heal a crashed swap first, so the backed-up rows are merged rather
-    * than lost; audit-stamp the batch (`etl.py:95`, as
-    * [[JdbcSink.mergeInto]] does); resolve schema drift
-    * ([[SchemaDrift.align]], as `etl.py:128-141` does before its MERGE);
-    * then [[Merge.upsertBatch]] the batch (deduped on pk, the latest by
-    * `orderCols` winning) into the table — or create the table from the
-    * deduped batch — and publish the result through [[swapInto]]. A
-    * re-sent unchanged row keeps its first stamp (the change predicate
-    * skips audit columns); a changed or new row carries this load's.
-    * Plain parquet has no transactional MERGE, so the whole table is
-    * rewritten; a Delta/Iceberg sink replaces this with a real commit.
+  /** The upsert path (MERGE, `etl.py:88-183`): audit-stamp the batch
+    * (`etl.py:95`, as [[JdbcSink.mergeInto]] does) and dedup it on pk,
+    * the latest by `orderCols` winning. The first load creates the table
+    * with min/max stats on `pk`; a later one resolves schema drift
+    * ([[SchemaDrift.align]], as `etl.py:128-141` does before its MERGE)
+    * and runs [[ManifestTable.merge]], which rewrites only the files
+    * holding a batch key. A re-sent unchanged row keeps its first stamp
+    * (the change predicate skips audit columns); a changed or new row
+    * carries this load's.
     */
   def upsertInto(spark: SparkSession, destPath: String, batch: DataFrame,
       pk: Seq[String], orderCols: Seq[String]): Unit = {
-    healCrashWindow(fs(spark), new Path(destPath), new Path(destPath + ".old"))
-    val stamped = Audit.stamp(batch)
-    val merged =
-      if (tableExists(spark, destPath)) {
-        val (dest, aligned) = SchemaDrift.align(spark.read.parquet(destPath), stamped)
-        Merge.upsertBatch(dest, aligned, pk, orderCols)
-      } else Dedup.byKeyLatest(stamped, pk, orderCols)
-    swapInto(spark, destPath, merged)
-  }
-
-  /** Atomic-ish write-new-then-swap for full-table rewrites. Plain parquet
-    * has no transactional commit, so the swap is two directory renames
-    * with a crash window between them: a failure after `dest -> .old` but
-    * before `.staging -> dest` leaves NO live table — only the complete
-    * `.old` backup, which the next writer restores on entry
-    * ([[healCrashWindow]]). Single-writer by contract; every rename is
-    * checked and fails loudly. Readers needing a window-free swap use
-    * [[swapIntoVersioned]].
-    */
-  def swapInto(spark: SparkSession, destPath: String, data: DataFrame): Unit = {
-    val f = fs(spark)
-    val dest = new Path(destPath)
-    val tmp = new Path(destPath + ".staging")
-    val bak = new Path(destPath + ".old")
-    healCrashWindow(f, dest, bak)
-    data.write.mode("overwrite").parquet(tmp.toString)
-    if (f.exists(bak)) f.delete(bak, true)
-    if (f.exists(dest)) {
-      require(f.rename(dest, bak), s"failed to back up $dest -> $bak")
+    val deduped = Dedup.byKeyLatest(Audit.stamp(batch), pk, orderCols)
+    if (ManifestTable.listVersions(spark, destPath).isEmpty)
+      ManifestTable.commit(spark, destPath, deduped, statsCols = pk)
+    else {
+      val (_, aligned) = SchemaDrift.align(ManifestTable.read(spark, destPath), deduped)
+      ManifestTable.merge(spark, destPath, aligned, pk, mergeSchema = true)
     }
-    require(f.rename(tmp, dest), s"failed to publish $tmp -> $dest")
-    f.delete(bak, true)
   }
 
   private val CommitPrefix = "_commit_"

@@ -327,7 +327,8 @@ object UnigramLm {
     require(maxWordLen >= 1 && maxWordLen <= 63,
       s"maxWordLen must be in [1, 63], got $maxWordLen")
     // the seed vocab and the lattice both read the candidate table
-    val cand = s.pin(candidates(words(docs, textCol, maxWordLen), maxPieceLen))
+    val cand = candidates(words(docs, textCol, maxWordLen), maxPieceLen)
+    s.pinCount(cand)
     val vocab = seedVocabFrom(cand, topMulti)
     val cnt = softCountsFrom(softLattice(edgeArrays(cand, vocab)))
     val tot = cnt.agg(sum(col("scnt")).as("stot"))
@@ -384,7 +385,8 @@ object UnigramLm {
       s"maxPieceLen must be in [1, 63], got $maxPieceLen")
     require(maxWordLen >= 1 && maxWordLen <= 63,
       s"maxWordLen must be in [1, 63], got $maxWordLen")
-    val cand = s.pin(candidates(words(docs, textCol, maxWordLen), maxPieceLen))
+    val cand = candidates(words(docs, textCol, maxWordLen), maxPieceLen)
+    s.pinCount(cand)
     var vocab = seedVocabFrom(cand, topMulti)
       .select(col("piece"), col("icost"))
     val out = Seq.newBuilder[(Long, Long, Double)]
@@ -548,7 +550,8 @@ object UnigramLm {
       s"maxPieceLen must be in [1, 63], got $maxPieceLen")
     require(maxWordLen >= 1 && maxWordLen <= 63,
       s"maxWordLen must be in [1, 63], got $maxWordLen")
-    val cand = s.pin(candidates(words(docs, textCol, maxWordLen), maxPieceLen))
+    val cand = candidates(words(docs, textCol, maxWordLen), maxPieceLen)
+    s.pinCount(cand)
     val vocab = seedVocabFrom(cand, topMulti)
     def reEstimated(cnt: DataFrame): DataFrame = {
       val tot = cnt.agg(sum(col("cnt")).as("tot"))
@@ -619,7 +622,8 @@ object UnigramLm {
     require(maxWordLen >= 1 && maxWordLen <= 63,
       s"maxWordLen must be in [1, 63], got $maxWordLen")
     val spark = docs.sparkSession
-    val cand = s.pin(candidates(words(docs, textCol, maxWordLen), maxPieceLen))
+    val cand = candidates(words(docs, textCol, maxWordLen), maxPieceLen)
+    s.pinCount(cand)
     var vocab = seedVocabFrom(cand, topMulti)
       .select(col("piece"), col("icost"))
     val out = Seq.newBuilder[(Long, Long, Long)]
@@ -654,7 +658,8 @@ object UnigramLm {
       s"maxPieceLen must be in [1, 63] (the 6-bit l field), got $maxPieceLen")
     require(maxWordLen >= 1 && maxWordLen <= 63,
       s"maxWordLen must be in [1, 63] (the packed s field), got $maxWordLen")
-    val cand = s.pin(candidates(words(docs, textCol, maxWordLen), maxPieceLen))
+    val cand = candidates(words(docs, textCol, maxWordLen), maxPieceLen)
+    s.pinCount(cand)
     val vocab = seedVocabFrom(cand, topMulti)
     (vocab, segmentFrom(cand, vocab, maxWordLen))
   }

@@ -148,8 +148,9 @@ object Streams {
     stream.join(org.apache.spark.sql.functions.broadcast(dim), keys, "left")
 
   /** The reference pipeline as a stream: each micro-batch is deduped on pk
-    * (deterministic winner) and MERGEd into the parquet destination table
-    * via full-snapshot swap (see [[Sinks.upsertInto]]).
+    * (deterministic winner) and MERGEd into the manifest-table destination,
+    * rewriting only the files that hold a batch key (see
+    * [[Sinks.upsertInto]]).
     */
   def upsertStream(
       spark: SparkSession,
@@ -297,7 +298,7 @@ object Streams {
 
   /** STREAMING UPSERT into a manifest table — foreachBatch MERGE with
     * the exactly-once txn ledger: each micro-batch COW-merges on
-    * `keyCol` (same-key rows replaced, new keys inserted, only files
+    * `keyCol` (changed same-key rows replaced, new keys inserted, only files
     * holding a matching key rewritten) stamped `(queryName, batchId)`,
     * so an at-least-once replay of the last batch is a no-op instead
     * of a double-apply — the CDC-into-lakehouse sink shape
@@ -307,7 +308,7 @@ object Streams {
   def streamMergeInto(tableRoot: String, queryName: String, keyCol: String,
       mergeSchema: Boolean = false)(batch: DataFrame, batchId: Long): Unit = {
     graft.operators.ManifestTable.merge(batch.sparkSession, tableRoot,
-      batch, keyCol, mergeSchema = mergeSchema,
+      batch, Seq(keyCol), mergeSchema = mergeSchema,
       txn = Some(queryName -> batchId))
     ()
   }

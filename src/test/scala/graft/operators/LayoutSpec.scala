@@ -133,17 +133,4 @@ class LayoutSpec extends SparkSuite with AdaptiveSparkPlanHelper {
       Layout.zValueN(Seq(col("a"), col("b"), col("c"), col("d"), col("e")))
     }
   }
-
-  test("compact: bin-packs small files, data unchanged") {
-    val dir = Files.createTempDirectory("graft_compact").toString
-    // Simulate an append-sink aftermath: 24 tiny files.
-    orders.repartition(24).write.mode("overwrite").parquet(dir)
-    // Exact row-level equality (a double SUM would vary with file order).
-    val beforeRows = spark.read.parquet(dir).orderBy("o_orderkey").collect().toSeq
-    val (before, after) = Layout.compact(spark, dir, targetBytes = 512L * 1024 * 1024)
-    assert(before === 24)
-    assert(after === 1) // tiny table packs into one target-size file
-    val afterRows = spark.read.parquet(dir).orderBy("o_orderkey").collect().toSeq
-    assert(afterRows === beforeRows)
-  }
 }

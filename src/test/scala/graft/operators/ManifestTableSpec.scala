@@ -425,7 +425,7 @@ class ManifestTableSpec extends SparkSuite {
     // updates hit one narrow key range + insert brand-new keys
     val updates = docs(50, from = 1000).withColumn("score", col("score") + 1)
       .unionByName(docs(10, from = 9000))
-    val cow = ManifestTable.merge(spark, root, updates, "id")
+    val cow = ManifestTable.merge(spark, root, updates, Seq("id"))
     assert(cow.filesRewritten <= 2,
       s"a 50-key range on 8 range-clustered files must touch few: $cow")
     assert(cow.filesKept >= 6, s"$cow")
@@ -450,11 +450,11 @@ class ManifestTableSpec extends SparkSuite {
     val root = freshRoot()
     val in = docs(1000).repartitionByRange(4, col("id")).sortWithinPartitions("id")
     ManifestTable.commit(spark, root, in, Seq("id"))
-    val cow = ManifestTable.merge(spark, root, docs(10, from = 5000), "id")
+    val cow = ManifestTable.merge(spark, root, docs(10, from = 5000), Seq("id"))
     assert(cow.filesRewritten == 0 && cow.filesKept == 4, s"$cow")
     assert(ManifestTable.read(spark, root).count() == 1010)
     // and an empty updates frame is a no-op that commits nothing
-    val noop = ManifestTable.merge(spark, root, docs(0), "id")
+    val noop = ManifestTable.merge(spark, root, docs(0), Seq("id"))
     assert(noop.version == cow.version && noop.filesRewritten == 0)
   }
 
@@ -498,7 +498,7 @@ class ManifestTableSpec extends SparkSuite {
     // clone-side COW merge rewrites only shared files it touches; the
     // source still reads its own (untouched) originals
     val cow = ManifestTable.merge(spark, cloneRoot,
-      docs(5, from = 100).withColumn("score", col("score") + 1), "id")
+      docs(5, from = 100).withColumn("score", col("score") + 1), Seq("id"))
     assert(cow.filesRewritten >= 1)
     assert(ManifestTable.read(spark, cloneRoot)
       .where(col("id") === 100L).head().getAs[Double]("score") == 1001.0)
@@ -521,7 +521,7 @@ class ManifestTableSpec extends SparkSuite {
     val root = freshRoot()
     ManifestTable.commit(spark, root, docs(10), Seq("id"))
     val e = intercept[IllegalArgumentException] {
-      ManifestTable.merge(spark, root, docs(5).withColumn("extra", lit(1)), "id")
+      ManifestTable.merge(spark, root, docs(5).withColumn("extra", lit(1)), Seq("id"))
     }
     assert(e.getMessage.contains("schema mismatch"))
   }
@@ -535,7 +535,7 @@ class ManifestTableSpec extends SparkSuite {
       .withColumn("score", col("score") + 1)
       .withColumn("grade", col("id") % 3)
       .unionByName(docs(10, from = 9000).withColumn("grade", col("id") % 3))
-    val cow = ManifestTable.merge(spark, root, updates, "id", mergeSchema = true)
+    val cow = ManifestTable.merge(spark, root, updates, Seq("id"), mergeSchema = true)
     assert(cow.filesRewritten <= 2 && cow.filesKept >= 6, s"$cow")
     val t = ManifestTable.read(spark, root)
     assert(t.columns.contains("grade"), "snapshot schema must gain the column")
@@ -551,7 +551,7 @@ class ManifestTableSpec extends SparkSuite {
     val e = intercept[IllegalArgumentException] {
       ManifestTable.merge(spark, root,
         docs(5).withColumn("score", lit("oops")).withColumn("grade", col("id") % 3),
-        "id", mergeSchema = true)
+        Seq("id"), mergeSchema = true)
     }
     assert(e.getMessage.toLowerCase.contains("retyp") ||
       e.getMessage.toLowerCase.contains("type"), s"got ${e.getMessage}")
@@ -705,7 +705,7 @@ class ManifestTableSpec extends SparkSuite {
     val v = ManifestTable.currentVersion(spark, root)
     assert(ManifestTable.rewriteDeletes(spark, root).filesRewritten == 0)
     assert(ManifestTable.currentVersion(spark, root) == v)
-    ManifestTable.merge(spark, root, docs(1, from = 1000), "id")
+    ManifestTable.merge(spark, root, docs(1, from = 1000), Seq("id"))
   }
 
   test("compact materializes MOR deletes and clears tombstones") {
@@ -727,7 +727,7 @@ class ManifestTableSpec extends SparkSuite {
     ManifestTable.commit(spark, root, docs(50), Seq("id", "score"))
     ManifestTable.deleteKeysMor(spark, root, Seq(1L).toDF("id"), "id")
     val e1 = intercept[IllegalArgumentException] {
-      ManifestTable.merge(spark, root, docs(1), "id")
+      ManifestTable.merge(spark, root, docs(1), Seq("id"))
     }
     assert(e1.getMessage.contains("rewriteDeletes"))
     val e2 = intercept[IllegalArgumentException] {
@@ -853,7 +853,7 @@ class ManifestTableSpec extends SparkSuite {
     // COW path on the same base
     val cowRoot = freshRoot()
     ManifestTable.commit(spark, cowRoot, in, Seq("id"))
-    ManifestTable.merge(spark, cowRoot, changelog, "id")
+    ManifestTable.merge(spark, cowRoot, changelog, Seq("id"))
     val mor = ManifestTable.read(spark, morRoot).orderBy("id").collect().toSeq
     val cow = ManifestTable.read(spark, cowRoot).orderBy("id").collect().toSeq
     assert(mor == cow, "MOR overlay must equal the COW merge bit-for-bit")
@@ -926,7 +926,7 @@ class ManifestTableSpec extends SparkSuite {
     // and the data is still the COW merge
     val cowRoot = freshRoot()
     ManifestTable.commit(spark, cowRoot, docs(1600), Seq("id"))
-    ManifestTable.merge(spark, cowRoot, upd, "id")
+    ManifestTable.merge(spark, cowRoot, upd, Seq("id"))
     assert(ManifestTable.read(spark, root).orderBy("id").collect().toSeq ==
       ManifestTable.read(spark, cowRoot).orderBy("id").collect().toSeq)
   }

@@ -90,4 +90,31 @@ class PinsSpec extends SparkSuite {
     assert(cache.isEmpty)
     assert(!warnings.exists(_.contains("already")), s"CacheManager warned: $warnings")
   }
+
+  test("an entry two scopes on two threads pin survives the first scope's exit") {
+    spark.catalog.clearCache()
+    val (firstPinned, secondPinned, firstOut) =
+      (new java.util.concurrent.CountDownLatch(1), new java.util.concurrent.CountDownLatch(1),
+        new java.util.concurrent.CountDownLatch(1))
+    @volatile var entriesAfterFirstExit = -1
+    val first = new Thread(() => {
+      Pins.scoped { s =>
+        s.pin(stage).count()
+        firstPinned.countDown()
+        secondPinned.await()
+      }
+      firstOut.countDown()
+    })
+    val second = new Thread(() => Pins.scoped { s =>
+      firstPinned.await()
+      s.pin(stage).count() // an equal plan, built again on another thread
+      secondPinned.countDown()
+      firstOut.await()
+      entriesAfterFirstExit = entries
+    })
+    Seq(first, second).foreach(_.start())
+    Seq(first, second).foreach(_.join(60000))
+    assert(entriesAfterFirstExit == 1, "the first scope's exit dropped an entry another scope holds")
+    assert(cache.isEmpty, "the last scope's exit must release the shared entry")
+  }
 }

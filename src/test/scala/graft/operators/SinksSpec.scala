@@ -1,8 +1,18 @@
 package graft.operators
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicLong
 
-import graft.SparkSuite
+import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.util.QueryExecutionListener
+import scala.jdk.CollectionConverters._
+
+import graft.{Jobs, SparkSuite}
 
 class SinksSpec extends SparkSuite {
   import spark.implicits._
@@ -12,9 +22,9 @@ class SinksSpec extends SparkSuite {
   test("appendInto: create-on-first-load, then append (write_dataframe path)") {
     val path = tmp("append")
     Sinks.appendInto(spark, path, Seq((1L, "a"), (1L, "a"), (2L, "b")).toDF("id", "v"))
-    assert(spark.read.parquet(path).count() == 2, "first load dedups + creates")
+    assert(ManifestTable.read(spark, path).count() == 2, "first load dedups + creates")
     Sinks.appendInto(spark, path, Seq((3L, "c")).toDF("id", "v"))
-    val t = spark.read.parquet(path)
+    val t = ManifestTable.read(spark, path)
     assert(t.count() == 3)
     assert(t.columns.contains("record_loaded_at"))
   }
@@ -23,7 +33,7 @@ class SinksSpec extends SparkSuite {
     val path = tmp("drift")
     Sinks.appendInto(spark, path, Seq((1L, "a")).toDF("id", "v"))
     Sinks.appendInto(spark, path, Seq((2L, "b", 9.5)).toDF("id", "v", "score"))
-    val t = spark.read.parquet(path)
+    val t = ManifestTable.read(spark, path)
     assert(t.columns.contains("score"))
     assert(t.where($"id" === 1L).select($"score").collect().head.isNullAt(0))
     assert(t.where($"id" === 2L).select($"score").as[Double].head() == 9.5)
@@ -33,7 +43,7 @@ class SinksSpec extends SparkSuite {
     val path = tmp("typedrift")
     Sinks.appendInto(spark, path, Seq((1L, 10)).toDF("id", "v"))
     Sinks.appendInto(spark, path, Seq((2L, "x")).toDF("id", "v"))
-    val t = spark.read.parquet(path)
+    val t = ManifestTable.read(spark, path)
     assert(t.columns.contains("v_string"), t.columns.mkString(","))
     assert(t.where($"id" === 2L).select($"v_string").as[String].head() == "x")
   }
@@ -42,36 +52,6 @@ class SinksSpec extends SparkSuite {
     val df = Seq((1, "a")).toDF("id", "v")
     val back = Sinks.handoff(spark, df, tmp("handoff"))
     assert(back.collect().toSeq == df.collect().toSeq)
-  }
-
-  test("swapInto replaces content atomically-by-rename") {
-    val path = tmp("swap")
-    Sinks.swapInto(spark, path, Seq((1, "old")).toDF("id", "v"))
-    Sinks.swapInto(spark, path, Seq((2, "new")).toDF("id", "v"))
-    assert(spark.read.parquet(path).select($"v").as[String].collect().toSeq == Seq("new"))
-  }
-
-  test("a crash between swapInto's two renames self-heals on the next WRITE") {
-    val path = tmp("swapcrash")
-    Sinks.swapInto(spark, path, Seq((1, "live")).toDF("id", "v"))
-    // reproduce the crash window exactly: dest has been renamed to .old,
-    // the staging->dest rename never happened — no live table on disk
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    fs.rename(new org.apache.hadoop.fs.Path(path),
-      new org.apache.hadoop.fs.Path(path + ".old"))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(path)), "precondition: dest gone")
-    // the probe is PURE (a read-sounding call must not race a concurrent
-    // writer's renames — ADVICE r4): it reports the crashed state as-is
-    assert(!Sinks.tableExists(spark, path), "probe must not mutate")
-    assert(fs.exists(new org.apache.hadoop.fs.Path(path + ".old")),
-      "probe must leave the backup untouched")
-    // the next WRITER owns the repair: appendInto restores the backed-up
-    // rows before appending, so nothing is silently dropped
-    Sinks.appendInto(spark, path, Seq((2, "next")).toDF("id", "v"))
-    assert(spark.read.parquet(path).select($"v").as[String].collect().toSet ==
-      Set("live", "next"), "heal must restore the backup, then append")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(path + ".old")),
-      ".old must be consumed by the restore")
   }
 
   test("swapIntoVersioned publishes via commit marker; readCurrent follows it") {
@@ -208,7 +188,7 @@ class SinksSpec extends SparkSuite {
     // the batch carries a new column: key 2 changes, key 3 is new
     Sinks.upsertInto(spark, path, Seq((2L, 2L, "b2", 7.5), (3L, 1L, "c", 1.0))
       .toDF("id", "seq", "v", "score"), pk = Seq("id"), orderCols = Seq("seq"))
-    val t = spark.read.parquet(path)
+    val t = ManifestTable.read(spark, path)
     assert(t.columns.toSeq == Seq("id", "seq", "v", "record_loaded_at", "score"))
     val rows = t.select($"id", $"v", $"score").as[(Long, String, Option[Double])]
       .collect().toSet
@@ -217,7 +197,7 @@ class SinksSpec extends SparkSuite {
 
   test("upsertInto audit-stamps each load; an unchanged row keeps its first stamp") {
     val path = tmp("upsertstamp")
-    def stamps = spark.read.parquet(path)
+    def stamps = ManifestTable.read(spark, path)
       .select($"id", $"record_loaded_at").as[(Long, java.sql.Timestamp)].collect().toMap
     Sinks.upsertInto(spark, path, Seq((1L, 1L, "a"), (2L, 1L, "b"))
       .toDF("id", "seq", "v"), pk = Seq("id"), orderCols = Seq("seq"))
@@ -231,5 +211,86 @@ class SinksSpec extends SparkSuite {
     assert(second(1L) == first(1L), s"unchanged row must keep its first stamp: $first -> $second")
     assert(second(2L).after(first(2L)), s"changed row must take the new stamp: $first -> $second")
     assert(second(3L) == second(2L), s"one load, one stamp: $second")
+  }
+
+  /** The file names every scan in `plan` reads. */
+  private def scannedFiles(plan: SparkPlan): Seq[String] = plan match {
+    case f: FileSourceScanExec => f.relation.location.inputFiles.toSeq.map(new Path(_).getName)
+    case a: AdaptiveSparkPlanExec => scannedFiles(a.executedPlan)
+    case q: QueryStageExec => scannedFiles(q.plan)
+    case p => p.children.flatMap(scannedFiles)
+  }
+
+  test("upsertInto rewrites only the files holding a batch key; an unchanged row keeps its stamp") {
+    val path = tmp("upsertcow")
+    // 64 key-clustered files over the even keys 0, 2, ..., 12798
+    ManifestTable.commit(spark, path, Audit.stamp(spark.range(0, 6400)
+      .select(($"id" * 2).as("id"), lit(1L).as("seq"), $"id".cast("string").as("v")))
+      .repartitionByRange(64, $"id").sortWithinPartitions("id"), statsCols = Seq("id"))
+    val before = ManifestTable.listEntries(spark, path)
+    assert(before.size >= 64, s"${before.size} files")
+    def range(fe: ManifestTable.FileEntry): (Long, Long) =
+      (fe.stats("id").min.get.toLong, fe.stats("id").max.get.toLong)
+    val Seq(f0, f1) = before.sortBy(range(_)._1).take(2)
+    val (hi0, lo1) = (range(f0)._2, range(f1)._1)
+    def stamps = ManifestTable.read(spark, path)
+      .select($"id", $"record_loaded_at").as[(Long, java.sql.Timestamp)].collect().toMap
+    val first = stamps
+    Thread.sleep(10) // the upsert's clock reads strictly later
+    // hi0 and lo1 change, hi0 - 2 is re-sent unchanged, hi0 + 1 is new:
+    // every key lies in the first two files' [min, max]
+    val batch = Seq((hi0, 2L, "x"), (hi0 - 2, 1L, ((hi0 - 2) / 2).toString),
+      (lo1, 2L, "y"), (hi0 + 1, 1L, "new")).toDF("id", "seq", "v")
+    val candidates = before.filter { fe =>
+      val (mn, mx) = range(fe)
+      mx >= hi0 - 2 && mn <= lo1
+    }
+    assert(candidates.toSet == Set(f0, f1))
+
+    val scanned = new ConcurrentLinkedQueue[String]()
+    val plans = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        scanned.addAll(scannedFiles(qe.executedPlan).asJava)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val (rowsRead, bytesRead) = (new AtomicLong, new AtomicLong)
+    val tasks = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = Option(e.taskMetrics).foreach { m =>
+        rowsRead.addAndGet(m.inputMetrics.recordsRead)
+        bytesRead.addAndGet(m.inputMetrics.bytesRead)
+      }
+    }
+    spark.listenerManager.register(plans)
+    spark.sparkContext.addSparkListener(tasks)
+    // Jobs.counted drains the listener bus, so every event has arrived
+    try Jobs.counted(spark)(Sinks.upsertInto(spark, path, batch, Seq("id"), Seq("seq")))
+    finally {
+      spark.sparkContext.removeSparkListener(tasks)
+      spark.listenerManager.unregister(plans)
+    }
+
+    val after = ManifestTable.listEntries(spark, path)
+    assert(before.count(after.contains) >= 62, "untouched files must carry by reference")
+    val written = after.filterNot(before.contains)
+    val readable = (candidates ++ written).map(fe => new Path(fe.path).getName).toSet
+    assert(scanned.asScala.nonEmpty && scanned.asScala.forall(readable),
+      s"a scan read a file outside the candidates: ${scanned.asScala.filterNot(readable).toSet}")
+    // task metrics: the candidates are read at most three times (probe,
+    // pk-only and full merge scans), the written files once (their
+    // stats) and the pinned batch once per consumer (bounds, probe, the
+    // merge's three reads); a read of any other file adds its 100 rows
+    val (candRows, candBytes) = (candidates.map(_.rows).sum, candidates.map(_.bytes).sum)
+    assert(rowsRead.get <= 3 * candRows + written.map(_.rows).sum + 5 * 4,
+      s"read ${rowsRead.get} rows")
+    // bytes also count parquet footers, checksum files and cached blocks;
+    // a scan of the other 62 files would add their ~130 KB
+    assert(bytesRead.get <= 2 * (3 * candBytes + written.map(_.bytes).sum),
+      s"read ${bytesRead.get} bytes")
+
+    val second = stamps
+    assert(second.size == 6401)
+    assert(second(hi0 - 2) == first(hi0 - 2), "an unchanged row must keep its first stamp")
+    assert(second(hi0).after(first(hi0)) && second(lo1).after(first(lo1)))
+    assert(second(hi0 + 1) == second(hi0), "one load, one stamp")
   }
 }

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
-import graft.operators.Tables
+import graft.operators.{ManifestTable, Tables}
 
 class StreamsSpec extends SparkSuite {
   import spark.implicits._
@@ -47,7 +47,7 @@ class StreamsSpec extends SparkSuite {
     val q1 = Streams.upsertStream(spark, stream1, destPath,
       pk = Seq("id"), orderCols = Seq("seq"), checkpoint = tmpDir("ck1"))
     q1.processAllAvailable(); q1.stop()
-    val afterFirst = spark.read.parquet(destPath)
+    val afterFirst = ManifestTable.read(spark, destPath)
       .select($"id", $"v").as[(Long, String)].collect().toMap
     assert(afterFirst == Map(1L -> "a", 2L -> "b2"))
 
@@ -59,7 +59,7 @@ class StreamsSpec extends SparkSuite {
     val q2 = Streams.upsertStream(spark, stream2, destPath,
       pk = Seq("id"), orderCols = Seq("seq"), checkpoint = tmpDir("ck2"))
     q2.processAllAvailable(); q2.stop()
-    val afterSecond = spark.read.parquet(destPath)
+    val afterSecond = ManifestTable.read(spark, destPath)
       .select($"id", $"v").as[(Long, String)].collect().toMap
     assert(afterSecond == Map(1L -> "a", 2L -> "b3", 3L -> "c"))
   }
@@ -78,38 +78,9 @@ class StreamsSpec extends SparkSuite {
       destPath, pk = Seq("id"), orderCols = Seq("seq"), checkpoint = tmpDir("nocache-ck"))
     try q.processAllAvailable() finally q.stop()
     assert(q.recentProgress.count(_.numInputRows > 0) == 3, "expected three micro-batches")
-    assert(spark.read.parquet(destPath).select($"id", $"v").as[(Long, String)].collect().toMap ==
+    assert(ManifestTable.read(spark, destPath).select($"id", $"v").as[(Long, String)].collect().toMap ==
       Map(1L -> "a2", 2L -> "b2", 3L -> "c", 4L -> "d"))
     assert(spark.sharedState.cacheManager.isEmpty, "a micro-batch's merge left a cache entry behind")
-  }
-
-  test("upsertStream heals a crashed swap before merging — prior rows survive") {
-    val destPath = tmpDir("upsert-crash") + "/t"
-    val in = tmpDir("upsert-crash-in")
-    Seq((1L, 1L, "a"), (2L, 1L, "b")).toDF("id", "seq", "v")
-      .write.mode("overwrite").parquet(in)
-    val q1 = Streams.upsertStream(spark,
-      spark.readStream.schema(spark.read.parquet(in).schema).parquet(in),
-      destPath, pk = Seq("id"), orderCols = Seq("seq"), checkpoint = tmpDir("crash-ck1"))
-    q1.processAllAvailable(); q1.stop()
-    // the swap's crash window: dest renamed to .old, the staged table
-    // never published — only the backup holds the table's rows
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val dest = new org.apache.hadoop.fs.Path(destPath)
-    val bak = new org.apache.hadoop.fs.Path(destPath + ".old")
-    assert(fs.rename(dest, bak) && !fs.exists(dest), "precondition: crashed swap")
-    val in2 = tmpDir("upsert-crash-in2")
-    Seq((2L, 2L, "b2"), (3L, 1L, "c")).toDF("id", "seq", "v")
-      .write.mode("overwrite").parquet(in2)
-    val q2 = Streams.upsertStream(spark,
-      spark.readStream.schema(spark.read.parquet(in2).schema).parquet(in2),
-      destPath, pk = Seq("id"), orderCols = Seq("seq"), checkpoint = tmpDir("crash-ck2"))
-    q2.processAllAvailable(); q2.stop()
-    val after = spark.read.parquet(destPath)
-      .select($"id", $"v").as[(Long, String)].collect().toMap
-    assert(after == Map(1L -> "a", 2L -> "b2", 3L -> "c"),
-      s"the backed-up rows must be restored, then merged: $after")
-    assert(!fs.exists(bak), ".old must be consumed by the restore")
   }
 
   test("SCD2 composes with foreachBatch: per-micro-batch history maintenance") {
@@ -310,7 +281,7 @@ class StreamsSpec extends SparkSuite {
       spark.readStream.schema(schema).parquet(in), destPath,
       pk = Seq("id"), orderCols = Seq("seq"), checkpoint = ck)
     q2.processAllAvailable(); q2.stop()
-    val dest = spark.read.parquet(destPath)
+    val dest = ManifestTable.read(spark, destPath)
       .select($"id", $"v").as[(Long, String)].collect().toMap
     assert(dest == Map(1L -> "a", 2L -> "b"))
     // offsets resumed: the restarted run ingested ONLY the new file's row
@@ -1109,7 +1080,7 @@ class StreamsSpec extends SparkSuite {
     // stream == the same batches applied directly == the COW merge
     val allUpd = upd(0).unionByName(upd(1)).unionByName(upd(2))
     (0 to 2).foreach(i => ManifestTable.updateKeysMor(spark, twin, upd(i), "id"))
-    ManifestTable.merge(spark, cow, allUpd, "id")
+    ManifestTable.merge(spark, cow, allUpd, Seq("id"))
     val got = ManifestTable.read(spark, root).orderBy("id").collect().toSeq
     assert(got == ManifestTable.read(spark, twin).orderBy("id").collect().toSeq,
       "live stream must equal the batch-applied twin row for row")
