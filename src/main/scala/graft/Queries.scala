@@ -57,18 +57,10 @@ object Queries {
     upd.unionByName(resend).unionByName(ins)
   }
 
-  /** `delta` sits behind one exchange, [[Dedup.fullRow]]'s (the
-    * reference dedups every batch before its load, `etl.py:118`; these
-    * rows are distinct, so it keeps every row): [[Merge.merge]] reads its
-    * source three times, and adaptive execution runs the shared exchange
-    * once, where a shuffle-free union of three `orders` scans is scanned
-    * once per consumer. A plain `repartition` would not do: column
-    * pruning narrows the pk-only consumer's copy, so it is not reused.
-    */
   private def stampedOrders(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val orders = t(spark, dir, "orders")
     val dest = Audit.stampAt(orders, lit(DestStamp))
-    val delta = Dedup.fullRow(Audit.stampAt(ordersDelta(orders), lit(DeltaStamp)))
+    val delta = Audit.stampAt(ordersDelta(orders), lit(DeltaStamp))
     (dest, delta)
   }
 

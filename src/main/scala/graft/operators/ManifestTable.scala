@@ -242,7 +242,9 @@ object ManifestTable {
     * per writer app: a replay whose batchId is <= the table's recorded
     * high-water mark for that app is skipped (no new version; the
     * already-containing version is returned) — the exactly-once contract
-    * [[streamInto]] builds on. Returns the committed version number.
+    * [[streamInto]] builds on. An append with no `statsCols` collects
+    * the stats the table already tracks. Returns the committed version
+    * number.
     */
   def commit(spark: SparkSession, tableRoot: String, batch: DataFrame,
       statsCols: Seq[String] = Seq.empty, append: Boolean = false,
@@ -256,6 +258,10 @@ object ManifestTable {
     // the mergeSchema conformance below (publish re-reads post-claim
     // anyway — that one is load-bearing, these two were duplicates)
     val snap0 = latest(f, root)
+    // an append that names no stats columns tracks the table's own, so
+    // every load path composes with the one that created the table
+    val stats =
+      if (append && statsCols.isEmpty) snap0.fold(statsCols)(_.statsCols) else statsCols
     // replay fast path: already applied per the latest snapshot → no
     // data write at all (the post-claim re-check in publish closes the
     // race against a concurrent replay of the same batch)
@@ -283,7 +289,7 @@ object ManifestTable {
       // nullability normalized away: parquet does not round-trip NOT
       // NULL, so identical batches can disagree on it spuriously
       val schemaDdl = StructType(conformed.schema.fields.map(_.copy(nullable = true))).toDDL
-      statsCols.foreach { c =>
+      stats.foreach { c =>
         require(conformed.columns.contains(c),
           s"stats column $c absent from the batch (a type-drifted stats column " +
             "rides its sidecar name; track the sidecar or rewrite the table)")
@@ -291,15 +297,15 @@ object ManifestTable {
         require(statsComparable(dt), s"stats column $c has unsupported type $dt " +
           "(numeric, string, date and timestamp min/max order is portable; others are not)")
       }
-      val (newEntries, _) = writeBatch(spark, f, root, conformed, statsCols)
+      val (newEntries, _) = writeBatch(spark, f, root, conformed, stats)
       try publish(f, root, if (append) "append" else "overwrite",
-        statsCols, txn, maxRetries, expectParent = None) { parent =>
+        stats, txn, maxRetries, expectParent = None) { parent =>
         parent.filter(_ => append).foreach { p =>
           if (!mergeSchema) require(p.schemaDdl == schemaDdl,
             s"append schema mismatch: table is <${p.schemaDdl}>, batch is <$schemaDdl> " +
               "(pass mergeSchema = true for additive evolution)")
-          require(statsCols == p.statsCols,
-            s"append stats columns mismatch: table tracks ${p.statsCols}, batch asked for $statsCols")
+          require(stats == p.statsCols,
+            s"append stats columns mismatch: table tracks ${p.statsCols}, batch asked for $stats")
         }
         val snapshotDdl = parent match {
           case Some(p) if append && mergeSchema => unionDdl(p.schemaDdl, conformed.schema)
@@ -599,6 +605,8 @@ object ManifestTable {
     *     the files that really contain a matching key.
     *  3. REWRITE: [[Merge.merge]] of the touched files with `updates`
     *     is written as one new batch; untouched candidates join group 1.
+    *     A batch small beside the touched files is broadcast, a larger
+    *     one shuffle-joined ([[mergeStrategy]]).
     *
     * On a 100 TB key-clustered table an update of one key range rewrites
     * a handful of files and never scans the rest — the manifest makes
@@ -664,7 +672,8 @@ object ManifestTable {
         val (rewrite, untouchedCand) = touchedFiles(spark, root, m, candidates,
           upd.select(pk.map(col): _*).distinct(), pk)
         val (newEntries, _) = writeBatch(spark, f, root,
-          Merge.merge(align(dfFor(spark, root, m, rewrite)), align(upd), pk),
+          Merge.merge(align(dfFor(spark, root, m, rewrite)), align(upd), pk,
+            mergeStrategy(spark, n, rewrite)),
           m.statsCols)
         val v = publish(f, root, "merge", m.statsCols, txn,
           maxRetries, expectParent = Some(m.version)) { _ =>
@@ -673,6 +682,22 @@ object ManifestTable {
         CowStats(v, pruned.size + untouchedCand.size, 0, rewrite.size)
       }
     }
+  }
+
+  /** Broadcast an `n`-row batch into the merge of `rewrite` only when it
+    * is small beside those files (at most 1/8 of their rows) and, at
+    * their bytes per row, within the session's broadcast budget
+    * (`spark.sql.autoBroadcastJoinThreshold`, which a `broadcast` hint
+    * ignores). Otherwise one shuffle join of the batch and the touched
+    * files, which holds neither side in memory whole.
+    */
+  private def mergeStrategy(spark: SparkSession, n: Long,
+      rewrite: Seq[FileEntry]): Merge.MergeStrategy = {
+    val (rows, bytes) = (rewrite.map(_.rows).sum, rewrite.map(_.bytes).sum)
+    val budget = spark.sessionState.conf.autoBroadcastJoinThreshold
+    if (n * 8 <= rows && n.toDouble * bytes / rows <= budget)
+      Merge.MergeStrategy.BroadcastSource
+    else Merge.MergeStrategy.ShuffleFullOuter
   }
 
   /** `df`'s row count and, per key column, its `[min, max]` in the

@@ -3,9 +3,10 @@ package graft.tools
 import graft.{Queries, Sessions, SparkEntry}
 
 /** Dev harness: print the formatted final physical plan and timed
-  * noop-write for the named queries. The plan is collected once first,
-  * so the print is adaptive execution's final plan (reused exchanges,
-  * chosen joins). Usage: runMain graft.tools.Explain <sfDir> <q1> [q2...]
+  * noop-write for the named queries. The query runs once first, its rows
+  * dropped on the executors, so the print is adaptive execution's final
+  * plan (reused exchanges, chosen joins).
+  * Usage: runMain graft.tools.Explain <sfDir> <q1> [q2...]
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -15,7 +16,7 @@ object Explain {
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       println(s"===== $name =====")
-      df.collect()
+      df.queryExecution.toRdd.foreach(_ => ())
       df.explain("formatted")
       (1 to 2).foreach { i =>
         val t0 = System.nanoTime()

@@ -1,11 +1,18 @@
 package graft.operators
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.plans.{FullOuter, JoinType, LeftOuter}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import scala.jdk.CollectionConverters._
 
-import graft.SparkSuite
+import graft.{Jobs, SparkSuite}
 
 class ManifestTableSpec extends SparkSuite {
   import spark.implicits._
@@ -444,6 +451,56 @@ class ManifestTableSpec extends SparkSuite {
       ManifestTable.changes(spark, root, 1L, cow.version)
     }
     assert(e.getMessage.contains("non-append"))
+  }
+
+  /** The joins in `plan`, with whether each one broadcasts a side. */
+  private def joins(plan: SparkPlan): Seq[(JoinType, Boolean)] = plan match {
+    case a: AdaptiveSparkPlanExec => joins(a.executedPlan)
+    case q: QueryStageExec => joins(q.plan)
+    case j: BaseJoinExec =>
+      (j.joinType, j.isInstanceOf[BroadcastHashJoinExec]) +: j.children.flatMap(joins)
+    case p => p.children.flatMap(joins)
+  }
+
+  /** The joins of every query `body` runs. */
+  private def joinsOf(body: => Unit): Seq[(JoinType, Boolean)] = {
+    val seen = new ConcurrentLinkedQueue[(JoinType, Boolean)]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.addAll(joins(qe.executedPlan).asJava)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    // Jobs.counted drains the listener bus, so every event has arrived
+    try Jobs.counted(spark)(body) finally spark.listenerManager.unregister(listener)
+    seen.asScala.toSeq
+  }
+
+  test("merge broadcasts a batch small beside the touched files and shuffle-joins a large one") {
+    val root = freshRoot()
+    ManifestTable.commit(spark, root,
+      docs(4000).repartitionByRange(8, col("id")).sortWithinPartitions("id"), Seq("id"))
+    // 50 keys in one 500-row file: broadcast, no full outer join
+    val small = joinsOf(ManifestTable.merge(spark, root,
+      docs(50, from = 1000).withColumn("score", col("score") + 1), Seq("id")))
+    assert(small.contains((LeftOuter, true)) &&
+      !small.exists(_._1 == FullOuter), s"$small")
+    // every row changes: the batch is as large as the files it touches
+    val large = joinsOf(ManifestTable.merge(spark, root,
+      ManifestTable.read(spark, root).withColumn("score", col("score") + 2), Seq("id")))
+    assert(large.contains((FullOuter, false)), s"$large")
+    // a disabled broadcast budget shuffles even a small batch
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val noBudget =
+      try joinsOf(ManifestTable.merge(spark, root,
+        docs(10, from = 2000).withColumn("score", col("score") + 3), Seq("id")))
+      finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    assert(noBudget.contains((FullOuter, false)), s"$noBudget")
+    val t = ManifestTable.read(spark, root)
+    assert(t.count() == 4000)
+    // 1000..1049 took +1 then +2; 2000..2009 took +2 then +3
+    assert(t.where(col("score") === col("id") * 10 + 3).count() == 60)
+    assert(t.where(col("score") === col("id") * 10 + 2).count() == 3940)
   }
 
   test("merge with no matching or overlapping keys is append-shaped (zero rewrites)") {

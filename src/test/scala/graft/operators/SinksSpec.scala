@@ -213,6 +213,26 @@ class SinksSpec extends SparkSuite {
     assert(second(3L) == second(2L), s"one load, one stamp: $second")
   }
 
+  test("upsertInto and appendInto compose on one table, in either order") {
+    val path = tmp("upsertappend")
+    Sinks.upsertInto(spark, path, Seq((1L, 1L, "a")).toDF("id", "seq", "v"),
+      pk = Seq("id"), orderCols = Seq("seq"))
+    Sinks.appendInto(spark, path, Seq((2L, 1L, "b")).toDF("id", "seq", "v"))
+    // the append tracks the key stats the upsert's first load chose
+    assert(ManifestTable.listEntries(spark, path).forall(_.stats.keySet == Set("id")))
+    Sinks.upsertInto(spark, path, Seq((2L, 2L, "b2"), (3L, 1L, "c")).toDF("id", "seq", "v"),
+      pk = Seq("id"), orderCols = Seq("seq"))
+    assert(ManifestTable.read(spark, path).select($"id", $"v").as[(Long, String)]
+      .collect().toMap == Map(1L -> "a", 2L -> "b2", 3L -> "c"))
+
+    val other = tmp("appendupsert")
+    Sinks.appendInto(spark, other, Seq((1L, 1L, "a")).toDF("id", "seq", "v"))
+    Sinks.upsertInto(spark, other, Seq((1L, 2L, "a2"), (2L, 1L, "b")).toDF("id", "seq", "v"),
+      pk = Seq("id"), orderCols = Seq("seq"))
+    assert(ManifestTable.read(spark, other).select($"id", $"v").as[(Long, String)]
+      .collect().toMap == Map(1L -> "a2", 2L -> "b"))
+  }
+
   /** The file names every scan in `plan` reads. */
   private def scannedFiles(plan: SparkPlan): Seq[String] = plan match {
     case f: FileSourceScanExec => f.relation.location.inputFiles.toSeq.map(new Path(_).getName)
