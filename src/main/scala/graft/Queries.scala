@@ -182,8 +182,8 @@ object Queries {
       .select(col("vec_id"), col("pos").as("idx"), col("col").as("val"))
 
   // ---------------------------------------------------------------- Q12
-  /** §2.7 class: tumbling event-time window agg (same code path serves the
-    * streaming plan — see Streams.streamingTumblingAgg).
+  /** §2.7 class: tumbling event-time window agg (the same code serves a
+    * watermarked streaming plan).
     */
   def q12TumblingWindow(spark: SparkSession, dir: String): DataFrame =
     Streams.tumblingAgg(t(spark, dir, "events"), "ts", "1 hour")
@@ -260,9 +260,7 @@ object Queries {
 
   /** Rolling-hash document fingerprints (rows-only: xxhash64-based). */
   /** Document fingerprinting via the PORTABLE rolling hash — oracle-checked
-    * bit-for-bit (DuckDB recomputes the same 48-bit polynomial folds). The
-    * xxhash64-based [[TextFunctions.rollingFingerprint]] fast path keeps its
-    * own order-sensitivity spec.
+    * bit-for-bit (DuckDB recomputes the same 48-bit polynomial folds).
     */
   def q17bFingerprint(spark: SparkSession, dir: String): DataFrame =
     Parallelism.ensureCompute(t(spark, dir, "documents")).select(
@@ -1637,8 +1635,8 @@ object Queries {
   /** Data-quality gate over orders: value expectations plus a referential
     * check (o_custkey resolves in customer — composed as a broadcast key
     * join BEFORE the predicate, never a per-row subquery), reported as a
-    * one-pass conditional-count aggregate. The quarantine split itself is
-    * exercised in QualitySpec; the oracle checks every violation count.
+    * one-pass conditional-count aggregate; the oracle checks every
+    * violation count.
     */
   def q76QualityGate(spark: SparkSession, dir: String): DataFrame = {
     val custKeys = t(spark, dir, "customer")
@@ -3265,7 +3263,7 @@ object Queries {
 
   // ---------------------------------------------------------------- Q139
   /** ROUGE-2 overlap scoring
-    * ([[graft.functions.TextFunctions.ngramOverlapClipped]]): each doc
+    * ([[graft.functions.TextFunctions.clippedOverlap]]): each doc
     * (id < 150) as candidate against its successor doc as reference —
     * clipped bigram overlap, then recall (/ ref bigrams) and precision
     * (/ cand bigrams). The generation-eval staple, map-only per pair;
@@ -5560,10 +5558,9 @@ object Queries {
     * contain 5 filtered survivors at all — recall@5 under filtering
     * demands wider probes, which the filter itself has made cheap
     * (ivf4 = exhaustive-within-codes still scans ~10% of the
-    * unfiltered fixed-1 mass). The `brute` row is the
-    * [[graft.operators.Similarity.filteredAnnPlan]] alternative: exact
-    * scoring over the filtered corpus — the RIGHT plan when the
-    * selectivity probe comes back under threshold (spec-pinned).
+    * unfiltered fixed-1 mass). The `brute` row is the exact-scoring
+    * alternative over the filtered corpus — the RIGHT plan when the
+    * filtered slice is small.
     */
   def q264FilteredAnn(spark: SparkSession, dir: String): DataFrame = {
     val emb = tp(spark, dir, "embeddings")
@@ -5635,9 +5632,8 @@ object Queries {
     * ineligible (bare seating is not enough: q264 measures fixed-1
     * recall collapsing to 0.17 under the filter long before the pool
     * is literally too small), and among the eligible the cheapest
-    * priced mass wins; the [[graft.operators.Similarity
-    * .filteredAnnPlan]] brute alternative competes as just another
-    * plan (recall 1.0 by construction, pairs = |Q|·|F∖self|). The
+    * priced mass wins; the exact-scoring brute alternative competes as
+    * just another plan (recall 1.0 by construction, pairs = |Q|·|F∖self|). The
     * three probe plans EXECUTE; brute contributes only its counts-only
     * chooser inputs — its hits/recall row is definitional (n_gt/1.0 by
     * construction, exactly as the oracle hardcodes it), never a scan.
@@ -5915,10 +5911,7 @@ object Queries {
     * distribution on its OWN training corpus vs on a drifted synthetic
     * batch (every component ×1.5 — a calibration/scale shift, the
     * classic embedding-model-update drift), with the retrain flag at
-    * the threshold. This is the batch twin of the standing streaming
-    * monitor ([[graft.streaming.Streams.streamingPqErrorSink]] /
-    * `currentStaleness`, StreamsSpec pins live == batch): a
-    * train-once/ingest-many deployment needs a label-free signal that
+    * the threshold. A train-once/ingest-many deployment needs a label-free signal that
     * the codebooks no longer fit what's arriving, and rising
     * quantization error IS that signal — priced here from two
     * sketch-sized tables, no ground truth, no recall job.
@@ -7677,8 +7670,8 @@ object Queries {
     * max; the `mins + spans` reconstruction is one ulp short) vs a
     * 1.25×-drifted batch. Positive scaling preserves the argmax
     * router, so the drifted batch keeps its lists and the drift shows
-    * up purely as residual displacement — the signal
-    * [[graft.operators.ScalarQuantizer.reindexResidual]] retrains on.
+    * up purely as residual displacement — the signal a residual-tier
+    * retrain acts on.
     */
   def q252ResidualClipMonitor(spark: SparkSession, dir: String): DataFrame = {
     val emb = tp(spark, dir, "embeddings")
@@ -7705,18 +7698,15 @@ object Queries {
   }
 
   // ---------------------------------------------------------------- Q257
-  /** BATCH TWIN of the residual-tier STREAMING clip monitor
-    * ([[graft.streaming.Streams.streamingSq8ResidualClipSink]] +
-    * [[graft.streaming.Streams.currentClipRate]]) — the gate the
-    * serving IVF-SQ8 index actually uses (q241/q252 watch a single
-    * batch; the stream maintains one integer-count row per micro-batch
-    * and the gate aggregates them): three arrival batches split by
+  /** Residual-tier clip monitor over a sequence of arrival batches —
+    * the gate the serving IVF-SQ8 index actually uses (q241/q252 watch a
+    * single batch; here each batch keeps one integer-count row and the
+    * gate aggregates them): three arrival batches split by
     * `vec_id mod 3`, the third drifted 1.25×, each residual-projected
     * against the FROZEN centroids and clip-reported against the FROZEN
     * residual grid, plus the maintained TOTAL row — whose integer sums
     * equal a from-scratch report over the concatenation by
-    * construction (the stream==batch bit-equality StreamsSpec pins) —
-    * with the `clip_rate > 0.01` retrain flag per row.
+    * construction — with the `clip_rate > 0.01` retrain flag per row.
     */
   def q257ResidualClipStream(spark: SparkSession, dir: String): DataFrame = {
     val emb = tp(spark, dir, "embeddings")

@@ -137,28 +137,13 @@ object TextFunctions {
   def redactPii(text: Column): Column =
     piiPatterns.foldLeft(text) { case (c, (p, r)) => regexp_replace(c, p, r) }
 
-  /** 56-bit rolling (polynomial) document fingerprint over tokens:
-    * h = (h * 31 + xxhash64(token)) mod 2^56, evaluated left-to-right.
-    * Order-sensitive (unlike a bag-of-words hash) so token permutations
-    * fingerprint apart. The power-of-two modulus is applied by masking at
-    * every step, keeping intermediates < 2^62 — no ANSI overflow.
-    */
-  def rollingFingerprint(text: Column): Column = {
-    val mask = (1L << 56) - 1
-    aggregate(
-      tokens(text),
-      lit(0L),
-      (acc, t) => (acc * lit(31L) + xxhash64(t).bitwiseAND(lit(mask))).bitwiseAND(lit(mask)))
-  }
-
   /** PORTABLE rolling fingerprint: nested polynomial folds (chars within
     * token, tokens within document) in 48-bit modular arithmetic — every
     * operation is plain integer math over codepoints, so any engine with a
     * string split and a list fold recomputes the exact value (the DuckDB
     * oracle does). 48-bit modulus keeps every intermediate under 2^56 — no
-    * ANSI 64-bit overflow. Order-sensitive at both levels like
-    * [[rollingFingerprint]]; use that one when speed matters more than
-    * cross-engine portability. The inner char folds come from the native
+    * ANSI 64-bit overflow. Order-sensitive at both levels, so token
+    * permutations fingerprint apart. The inner char folds come from the native
     * [[graft.plans.PolyTokenHashes]] expression; only the cheap per-token
     * outer fold stays a HOF.
     */
@@ -307,27 +292,20 @@ object TextFunctions {
       acc + when(vote >= 0, call_function("shiftleft", lit(1L), i)).otherwise(lit(0L))
     })
 
-  /** CLIPPED n-gram overlap — the ROUGE-n numerator (Lin 2004): over the
-    * reference's DISTINCT n-grams, sum min(count in candidate, count in
-    * reference). Clipping is what stops a candidate from farming credit
-    * by repeating one matching n-gram. Recall = overlap / |ref n-grams|,
-    * precision = overlap / |cand n-grams| — the generation-eval and
-    * summarization-QA staple.
+  /** CLIPPED n-gram overlap over n-gram ARRAY columns — the ROUGE-n
+    * numerator (Lin 2004): over the reference's DISTINCT n-grams, sum
+    * min(count in candidate, count in reference). Clipping is what stops
+    * a candidate from farming credit by repeating one matching n-gram.
+    * Recall = overlap / |ref n-grams|, precision = overlap / |cand
+    * n-grams| — the generation-eval and summarization-QA staple. Pure
+    * codegen'd array HOFs (no UDF), map-only per pair; exact integer
+    * result, so an oracle replays it with the same list operations.
     *
-    * Pure codegen'd array HOFs (no UDF), map-only per pair; cost is
-    * O(|distinct ref n-grams| · (|cand| + |ref|)) per row — fine for the
-    * sentence/paragraph texts this measures. Exact integer result, so an
-    * oracle replays it with the same list operations.
-    */
-  def ngramOverlapClipped(cand: Column, ref: Column, n: Int): Column =
-    clippedOverlap(wordNGrams(cand, n), wordNGrams(ref, n))
-
-  /** Clipped overlap over n-gram ARRAY columns. Performance contract:
-    * lambda bodies re-evaluate whatever expression tree they reference,
-    * so pass REAL (pre-projected) array columns here — an inlined
-    * `wordNGrams(...)` would be rebuilt once per distinct ref gram
-    * (measured ~5x on q139's bench slice); a bound column materializes
-    * once per row.
+    * Performance contract: lambda bodies re-evaluate whatever expression
+    * tree they reference, so pass REAL (pre-projected) array columns
+    * here — an inlined `wordNGrams(...)` would be rebuilt once per
+    * distinct ref gram (measured ~5x on q139's bench slice); a bound
+    * column materializes once per row.
     */
   def clippedOverlap(cg: Column, rg: Column): Column =
     aggregate(array_distinct(rg), lit(0L), (acc, g) =>

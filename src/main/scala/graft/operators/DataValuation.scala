@@ -78,7 +78,7 @@ object DataValuation {
 
   /** The shared pair-scoring surface: the bounded test side broadcast
     * against the corpus, 6-dp cosine per pair — `(q_id, c_id, q_lab,
-    * c_lab, sim)`. [[knnShapley]] and [[knnAccuracy]] both rank THIS
+    * c_lab, sim)`. [[knnShapley]] and [[knnAccuracyScored]] both rank THIS
     * relation, so a caller comparing several readouts (q234's
     * before/after audit) scores the pairs ONCE (localCheckpoint it)
     * instead of once per readout.
@@ -134,23 +134,12 @@ object DataValuation {
           .as("shap"))
   }
 
-  /** Exact K-NN classification accuracy of `train` against the bounded
-    * `test` set — the utility u(S) the Shapley values decompose, as a
-    * one-row report `(n_train, n_correct, n_test, accuracy)`. Majority
-    * vote over the 6-dp-cosine top-k (ties by train id), vote ties
-    * broken toward the SMALLEST label — deterministic and
-    * SQL-replayable. Same scale shape as [[knnShapley]]: broadcast
-    * probe, one ranking window, bounded vote aggs.
-    */
-  def knnAccuracy(
-      test: DataFrame, tId: String, tVec: String, tLabel: String,
-      train: DataFrame, cId: String, cVec: String, cLabel: String,
-      k: Int): DataFrame =
-    knnAccuracyScored(scorePairs(test, tId, tVec, tLabel,
-      train, cId, cVec, cLabel), k)
-
-  /** [[knnAccuracy]] over a prebuilt [[scorePairs]] relation (`n_train`
-    * re-derived as the relation's distinct train ids).
+  /** Exact K-NN classification accuracy over a prebuilt [[scorePairs]]
+    * relation — the utility u(S) the Shapley values decompose, as a
+    * one-row report `(n_train, n_correct, n_test, accuracy)` with
+    * `n_train` the relation's distinct train ids. Majority vote over the
+    * 6-dp-cosine top-k (ties by train id), vote ties broken toward the
+    * SMALLEST label — deterministic and SQL-replayable.
     */
   def knnAccuracyScored(scored: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")

@@ -181,20 +181,4 @@ object Decontaminate {
       .agg(min(col("bench_id")).as("bench_id"))
       .select(col("id"), col("bench_id"), col("sim"))
   }
-
-  /** Corpus rows surviving [[semanticContaminationHits]] (cosine to every
-    * benchmark vector stays below `tau`). Anti-join on a synthesized
-    * marker, corpus partitioning untouched — the [[clean]] shape.
-    */
-  def semanticClean(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      bench: DataFrame, bIdCol: String, bVecCol: String,
-      tau: Double): DataFrame = {
-    require(!corpus.columns.contains("__contaminated"),
-      "corpus must not already contain a '__contaminated' column")
-    val flagged = semanticContaminationHits(
-        corpus, idCol, vecCol, bench, bIdCol, bVecCol, tau)
-      .select(col("id").as("__contaminated"))
-    corpus.join(flagged, col(idCol) === col("__contaminated"), "left_anti")
-  }
 }

@@ -26,13 +26,6 @@ object Dedup {
     */
   def fullRow(df: DataFrame): DataFrame = Parallelism.ensure(df).dropDuplicates()
 
-  /** Keep exactly one row per key set (A2, within-batch half of the merge
-    * key dedup). Non-deterministic winner — use [[byKeyLatest]] when a
-    * deterministic ordering exists.
-    */
-  def byKey(df: DataFrame, keys: Seq[String]): DataFrame =
-    df.dropDuplicates(keys)
-
   /** Deterministic per-key winner: the row with the greatest
     * `orderCols` tuple (e.g. latest `ts`, tie-broken by id).
     * Implemented as `max_by(struct(allCols), struct(orderCols))` —

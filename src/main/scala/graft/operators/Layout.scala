@@ -38,17 +38,6 @@ object Layout {
       .sortWithinPartitions(clusterCols.map(col): _*)
       .write.mode("overwrite").parquet(path)
 
-  /** Morton (z-order) interleave of the low 16 bits of two non-negative
-    * int columns — bit i of x lands at position 2i, bit i of y at 2i+1, so
-    * sorting by the z-value clusters BOTH dimensions at once: any box
-    * predicate (x range AND/OR y range) maps to a bounded set of z-runs,
-    * and parquet min/max footers skip files on either column. Plain shift
-    * arithmetic (the `sequence` fold is the same portable shape as the
-    * simhash vote loop) — engine-portable, no UDF.
-    */
-  def zValue(x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    zValueN(Seq(x, y))
-
   /** N-dimensional Morton interleave (k in [2, 4]): bit i of dimension d
     * lands at position `i·k + d`, so the z-sort clusters ALL k dimensions
     * at once. Each dimension contributes [[zBitsPerDim]] low bits —

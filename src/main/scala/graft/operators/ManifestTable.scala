@@ -126,67 +126,6 @@ object ManifestTable {
   def listVersions(spark: SparkSession, tableRoot: String): Seq[Long] =
     committedVersions(fs(spark), new Path(tableRoot)).sorted
 
-  /** TIMESTAMP AS OF resolution (the Delta/Iceberg time-travel-by-time
-    * contract): the newest version whose manifest was PUBLISHED at or
-    * before `tsMillis`. Publish time is the manifest file's own
-    * modification time — the rename that makes a commit visible is
-    * what stamps it, so no format change and no clock the writer could
-    * forget to set; readers resolve from a directory listing alone.
-    * Fails if the table has no version that old (it may have been
-    * vacuumed — same contract as a GC'd version number).
-    */
-  def versionAsOf(spark: SparkSession, tableRoot: String,
-      tsMillis: Long): Long = {
-    val f = fs(spark)
-    val root = new Path(tableRoot)
-    val vs = committedVersions(f, root)
-      .filter(v => f.getFileStatus(manifestPath(root, v))
-        .getModificationTime <= tsMillis)
-    require(vs.nonEmpty,
-      s"no snapshot under $tableRoot published at or before $tsMillis " +
-        "(older versions may have been vacuumed)")
-    vs.max
-  }
-
-  /** [[read]] at the snapshot current as of `tsMillis` ([[versionAsOf]]). */
-  def readAsOf(spark: SparkSession, tableRoot: String,
-      tsMillis: Long): DataFrame =
-    read(spark, tableRoot, Some(versionAsOf(spark, tableRoot, tsMillis)))
-
-  /** SHALLOW CLONE (the Delta `CREATE TABLE ... SHALLOW CLONE` shape):
-    * a NEW table whose v1 manifest references the SOURCE's current data
-    * files BY ABSOLUTE PATH — zero data copied at any table size; the
-    * dev/test/experiment fork primitive. The clone then lives its own
-    * life: its appends/merges land as clone-local relative files and
-    * never touch the source; source commits after the clone are
-    * invisible to it (it pinned a snapshot). Outstanding MOR tombstones
-    * are forbidden (their scopes are source-relative) — materialize
-    * first, like [[merge]].
-    *
-    * The shared-file hazard is the same one Delta documents: `vacuum`
-    * on the SOURCE can retire files the clone still references (the
-    * clone's own vacuum is safe — it only deletes under the clone's
-    * root). Run source vacuums with clone lifetimes in mind.
-    */
-  def shallowClone(spark: SparkSession, srcRoot: String,
-      destRoot: String): Long = {
-    val f = fs(spark)
-    val src = new Path(srcRoot)
-    val m = resolve(f, src, None)
-    require(m.tombstones.isEmpty,
-      "shallow-clone over outstanding merge-on-read deletes would mis-scope " +
-        "their source-relative file lists; run rewriteDeletes or compact first")
-    val dest = new Path(destRoot)
-    require(!f.exists(dest) || committedVersions(f, dest).isEmpty,
-      s"destination $destRoot already holds a table")
-    val qualified = f.makeQualified(src)
-    val absolute = m.files.map(fe =>
-      fe.copy(path = new Path(qualified, fe.path).toString))
-    publish(f, dest, "clone", m.statsCols, None, 5, expectParent = None) { _ =>
-      (m.schemaDdl, absolute, Seq.empty)
-    }
-  }
-
   /** A snapshot's data file paths, table-relative — the audit surface
     * for copy-on-write evidence (which files a [[merge]]/[[deleteRange]]
     * carried by reference vs rewrote).
@@ -1006,10 +945,9 @@ object ManifestTable {
   }
 
   /** The per-row source-file BASENAME. Part-file names carry writer
-    * UUIDs (globally unique), so basename is the file identity that
-    * survives both table-relative entries and a shallow clone's
-    * absolute ones — [[Tombstone.appliesTo]] keeps storing full paths
-    * for auditability, every match normalizes to basename.
+    * UUIDs (globally unique), so basename is the file identity —
+    * [[Tombstone.appliesTo]] keeps storing full paths for auditability,
+    * every match normalizes to basename.
     */
   private val RelCol = "__graft_file_name"
 
@@ -1053,6 +991,14 @@ object ManifestTable {
     val m = resolve(f, root, version)
     subtractTombstones(spark, root, m, dfFor(spark, root, m, m.files))
   }
+
+  /** The current snapshot's schema, from its manifest alone: no data file
+    * is listed or opened (a [[read]] of more than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` files lists
+    * them in a job).
+    */
+  def schema(spark: SparkSession, tableRoot: String): StructType =
+    StructType.fromDDL(resolve(fs(spark), new Path(tableRoot), None).schemaDdl)
 
   private def resolve(f: FileSystem, root: Path, version: Option[Long]): Manifest = {
     val vs = committedVersions(f, root)
@@ -1240,7 +1186,7 @@ object ManifestTable {
   /** OPTIMIZE ZORDER as a new overwrite commit: reads the current
     * snapshot (materializing outstanding MOR tombstones, like
     * [[compact]]), re-clusters it on the Morton interleave of two
-    * numeric columns ([[Layout.zValue]], both dims min/max-normalized
+    * numeric columns ([[Layout.zValueN]], both dims min/max-normalized
     * to 16 bits), and commits — so manifest min/max stats become
     * selective on BOTH dimensions at once and [[scanBox]] prunes files
     * on either. The Delta OPTIMIZE ZORDER / Iceberg
@@ -1464,43 +1410,6 @@ object ManifestTable {
       fe.blooms.get(colName).forall(mightContain))
     PrunedScan(subtractTombstones(spark, root, m, dfFor(spark, root, m, kept)),
       kept.size, m.files.size)
-  }
-
-  /** Metadata-only snapshot comparison — the pipeline-health check that
-    * costs ZERO table IO: per stats column, row/null counts and min/max
-    * of two snapshots, straight from their manifests. A nightly load
-    * whose null rate doubles or whose key range collapses is caught here
-    * before anything downstream scans it.
-    */
-  def statsDrift(spark: SparkSession, tableRoot: String,
-      fromVersion: Long, toVersion: Long): DataFrame = {
-    val f = fs(spark)
-    val root = new Path(tableRoot)
-    val from = resolve(f, root, Some(fromVersion))
-    val to = resolve(f, root, Some(toVersion))
-    val dt = StructType.fromDDL(to.schemaDdl)
-    def rollup(m: Manifest, c: String): (Long, Long, Option[String], Option[String]) = {
-      val ss = m.files.flatMap(_.stats.get(c))
-      val mins = ss.flatMap(_.min)
-      val maxs = ss.flatMap(_.max)
-      (m.files.map(_.rows).sum, ss.map(_.nulls).sum,
-        if (mins.isEmpty) None else Some(mins.min(Ordering.fromLessThan[String](cmp(dt(c).dataType, _, _) < 0))),
-        if (maxs.isEmpty) None else Some(maxs.max(Ordering.fromLessThan[String](cmp(dt(c).dataType, _, _) < 0))))
-    }
-    val cols = from.statsCols.intersect(to.statsCols)
-    val rows = cols.map { c =>
-      val (rf, nf, mnf, mxf) = rollup(from, c)
-      val (rt, nt, mnt, mxt) = rollup(to, c)
-      Row(c, rf, rt, nf, nt, mnf.orNull, mnt.orNull, mxf.orNull, mxt.orNull)
-    }
-    val schema = StructType(Seq(
-      StructField("column", StringType), StructField("rows_from", LongType),
-      StructField("rows_to", LongType), StructField("nulls_from", LongType),
-      StructField("nulls_to", LongType), StructField("min_from", StringType),
-      StructField("min_to", StringType), StructField("max_from", StringType),
-      StructField("max_to", StringType)))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toIndexedSeq, 1), schema)
   }
 
   // ----------------------------------------------------- (de)serialize

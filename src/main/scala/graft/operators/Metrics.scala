@@ -1,33 +1,13 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.Observation
 import org.apache.spark.sql.functions._
 
-/** Zero-cost stage observability: named metrics computed INSIDE an
-  * already-running action (`Dataset.observe`), not by a second scan. The
-  * reference introspects stage payloads by printing them between tasks
-  * (`themovies.py:66,90`) — free on a driver-resident dict, but on a
-  * distributed engine any such stage introspection is a SECOND action
-  * over the data. This is the Spark-native equivalent: the aggregates
-  * ride along with whatever action the caller runs, at shuffle-free
-  * accumulator cost.
-  *
-  * Usage: `val (stamped, obs) = Metrics.observed(df, "ingest", count(lit(1)).as("rows"))`
-  * → run any action on `stamped` → `obs.get("rows")`. Only
-  * accumulator-safe aggregates (count/sum/min/max/avg — no distinct) are
-  * accepted by Spark here, which is exactly what keeps it free at 100 TB.
+/** Evaluation statistics over a DataFrame: inter-rater agreement (Cohen's and Fleiss' kappa), ranking quality
+  * (ROC AUC, average precision) and association (Pearson residuals,
+  * mutual information).
   */
 object Metrics {
-
-  /** Attach named observed metrics to a stage; returns the instrumented
-    * DataFrame and the handle to read after the next action completes.
-    */
-  def observed(df: DataFrame, name: String, metrics: Column*): (DataFrame, Observation) = {
-    require(metrics.nonEmpty, "at least one metric required")
-    val obs = Observation(name)
-    (df.observe(obs, metrics.head, metrics.tail: _*), obs)
-  }
 
   /** Inter-rater AGREEMENT between two boolean labelers over the same
     * rows (Cohen 1960): the full confusion matrix plus observed

@@ -103,20 +103,14 @@ object Multimodal {
     /** Decode payload bytes into (width, height, frames, feature vector). */
     def decode(mediaId: Long, mime: String, payload: Array[Byte]): MediaFeatures
 
-    /** Re-encode the payload at (w, h) — a real codec decodes, scales,
-      * re-encodes; output is again an opaque payload.
-      */
-    def resize(mime: String, payload: Array[Byte], w: Int, h: Int): Array[Byte]
-
     /** Extract the frame at `frameIdx` as its own payload (video -> still).
       */
     def extractFrame(mime: String, payload: Array[Byte], frameIdx: Int): Array[Byte]
   }
 
   /** REAL still-image codec on `javax.imageio` — decodes actual PNG/JPEG
-    * bytes (dimensions come out of the decoded raster, not arithmetic),
-    * resizes through a `Graphics2D` re-render + re-encode, and treats a
-    * still as its own single frame. Feature vector = (width, height, mean
+    * bytes (dimensions come out of the decoded raster, not arithmetic)
+    * and treats a still as its own single frame. Feature vector = (width, height, mean
     * red, mean green) over the decoded pixels — cheap, deterministic, and
     * enough to prove the decode touched every pixel. Rejects non-image
     * mimes: audio/video stay behind [[DeterministicFakeCodec]] until a
@@ -153,18 +147,6 @@ object Multimodal {
       val n = w.toLong * h
       MediaFeatures(mediaId, mime, payload.length.toLong, w, h, n_frames = 1,
         feature = Array(w.toFloat, h.toFloat, sumR.toFloat / n, sumG.toFloat / n))
-    }
-
-    override def resize(mime: String, payload: Array[Byte], w: Int, h: Int): Array[Byte] = {
-      requireImage(mime)
-      val src = read(payload)
-      val dst = new java.awt.image.BufferedImage(
-        w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      val g = dst.createGraphics()
-      try g.drawImage(src, 0, 0, w, h, null) finally g.dispose()
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(dst, "png", bos)
-      bos.toByteArray
     }
 
     /** A still image IS frame 0; any other index is out of range. */
@@ -244,10 +226,9 @@ object Multimodal {
     * vector, proving the decode touched the full waveform. [[MediaFeatures]]
     * mapping for audio: width = sample rate (Hz), height = channels,
     * n_frames = PCM frame count, feature = (rate, channels, frames,
-    * sample sum). `resize` re-encodes at (w = target rate, h = target
-    * channels) via nearest-neighbor resampling; `extractFrame` cuts the
-    * single PCM frame at the index into its own one-frame WAV. Rejects
-    * non-audio mimes; video stays behind [[DeterministicFakeCodec]].
+    * sample sum). `extractFrame` cuts the single PCM frame at the index
+    * into its own one-frame WAV. Rejects non-audio mimes; video stays
+    * behind [[DeterministicFakeCodec]].
     */
   object WavCodec extends MediaCodec {
     import javax.sound.sampled._
@@ -302,30 +283,6 @@ object Multimodal {
         n_frames = frames,
         feature = Array(fmt.getSampleRate, fmt.getChannels.toFloat,
           frames.toFloat, sum.toFloat))
-    }
-
-    /** Audio "resize": transcode to (w = sample rate, h = channels) —
-      * nearest-neighbor frame resampling, channel mix by truncate/repeat.
-      */
-    override def resize(mime: String, payload: Array[Byte], w: Int, h: Int): Array[Byte] = {
-      requireAudio(mime)
-      val (fmt, frames, samples) = read(payload)
-      val srcCh = fmt.getChannels
-      val outFrames = math.max(1,
-        math.round(frames.toDouble * w / fmt.getSampleRate).toInt)
-      val out = new Array[Short](outFrames * h)
-      var i = 0
-      while (i < outFrames) {
-        val srcFrame = math.min(frames - 1,
-          (i.toLong * frames / outFrames).toInt)
-        var c = 0
-        while (c < h) {
-          out(i * h + c) = samples(srcFrame * srcCh + math.min(c, srcCh - 1))
-          c += 1
-        }
-        i += 1
-      }
-      write(w, h, out)
     }
 
     /** One PCM frame (all channels) at `frameIdx`, as its own 1-frame WAV. */
@@ -397,9 +354,8 @@ object Multimodal {
     *
     * [[MediaFeatures]] mapping for video: width/height from the container
     * header, n_frames = data-chunk count, feature = (width, height,
-    * n_frames, total frame payload bytes). `resize` re-encodes every frame
-    * at (w, h) via `Graphics2D`; `extractFrame` returns the frame's JPEG
-    * bytes — a REAL still payload that [[ImageIoCodec]] decodes directly.
+    * n_frames, total frame payload bytes). `extractFrame` returns the
+    * frame's JPEG bytes — a REAL still payload that [[ImageIoCodec]] decodes directly.
     */
   object AviCodec extends MediaCodec {
     private def requireVideo(mime: String): Unit =
@@ -506,23 +462,6 @@ object Multimodal {
           frames.map(_.length.toLong).sum.toFloat))
     }
 
-    override def resize(mime: String, payload: Array[Byte], w: Int, h: Int): Array[Byte] = {
-      requireVideo(mime)
-      val (_, _, frames) = parse(payload)
-      val resized = frames.map { f =>
-        val src = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(f))
-        require(src != null, "AVI frame is not a decodable JPEG")
-        val dst = new java.awt.image.BufferedImage(
-          w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-        val g = dst.createGraphics()
-        try g.drawImage(src, 0, 0, w, h, null) finally g.dispose()
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(dst, "jpg", bos)
-        bos.toByteArray
-      }
-      encodeAvi(w, h, resized)
-    }
-
     /** The frame's own JPEG bytes — directly decodable by [[ImageIoCodec]]. */
     override def extractFrame(mime: String, payload: Array[Byte], frameIdx: Int): Array[Byte] = {
       requireVideo(mime)
@@ -558,22 +497,6 @@ object Multimodal {
           ((checksum >> 32) & 0xffff).toFloat))
     }
 
-    /** Fake resize: deterministic function of (payload, w, h) with size
-      * proportional to the target area — byte identity is irrelevant, the
-      * plumbing (binary in, binary out, stable for same inputs) is what
-      * tests assert.
-      */
-    override def resize(mime: String, payload: Array[Byte], w: Int, h: Int): Array[Byte] = {
-      val outLen = math.max(1, math.min(payload.length, (w.toLong * h % 4096L).toInt + 16))
-      val out = new Array[Byte](outLen)
-      var i = 0
-      while (i < outLen) {
-        out(i) = (payload(i % math.max(1, payload.length)) ^ (w + 31 * h + i)).toByte
-        i += 1
-      }
-      out
-    }
-
     /** Fake frame extraction: a deterministic slice keyed by frame index. */
     override def extractFrame(mime: String, payload: Array[Byte], frameIdx: Int): Array[Byte] = {
       val n = math.max(1, payload.length)
@@ -602,37 +525,6 @@ object Multimodal {
         // real codecs hook per-partition init here (decoder ctx, model load)
         rows.map { row =>
           codec.decode(row.getLong(0), row.getString(1), row.getAs[Array[Byte]](2))
-        }
-      }(enc)
-  }
-
-  /** Deterministic frame sampling for video payloads: every `stride`-th
-    * frame index up to n_frames (metadata-level op; the frame decode itself
-    * is behind the codec seam).
-    */
-  def sampleFrameIndexes(features: Dataset[MediaFeatures], stride: Int): DataFrame =
-    features.toDF().select(
-      col("media_id"),
-      sequence(lit(0), col("n_frames") - 1, lit(stride)).as("frame_indexes"))
-
-  /** A transcoded payload row (resize output schema). */
-  final case class ResizedMedia(
-      media_id: Long, mime: String, payload: Array[Byte], width: Int, height: Int)
-
-  /** Resize every payload to (w, h) through the codec seam — same
-    * mapPartitions shape as [[decodeFeatures]] (per-partition codec init,
-    * narrow, payloads never shuffled).
-    */
-  def resizePayloads(
-      media: DataFrame, w: Int, h: Int,
-      codec: MediaCodec = DeterministicFakeCodec): Dataset[ResizedMedia] = {
-    implicit val enc: Encoder[ResizedMedia] = Encoders.product[ResizedMedia]
-    Parallelism.ensureCompute(media.select("media_id", "mime", "payload"))
-      .mapPartitions { rows =>
-        rows.map { row =>
-          val mime = row.getString(1)
-          ResizedMedia(row.getLong(0), mime,
-            codec.resize(mime, row.getAs[Array[Byte]](2), w, h), w, h)
         }
       }(enc)
   }

@@ -234,23 +234,6 @@ object ProductQuantizer {
         codesArray(col("__vec"), books, dsub).as("codes"): _*)
   }
 
-  /** [[encode]] plus the coarse-list id when a `listOf` router is
-    * given — the ONE codes-row shape both the streaming ingest
-    * ([[graft.streaming.Streams.streamingPqIngest]]) and [[reindex]]
-    * commit. Shared so the two writers cannot drift: a reindex
-    * overwrite that committed a different schema than subsequent
-    * stream appends would make every later append fail the manifest's
-    * schema check.
-    */
-  def codesWithList(corpus: DataFrame, idCol: String, vecCol: String,
-      books: Codebooks, dim: Int,
-      listOf: Column => Column = null): DataFrame = {
-    val codes = encode(corpus, idCol, vecCol, books, dim)
-    if (listOf == null) codes
-    else codes.join(
-      corpus.select(col(idCol), listOf(col(vecCol)).as("list")), Seq(idCol))
-  }
-
   /** Per-row quantization error: the squared-L2 distance between the
     * vector and its PQ reconstruction = Σ over subspaces of the
     * assignment distance (the min over codes of the exact rounded-term
@@ -344,61 +327,6 @@ object ProductQuantizer {
         raise_error(concat(lit("residuals: vector size "),
           size(xd).cast("string"), lit(s" != dim $dim"))))
         .otherwise(zip_with(xd, chosen, (x, c) => x - c)))
-  }
-
-  /** ACT on the staleness gate: retrain codebooks on `corpus`,
-    * re-encode it, and atomically SWAP the manifest-backed codes table
-    * to the new index — one overwrite commit version, so a concurrent
-    * [[adcTopK]] probe over `ManifestTable.read` sees the old index or
-    * the new one, never a mix, and time travel keeps the old version
-    * readable. This closes the frozen-quantizer lifecycle loop:
-    * [[graft.streaming.Streams.streamingPqIngest]] fills the table,
-    * `streamingPqErrorSink` + `currentStaleness` watch quantization
-    * error drift, and when the retrain flag fires this swap retrains —
-    * the cadence a 100 TB standing ingest needs (train-once is a
-    * regime, not a vow). Pass the same `listOf` router used at ingest
-    * to keep the IVF-PQ layout. Returns (new codebooks, committed
-    * version); the serving side swaps the returned books in for its
-    * query-side LUTs.
-    */
-  def reindex(spark: SparkSession, tableRoot: String, corpus: DataFrame,
-      idCol: String, vecCol: String, m: Int, ksub: Int, dim: Int,
-      iters: Int = 2, saltPrefix: String = "pq",
-      listOf: Column => Column = null): (Codebooks, Long) = {
-    val books = train(corpus, idCol, vecCol, m, ksub, dim, iters, saltPrefix)
-    val withList = codesWithList(corpus, idCol, vecCol, books, dim, listOf)
-    val version = ManifestTable.commit(spark, tableRoot, withList)
-    (books, version)
-  }
-
-  /** [[reindex]] for an OPQ index: when the staleness gate fires on a
-    * drifted corpus, the ROTATION is as stale as the codebooks (it was
-    * fit to the old correlation structure), so the retrain re-solves
-    * both — [[trainRotation]] from the fresh corpus, rotated re-encode,
-    * one atomic overwrite commit. The serving side swaps in BOTH
-    * returned artifacts: R for its query-side rotation (queries must be
-    * rotated with the index's own R) and the books for its LUTs; time
-    * travel keeps the previous (R-generation) codes readable for
-    * probes in flight. `listOf` routes on the ROTATED vector — the
-    * q226 layout.
-    */
-  def reindexOpq(spark: SparkSession, tableRoot: String, corpus: DataFrame,
-      idCol: String, vecCol: String, m: Int, ksub: Int, dim: Int,
-      iters: Int = 2, alternations: Int = 1, saltPrefix: String = "pqo",
-      listOf: Column => Column = null)
-      : (Array[Array[Double]], Codebooks, Long) = {
-    val (r, books) = trainRotation(corpus, idCol, vecCol, m, ksub, dim,
-      alternations, iters, saltPrefix)
-    // materialize the dim^2 rotation contraction ONCE: codesWithList
-    // reads the rotated corpus from both its encode branch and its
-    // listOf join branch, and without the barrier each branch re-runs
-    // the full contraction scan
-    val rotCorpus = prepared(corpus, idCol, vecCol, dim)
-      .select(col("__id").as(idCol), rotated(col("__vec"), r).as(vecCol))
-      .localCheckpoint()
-    val withList = codesWithList(rotCorpus, idCol, vecCol, books, dim, listOf)
-    val version = ManifestTable.commit(spark, tableRoot, withList)
-    (r, books, version)
   }
 
   // -------------------------------------- balanced subspaces (OPQ init)
@@ -1009,7 +937,7 @@ object ProductQuantizer {
     * exact centroid hit). One evaluation of the ranked fold per query
     * row, localCheckpointed; [[calibrateProbeBudget]] derives the cap
     * and budget from it, and a deployed router's STALENESS gate
-    * re-reads it on the current sample ([[grantsAtCap]]).
+    * re-reads it on the current sample ([[rank2MarginMedian]]).
     */
   def marginCandidates(queries: DataFrame, idCol: String, vecCol: String,
       cents: Map[Int, Array[Double]], dim: Int, maxProbe: Int): DataFrame = {
@@ -1031,29 +959,12 @@ object ProductQuantizer {
       .localCheckpoint()
   }
 
-  /** Counts-only STALENESS input for a frozen calibration artifact:
-    * the number of (query, k) margin candidates the frozen `ratioCap`
-    * would grant on the CURRENT sample — by construction equal to the
-    * frozen budget when the margin distribution still matches the
-    * build-time audit, so a deployed router gates recalibration on
-    * `grantsAtCap(...) != frozenBudget` (production would band the
-    * compare; on the fixed audit sample the equality is exact). Same
-    * cost shape as the calibration itself: one bounded-table count,
-    * no GT, no probe runs.
-    */
-  def grantsAtCap(queries: DataFrame, idCol: String, vecCol: String,
-      cents: Map[Int, Array[Double]], dim: Int, maxProbe: Int,
-      ratioCap: Double): Long =
-    marginCandidates(queries, idCol, vecCol, cents, dim, maxProbe)
-      .where(col("k") >= 2 && col("__d1") > 0.0 && col("ratio") <= ratioCap)
-      .count()
-
   /** The rank-2 margin-ratio MEDIAN of the sample — the staleness
     * signal a frozen calibration artifact is gated on (q274). An order
     * statistic of the same bounded margin table the calibration reads
     * (counts-only, no GT, no probe runs): any wholesale shift of the
     * margin distribution moves it — including shifts a cap-bounded
-    * count like [[grantsAtCap]] cannot see when the build was
+    * grant count cannot see when the build was
     * degenerate (cap 1.0 / budget 0 grants nothing at its own cap
     * forever, and drifted ratios can land entirely above any fixed
     * band). Median = the ⌈n/2⌉-th smallest 6-dp ratio of the rank-2

@@ -3,18 +3,16 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Row-level data-quality expectations with quarantine routing — the
-  * contract layer in front of a warehouse load. Generalizes the
-  * reference's implicit schema checks (`etl.py:191-236` validates shape;
-  * nothing validates VALUES) into declarative per-row predicates.
+/** Row-level data-quality expectations — the contract layer in front
+  * of a warehouse load. Generalizes the reference's implicit schema
+  * checks (`etl.py:191-236` validates shape; nothing validates VALUES)
+  * into declarative per-row predicates.
   *
-  * Scale design: validation is ONE projection — every expectation
-  * evaluates in the same codegen'd pass, violations collect into an array
-  * column; pass/quarantine are filters over that projection (no second
-  * scan of the input, no per-expectation jobs), and the report is one
-  * partial-aggregatable conditional-count aggregate. Referential checks
-  * compose: join the (broadcast) key set first, then assert the marker
-  * column — the expectation itself never embeds a subquery.
+  * Scale design: the report is one partial-aggregatable conditional-count
+  * aggregate — every expectation evaluates in the same codegen'd pass, no
+  * per-expectation jobs. Referential checks compose: join the (broadcast)
+  * key set first, then assert the marker column — the expectation itself
+  * never embeds a subquery.
   */
 object Quality {
 
@@ -23,12 +21,6 @@ object Quality {
     */
   final case class Expectation(name: String, predicate: Column)
 
-  val ViolationsCol = "__violations"
-
-  /** `df` + a `__violations` array column listing every failed
-    * expectation's name (empty = clean row). NULL predicate results count
-    * as violations (a null check outcome is not a pass).
-    */
   private def checkNames(expectations: Seq[Expectation]): Unit = {
     require(expectations.nonEmpty, "at least one expectation required")
     val names = expectations.map(_.name)
@@ -36,24 +28,6 @@ object Quality {
     require(!names.contains("n_rows"),
       "'n_rows' is reserved for the report's total-row column")
   }
-
-  def validate(df: DataFrame, expectations: Seq[Expectation]): DataFrame = {
-    checkNames(expectations)
-    df.withColumn(ViolationsCol,
-      filter(
-        array(expectations.map(e =>
-          when(coalesce(e.predicate, lit(false)), lit(null).cast("string"))
-            .otherwise(lit(e.name))): _*),
-        v => v.isNotNull))
-  }
-
-  /** Clean rows, violation column dropped. */
-  def pass(validated: DataFrame): DataFrame =
-    validated.where(size(col(ViolationsCol)) === 0).drop(ViolationsCol)
-
-  /** Violating rows, with the violation list kept for triage. */
-  def quarantine(validated: DataFrame): DataFrame =
-    validated.where(size(col(ViolationsCol)) > 0)
 
   /** One-pass violation report: (expectation, n_violations, n_rows) per
     * expectation — a single conditional-count aggregate over the input,

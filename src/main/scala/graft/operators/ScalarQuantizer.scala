@@ -166,53 +166,6 @@ object ScalarQuantizer {
           .otherwise(lit(0.0)).as("clip_rate"))
   }
 
-  /** ACT on the clip gate: retrain the grid on `corpus`, re-encode,
-    * and atomically SWAP the manifest-backed codes table (one
-    * overwrite commit — concurrent [[adcTopK]] probes over
-    * `ManifestTable.read` see the old index or the new one, never a
-    * mix; time travel keeps the old version readable). The SQ8 leg of
-    * the frozen-quantizer lifecycle: `streamingSq8Ingest` fills the
-    * table, `streamingSq8ClipSink` + `currentClipRate` watch the
-    * out-of-box rate, this swap retrains when the gate fires. Pass the
-    * ingest-time `listOf` router to keep an IVF-SQ8 layout.
-    */
-  def reindex(spark: org.apache.spark.sql.SparkSession, tableRoot: String,
-      corpus: DataFrame, idCol: String, vecCol: String, dim: Int,
-      listOf: Column => Column = null): (Stats, Long) = {
-    val stats = train(corpus, vecCol, dim)
-    val routed = if (listOf == null) corpus
-      else corpus.withColumn("list", listOf(col(vecCol)))
-    val codes = encode(routed, idCol, vecCol, stats,
-      carryCols = if (listOf == null) Nil else Seq("list"))
-    (stats, ManifestTable.commit(spark, tableRoot, codes))
-  }
-
-  /** [[reindex]] for the RESIDUAL tier ([[trainResidual]]): when the
-    * clip gate fires on a drifted corpus the per-list centroids are as
-    * stale as the grid (they were the old corpus's means), so the
-    * retrain re-solves BOTH — fresh coarse centroids from the router's
-    * new assignments, a fresh shared residual grid, residual re-encode,
-    * ONE atomic overwrite commit. The serving side swaps in all three
-    * returned artifacts: centroids for its query-side residual
-    * projection, stats for the dequantized ADC, the committed version
-    * for time travel. The staleness signal for this tier is
-    * [[clipReport]] over the RESIDUAL column of a fresh routed batch —
-    * the same one-compare-per-coordinate gate, in residual space.
-    */
-  def reindexResidual(spark: org.apache.spark.sql.SparkSession,
-      tableRoot: String, corpus: DataFrame, idCol: String, vecCol: String,
-      dim: Int, listOf: Column => Column)
-      : (Map[Int, Array[Double]], Stats, Long) = {
-    require(listOf != null, "reindexResidual: the coarse router is the " +
-      "point of the residual tier — pass the ingest-time listOf")
-    val routed = corpus.withColumn("list", listOf(col(vecCol)))
-    val (cents, stats) = trainResidual(routed, vecCol, "list", dim)
-    val codes = encode(
-      ProductQuantizer.residuals(routed, vecCol, "list", cents),
-      idCol, "resid", stats, carryCols = Seq("list"))
-    (cents, stats, ManifestTable.commit(spark, tableRoot, codes))
-  }
-
   /** Asymmetric top-k: full-precision (broadcast) queries against the
     * SQ8-compressed corpus — one codes-only scan, per-pair distance a
     * dim-length fold against the dequantized grid, per-query ranking

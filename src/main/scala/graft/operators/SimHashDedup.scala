@@ -58,48 +58,6 @@ object SimHashDedup {
     Parallelism.ensureCompute(df)
       .select(col(idCol).as("id"), simhash(col(textCol), cfg.ngramN).as("simhash"))
 
-  /** Distributed-vote variant (explode -> 64 sign columns -> partial-agg
-    * sums): one shuffle of (id, featureHash) rows. Only preferable when
-    * single documents are so large that a per-row fold would dominate a
-    * task — e.g. book-length docs; result is bit-identical to
-    * [[fingerprints]].
-    */
-  def fingerprintsDistributed(df: DataFrame, idCol: String, textCol: String, cfg: Config = Config()): DataFrame = {
-    val base = Parallelism.ensureCompute(df).select(col(idCol).as("id"),
-      TextFunctions.wordNGrams(col(textCol), cfg.ngramN).as("feats"))
-    val hashed = base
-      .select(col("id"), explode(col("feats")).as("f"))
-      .select(col("id"), xxhash64(col("f")).as("h"))
-      .repartition(col("id")) // optimizer barrier + pre-partition for groupBy
-    val signCols = (0 until 64).map { j =>
-      when(call_function("shiftright", col("h"), lit(j)).bitwiseAND(lit(1L)) === 1L, 1)
-        .otherwise(-1).as(s"__s$j")
-    }
-    val projected = hashed.select(col("id") +: signCols: _*)
-    val sumCols = (0 until 64).map(j => sum(col(s"__s$j")).as(s"__v$j"))
-    val packed = projected.groupBy(col("id"))
-      .agg(sumCols.head, sumCols.tail: _*)
-      .select(col("id"),
-        (0 until 64).map(j =>
-          when(col(s"__v$j") > 0, lit(1L << j)).otherwise(lit(0L)))
-          .reduce((a: Column, b: Column) => a + b).as("simhash"))
-    base.select(col("id")).distinct()
-      .join(packed, Seq("id"), "left")
-      .select(col("id"), coalesce(col("simhash"), lit(0L)).as("simhash"))
-  }
-
-  /** Verified near-dup pairs (idA < idB, hamming <= maxHamming) via the
-    * pigeonhole chunk join. Chunk count = maxHamming + 1; the chunks
-    * PARTITION all 64 bits (widths differ by at most one) — an uncovered
-    * bit would break the pigeonhole guarantee: maxHamming differences
-    * could hide one per chunk plus one in the uncovered bits, leaving no
-    * identical chunk. `-1L` is the all-ones mask for a 64-bit chunk
-    * (maxHamming = 0), where `(1L << 64) - 1` would be 0 (shift mod 64).
-    */
-  def nearDupPairs(df: DataFrame, idCol: String, textCol: String, cfg: Config = Config()): DataFrame =
-    hammingPairs(fingerprints(df, idCol, textCol, cfg), "id", "simhash",
-      cfg.maxHamming, cfg.maxBucketSize)
-
   /** The pigeonhole Hamming-pair kernel over ANY 64-bit fingerprint
     * column (simhash, image dHash, audio fingerprint …): chunk the bits
     * into `maxHamming + 1` disjoint bands, join on band equality, verify
@@ -122,7 +80,13 @@ object SimHashDedup {
 
   /** Shared banding stage: (chunk, key, id, __fp) rows for `maxHamming+1`
     * disjoint bit-bands, oversized (chunk, key) buckets dropped whole by
-    * the near-dup family's one cap, [[MinHashDedup.dropOversized]].
+    * the near-dup family's one cap, [[MinHashDedup.dropOversized]]. The
+    * chunks PARTITION all 64 bits (widths differ by at most one) — an
+    * uncovered bit would break the pigeonhole guarantee: maxHamming
+    * differences could hide one per chunk plus one in the uncovered bits,
+    * leaving no identical chunk. `-1L` is the all-ones mask for a 64-bit
+    * chunk (maxHamming = 0), where `(1L << 64) - 1` would be 0 (shift mod
+    * 64).
     */
   private def bandedChunks(hashes: DataFrame, idCol: String, hashCol: String,
       maxHamming: Int, maxBucketSize: Int): DataFrame = {
@@ -179,12 +143,5 @@ object SimHashDedup {
         bit_count(col("fpL").bitwiseXOR(col("fpR"))).as("hamming"))
       .where(col("hamming") <= maxHamming)
       .distinct()
-  }
-
-  /** Drop near-dups, keeping the least id of each connected component. */
-  def dedup(df: DataFrame, idCol: String, textCol: String, cfg: Config = Config()): DataFrame = {
-    val groups = MinHashDedup.duplicateGroups(nearDupPairs(df, idCol, textCol, cfg))
-    val losers = groups.where(col("rep") =!= col("id")).select(col("id").as("__loser"))
-    df.join(losers, col(idCol) === col("__loser"), "left_anti")
   }
 }

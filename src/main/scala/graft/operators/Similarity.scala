@@ -71,30 +71,8 @@ object Similarity {
         .withColumn("sim", round(VectorExpressions.cosine(col("q_vec"), col("c_vec")), 6)),
       "q_id", col("sim").desc, "c_id", k)(col("q_id"), col("c_id").as("vec_id"), col("sim"))
 
-  /** Plan-time selectivity probe for FILTERED vector search ("nearest
-    * neighbors WHERE <predicate>"): one counts-only aggregation decides
-    * the plan — at or under `bruteThreshold` filtered rows the right
-    * plan is EXACT scoring over the filtered slice (broadcast-sized,
-    * recall 1.0, and cheaper than any index probe), above it the
-    * predicate composes onto the stored codes table BEFORE the ADC scan
-    * (a pushed-down column filter at 100 TB, never a post-ranking
-    * discard). The q126b/q202 pair-mass pricing discipline applied to
-    * the filtered-ANN plan choice: selectivity is a metadata-cheap
-    * plan-time question, so ask it before spending probe mass. Returns
-    * (decision, filteredCount); q264 prices both branches, the spec
-    * pins the boundary.
-    */
-  def filteredAnnPlan(corpus: DataFrame, predicate: Column,
-      bruteThreshold: Long): (String, Long) = {
-    require(bruteThreshold >= 0,
-      s"bruteThreshold must be >= 0, got $bruteThreshold")
-    val n = Parallelism.ensureCompute(corpus).where(predicate).count()
-    (if (n <= bruteThreshold) "brute" else "ivf", n)
-  }
-
-  /** COUNTS-ONLY plan chooser for filtered vector search — the
-    * [[filteredAnnPlan]] decision generalized to a widened-probe
-    * ladder: each candidate plan arrives as `(name, pricedPairs,
+  /** COUNTS-ONLY plan chooser for filtered vector search over a
+    * widened-probe ladder: each candidate plan arrives as `(name, pricedPairs,
     * minCandidatesPerQuery)`, both numbers measurable from partial
     * aggregations BEFORE any scoring work (the probeMassReport
     * discipline). A plan is ELIGIBLE iff every query retains at least

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Table sinks mirroring the reference's two load paths plus the XCom
@@ -35,7 +35,8 @@ object Sinks {
     * (`etl.py:95`, as [[JdbcSink.mergeInto]] does) and dedup it on pk,
     * the latest by `orderCols` winning. The first load creates the table
     * with min/max stats on `pk`; a later one resolves schema drift
-    * ([[SchemaDrift.align]], as `etl.py:128-141` does before its MERGE)
+    * against the manifest's schema ([[SchemaDrift.align]], as
+    * `etl.py:128-141` does before its MERGE)
     * and runs [[ManifestTable.merge]], which rewrites only the files
     * holding a batch key. A re-sent unchanged row keeps its first stamp
     * (the change predicate skips audit columns); a changed or new row
@@ -47,7 +48,9 @@ object Sinks {
     if (ManifestTable.listVersions(spark, destPath).isEmpty)
       ManifestTable.commit(spark, destPath, deduped, statsCols = pk)
     else {
-      val (_, aligned) = SchemaDrift.align(ManifestTable.read(spark, destPath), deduped)
+      val dest = spark.createDataFrame(
+        java.util.Collections.emptyList[Row](), ManifestTable.schema(spark, destPath))
+      val (_, aligned) = SchemaDrift.align(dest, deduped)
       ManifestTable.merge(spark, destPath, aligned, pk, mergeSchema = true)
     }
   }
@@ -97,7 +100,7 @@ object Sinks {
     * }}}
     *
     * Data is written to a fresh version directory, its schema (`data.schema`
-    * as JSON) beside it, so [[readCurrent]]/[[readVersion]] read without
+    * as JSON) beside it, so [[readCurrent]] reads without
     * parquet schema inference; the version is then published by
     * creating the commit marker — a single atomic file create
     * (`FileSystem.create(overwrite = false)`), so there is no instant at
@@ -157,18 +160,6 @@ object Sinks {
     */
   def listVersions(spark: SparkSession, tableRoot: String): Seq[Long] =
     committedVersions(fs(spark), new Path(tableRoot)).sorted
-
-  /** Time-travel read of one committed version (the what-did-the-table-
-    * say-then read every audit/backfill needs). Fails fast on a version
-    * outside the retention window rather than resolving a GC'd directory.
-    */
-  def readVersion(spark: SparkSession, tableRoot: String, version: Long): DataFrame = {
-    val root = new Path(tableRoot)
-    val vs = committedVersions(fs(spark), root)
-    require(vs.contains(version),
-      s"version $version not committed under $tableRoot (retained: ${vs.sorted.mkString(", ")})")
-    readVersionDir(spark, versionDir(root, version))
-  }
 
   /** Inter-stage handoff (S3): the reference shuttles rows between Airflow
     * tasks via XCom; in one SparkSession the lazy plan needs no handoff at

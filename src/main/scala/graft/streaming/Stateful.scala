@@ -111,51 +111,6 @@ object Stateful extends Serializable {
     userSessions(spark, events.union(sentinels), gapMillis)
   }
 
-  final case class DebKey(user_id: Long, event_type: String)
-
-  /** Streaming DEBOUNCE with the same raw-predecessor semantics as the
-    * batch [[graft.operators.TimeSeries.debounce]]: per (user, type) an
-    * event is emitted iff it follows the previous RAW event by at least
-    * `minGapMillis`; the previous-raw clock advances on every event,
-    * emitted or not. State per key is ONE timestamp; on a streaming
-    * input an event-time timeout clears keys idle past the watermark, so
-    * state is bounded by keys active inside the horizon (set a watermark
-    * before calling). In-batch events sort by ts before applying (same
-    * discipline as [[userSessions]]; ties need a unique ts per key, as
-    * the batch operator's tiebreak column does).
-    */
-  def debounceStream(
-      events: Dataset[Event], minGapMillis: Long): Dataset[Event] = {
-    implicit val eventEnc = Encoders.product[Event]
-    implicit val stateEnc = Encoders.scalaLong
-    implicit val keyEnc = Encoders.product[DebKey]
-    val streaming = events.isStreaming
-
-    def fn(key: DebKey, it: Iterator[Event], state: GroupState[Long]): Iterator[Event] = {
-      if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-      var prev = state.getOption
-      val out = scala.collection.mutable.ArrayBuffer.empty[Event]
-      it.toSeq.sortBy(_.ts.getTime).foreach { e =>
-        if (prev.forall(p => e.ts.getTime - p >= minGapMillis)) out += e
-        prev = Some(e.ts.getTime)
-      }
-      prev.foreach { p =>
-        state.update(p)
-        if (streaming) {
-          val wm = state.getCurrentWatermarkMs()
-          state.setTimeoutTimestamp(math.max(p + minGapMillis, wm + 1))
-        }
-      }
-      out.iterator
-    }
-
-    val timeoutConf =
-      if (streaming) GroupStateTimeout.EventTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    events.groupByKey(e => DebKey(e.user_id, e.event_type))
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf)(fn)
-  }
-
   /** Batch sessionization with NO per-group materialization: shuffle by
     * user, sort each partition by (user, ts) — Spark's sort spills to disk —
     * then a single forward pass holds O(1) state (current user + open
@@ -194,106 +149,5 @@ object Stateful extends Serializable {
           emit
       }
     }
-  }
-
-  // ------------------------------------------------------ streaming funnel
-
-  /** Per-user funnel progress. Candidate lists hold epoch millis; the
-    * chain is recomputed from them on every batch, so LATE events inside
-    * the watermark rewrite it exactly as a batch recomputation would.
-    */
-  final case class FunnelState(minView: Long, clicks: Seq[Long],
-      purchases: Seq[Long], lastSeen: Long)
-
-  final case class FunnelRow(user_id: Long, t_view: Option[Timestamp],
-      t_click: Option[Timestamp], t_purchase: Option[Timestamp])
-
-  private def funnelRow(u: Long, s: FunnelState): FunnelRow = {
-    val tv = if (s.minView == Long.MaxValue) None else Some(s.minView)
-    val tc = tv.flatMap(v => s.clicks.filter(_ > v).minOption)
-    val tp = tc.flatMap(c => s.purchases.filter(_ > c).minOption)
-    FunnelRow(u, tv.map(new Timestamp(_)), tc.map(new Timestamp(_)),
-      tp.map(new Timestamp(_)))
-  }
-
-  /** STREAMING ordered funnel (view → click → purchase, q80's greedy
-    * min-after semantics) with EXACT batch parity under out-of-order
-    * and LATE arrivals inside the watermark — the state shape the
-    * windowless funnel needs: a late-arriving EARLIER view rewrites
-    * the whole chain (an earlier click may now qualify), so the state
-    * keeps candidate sets and recomputes, instead of keeping only the
-    * running answer.
-    *
-    * What bounds the state is the chain's MONOTONICITY: `minView` only
-    * decreases, so the qualifying-click candidate set only grows and
-    * the final `t_click` can only be ≤ the current one — every click
-    * above the current `t_click` is provably never the answer and is
-    * pruned (same argument one stage down for purchases). Retained
-    * state per user = clicks/purchases at or below the current chain
-    * point (pathologically, a user's pre-first-view clicks; typically
-    * a handful of longs), cleared when the watermark passes
-    * `quiesceMillis` beyond the user's last event and the funnel row
-    * emits.
-    *
-    * Batch input runs the IDENTICAL fold and emits directly (a bounded
-    * input has ended by definition) — the parity test's other half.
-    */
-  def funnelStream(spark: SparkSession, events: Dataset[Event],
-      quiesceMillis: Long): Dataset[FunnelRow] = {
-    implicit val rowEnc = Encoders.product[FunnelRow]
-    implicit val stateEnc = Encoders.product[FunnelState]
-    implicit val keyEnc = Encoders.scalaLong
-    val streaming = events.isStreaming
-
-    def fn(u: Long, it: Iterator[Event],
-        state: GroupState[FunnelState]): Iterator[FunnelRow] = {
-      if (state.hasTimedOut) {
-        val out = state.getOption.map(funnelRow(u, _))
-        state.remove()
-        return out.iterator
-      }
-      var s = state.getOption
-        .getOrElse(FunnelState(Long.MaxValue, Nil, Nil, Long.MinValue))
-      it.foreach { e =>
-        val t = e.ts.getTime
-        e.event_type match {
-          case "view" =>
-            s = s.copy(minView = math.min(s.minView, t),
-              lastSeen = math.max(s.lastSeen, t))
-          case "click" =>
-            s = s.copy(clicks = s.clicks :+ t,
-              lastSeen = math.max(s.lastSeen, t))
-          case "purchase" =>
-            s = s.copy(purchases = s.purchases :+ t,
-              lastSeen = math.max(s.lastSeen, t))
-          case _ => () // foreign event types don't advance the funnel
-        }
-      }
-      // monotone prune (soundness argued in the scaladoc): candidates
-      // strictly above the current chain point can never win
-      val tc =
-        if (s.minView == Long.MaxValue) None
-        else s.clicks.filter(_ > s.minView).minOption
-      val keptClicks =
-        tc.fold(s.clicks)(c => s.clicks.filter(_ <= c)).distinct.sorted
-      val tp = tc.flatMap(c => s.purchases.filter(_ > c).minOption)
-      val keptPurchases =
-        tp.fold(s.purchases)(p => s.purchases.filter(_ <= p)).distinct.sorted
-      s = s.copy(clicks = keptClicks, purchases = keptPurchases)
-      if (streaming) {
-        state.update(s)
-        state.setTimeoutTimestamp(math.max(s.lastSeen + quiesceMillis,
-          state.getCurrentWatermarkMs() + 1))
-        Iterator.empty
-      } else {
-        // bounded input: the stream has ended, emit now
-        if (state.exists) state.remove()
-        Iterator.single(funnelRow(u, s))
-      }
-    }
-
-    events.groupByKey(_.user_id).flatMapGroupsWithState(OutputMode.Append,
-      if (streaming) GroupStateTimeout.EventTimeTimeout
-      else GroupStateTimeout.NoTimeout)(fn)
   }
 }

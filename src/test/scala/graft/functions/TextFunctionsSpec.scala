@@ -39,15 +39,6 @@ class TextFunctionsSpec extends SparkSuite {
     assert(one[String](TextFunctions.langId($"text"), "xyzzy plugh qwerty") == "und")
   }
 
-  test("rolling fingerprint is order-sensitive and deterministic") {
-    val f1 = one[Long](TextFunctions.rollingFingerprint($"text"), "a b c")
-    val f2 = one[Long](TextFunctions.rollingFingerprint($"text"), "c b a")
-    val f3 = one[Long](TextFunctions.rollingFingerprint($"text"), "a b c")
-    assert(f1 != f2, "permutation must change the fingerprint")
-    assert(f1 == f3)
-    assert(f1 >= 0 && f1 < (1L << 56))
-  }
-
   test("qualityScore stays in [0,1]") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val bad = docs.select(TextFunctions.qualityScore(col("text")).as("q"))
@@ -160,10 +151,12 @@ class TextFunctionsSpec extends SparkSuite {
       s"decile skew: ${deciles.toMap}")
   }
 
-  test("ngramOverlapClipped: clipping stops repeated-ngram credit farming") {
+  test("clippedOverlap: clipping stops repeated-ngram credit farming") {
     def overlap(cand: String, ref: String, n: Int = 2): Long =
       Seq((cand, ref)).toDF("c", "r")
-        .select(TextFunctions.ngramOverlapClipped($"c", $"r", n).as("o"))
+        .select(TextFunctions.wordNGrams($"c", n).as("cg"),
+          TextFunctions.wordNGrams($"r", n).as("rg"))
+        .select(TextFunctions.clippedOverlap($"cg", $"rg").as("o"))
         .as[Long].head()
     // identical text: overlap == all bigrams
     assert(overlap("a b c d", "a b c d") == 3L)

@@ -68,7 +68,7 @@ class DataValuationSpec extends SparkSuite {
       "disagree often enough that some neighbors must hurt)")
   }
 
-  test("knnAccuracy: hand case — k flips the majority, ties pick the smaller label") {
+  test("knnAccuracyScored: hand case — k flips the majority, ties pick the smaller label") {
     import spark.implicits._
     val test = Seq((100L, Array(1.0f, 0.0f), 1)).toDF("id", "vec", "lab")
     val train = Seq(
@@ -76,8 +76,8 @@ class DataValuationSpec extends SparkSuite {
       (2L, Array(0.9f, 0.1f), 0),    // second, disagrees
       (3L, Array(0.8f, 0.2f), 0)     // third, disagrees
     ).toDF("id", "vec", "lab")
-    def accAt(k: Int): Double = DataValuation.knnAccuracy(
-      test, "id", "vec", "lab", train, "id", "vec", "lab", k)
+    def accAt(k: Int): Double = DataValuation.knnAccuracyScored(
+      DataValuation.scorePairs(test, "id", "vec", "lab", train, "id", "vec", "lab"), k)
       .collect()(0).getAs[Double]("accuracy")
     assert(accAt(1) == 1.0, "1-NN: the agreeing nearest neighbor wins")
     assert(accAt(3) == 0.0, "3-NN: the disagreeing majority wins")

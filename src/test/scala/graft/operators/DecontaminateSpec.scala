@@ -175,16 +175,4 @@ class DecontaminateSpec extends SparkSuite {
     assert(!plan.contains("SortMergeJoin"),
       s"corpus must not shuffle into the score stage:\n$plan")
   }
-
-  test("semanticClean drops exactly the flagged rows, keeps the rest intact") {
-    val kept = Decontaminate.semanticClean(
-        vcorpus, "vid", "vec", vbench, "bid", "vec", tau = 0.9)
-      .select($"vid").as[Long].collect().toSet
-    assert(kept == Set(3L, 4L))
-    intercept[IllegalArgumentException] {
-      Decontaminate.semanticClean(
-        vcorpus.withColumn("__contaminated", lit(1)),
-        "vid", "vec", vbench, "bid", "vec", tau = 0.9)
-    }
-  }
 }

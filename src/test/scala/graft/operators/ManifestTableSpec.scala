@@ -270,22 +270,6 @@ class ManifestTableSpec extends SparkSuite {
     assert(ManifestTable.read(spark, root, Some(v - 1)).count() == 2000)
   }
 
-  test("statsDrift reads two snapshots' health from manifests alone") {
-    val root = freshRoot()
-    val v1 = ManifestTable.commit(spark, root, docs(100), Seq("id", "score"))
-    val withNulls = docs(50, from = 100)
-      .withColumn("score", when(col("id") % 2 === 0, col("score")))
-    val v2 = ManifestTable.commit(spark, root, withNulls, Seq("id", "score"), append = true)
-    val drift = ManifestTable.statsDrift(spark, root, v1, v2)
-      .collect().map(r => r.getString(0) -> r).toMap
-    val s = drift("score")
-    assert(s.getLong(1) == 100L && s.getLong(2) == 150L, "row counts")
-    assert(s.getLong(3) == 0L && s.getLong(4) == 25L, s"null drift: $s")
-    val i = drift("id")
-    assert(i.getString(5) == "0" && i.getString(6) == "0", "min id stable")
-    assert(BigDecimal(i.getString(8)) == BigDecimal(149), s"max id advanced: $i")
-  }
-
   test("optimizeZOrder 3-dim: every dimension prunes files via scanBoxN") {
     val root = freshRoot()
     val in = (0 until 4096).map { i =>
@@ -513,65 +497,6 @@ class ManifestTableSpec extends SparkSuite {
     // and an empty updates frame is a no-op that commits nothing
     val noop = ManifestTable.merge(spark, root, docs(0), Seq("id"))
     assert(noop.version == cow.version && noop.filesRewritten == 0)
-  }
-
-  test("versionAsOf/readAsOf: publish-time travel from manifest mtimes") {
-    val root = freshRoot()
-    ManifestTable.commit(spark, root, docs(100), Seq("id"))
-    Thread.sleep(1100) // mtime granularity can be 1 s on some filesystems
-    val betweenCommits = System.currentTimeMillis()
-    Thread.sleep(1100)
-    ManifestTable.commit(spark, root, docs(50, from = 100), Seq("id"),
-      append = true)
-    assert(ManifestTable.versionAsOf(spark, root, betweenCommits) == 1L)
-    assert(ManifestTable.readAsOf(spark, root, betweenCommits).count() == 100L)
-    assert(ManifestTable.versionAsOf(spark, root,
-      System.currentTimeMillis()) == 2L)
-    intercept[IllegalArgumentException] {
-      ManifestTable.versionAsOf(spark, root, 1000L) // before any commit
-    }
-  }
-
-  test("shallowClone: zero-copy fork, then independent lives") {
-    val src = freshRoot()
-    val cloneRoot = freshRoot()
-    ManifestTable.commit(spark, src, docs(1000), Seq("id"))
-    val v = ManifestTable.shallowClone(spark, src, cloneRoot)
-    assert(v == 1L)
-    // clone reads the source snapshot without copying a byte
-    assert(ManifestTable.read(spark, cloneRoot).count() == 1000L)
-    assert(!new java.io.File(s"$cloneRoot/data").exists ||
-      new java.io.File(s"$cloneRoot/data").listFiles.isEmpty,
-      "a shallow clone must not copy data files")
-    // clone-side append: clone grows, source does not
-    ManifestTable.commit(spark, cloneRoot, docs(10, from = 5000), Seq("id"),
-      append = true)
-    assert(ManifestTable.read(spark, cloneRoot).count() == 1010L)
-    assert(ManifestTable.read(spark, src).count() == 1000L)
-    // source-side append AFTER the clone: invisible to the clone
-    ManifestTable.commit(spark, src, docs(10, from = 9000), Seq("id"),
-      append = true)
-    assert(ManifestTable.read(spark, cloneRoot).count() == 1010L)
-    // clone-side COW merge rewrites only shared files it touches; the
-    // source still reads its own (untouched) originals
-    val cow = ManifestTable.merge(spark, cloneRoot,
-      docs(5, from = 100).withColumn("score", col("score") + 1), Seq("id"))
-    assert(cow.filesRewritten >= 1)
-    assert(ManifestTable.read(spark, cloneRoot)
-      .where(col("id") === 100L).head().getAs[Double]("score") == 1001.0)
-    assert(ManifestTable.read(spark, src)
-      .where(col("id") === 100L).head().getAs[Double]("score") == 1000.0)
-    // clone-side MOR delete on a pre-clone (absolute-path) row subtracts
-    ManifestTable.deleteKeysMor(spark, cloneRoot,
-      Seq(200L).toDF("id"), "id")
-    assert(ManifestTable.read(spark, cloneRoot)
-      .where(col("id") === 200L).count() == 0L)
-    assert(ManifestTable.read(spark, src)
-      .where(col("id") === 200L).count() == 1L)
-    // refuses to clobber an existing table
-    intercept[IllegalArgumentException] {
-      ManifestTable.shallowClone(spark, src, cloneRoot)
-    }
   }
 
   test("merge with a drifted schema fails fast") {

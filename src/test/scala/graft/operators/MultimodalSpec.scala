@@ -31,27 +31,6 @@ class MultimodalSpec extends SparkSuite {
     assert(f1.find(_.media_id == 1L).get.byte_len == 11L)
   }
 
-  test("video mime gets frame sampling metadata") {
-    val vid = Multimodal.attachPayload(
-      Seq((1L, "x" * 100)).toDF("id", "txt"), "id", "txt", "video/mp4")
-    val feats = Multimodal.decodeFeatures(spark, vid)
-    val sampled = Multimodal.sampleFrameIndexes(feats, stride = 10).collect().head
-    val idx = sampled.getAs[scala.collection.Seq[Int]]("frame_indexes").toSeq
-    assert(idx.nonEmpty && idx == idx.sorted && idx.head == 0)
-  }
-
-  test("resizePayloads: deterministic transcode through the codec seam") {
-    val media = Multimodal.attachPayload(
-      Seq((1L, "hello world"), (2L, "second doc")).toDF("id", "txt"),
-      "id", "txt", "image/png")
-    def run = Multimodal.resizePayloads(media, 64, 48).collect()
-      .map(r => (r.media_id, r.payload.toSeq, r.width, r.height)).sortBy(_._1)
-    val a = run
-    assert(a.length == 2 && a.forall { case (_, p, w, h) => p.nonEmpty && w == 64 && h == 48 })
-    assert(a.map(x => (x._1, x._2)).toSeq == run.map(x => (x._1, x._2)).toSeq,
-      "transcode must be deterministic")
-  }
-
   test("ImageIoCodec: generated PNGs are real PNG bytes and decode to exact dims") {
     val docs = Seq(5L, 14L, 27L).toDF("id")
     val media = Multimodal.attachPngPayload(docs, "id",
@@ -66,14 +45,6 @@ class MultimodalSpec extends SparkSuite {
     for (id <- Seq(5L, 14L, 27L))
       assert(feats(id) == (((id % 13 + 1).toInt, (id % 7 + 1).toInt, 1)),
         s"decoded dims for $id: ${feats(id)}")
-  }
-
-  test("ImageIoCodec: resize re-encodes a decodable PNG at the target dims") {
-    val media = Multimodal.attachPngPayload(Seq(9L).toDF("id"), "id", lit(8), lit(6))
-    val resized = Multimodal.resizePayloads(media, 5, 3, Multimodal.ImageIoCodec).collect().head
-    assert((resized.width, resized.height) == ((5, 3)))
-    val back = Multimodal.ImageIoCodec.decode(9L, "image/png", resized.payload)
-    assert((back.width, back.height) == ((5, 3)), "resized payload must decode at target dims")
   }
 
   test("ImageIoCodec: still = frame 0; non-image mimes and OOB frames rejected") {
@@ -122,14 +93,9 @@ class MultimodalSpec extends SparkSuite {
     }
   }
 
-  test("WavCodec: resize resamples to target rate/channels; extractFrame cuts one frame") {
+  test("WavCodec: extractFrame cuts one frame") {
     val media = Multimodal.attachWavPayload(
       Seq(9L).toDF("id"), "id", lit(16000), lit(2), lit(40))
-    val resized = Multimodal.resizePayloads(media, 8000, 1, Multimodal.WavCodec)
-      .collect().head
-    val back = Multimodal.WavCodec.decode(9L, "audio/wav", resized.payload)
-    assert((back.width, back.height, back.n_frames) == ((8000, 1, 20)),
-      "half the rate = half the frames, stereo mixed down to mono")
     val payload = media.collect().head.getAs[Array[Byte]]("payload")
     val frame = Multimodal.WavCodec.extractFrame("audio/wav", payload, 7)
     val f = Multimodal.WavCodec.decode(9L, "audio/wav", frame)
@@ -160,7 +126,7 @@ class MultimodalSpec extends SparkSuite {
         s"decoded container properties for $id: ${feats(id)}")
   }
 
-  test("AviCodec: extractFrame yields a real JPEG; resize re-encodes all frames") {
+  test("AviCodec: extractFrame yields a real JPEG") {
     val media = Multimodal.attachAviPayload(
       Seq(9L).toDF("id"), "id", lit(8), lit(6), lit(4))
     val payload = media.collect().head.getAs[Array[Byte]]("payload")
@@ -174,10 +140,6 @@ class MultimodalSpec extends SparkSuite {
     intercept[IllegalArgumentException] {
       Multimodal.AviCodec.extractFrame("video/avi", payload, 4)
     }
-    val resized = Multimodal.AviCodec.resize("video/avi", payload, 4, 3)
-    val back = Multimodal.AviCodec.decode(9L, "video/avi", resized)
-    assert((back.width, back.height, back.n_frames) == ((4, 3, 4)),
-      "resize must keep the frame count and hit the target dims")
     intercept[IllegalArgumentException] {
       Multimodal.AviCodec.decode(9L, "audio/wav", payload)
     }

@@ -172,18 +172,11 @@ class NearDupSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     def hamming(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
     assert(hamming(fps(1L), fps(2L)) < hamming(fps(1L), fps(4L)),
       "similar docs must be closer in hamming space than unrelated ones")
-    val pairs = SimHashDedup.nearDupPairs(corpus, "doc_id", "text",
-      SimHashDedup.Config(maxHamming = 8))
+    val pairs = SimHashDedup.hammingPairs(
+        SimHashDedup.fingerprints(corpus, "doc_id", "text"), "id", "simhash",
+        maxHamming = 8, maxBucketSize = 1000)
       .select("idA", "idB").as[(Long, Long)].collect().toSet
     assert(!pairs.contains((4L, 5L)), "unrelated docs must not pair")
-  }
-
-  test("distributed fingerprints equal the scalar simhash expression") {
-    val byTable = SimHashDedup.fingerprintsDistributed(corpus, "doc_id", "text")
-      .as[(Long, Long)].collect().toMap
-    val byExpr = SimHashDedup.fingerprints(corpus, "doc_id", "text")
-      .as[(Long, Long)].collect().toMap
-    assert(byTable == byExpr)
   }
 
   test("signatures: empty/short docs never become candidates") {
@@ -363,8 +356,9 @@ class NearDupSpec extends SparkSuite with AdaptiveSparkPlanHelper {
 
   test("simhash maxHamming=0 pairs exact duplicates (64-bit chunk mask)") {
     val df = Seq((1L, base), (2L, base), (3L, unrelated1)).toDF("doc_id", "text")
-    val pairs = SimHashDedup.nearDupPairs(df, "doc_id", "text",
-      SimHashDedup.Config(maxHamming = 0))
+    val pairs = SimHashDedup.hammingPairs(
+        SimHashDedup.fingerprints(df, "doc_id", "text"), "id", "simhash",
+        maxHamming = 0, maxBucketSize = 1000)
       .select("idA", "idB").as[(Long, Long)].collect().toSet
     assert(pairs == Set((1L, 2L)))
   }

@@ -557,39 +557,6 @@ class ProductQuantizerSpec extends SparkSuite {
     assert(ragged.isNullAt(0), "wrong-length vectors must be NULL")
   }
 
-  test("reindexOpq: retrains rotation AND books, swaps atomically, error recovers on drift") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_opq_codes").resolve("t").toString
-    val base = correlated(64)
-    val (r0, b0, v0) = ProductQuantizer.reindexOpq(spark, root, base,
-      "id", "vec", m = 2, ksub = 2, dim = 4)
-    // the committed snapshot equals a fresh encode of the r0-rotated corpus
-    val rot0 = base.select(col("id"),
-      ProductQuantizer.rotated(col("vec"), r0).as("vec"))
-    val direct = ProductQuantizer.encode(rot0, "id", "vec", b0, dim = 4)
-    val snap = ManifestTable.read(spark, root)
-    assert(snap.exceptAll(direct).isEmpty && direct.exceptAll(snap).isEmpty,
-      "swapped OPQ index must equal the fresh rotated encode")
-    // drift (scale shift): the gate's ACT path retrains BOTH artifacts
-    val drifted = base.select(col("id"),
-      transform(col("vec"), x => x * 3.0).as("vec"))
-    val (r1, b1, v1) = ProductQuantizer.reindexOpq(spark, root, drifted,
-      "id", "vec", m = 2, ksub = 2, dim = 4)
-    assert(v1 > v0, "re-reindex must commit a new version")
-    val staleErr = ProductQuantizer.quantizationError(
-      drifted.select(col("id"),
-        ProductQuantizer.rotated(col("vec"), r0).as("vec")),
-      "id", "vec", b0, dim = 4).agg(sum(col("err"))).head().getDouble(0)
-    val freshErr = ProductQuantizer.quantizationError(
-      drifted.select(col("id"),
-        ProductQuantizer.rotated(col("vec"), r1).as("vec")),
-      "id", "vec", b1, dim = 4).agg(sum(col("err"))).head().getDouble(0)
-    assert(freshErr < staleErr,
-      s"retrained OPQ index must fit the drifted corpus better: stale $staleErr fresh $freshErr")
-    // probe-in-flight safety: the r0-generation codes stay readable
-    assert(ManifestTable.read(spark, root, Some(v0)).count() == 64)
-  }
-
   /** Planted-cluster corpus for the adaptive-probe pins: 16-dim, 4
     * clusters keyed by the quarter-lead pattern (+2 on own lead, -2 on
     * the others), every 7th row a boundary straddler of pair (k, k+1)
@@ -780,14 +747,18 @@ class ProductQuantizerSpec extends SparkSuite {
         onCent, "id", "vec", cents, dim = 2, maxProbe = 3)
     }
     assert(e.getMessage.contains("unobservable"), e.getMessage)
-    // grantsAtCap is calibrateProbeBudget's budget by construction when
-    // handed the calibrated cap — the two APIs share one margin table
-    assert(ProductQuantizer.grantsAtCap(
-      queries, "id", "vec", cents, dim = 2, maxProbe = 3,
-      ratioCap = 1.221607) == 1L)
-    assert(ProductQuantizer.grantsAtCap(
-      queries, "id", "vec", cents, dim = 2, maxProbe = 3,
-      ratioCap = 1.493827) == 2L)
+    // calibrateProbeBudget's budget is the count of margin candidates
+    // under its cap — the calibration and the median share one table
+    val gt = Seq((1L, 101L), (2L, 102L), (3L, 103L)).toDF("q_id", "vec_id")
+    val corpusLists = Seq((101L, 0), (102L, 1), (103L, 2)).toDF("vec_id", "list")
+    val (cap, budget) = ProductQuantizer.calibrateProbeBudget(
+      queries, "id", "vec", cents, dim = 2, maxProbe = 3, gt, corpusLists)
+    def grants(ratioCap: Double): Long = ProductQuantizer.marginCandidates(
+        queries, "id", "vec", cents, dim = 2, maxProbe = 3)
+      .where(col("k") >= 2 && col("__d1") > 0.0 && col("ratio") <= ratioCap)
+      .count()
+    assert(cap == 1.221607 && budget == 1 && grants(cap) == 1L)
+    assert(grants(1.493827) == 2L)
   }
 
   test("calibrateProbeBudget: needed > 0 with zero coverable candidates " +

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
 
-/** Expectations gate: pass/quarantine routing, null-predicate handling,
-  * one-pass report, and the observe-based stage metrics. */
+/** Expectations gate: the one-pass violation report (a NULL predicate
+  * result counts as a violation), and the evaluation metrics. */
 class QualitySpec extends SparkSuite {
   import spark.implicits._
 
@@ -22,20 +22,6 @@ class QualitySpec extends SparkSuite {
     Quality.Expectation("positive_price", $"price" > 0),
     Quality.Expectation("ok_status", $"status" === "ok"))
 
-  test("validate routes rows; quarantine keeps the violation list") {
-    val v = Quality.validate(rows, exps)
-    val passIds = Quality.pass(v).select($"id").as[Long].collect().toSet
-    assert(passIds == Set(1L))
-    assert(!Quality.pass(v).columns.contains(Quality.ViolationsCol))
-    val quar = Quality.quarantine(v)
-      .select($"id", col(Quality.ViolationsCol))
-      .as[(Long, Seq[String])].collect().toMap
-    assert(quar(2L) == Seq("positive_price"))
-    assert(quar(3L) == Seq("positive_price"), "null predicate result is a violation")
-    assert(quar(4L) == Seq("ok_status"))
-    assert(quar(5L) == Seq("positive_price", "ok_status"))
-  }
-
   test("report counts violations per expectation in one aggregate") {
     val rep = Quality.report(rows, exps)
       .select($"expectation", $"n_violations", $"n_rows")
@@ -43,21 +29,6 @@ class QualitySpec extends SparkSuite {
     assert(rep == Set(
       ("positive_price", 3L, 5L),
       ("ok_status", 2L, 5L)))
-  }
-
-  test("pass + quarantine partition the input exactly") {
-    val v = Quality.validate(rows, exps)
-    assert(Quality.pass(v).count() + Quality.quarantine(v).count() == rows.count())
-  }
-
-  test("Metrics.observed reads stage aggregates off the action, no second scan") {
-    val (instrumented, obs) = Metrics.observed(rows, "stage1",
-      count(lit(1)).as("rows"),
-      sum(when($"price" > 0, 1).otherwise(0)).as("n_positive"))
-    instrumented.write.format("noop").mode("overwrite").save()
-    val m = obs.get
-    assert(m("rows") == 5L, s"got $m")
-    assert(m("n_positive") == 2L, s"got $m")
   }
 
   test("Metrics.agreement: perfect raters kappa=1, skewed-base-rate kappa ~0") {

@@ -194,18 +194,12 @@ class ScalarQuantizerSpec extends SparkSuite {
     assert(gated == free)
   }
 
-  test("reindexResidual: swaps centroids+grid+codes atomically; drifted residuals clip, retrain recovers") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_sq8r").resolve("t").toString
+  test("trainResidual: drifted residuals clip, a grid retrained on them recovers") {
     val listOf = (v: org.apache.spark.sql.Column) =>
       (element_at(v, 1) > 0.0).cast("int")
-    val (cents0, stats0, v0) = ScalarQuantizer.reindexResidual(
-      spark, root, emb, "vec_id", "embedding", 64, listOf)
-    assert(cents0.keySet.subsetOf(Set(0, 1)) && stats0.dim == 64 && v0 == 1L)
-    // the committed codes carry the list and byte codes
-    val codes = ManifestTable.read(spark, root)
-    assert(codes.columns.toSet == Set("vec_id", "list", "codes"))
-    assert(codes.count() == emb.count())
+    val (cents0, stats0) = ScalarQuantizer.trainResidual(
+      emb.withColumn("list", listOf(col("embedding"))), "embedding", "list", 64)
+    assert(cents0.keySet.subsetOf(Set(0, 1)) && stats0.dim == 64)
     // a 3x-drifted batch clips in RESIDUAL space (the tier's gate)
     val drifted = emb.select(col("vec_id"), transform($"embedding",
       x => x.cast("double") * lit(3.0)).as("embedding"))
@@ -216,19 +210,15 @@ class ScalarQuantizerSpec extends SparkSuite {
       .collect()(0)
     assert(clip.getAs[Double]("clip_rate") > 0.0,
       s"drifted residuals must clip: $clip")
-    // retrain on the drifted corpus: new version, fresh grid fits it
-    val (cents1, stats1, v1) = ScalarQuantizer.reindexResidual(
-      spark, root, drifted.select($"vec_id", $"embedding"),
-      "vec_id", "embedding", 64, listOf)
-    assert(v1 == 2L)
+    // retrain on the drifted corpus: the fresh grid fits it
+    val (cents1, stats1) = ScalarQuantizer.trainResidual(
+      drifted, "embedding", "list", 64)
     val rResid = ProductQuantizer.residuals(
       drifted, "embedding", "list", cents1)
     val clip1 = ScalarQuantizer.clipReport(rResid, "resid", stats1)
       .collect()(0)
     assert(clip1.getAs[Long]("n_clipped") == 0L,
       "the retrained grid is the drifted corpus's own min/max")
-    // time travel still reads the old index
-    assert(ManifestTable.read(spark, root, Some(1L)).count() == emb.count())
   }
 
   test("adcTopK: deterministic across repartitionings") {

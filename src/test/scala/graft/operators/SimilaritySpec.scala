@@ -602,24 +602,6 @@ class SimilaritySpec extends SparkSuite {
       s"projected space lost cluster structure: $sameCluster/${top.length}")
   }
 
-  test("filteredAnnPlan: the selectivity probe picks the plan at the boundary") {
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    val (decB, nB) = Similarity.filteredAnnPlan(emb, col("label") === 3,
-      bruteThreshold = 1000)
-    assert(decB == "brute" && nB > 0 && nB <= 1000)
-    val (decI, nI) = Similarity.filteredAnnPlan(emb, col("label") === 3,
-      bruteThreshold = nB - 1)
-    assert(decI == "ivf" && nI == nB,
-      "above the threshold the filter must route to the pre-filtered probe")
-    // exactly AT the threshold: brute (<= is the contract)
-    val (decEq, _) = Similarity.filteredAnnPlan(emb, col("label") === 3,
-      bruteThreshold = nB)
-    assert(decEq == "brute")
-    intercept[IllegalArgumentException] {
-      Similarity.filteredAnnPlan(emb, col("label") === 3, bruteThreshold = -1)
-    }
-  }
-
   test("choosePlans: headroom floor gates eligibility, cheapest eligible wins, ties all flagged") {
     // ivf1 cheap but starved; ivf2 eligible and cheapest; ivf4/brute tie
     val plans = Seq(("ivf1", 50L, 8L), ("ivf2", 120L, 25L),

@@ -5,7 +5,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions.lit
@@ -115,17 +115,15 @@ class SinksSpec extends SparkSuite {
     assert(Sinks.readCurrent(spark, root).select($"tag").as[String].collect().toSet == Set("v8"))
   }
 
-  test("time travel: readVersion resolves retained versions, rejects GC'd ones") {
+  test("versioned retention: keepVersions = 3 keeps the newest three") {
     val root = tmp("vtravel")
     (1 to 3).foreach { i =>
       Sinks.swapIntoVersioned(spark, root,
         Seq((i, s"v$i")).toDF("id", "v"), keepVersions = 3)
     }
     assert(Sinks.listVersions(spark, root) == Seq(1L, 2L, 3L))
-    assert(Sinks.readVersion(spark, root, 2L).select($"v").as[String].collect().toSeq == Seq("v2"))
     Sinks.swapIntoVersioned(spark, root, Seq((4, "v4")).toDF("id", "v"), keepVersions = 3)
     assert(Sinks.listVersions(spark, root) == Seq(2L, 3L, 4L), "v1 left the horizon")
-    intercept[IllegalArgumentException] { Sinks.readVersion(spark, root, 1L) }
   }
 
   test("versioned retention: latest two versions kept, older GC'd") {
@@ -161,15 +159,14 @@ class SinksSpec extends SparkSuite {
     val dirs = Seq(1L, 2L).map(v => f"$root/v$v%08d")
     dirs.foreach(d => assert(new java.io.File(d, "_graft_schema.json").isFile))
     val inferred = dirs.map(d => spark.read.parquet(d).schema)
-    val ((current, v1), jobs) = graft.Jobs.counted(spark) {
-      (Sinks.readCurrent(spark, root), Sinks.readVersion(spark, root, 1L))
+    val (current, jobs) = graft.Jobs.counted(spark) {
+      Sinks.readCurrent(spark, root)
     }
     assert(jobs == 0, s"versioned reads submitted $jobs job(s) before an action")
     assert(current.schema == inferred(1) && current.schema.json == inferred(1).json)
-    assert(v1.schema == inferred(0) && v1.schema.json == inferred(0).json)
     assert(current.schema("v").metadata.getString("comment") == "title")
     assert(current.select($"v").as[String].collect().toSeq == Seq("v2"))
-    assert(v1.select($"s.d").as[Double].collect().toSeq == Seq(0.5))
+    assert(current.select($"s.d").as[Double].collect().toSeq == Seq(1.0))
   }
 
   test("a version written without a stored schema still reads (inferred)") {
@@ -178,7 +175,6 @@ class SinksSpec extends SparkSuite {
     val inferred = spark.read.parquet(f"$root/v00000002").schema
     assert(Sinks.readCurrent(spark, root).schema == inferred)
     assert(Sinks.readCurrent(spark, root).select($"v").as[String].collect().toSeq == Seq("v2"))
-    assert(Sinks.readVersion(spark, root, 1L).select($"id").as[Long].collect().toSeq == Seq(1L))
   }
 
   test("upsertInto aligns a drifted batch before merging (added column)") {
@@ -241,12 +237,17 @@ class SinksSpec extends SparkSuite {
     case p => p.children.flatMap(scannedFiles)
   }
 
-  test("upsertInto rewrites only the files holding a batch key; an unchanged row keeps its stamp") {
-    val path = tmp("upsertcow")
-    // 64 key-clustered files over the even keys 0, 2, ..., 12798
+  /** 64 key-clustered files over the even keys 0, 2, ..., 12798. */
+  private def clusteredTable(name: String): String = {
+    val path = tmp(name)
     ManifestTable.commit(spark, path, Audit.stamp(spark.range(0, 6400)
       .select(($"id" * 2).as("id"), lit(1L).as("seq"), $"id".cast("string").as("v")))
       .repartitionByRange(64, $"id").sortWithinPartitions("id"), statsCols = Seq("id"))
+    path
+  }
+
+  test("upsertInto rewrites only the files holding a batch key; an unchanged row keeps its stamp") {
+    val path = clusteredTable("upsertcow")
     val before = ManifestTable.listEntries(spark, path)
     assert(before.size >= 64, s"${before.size} files")
     def range(fe: ManifestTable.FileEntry): (Long, Long) =
@@ -312,5 +313,24 @@ class SinksSpec extends SparkSuite {
     assert(second(hi0 - 2) == first(hi0 - 2), "an unchanged row must keep its first stamp")
     assert(second(hi0).after(first(hi0)) && second(lo1).after(first(lo1)))
     assert(second(hi0 + 1) == second(hi0), "one load, one stamp")
+  }
+
+  test("upsertInto lists no table files: the dest schema comes from the manifest") {
+    val path = clusteredTable("upsertlist")
+    assert(ManifestTable.listEntries(spark, path).size >= 64)
+    val descriptions = new ConcurrentLinkedQueue[String]()
+    val jobs = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        descriptions.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    spark.sparkContext.addSparkListener(jobs)
+    // Jobs.counted drains the listener bus, so every job start has arrived
+    try Jobs.counted(spark)(Sinks.upsertInto(spark, path,
+      Seq((0L, 2L, "x"), (1L, 1L, "new")).toDF("id", "seq", "v"), Seq("id"), Seq("seq")))
+    finally spark.sparkContext.removeSparkListener(jobs)
+    val listing = descriptions.asScala.filter(_.startsWith("Listing leaf files"))
+    assert(descriptions.asScala.nonEmpty && listing.isEmpty,
+      s"${listing.size} file-listing job(s): ${listing.mkString("; ")}")
   }
 }

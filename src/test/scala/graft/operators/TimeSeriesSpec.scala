@@ -168,6 +168,20 @@ class TimeSeriesSpec extends SparkSuite {
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
+  test("trend moments of separate batches merge to the one-shot fit") {
+    def slice(lo: Int, hi: Int) = (lo until hi)
+      .map(i => ("g", i.toLong, 10.0 + 0.5 * i + (if (i % 2 == 0) 1.0 else -1.0)))
+      .toDF("k", "x", "y")
+    val moments = Seq(slice(0, 40), slice(40, 80), slice(80, 120))
+      .map(TimeSeries.trendMoments(_, Seq("k"), "x", "y"))
+      .reduce(_ unionByName _)
+    val merged = TimeSeries.mergeTrendMoments(moments, Seq("k")).collect().toSeq
+    val oneShot = TimeSeries.trendOls(slice(0, 120), Seq("k"), "x", "y")
+      .collect().toSeq
+    assert(merged == oneShot,
+      s"merged fit must equal the from-scratch fit: $merged vs $oneShot")
+  }
+
   test("debounce drops only events under the gap, per key, raw-predecessor semantics") {
     import java.sql.Timestamp
     def ts(s: String) = Timestamp.valueOf(s)

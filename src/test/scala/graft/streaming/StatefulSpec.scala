@@ -89,59 +89,6 @@ class StatefulSpec extends SparkSuite {
     } finally q.stop()
   }
 
-
-  test("streaming funnel: late view rewrites the chain, equals batch q80 semantics") {
-    val dir = java.nio.file.Files.createTempDirectory("stateful-funnel").toString
-    // batch 1 arrives OUT OF ORDER and before the view: clicks at t12/t20,
-    // purchases at t15/t25 — with no view yet, nothing qualifies
-    Seq(
-      Stateful.Event(1L, ts(20), "click", 0.0),
-      Stateful.Event(1L, ts(12), "click", 0.0),
-      Stateful.Event(1L, ts(25), "purchase", 0.0),
-      Stateful.Event(1L, ts(15), "purchase", 0.0),
-      Stateful.Event(2L, ts(5), "view", 0.0),
-      Stateful.Event(3L, ts(7), "purchase", 0.0)
-    ).toDS().write.mode("append").parquet(dir)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(dir).schema).parquet(dir)
-      .as[Stateful.Event]
-      .withWatermark("ts", "30 minutes")
-    val q = Stateful.funnelStream(spark, stream, quiesceMillis = 60 * 60000L)
-      .writeStream.outputMode("append").format("memory").queryName("funnel_out").start()
-    try {
-      q.processAllAvailable()
-      // batch 2: the LATE view at t10 (inside the watermark) rewrites
-      // user 1's chain: t_click must become t12 (not t20), t_purchase t15
-      Seq(Stateful.Event(1L, ts(10), "view", 0.0)).toDS()
-        .write.mode("append").parquet(dir)
-      q.processAllAvailable()
-      // batch 3: far-future traffic pushes the watermark past everyone's
-      // quiesce horizon; timeout alarms emit the funnel rows
-      Seq(Stateful.Event(99L, ts(5000), "view", 0.0)).toDS()
-        .write.mode("append").parquet(dir)
-      q.processAllAvailable()
-      val deadline = System.currentTimeMillis() + 20000
-      var rows = spark.table("funnel_out").as[Stateful.FunnelRow].collect()
-      while (rows.length < 3 && System.currentTimeMillis() < deadline) {
-        Thread.sleep(200); q.processAllAvailable()
-        rows = spark.table("funnel_out").as[Stateful.FunnelRow].collect()
-      }
-      val byUser = rows.map(r => r.user_id -> r).toMap
-      assert(byUser(1L) == Stateful.FunnelRow(1L, Some(ts(10)), Some(ts(12)), Some(ts(15))),
-        s"late view must rewrite the chain: ${byUser.get(1L)}")
-      assert(byUser(2L) == Stateful.FunnelRow(2L, Some(ts(5)), None, None))
-      assert(byUser(3L) == Stateful.FunnelRow(3L, None, None, None))
-
-      // batch parity: the identical fold over the bounded union
-      val all = spark.read.parquet(dir).as[Stateful.Event]
-        .where($"user_id" =!= 99L)
-      val batch = Stateful.funnelStream(spark, all, quiesceMillis = 60 * 60000L)
-        .collect().map(r => r.user_id -> r).toMap
-      assert(Seq(1L, 2L, 3L).forall(u => batch(u) == byUser(u)),
-        s"stream must equal batch: $batch vs $byUser")
-    } finally q.stop()
-  }
-
   test("sorted batch sessionization matches flatMapGroupsWithState output") {
     val rng = new scala.util.Random(42)
     val events = (0 until 2000).map { i =>
@@ -170,43 +117,5 @@ class StatefulSpec extends SparkSuite {
     val out = Stateful.userSessionsBatchSorted(spark, events, gapMillis = 30 * 60000L)
       .collect()
     assert(out.length == 1 && out.head.n_events == 5000)
-  }
-
-  test("streaming debounce == batch debounce, raw-predecessor semantics, per-key state GC'd") {
-    import org.apache.spark.sql.functions.col
-    // per (user, type): 0m, +1m (drop), +2m (drop: 1m after RAW), +30m (keep)
-    val events = Seq(
-      Stateful.Event(1L, ts(0), "click", 1.0),
-      Stateful.Event(1L, ts(1), "click", 2.0),
-      Stateful.Event(1L, ts(1), "view", 5.0),
-      Stateful.Event(2L, ts(1), "click", 6.0),
-      Stateful.Event(1L, ts(2), "click", 3.0),
-      Stateful.Event(1L, ts(32), "click", 4.0)
-    )
-    val dir = java.nio.file.Files.createTempDirectory("debounce-in").toString
-    // three arrival files, in event-time order (a 0-second watermark
-    // drops genuinely late rows — correct streaming semantics, not what
-    // this test probes)
-    events.take(4).toDS().coalesce(1).write.mode("append").parquet(dir)
-    events.slice(4, 5).toDS().coalesce(1).write.mode("append").parquet(dir)
-    events.drop(5).toDS().coalesce(1).write.mode("append").parquet(dir)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(dir).schema)
-      .option("maxFilesPerTrigger", 1).parquet(dir)
-      .as[Stateful.Event]
-      .withWatermark("ts", "0 seconds")
-    val q = Stateful.debounceStream(stream, minGapMillis = 5 * 60000L)
-      .writeStream.outputMode("append").format("memory").queryName("deb_out").start()
-    try q.processAllAvailable() finally q.stop()
-    val streamed = spark.table("deb_out")
-      .select($"user_id", $"event_type", $"ts").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getTimestamp(2))).toSet
-    val batch = graft.operators.TimeSeries.debounce(
-        events.toDF(), Seq("user_id", "event_type"), "ts", "value",
-        minGapMicros = 5L * 60000L * 1000)
-      .select(col("user_id"), col("event_type"), col("ts")).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getTimestamp(2))).toSet
-    assert(streamed == batch, s"stream $streamed != batch $batch")
-    assert(streamed.size == 4, streamed.toString)
   }
 }
