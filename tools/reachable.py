@@ -359,7 +359,8 @@ def parse_body(unit, lo, hi, parent, nodes):
             if body is not None:
                 close = match_close(toks, body)
                 parse_body(unit, body + 1, close, node, nodes)
-                node.own.extend(range(close, end))
+                # statements after the body run with the enclosing template
+                parent.own.extend(range(close + 1, end))
         else:
             node.own.extend(range(j, end))
 
